@@ -144,25 +144,30 @@ object Bench {
     * device was actually probed.
     */
   private[graft] lazy val calibIoBase: String =
-    sys.env.get("SPARK_GRAFT_BENCH_IO_SCRATCH").getOrElse {
-      Option(java.nio.file.Paths.get(sfDir).toAbsolutePath.getParent)
-        .flatMap { base =>
-          try {
-            val probe = java.nio.file.Files
-              .createTempDirectory(base, "graft_calib_io_probe")
-            java.nio.file.Files.delete(probe)
-            Some(base.toString)
-          } catch { case _: Exception => None }
-        }
-        .getOrElse(System.getProperty("java.io.tmpdir"))
-    }
+    sys.env.get("SPARK_GRAFT_BENCH_IO_SCRATCH")
+      .getOrElse(writableSibling(sfDir))
+
+  /** The parent of `dir` when a probe directory can be created there
+    * (same filesystem as the data), else `java.io.tmpdir`.
+    */
+  private[graft] def writableSibling(dir: String): String =
+    Option(java.nio.file.Paths.get(dir).toAbsolutePath.getParent)
+      .flatMap { base =>
+        try {
+          val probe = java.nio.file.Files
+            .createTempDirectory(base, "graft_calib_io_probe")
+          java.nio.file.Files.delete(probe)
+          Some(base.toString)
+        } catch { case _: Exception => None }
+      }
+      .getOrElse(System.getProperty("java.io.tmpdir"))
 
   /** Recursive delete via java.nio, NOT the Hadoop FS client: Hadoop's
     * own shutdown hook may close all filesystems before ours runs (hook
     * ordering is nondeterministic), which made the old FS-client delete
     * throw and leak ~45 MB per calibration_io JVM (r13 ADVICE, low).
     */
-  private def deleteRecursively(dir: java.nio.file.Path): Unit =
+  private[graft] def deleteRecursively(dir: java.nio.file.Path): Unit =
     try {
       val walk = java.nio.file.Files.walk(dir)
       try walk.sorted(java.util.Comparator.reverseOrder())
@@ -511,10 +516,12 @@ object Bench {
     * always contains one complete JSON object. "metric"/"value"/"unit"
     * repeat the contract fields so a parser keyed on either shape
     * succeeds; "total" duplicates "value" under the name the r13 judge
-    * specified.
+    * specified. "detail" is the file the full line was written to
+    * (`*_failed.json` after an errored sweep; null if the write failed).
     */
   private[graft] def renderSummary(results: Seq[(String, Seq[Rep])],
-                                   startups: Map[String, Double] = Map.empty): String = {
+                                   startups: Map[String, Double] = Map.empty,
+                                   detail: Option[String] = None): String = {
     val (calibAll, queries) = results.partition(r => isCalib(r._1))
     val (calibIo, calib) = calibAll.partition(_._1.startsWith(CalibIoName))
     val minima = queries.flatMap { case (_, rs) =>
@@ -532,7 +539,7 @@ object Bench {
     val calibIoJson = instMin(calibIo).fold("")(v => s""","calibration_io":$v""")
     val cpusJson = scala.util.Try(cpus.trim.toInt).toOption
       .map(_.toString).getOrElse(jsonStr(cpus))
-    s"""{"metric":"total","value":$total,"unit":"sec","summary":true,"total":$total,"n":${minima.size},"declared":${queries.size},"errors":$nErrors,"startup_total":$startupTotal$calibJson$calibIoJson,"cpus":$cpusJson,"sf":"$sfDir","detail":"bench_out/latest.json"}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","summary":true,"total":$total,"n":${minima.size},"declared":${queries.size},"errors":$nErrors,"startup_total":$startupTotal$calibJson$calibIoJson,"cpus":$cpusJson,"sf":"$sfDir","detail":${detail.fold("null")(jsonStr)}}"""
   }
 
   /** Probe child: calibration-INTERLEAVED single-query measurement in a
@@ -893,7 +900,7 @@ object Bench {
     // across rounds, and a shrunken denominator (errored queries missing
     // from "queries") would silently look like a speedup (round-7 ADVICE).
     val anyError = results.exists(_._2.exists(_.isLeft))
-    try {
+    val written = try {
       val out0 = java.nio.file.Paths.get(outPath)
       val out =
         if (!anyError) out0
@@ -905,13 +912,15 @@ object Bench {
         }
       Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
       java.nio.file.Files.write(out, (json + "\n").getBytes("UTF-8"))
+      Some(out.toString)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outPath: $e")
+      None
     }
     println(json)
     // the short driver-parseable line LAST, inside any tail capture
     // (r13 verdict #1; see renderSummary)
-    println(renderSummary(results, startups))
+    println(renderSummary(results, startups, written))
     sys.exit(if (anyError) 1 else 0)
   }
 }

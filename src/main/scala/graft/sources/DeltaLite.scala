@@ -48,8 +48,15 @@ import org.apache.spark.sql.types._
   * Expired `remove` tombstones are not carried into checkpoints (legal
   * per the protocol's retention rule; this writer stamps
   * `deletionTimestamp: 0`, so every tombstone is past retention by the
-  * time a checkpoint is cut — and single-writer means no concurrent
-  * vacuum needs them).
+  * time a checkpoint is cut — and there is no vacuum to need them:
+  * [[Lake]] deletes a squashed commit's files right after publishing the
+  * entry that removes it, and concurrent writers only ever add). A live
+  * add's `commitInfo` is restated in the checkpoint's `add.stats` string,
+  * so [[Lake]]'s per-commit row counts survive checkpoints.
+  *
+  * [[Lake]] publishes every feature-group commit through this log: its
+  * `add` paths name commit DIRECTORIES, each entry carries a
+  * `commitInfo`, and its writers rebase through [[commitWithRetry]].
   *
   * What makes it "real" interop rather than an analog: the on-disk
   * layout is the published protocol — a stock delta-spark reader
@@ -68,13 +75,20 @@ object DeltaLite {
   /** Cut a checkpoint every this many commits (delta's own default). */
   val CheckpointInterval = 10
 
-  private val mapper = new ObjectMapper()
+  private[sources] val mapper = new ObjectMapper()
 
-  private def fs(path: String): FileSystem =
-    FileSystem.get(new java.net.URI(path).normalize() match {
-      case u if u.getScheme == null => new java.io.File(path).toURI
-      case u => u
-    }, new Configuration())
+  /** The Hadoop configuration of the active session: `spark.hadoop.*`
+    * settings and schemes registered on the session reach every log read
+    * and write, checkpoints included.
+    */
+  private def hadoopConf: Configuration =
+    SparkSession.active.sparkContext.hadoopConfiguration
+
+  /** The one filesystem resolver for the log and for the [[Lake]] tables
+    * published through it: the path's scheme under [[hadoopConf]].
+    */
+  private[sources] def fs(path: String): FileSystem =
+    new Path(path).getFileSystem(hadoopConf)
 
   private def logDir(table: String) = new Path(table, "_delta_log")
 
@@ -170,34 +184,34 @@ object DeltaLite {
     }
   }
 
-  /** The optimistic-concurrency loop: try successive versions until the
-    * put-if-absent publish wins. `actions(v)` is re-evaluated on every
-    * attempt so a loser REBASES against the freshly observed head
-    * (v − 1) rather than replaying a stale view. Bounded — an FS whose
-    * put-if-absent always "loses" must surface as an error, not an
-    * infinite loop.
+  /** The optimistic-concurrency loop: replay the head, publish the
+    * entry `actions(head)` at the version after it, and on losing the
+    * put-if-absent race replay the new head and try again. `actions` is
+    * re-evaluated on every attempt so a loser REBASES against the freshly
+    * observed head rather than replaying a stale view; `head` is None
+    * while the log is empty (the entry then publishes version 0).
+    * Bounded — an FS whose put-if-absent always "loses" must surface as
+    * an error, not an infinite loop.
     */
-  private def commitWithRetry(table: String, maxAttempts: Int = 1000)
-                             (actions: Long => Seq[String]): Long = {
-    var v = versions(table).lastOption.getOrElse(
-      sys.error(s"$table has no log — create first")) + 1
+  private[sources] def commitWithRetry(table: String, maxAttempts: Int = 1000)
+                                      (actions: Option[State] => Seq[String]): Long = {
     var attempts = 0
     while (attempts < maxAttempts) {
       attempts += 1
-      if (tryPublish(table, v, actions(v))) {
+      val head = latest(table)
+      val v = head.fold(0L)(_.version + 1)
+      if (tryPublish(table, v, actions(head))) {
         maybeCheckpoint(table, v)
         return v
       }
-      // lost the race: rebase to at least one past the newest head
-      v = math.max(v + 1, versions(table).lastOption.getOrElse(-1L) + 1)
     }
     sys.error(s"$table: lost the commit race $maxAttempts times")
   }
 
-  private def protocolAction: String =
+  private[sources] def protocolAction: String =
     """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
 
-  private def metaDataAction(schema: StructType, id: String): String = {
+  private[sources] def metaDataAction(schema: StructType, id: String): String = {
     val node = mapper.createObjectNode()
     val md = node.putObject("metaData")
     md.put("id", id)
@@ -209,7 +223,7 @@ object DeltaLite {
     mapper.writeValueAsString(node)
   }
 
-  private def addAction(relPath: String, size: Long): String = {
+  private[sources] def addAction(relPath: String, size: Long): String = {
     val node = mapper.createObjectNode()
     val a = node.putObject("add")
     a.put("path", relPath)
@@ -220,7 +234,7 @@ object DeltaLite {
     mapper.writeValueAsString(node)
   }
 
-  private def removeAction(relPath: String): String = {
+  private[sources] def removeAction(relPath: String): String = {
     val node = mapper.createObjectNode()
     val r = node.putObject("remove")
     r.put("path", relPath)
@@ -270,7 +284,10 @@ object DeltaLite {
   def append(df: DataFrame, table: String): Long = {
     val files = writeData(df, table, txDir())
     val adds = files.map { case (p, s) => addAction(p, s) }
-    commitWithRetry(table)(_ => adds)
+    commitWithRetry(table) { head =>
+      require(head.nonEmpty, s"$table has no log — create first")
+      adds
+    }
   }
 
   /** Log-only append for scale probes and tests: one add action with a
@@ -296,9 +313,8 @@ object DeltaLite {
     require(versions(table).nonEmpty, s"$table has no log — create first")
     val files = writeData(df, table, txDir())
     val adds = files.map { case (p, s) => addAction(p, s) }
-    commitWithRetry(table) { v =>
-      replayState(table, Some(v - 1)).adds.map(_._1)
-        .map(removeAction) ++ adds
+    commitWithRetry(table) { head =>
+      head.toSeq.flatMap(_.adds).map(_._1).map(removeAction) ++ adds
     }
   }
 
@@ -307,11 +323,14 @@ object DeltaLite {
   // ------------------------------------------------------------------
 
   /** Full replay state at one version: the declared schema, the
-    * metaData id, and the live files (table-relative path, size) in
-    * add order.
+    * metaData id, the live files (table-relative path, size) in add
+    * order, and for each live file added by an entry that carries a
+    * `commitInfo` action, that action's JSON (checkpoints restate it in
+    * the protocol's `add.stats` string).
     */
-  private[graft] case class State(schema: StructType, metaId: String,
-                                  adds: Seq[(String, Long)])
+  private[graft] case class State(version: Long, schema: StructType,
+                                  metaId: String, adds: Seq[(String, Long)],
+                                  info: Map[String, String])
 
   /** Checkpoint parquet schema — the protocol's top-level action struct
     * columns (one row per action, exactly one struct non-null), as a
@@ -353,6 +372,7 @@ object DeltaLite {
           optional int64 size;
           optional int64 modificationTime;
           optional boolean dataChange;
+          optional binary stats (UTF8);
         }
       }""")
 
@@ -371,7 +391,7 @@ object DeltaLite {
     if (f.exists(cpPath)) f.delete(cpPath, false)
     val writer = ExampleParquetWriter.builder(
       org.apache.parquet.hadoop.util.HadoopOutputFile
-        .fromPath(cpPath, new Configuration()))
+        .fromPath(cpPath, hadoopConf))
       .withType(cpMessage).build()
     val factory = new SimpleGroupFactory(cpMessage)
     val gp = factory.newGroup()
@@ -398,6 +418,7 @@ object DeltaLite {
       // dataChange=false (they restate state, they are not new data);
       // state reconstruction ignores the flag either way
       a.add("dataChange", false)
+      st.info.get(p).foreach(a.add("stats", _))
       writer.write(g)
     }
     writer.close()
@@ -411,22 +432,43 @@ object DeltaLite {
     if (v > 0 && v % CheckpointInterval == 0)
       writeCheckpoint(table, v)
 
-  /** Load a checkpoint parquet back into a seed [[State]]. Read
+  /** The checkpoint each table was last seeded from, with the file's
+    * path, length and modification time. A checkpoint never changes once
+    * written, and opening one through parquet-hadoop costs ~10 ms, which
+    * every lake read and commit would otherwise pay.
+    */
+  private val loaded =
+    new java.util.concurrent.ConcurrentHashMap[Path, ((Path, Long, Long), State)]()
+
+  private def loadCheckpoint(table: String, v: Long): State = {
+    val p = checkpointFile(table, v)
+    val st = fs(table).getFileStatus(p)
+    val key = (p, st.getLen, st.getModificationTime)
+    Option(loaded.get(logDir(table))).filter(_._1 == key).map(_._2)
+      .getOrElse {
+        val state = readCheckpoint(table, v)
+        loaded.put(logDir(table), (key, state))
+        state
+      }
+  }
+
+  /** Read a checkpoint parquet back into a seed [[State]]. Read
     * DRIVER-SIDE via parquet-hadoop's own reader — snapshot resolution
     * must not cost a Spark job: a |live files|+2-row file reads in
-    * single-digit milliseconds, so log replay latency is pure local IO
-    * of the tail, O(tail) with a tiny constant.
+    * milliseconds, so log replay latency is pure local IO of the tail,
+    * O(tail) with a tiny constant.
     */
-  private def loadCheckpoint(table: String, v: Long): State = {
+  private def readCheckpoint(table: String, v: Long): State = {
     import org.apache.parquet.example.data.Group
     import org.apache.parquet.hadoop.ParquetReader
     import org.apache.parquet.hadoop.example.GroupReadSupport
     val reader: ParquetReader[Group] = ParquetReader
       .builder(new GroupReadSupport(), checkpointFile(table, v))
-      .withConf(new Configuration()).build()
+      .withConf(hadoopConf).build()
     var schema: StructType = null
     var metaId: String = null
     val adds = Seq.newBuilder[(String, Long)]
+    val info = Map.newBuilder[String, String]
     try {
       var g = reader.read()
       while (g != null) {
@@ -438,13 +480,18 @@ object DeltaLite {
         }
         if (g.getFieldRepetitionCount("add") > 0) {
           val add = g.getGroup("add", 0)
-          adds += ((add.getString("path", 0), add.getLong("size", 0)))
+          val path = add.getString("path", 0)
+          adds += ((path, add.getLong("size", 0)))
+          // checkpoints cut before add.stats existed lack the field
+          if (add.getType.containsField("stats") &&
+              add.getFieldRepetitionCount("stats") > 0)
+            info += path -> add.getString("stats", 0)
         }
         g = reader.read()
       }
     } finally reader.close()
     require(schema != null, s"checkpoint $v carries no metaData")
-    State(schema, metaId, adds.result())
+    State(v, schema, metaId, adds.result(), info.result())
   }
 
   /** State at `asOf` (default latest): seed from the newest checkpoint
@@ -459,7 +506,13 @@ object DeltaLite {
     * from an older checkpoint found by listing).
     */
   private[graft] def replayState(table: String,
-                                 asOf: Option[Long]): State = {
+                                 asOf: Option[Long]): State =
+    replay(table, asOf).getOrElse(sys.error(s"$table has no _delta_log"))
+
+  /** State at the head of the log; None while the log has no entry. */
+  private[graft] def latest(table: String): Option[State] = replay(table, None)
+
+  private def replay(table: String, asOf: Option[Long]): Option[State] = {
     val f = fs(table)
     val ptr = lastCheckpoint(table)
     val (cp, upTo): (Option[Long], Long) = (ptr, asOf) match {
@@ -475,6 +528,7 @@ object DeltaLite {
       case _ => // no pointer, or time travel behind it
         val vs = versions(table)
         val cps = checkpointVersions(table)
+        if (vs.isEmpty && cps.isEmpty && asOf.isEmpty) return None
         require(vs.nonEmpty || cps.nonEmpty, s"$table has no _delta_log")
         val u = asOf.getOrElse((vs ++ cps).max)
         require(vs.contains(u) || cps.contains(u),
@@ -484,11 +538,15 @@ object DeltaLite {
     val seed = cp.map(loadCheckpoint(table, _))
     val live = scala.collection.mutable.LinkedHashMap[String, Long]()
     seed.foreach(_.adds.foreach { case (p, s) => live(p) = s })
+    val info = scala.collection.mutable.Map[String, String]()
+    seed.foreach(info ++= _.info)
     var schema: StructType = seed.map(_.schema).orNull
     var metaId: String = seed.map(_.metaId).orNull
     ((cp.getOrElse(-1L) + 1) to upTo).foreach { v =>
       val in = new java.io.BufferedReader(new java.io.InputStreamReader(
         f.open(commitFile(table, v)), "UTF-8"))
+      val added = Seq.newBuilder[String]
+      var commitInfo: Option[String] = None
       var line = in.readLine()
       while (line != null) {
         if (line.nonEmpty) {
@@ -496,21 +554,25 @@ object DeltaLite {
           if (node.has("add")) {
             val a = node.get("add")
             live(a.get("path").asText()) = a.get("size").asLong
-          } else if (node.has("remove"))
+            added += a.get("path").asText()
+          } else if (node.has("remove")) {
             live -= node.get("remove").get("path").asText()
-          else if (node.has("metaData")) {
+            info -= node.get("remove").get("path").asText()
+          } else if (node.has("metaData")) {
             val md = node.get("metaData")
             schema = DataType.fromJson(md.get("schemaString").asText())
               .asInstanceOf[StructType]
             metaId = md.get("id").asText()
-          }
+          } else if (node.has("commitInfo"))
+            commitInfo = Some(node.get("commitInfo").toString)
         }
         line = in.readLine()
       }
       in.close()
+      commitInfo.foreach(c => added.result().foreach(info(_) = c))
     }
     require(schema != null, s"$table log carries no metaData")
-    State(schema, metaId, live.toSeq)
+    Some(State(upTo, schema, metaId, live.toSeq, info.toMap))
   }
 
   /** Replay the log up to `asOf` (inclusive; default latest) → live

@@ -1,9 +1,11 @@
 package graft.sources
 
 import graft.model.FeatureGroup
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Commit-logged lakehouse table: the engine's analog of the reference's
   * Hudi/Delta feature-group storage (python/hsfs/core/hudi_engine.py:85-274,
@@ -11,21 +13,40 @@ import org.apache.spark.sql.functions._
   *
   * Layout under `root`:
   * {{{
-  *   data/_commit_time=[epochMillis]/part-NNN.parquet  (one partition per commit)
-  *   commits/part-NNN.json                             (commit metadata rows)
+  *   _delta_log/NNN.json, NNN.checkpoint.parquet   (the commit log, [[DeltaLite]])
+  *   data/_tx=[uuid]/_commit_time=[epochMillis]/part-NNN.parquet
   * }}}
   *
+  * The log is the only source of truth. Every commit (create, upsert,
+  * delete, compact, cleanCommits) is ONE log entry — an `add` of its
+  * commit directory, `remove`s of the commits it replaces, and a
+  * `commitInfo` carrying its row counts — published through DeltaLite's
+  * put-if-absent [[DeltaLite.commitWithRetry]]. Readers replay the log
+  * (checkpoint + tail) and hand Spark one path per live commit, with
+  * `basePath` so `_commit_time` comes from the directory name; a directory
+  * no published entry adds is never read.
+  *
+  * Concurrency and crashes:
+  *  - A commit stages into its own `_tx=` directory, so two writers never
+  *    share an output path or its `_temporary` directory.
+  *  - Commit times strictly increase with log version: a writer picks
+  *    `max(now, head + 1)`, and one that loses the publish race to a newer
+  *    commit renames its own `_commit_time=` directory above the new head
+  *    before it retries. Data is never rewritten.
+  *  - A crash before the publish leaves an unread `_tx=` directory; a crash
+  *    after it leaves squashed directories that the log no longer names.
+  *    Neither needs recovery: the next commit or compaction just runs.
+  *
   * Design notes for scale:
-  *  - Each commit is a parquet partition keyed by `_commit_time`, so
-  *    time-travel and incremental reads become **partition pruning** — a
-  *    100 TB table as-of t scans only commits ≤ t, and an incremental read
-  *    scans only the (t0, t1] partitions.
+  *  - Each commit is its own directory, so time-travel and incremental
+  *    reads select directories from the log — a 100 TB table as-of t scans
+  *    only commits ≤ t, and an incremental read only the (t0, t1] commits.
   *  - Writes are append-only (merge-on-read): upsert/delete append rows and
   *    tombstones; the snapshot read resolves the latest version per record
   *    key with one window over the record key — the same shuffle a
   *    MERGE INTO would need, but without rewriting existing files.
-  *  - `compact()` rewrites the current snapshot as a single base commit to
-  *    bound read amplification, mirroring Hudi compaction.
+  *  - `compact()`/`cleanCommits()` squash old commits into one base commit
+  *    to bound read amplification, mirroring Hudi compaction.
   *
   * Record identity = primary key + event time (hudi record-key semantics,
   * core/hudi_engine.py:122-145); duplicate versions resolved by
@@ -34,20 +55,10 @@ import org.apache.spark.sql.functions._
   */
 object Lake {
 
-  import org.apache.hadoop.fs.{FileSystem, Path}
-
   val CommitCol = "_commit_time"
   val DeletedCol = "_deleted"
-
-  /** All filesystem access goes through the Hadoop FileSystem resolved
-    * from the path's scheme + the session's hadoopConfiguration, so the
-    * commit log works wherever the table lives (HDFS/S3/ABFS/local) —
-    * never driver-local java.io.File.
-    */
-  private def fsOf(spark: SparkSession, path: String): (FileSystem, Path) = {
-    val p = new Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
+  /** Partition level that makes each commit's directory its own. */
+  private val TxCol = "_tx"
 
   final case class CommitMeta(
       commitTime: Long,
@@ -56,51 +67,97 @@ object Lake {
       rowsUpdated: Long,
       rowsDeleted: Long)
 
-  private def dataPath(root: String) = s"$root/data"
-  private def commitsPath(root: String) = s"$root/commits"
+  /** A live commit: its table-relative directory and its record. */
+  private final case class Commit(dir: String, meta: CommitMeta) {
+    def time: Long = meta.commitTime
+  }
+
+  /** Operations that publish a squashed base; once one has run, the
+    * oldest live commit is the retention horizon.
+    */
+  private val BaseOps = Set("compact", "clean")
+
+  private def commitDir(tx: String, t: Long) = s"data/$TxCol=$tx/$CommitCol=$t"
 
   private def recordKey(fg: FeatureGroup): Seq[String] =
     (fg.primaryKey ++ fg.eventTime).distinct
 
-  /** Commit times present in the table, ascending (from the partition
-    * layout, not the metadata — data is the source of truth).
+  private def metaJson(m: CommitMeta): String =
+    s"""{"commitTime":${m.commitTime},"operation":"${m.operation}",""" +
+      s""""rowsInserted":${m.rowsInserted},"rowsUpdated":${m.rowsUpdated},""" +
+      s""""rowsDeleted":${m.rowsDeleted}}"""
+
+  /** Live commits at the log head, oldest first (empty without a log). */
+  private def liveCommits(root: String): Seq[Commit] =
+    commits(DeltaLite.latest(root))
+
+  private def commits(head: Option[DeltaLite.State]): Seq[Commit] =
+    head.toSeq.flatMap { st =>
+      st.adds.map { case (dir, _) =>
+        val n = DeltaLite.mapper.readTree(st.info(dir))
+        Commit(dir, CommitMeta(n.get("commitTime").asLong,
+          n.get("operation").asText, n.get("rowsInserted").asLong,
+          n.get("rowsUpdated").asLong, n.get("rowsDeleted").asLong))
+      }
+    }.sortBy(_.time)
+
+  /** Commit times of the live commits, ascending. */
+  def listCommits(spark: SparkSession, root: String): Seq[Long] =
+    liveCommits(root).map(_.time)
+
+  private def emptyFrame(spark: SparkSession, fg: FeatureGroup): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), fg.schema)
+
+  /** The raw scan of the given (non-empty) commits: one path per commit
+    * directory, `_commit_time` and `_tx` from the directory names
+    * ([[resolve]] drops them). With a declared feature schema the read
+    * passes it EXPLICITLY — no `mergeSchema` footer sweep over every file
+    * on every read, and files predating an appended column surface it as
+    * null exactly as the merged scan would (snapshot() then fills declared
+    * defaults). Only schema-less groups (fg.features empty) still pay the
+    * merge (reference schema reconciliation, core/hudi_engine.py:226-244).
     */
-  def listCommits(spark: SparkSession, root: String): Seq[Long] = {
-    val (fs, p) = fsOf(spark, dataPath(root))
-    if (!fs.exists(p)) Seq.empty
+  private def rawData(spark: SparkSession, root: String, fg: FeatureGroup,
+                      cs: Seq[Commit]): DataFrame = {
+    val reader = spark.read.option("basePath", s"$root/data")
+    val paths = cs.map(c => s"$root/${c.dir}")
+    if (fg.features.isEmpty)
+      reader.option("mergeSchema", "true").parquet(paths: _*)
     else
-      fs.listStatus(p).toSeq
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith(s"$CommitCol=") =>
-          n.stripPrefix(s"$CommitCol=").toLong
-        }
-        .sorted
+      reader.schema(StructType(fg.schema.fields.toSeq ++ Seq(
+        StructField(CommitCol, LongType), StructField(DeletedCol, BooleanType),
+        StructField(TxCol, StringType)))).parquet(paths: _*)
   }
 
-  /** The raw commit-log scan (reference schema reconciliation,
-    * core/hudi_engine.py:226-244). With a declared feature schema the read
-    * passes it EXPLICITLY — no `mergeSchema` footer sweep over every
-    * file on every read (a per-read O(files) driver cost on long
-    * histories), and files predating an appended column surface it as
-    * null exactly as the merged scan would (snapshot() then fills
-    * declared defaults). Only schema-less groups (fg.features empty)
-    * still pay the merge, since there is nothing to declare.
+  /** Rows of the live commits in (after, upTo]. An empty window reads the
+    * oldest commit under a false filter, which keeps the table's columns
+    * and plans no scan.
     */
-  private def rawData(spark: SparkSession, root: String,
-                      fg: FeatureGroup): DataFrame =
-    if (fg.features.isEmpty)
-      spark.read.option("mergeSchema", "true").parquet(dataPath(root))
-    else {
-      val schema = org.apache.spark.sql.types.StructType(
-        fg.schema.fields.toSeq :+
-          org.apache.spark.sql.types.StructField(CommitCol,
-            org.apache.spark.sql.types.LongType) :+
-          org.apache.spark.sql.types.StructField(DeletedCol,
-            org.apache.spark.sql.types.BooleanType))
-      spark.read.schema(schema).parquet(dataPath(root))
-    }
+  private def window(spark: SparkSession, root: String, fg: FeatureGroup,
+                     cs: Seq[Commit], after: Long, upTo: Long): DataFrame = {
+    val in = cs.filter(c => c.time > after && c.time <= upTo)
+    if (in.nonEmpty) rawData(spark, root, fg, in)
+    else rawData(spark, root, fg, cs.take(1)).filter(lit(false))
+  }
 
-  /** Append one commit of rows (already stamped with tombstone flag). */
+  /** The winning live row per record key, tombstones applied, in the
+    * declared schema. `fillDefaults` is the read-path safety net for
+    * tables created before a column was declared: appended columns
+    * surface as null for pre-append commits and fill their declared
+    * defaults here.
+    */
+  private def resolve(raw: DataFrame, fg: FeatureGroup,
+                      fillDefaults: Boolean = false): DataFrame = {
+    val winners = dedupLatest(raw, fg).filter(!col(DeletedCol))
+      .drop(CommitCol, DeletedCol, TxCol)
+    restoreTypes(
+      if (fillDefaults && fg.features.nonEmpty)
+        graft.ops.SchemaOps.alignToFeatures(winners, fg.features,
+          fillNullDefaults = true)
+      else winners, fg)
+  }
+
+  /** Append one commit of rows, as tombstones when `deleted`. */
   private def writeCommit(
       spark: SparkSession,
       root: String,
@@ -109,11 +166,9 @@ object Lake {
       deleted: Boolean,
       operation: String,
       computeStats: Boolean = true): CommitMeta = {
-    // one FS listing serves both the commit-time allocation and the
-    // first-commit check below
-    val priorCommits = listCommits(spark, root)
-    val t = math.max(System.currentTimeMillis(),
-      priorCommits.lastOption.getOrElse(0L) + 1)
+    // one log replay serves the commit-time choice, the first-commit check
+    // and the stats scan below
+    val cs = liveCommits(root)
     // schema evolution at write time: a batch missing declared columns
     // gets them appended with their declared defaults (feature_group.py:853,
     // engine/spark.py:1251-1265) so every commit carries the full schema
@@ -121,43 +176,25 @@ object Lake {
       if (fg.features.nonEmpty)
         graft.ops.SchemaOps.alignToFeatures(rows, fg.features)
       else rows
-    val stamped = aligned
-      .withColumn(CommitCol, lit(t))
-      .withColumn(DeletedCol, lit(deleted))
 
     // Classify the commit for metadata parity with Hudi commit stats
     // (core/hudi_engine.py:246-274): ONE action — left join against current
     // snapshot keys, counting total and matched together. `computeStats =
     // false` skips the snapshot scan entirely (high-frequency streaming
-    // commits shouldn't rescan the table per micro-batch).
-    //
-    // First commit (r14, guide §1.2 — don't compute things twice): the
-    // row count rides the WRITE action as an `observe` metric instead of
-    // a dedicated `rows.count()` pass — a bulk insert used to scan its
-    // entire input once to count it and once to write it; at 100 TB
-    // that second scan is a full extra pass over the corpus. The
-    // non-first path must still run BEFORE the write (its semi-join
-    // resolves the table state the commit is mutating), so it keeps its
-    // single pre-write action.
+    // commits shouldn't rescan the table per micro-batch). A first commit
+    // needs no scan: its row count rides the write as an `observe` metric.
+    // Counts classify against the head this writer read.
     val keys = recordKey(fg)
-    val firstCommit = priorCommits.isEmpty
-    val obs =
-      if (computeStats && firstCommit)
-        Some(org.apache.spark.sql.Observation(s"graft_commit_$t"))
-      else None
-    val (preIns, preUpd, preDel) =
-      if (!computeStats) (-1L, -1L, -1L)
-      else if (firstCommit) (0L, 0L, 0L) // resolved from obs after the write
+    val pre =
+      if (!computeStats || cs.isEmpty) None
       else {
         // incremental stats: resolve current state ONLY for the incoming
         // keys — semi-prune the commit log by the batch's key set before
         // the latest-version window, so an upsert of k keys into a 100 TB
         // table shuffles O(k · versions) rows, never the whole snapshot
         val incoming = aligned.select(keys.map(col): _*).distinct()
-        val pruned = rawData(spark, root, fg).join(incoming, keys, "left_semi")
-        val current = restoreTypes(
-            dedupLatest(pruned, fg).filter(!col(DeletedCol))
-              .drop(CommitCol, DeletedCol), fg)
+        val current = resolve(
+            rawData(spark, root, fg, cs).join(incoming, keys, "left_semi"), fg)
           .select(keys.map(col): _*).withColumn("_m", lit(1))
         val r = aligned.select(keys.map(col): _*)
           .join(current, keys, "left")
@@ -165,47 +202,73 @@ object Lake {
           .collect().head
         val total = r.getLong(0)
         val matched = if (r.isNullAt(1)) 0L else r.getLong(1)
-        if (deleted) (0L, 0L, matched) else (total - matched, matched, 0L)
+        Some(if (deleted) (0L, 0L, matched) else (total - matched, matched, 0L))
       }
-
-    // physical layout: commit partition first (time travel = pruning),
-    // then the feature group's declared partition keys (query-predicate
-    // pruning — reference partitionBy(partition_key),
-    // engine/spark.py:501-505, hudi partition path hudi_engine.py:131-140)
-    val partCols = CommitCol +: fg.partitionKey.filter(stamped.columns.contains)
-    val toWrite = obs.fold(stamped)(o =>
-      stamped.observe(o, count(lit(1)).as("n")))
-    toWrite.write
-      .mode(SaveMode.Append)
-      .partitionBy(partCols: _*)
-      .parquet(dataPath(root))
-
-    val (ins, upd, del) = obs match {
-      case None => (preIns, preUpd, preDel)
-      case Some(o) =>
-        // the write action above completed, so the observed metrics are
-        // final — same value the old rows.count() pass produced, zero
-        // extra scans
-        val n = o.get("n") match {
-          case l: java.lang.Long => l.longValue()
-          case other => other.toString.toLong
-        }
-        if (deleted) (0L, 0L, n) else (n, 0L, 0L)
+    val t0 = math.max(System.currentTimeMillis(),
+      cs.lastOption.fold(0L)(_.time) + 1)
+    commit(spark, root, fg, aligned.withColumn(DeletedCol, lit(deleted)), t0,
+        squashed = Nil) { (t, n) =>
+      val (ins, upd, del) =
+        if (!computeStats) (-1L, -1L, -1L)
+        else pre.getOrElse(if (deleted) (0L, 0L, n) else (n, 0L, 0L))
+      CommitMeta(t, operation, ins, upd, del)
     }
-    val meta = CommitMeta(t, operation, ins, upd, del)
-    // one-ROW metadata goes through the Hadoop FS directly: a single-row
-    // DataFrame json job (plan + task + _SUCCESS) per commit was pure
-    // lifecycle overhead across every lake query (r12 verdict #4). The
-    // read side (spark.read.json over the directory) is unchanged and
-    // still reads logs written by the old DataFrame path.
-    val line = s"""{"commitTime":$t,"operation":"$operation",""" +
-      s""""rowsInserted":$ins,"rowsUpdated":$upd,"rowsDeleted":$del}"""
-    val (cfs, cdir) = fsOf(spark, commitsPath(root))
-    cfs.mkdirs(cdir)
-    val f = new Path(cdir, s"commit-$t-${System.nanoTime()}.json")
-    val os = cfs.create(f, false)
-    try os.write((line + "\n").getBytes("UTF-8")) finally os.close()
-    meta
+  }
+
+  /** Stage `df` in a new commit directory at time `t0`, then publish one
+    * log entry that adds it and removes `squashed`, then delete the
+    * squashed directories. `meta(t, n)` builds the record from the final
+    * commit time and the row count observed on the write.
+    *
+    * A new commit (nothing squashed) must sit above the head: if it loses
+    * the publish race to a commit at or above its time, it renames its own
+    * directory to `max(now, head + 1)` and retries. A squashed base keeps
+    * the newest squashed time, which is below the head by construction;
+    * it aborts if a concurrent squash already replaced its commits.
+    */
+  private def commit(spark: SparkSession, root: String, fg: FeatureGroup,
+                     df: DataFrame, t0: Long, squashed: Seq[Commit])
+                    (meta: (Long, Long) => CommitMeta): CommitMeta = {
+    val fs = DeltaLite.fs(root)
+    val tx = java.util.UUID.randomUUID.toString
+    val obs = org.apache.spark.sql.Observation()
+    // declared partition keys below the commit directory: query-predicate
+    // pruning (reference partitionBy(partition_key), engine/spark.py:501-505,
+    // hudi partition path hudi_engine.py:131-140)
+    df.observe(obs, count(lit(1)).as("n")).write
+      .partitionBy(fg.partitionKey.filter(df.columns.contains): _*)
+      .parquet(s"$root/${commitDir(tx, t0)}")
+    val n = obs.get("n") match {
+      case l: java.lang.Long => l.longValue()
+      case other => other.toString.toLong
+    }
+    val bytes = fs.getContentSummary(new Path(root, s"data/$TxCol=$tx")).getLength
+    var t = t0
+    var out: CommitMeta = null
+    DeltaLite.commitWithRetry(root) { head =>
+      val cs = commits(head)
+      if (!squashed.forall(s => cs.exists(_.dir == s.dir)))
+        throw new java.util.ConcurrentModificationException(
+          s"$root: the commits being squashed were replaced concurrently")
+      if (squashed.isEmpty && cs.lastOption.exists(_.time >= t)) {
+        val moved = math.max(System.currentTimeMillis(), cs.last.time + 1)
+        if (!fs.rename(new Path(root, commitDir(tx, t)),
+            new Path(root, commitDir(tx, moved))))
+          throw new java.io.IOException(s"$root: cannot move $tx to $moved")
+        t = moved
+      }
+      out = meta(t, n)
+      val header =
+        if (head.isEmpty) Seq(DeltaLite.protocolAction,
+          DeltaLite.metaDataAction(df.schema, java.util.UUID.randomUUID.toString))
+        else Nil
+      header ++ squashed.map(c => DeltaLite.removeAction(c.dir)) ++ Seq(
+        DeltaLite.addAction(commitDir(tx, t), bytes),
+        s"""{"commitInfo":${metaJson(out)}}""")
+    }
+    // each commit owns its `_tx=` directory outright
+    squashed.foreach(c => fs.delete(new Path(root, c.dir).getParent, true))
+    out
   }
 
   /** First write / bulk insert. */
@@ -231,10 +294,10 @@ object Lake {
     // so deleting k keys never windows the full table
     val keys = recordKey(fg)
     val kdf = keysDf.select(keys.map(col): _*).distinct()
-    val pruned = rawData(spark, root, fg).join(kdf, keys, "left_semi")
-    val full = restoreTypes(
-      dedupLatest(pruned, fg).filter(!col(DeletedCol))
-        .drop(CommitCol, DeletedCol), fg)
+    val cs = liveCommits(root)
+    val full =
+      if (cs.isEmpty) emptyFrame(spark, fg)
+      else resolve(rawData(spark, root, fg, cs).join(kdf, keys, "left_semi"), fg)
     writeCommit(spark, root, fg, full, deleted = true, operation = "delete")
   }
 
@@ -243,31 +306,15 @@ object Lake {
     */
   def snapshot(spark: SparkSession, root: String, fg: FeatureGroup,
                asOf: Option[Long]): DataFrame = {
-    pendingOpGuard(spark, root)
-    if (listCommits(spark, root).isEmpty) {
-      // schema-only table (e.g. created from an empty frame): no partitions
-      // exist yet, so return an empty frame with the declared schema
-      return spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), fg.schema)
-    }
-    for (h <- commitHorizon(spark, root); t <- asOf; if t < h)
+    val cs = liveCommits(root)
+    // schema-only table (no log yet): the declared schema's empty frame
+    if (cs.isEmpty) return emptyFrame(spark, fg)
+    for (h <- horizon(cs); t <- asOf; if t < h)
       throw new IllegalArgumentException(
         s"as_of $t predates the retained commit horizon $h " +
           "(older commits were cleaned; see cleanCommits)")
-    val raw0 = rawData(spark, root, fg)
-    val raw = asOf.fold(raw0)(t => raw0.filter(col(CommitCol) <= t))
-    val resolved = dedupLatest(raw, fg)
-      .filter(!col(DeletedCol))
-      .drop(CommitCol, DeletedCol)
-    // read-path safety net for tables created before a column was
-    // declared: appended columns surface as null for pre-append commits
-    // under the merged-schema scan and fill their declared defaults here
-    val aligned =
-      if (fg.features.nonEmpty)
-        graft.ops.SchemaOps.alignToFeatures(resolved, fg.features,
-          fillNullDefaults = true)
-      else resolved
-    restoreTypes(aligned, fg)
+    resolve(window(spark, root, fg, cs, Long.MinValue,
+      asOf.getOrElse(Long.MaxValue)), fg, fillDefaults = true)
   }
 
   /** Partition-column values come back through directory inference with
@@ -289,22 +336,19 @@ object Lake {
     */
   def readChanges(spark: SparkSession, root: String, fg: FeatureGroup,
                   exclusiveStart: Long, inclusiveEnd: Long): DataFrame = {
-    pendingOpGuard(spark, root)
+    val cs = liveCommits(root)
+    if (cs.isEmpty) return emptyFrame(spark, fg)
     // the squashed base commit sits at the horizon time: any range whose
     // start would include it is not a true incremental read
-    for (h <- commitHorizon(spark, root); if exclusiveStart < h)
+    for (h <- horizon(cs); if exclusiveStart < h)
       throw new IllegalArgumentException(
         s"incremental read from $exclusiveStart predates the retained " +
           s"commit horizon $h (older commits were cleaned)")
-    val raw = rawData(spark, root, fg)
-      .filter(col(CommitCol) > exclusiveStart && col(CommitCol) <= inclusiveEnd)
-    restoreTypes(dedupLatest(raw, fg)
-      .filter(!col(DeletedCol))
-      .drop(CommitCol, DeletedCol), fg)
+    resolve(window(spark, root, fg, cs, exclusiveStart, inclusiveEnd), fg)
   }
 
   /** Resolve one winning row per record key: greatest (_commit_time,
-    * precombine). The only shuffle in the read path; partition pruning has
+    * precombine). The only shuffle in the read path; commit selection has
     * already bounded its input.
     */
   private def dedupLatest(df: DataFrame, fg: FeatureGroup): DataFrame = {
@@ -321,153 +365,76 @@ object Lake {
 
   private def recordKey(df: DataFrame, fg: FeatureGroup): Seq[String] = {
     val k = recordKey(fg).filter(df.columns.contains)
-    if (k.nonEmpty) k else df.columns.filterNot(Seq(CommitCol, DeletedCol).contains).toSeq
+    if (k.nonEmpty) k
+    else df.columns.filterNot(Seq(CommitCol, DeletedCol, TxCol).contains).toSeq
   }
 
-  /** Rewrite the current snapshot as a single base commit and drop older
-    * partitions — bounds merge-on-read amplification (Hudi compaction
-    * analog). Destructive; call between queries only.
+  /** Squash every live commit but the newest `keep` into one base commit
+    * at the newest squashed time: the resolved state as of that time,
+    * published as one entry that replaces the squashed commits. Reads at
+    * or after the base time are unchanged. None when nothing is squashed.
     */
-  def compact(spark: SparkSession, root: String, fg: FeatureGroup): CommitMeta = {
-    val snap = snapshot(spark, root, fg, None).cache()
-    snap.count() // force before we delete source files
-    val tmp = s"$root/compact_tmp"
-    snap.write.mode(SaveMode.Overwrite).parquet(tmp)
-    val (fs, dp) = fsOf(spark, dataPath(root))
-    fs.delete(dp, true)
-    val reread = spark.read.parquet(tmp)
-    val meta = writeCommit(spark, root, fg, reread, deleted = false,
-      operation = "compact")
-    snap.unpersist()
-    fs.delete(new Path(tmp), true)
-    meta
+  private def squash(spark: SparkSession, root: String, fg: FeatureGroup,
+                     keep: Int, operation: String): Option[CommitMeta] = {
+    val squashed = liveCommits(root).dropRight(keep)
+    squashed.lastOption.map { last =>
+      val base = resolve(rawData(spark, root, fg, squashed), fg,
+        fillDefaults = true).withColumn(DeletedCol, lit(false))
+      commit(spark, root, fg, base, last.time, squashed) { (t, n) =>
+        CommitMeta(t, operation, n, 0L, 0L)
+      }
+    }
   }
+
+  /** Rewrite the current snapshot as a single base commit — bounds
+    * merge-on-read amplification (Hudi compaction analog). Time travel
+    * before the base fails fast afterwards, as after cleanCommits.
+    */
+  def compact(spark: SparkSession, root: String, fg: FeatureGroup): CommitMeta =
+    squash(spark, root, fg, keep = 0, "compact").getOrElse(
+      throw new IllegalStateException(s"$root has no commits to compact"))
 
   // -- commit retention ------------------------------------------------------
 
-  private def horizonPath(root: String) = s"$root/_commit_horizon"
+  private def horizon(cs: Seq[Commit]): Option[Long] =
+    cs.headOption.filter(c => BaseOps(c.meta.operation)).map(_.time)
 
   /** Oldest commit time still valid for time travel, if retention has ever
     * run (None = full history available).
     */
-  def commitHorizon(spark: SparkSession, root: String): Option[Long] = {
-    val (fs, p) = fsOf(spark, horizonPath(root))
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes,
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-      finally in.close()
-    }
-  }
+  def commitHorizon(spark: SparkSession, root: String): Option[Long] =
+    horizon(liveCommits(root))
 
   /** Bound the active timeline to the last `keepLast` commits (the
     * reference keeps a bounded Hudi active timeline — commits beyond it
     * are archived; constructor/query.py:367-372). Everything older is
     * squashed into a single base commit at the newest archived commit
     * time, so snapshots/as-of/incremental reads at or after the horizon
-    * are unchanged while the commit-partition count (and merge-on-read
+    * are unchanged while the commit count (and merge-on-read
     * amplification) stays bounded. Time travel BEFORE the horizon fails
     * fast with a clear error instead of returning partial state.
-    * Destructive; call between queries only. Returns the retained commits.
+    * Returns the retained commits.
     */
   def cleanCommits(spark: SparkSession, root: String, fg: FeatureGroup,
                    keepLast: Int): Seq[Long] = {
     require(keepLast >= 1, "keepLast must be >= 1")
-    recoverPendingClean(spark, root, fg)
-    val commits = listCommits(spark, root)
-    if (commits.length <= keepLast) return commits
-    val archived = commits.dropRight(keepLast)
-    val baseT = archived.last
-    // resolved state as of the horizon: tombstones fully applied, so the
-    // base commit needs no deleted rows at all
-    val base = snapshot(spark, root, fg, Some(baseT))
-      .withColumn(CommitCol, lit(baseT))
-      .withColumn(DeletedCol, lit(false))
-    val tmp = s"$root/clean_tmp"
-    base.write.mode(SaveMode.Overwrite).parquet(tmp)
-    // COMMIT POINT: the horizon marker goes down while the squashed base
-    // still lives in clean_tmp and the archived partitions are untouched.
-    // A crash anywhere past this line is detected (reads fail fast on the
-    // tmp dir via pendingOpGuard) and replayed idempotently by
-    // recoverPendingClean from marker + tmp; a crash before it leaves the
-    // table fully intact (the orphan tmp is discarded on the next run).
-    writeHorizon(spark, root, baseT)
-    val (fs, _) = fsOf(spark, root)
-    archived.foreach { t =>
-      fs.delete(new Path(s"${dataPath(root)}/$CommitCol=$t"), true)
-    }
-    val reread = spark.read.parquet(tmp)
-    val partCols =
-      CommitCol +: fg.partitionKey.filter(reread.columns.contains)
-    reread.write.mode(SaveMode.Append).partitionBy(partCols: _*)
-      .parquet(dataPath(root))
-    fs.delete(new Path(tmp), true)
+    squash(spark, root, fg, keepLast, "clean")
     listCommits(spark, root)
   }
 
-  private def writeHorizon(spark: SparkSession, root: String, t: Long): Unit = {
-    val (fs, p) = fsOf(spark, horizonPath(root))
-    val out = fs.create(p, true)
-    try out.write(t.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  private val detailsSchema = StructType(Seq(
+    StructField("commitTime", LongType), StructField("operation", StringType),
+    StructField("rowsDeleted", LongType), StructField("rowsInserted", LongType),
+    StructField("rowsUpdated", LongType)))
 
-  /** Fail reads fast while a crashed maintenance op has the table in an
-    * intermediate state, instead of silently serving partial history.
+  /** Commit metadata of the live commits, oldest first (rows
+    * inserted/updated/deleted per commit — core/hudi_engine.py:246-274
+    * parity). Columns in the order a JSON read of the records infers.
     */
-  private def pendingOpGuard(spark: SparkSession, root: String): Unit = {
-    val (fs, _) = fsOf(spark, root)
-    if (fs.exists(new Path(s"$root/clean_tmp")))
-      throw new IllegalStateException(
-        s"interrupted cleanCommits at $root — re-run cleanCommits to " +
-          s"recover (the squashed base is preserved in $root/clean_tmp)")
-    if (fs.exists(new Path(s"$root/compact_tmp")))
-      throw new IllegalStateException(
-        s"interrupted compact at $root — the full snapshot is preserved " +
-          s"in $root/compact_tmp")
+  def commitDetails(spark: SparkSession, root: String): DataFrame = {
+    val rows = liveCommits(root).map { case Commit(_, m) =>
+      Row(m.commitTime, m.operation, m.rowsDeleted, m.rowsInserted, m.rowsUpdated)
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), detailsSchema)
   }
-
-  /** Complete (or discard) a cleanCommits run that crashed mid-operation.
-    * The tmp's own `_commit_time` column tells which case we're in: if it
-    * matches the horizon marker the crash was PAST the commit point →
-    * replay the deletes + base append (idempotent: the base partition at
-    * the horizon time is itself re-deleted first, so a partially appended
-    * base can't double up); otherwise the run aborted before its marker
-    * and the original table is intact → discard the orphan tmp.
-    */
-  private def recoverPendingClean(spark: SparkSession, root: String,
-                                  fg: FeatureGroup): Unit = {
-    val (fs, _) = fsOf(spark, root)
-    val tmp = new Path(s"$root/clean_tmp")
-    if (!fs.exists(tmp)) return
-    if (!fs.exists(new Path(s"$root/clean_tmp/_SUCCESS"))) {
-      // tmp write itself crashed — strictly before the commit point
-      fs.delete(tmp, true)
-      return
-    }
-    val tmpDf = spark.read.parquet(s"$root/clean_tmp")
-    val baseT = tmpDf.select(CommitCol).take(1).headOption match {
-      case Some(r) => r.getLong(0)
-      case None => throw new IllegalStateException(
-        s"interrupted cleanCommits at $root left an empty squashed base; " +
-          "cannot determine its horizon — inspect clean_tmp and the " +
-          "_commit_horizon marker manually")
-    }
-    if (commitHorizon(spark, root).contains(baseT)) {
-      listCommits(spark, root).filter(_ <= baseT).foreach { t =>
-        fs.delete(new Path(s"${dataPath(root)}/$CommitCol=$t"), true)
-      }
-      val partCols = CommitCol +: fg.partitionKey.filter(tmpDf.columns.contains)
-      tmpDf.write.mode(SaveMode.Append).partitionBy(partCols: _*)
-        .parquet(dataPath(root))
-    }
-    fs.delete(tmp, true)
-  }
-
-  /** Commit metadata log (rows inserted/updated/deleted per commit —
-    * core/hudi_engine.py:246-274 parity).
-    */
-  def commitDetails(spark: SparkSession, root: String): DataFrame =
-    spark.read.json(commitsPath(root))
 }

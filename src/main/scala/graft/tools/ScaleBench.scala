@@ -621,9 +621,16 @@ object ScaleBench {
       // sublinear in wall), not commit-bound.
       "lake_bulk_orders" -> (lakeBulkOrders _))
 
+  /** Where `lake_bulk_orders` commits: beside the data dir when that is
+    * writable, so the write lands on the data filesystem, not tmpfs.
+    * childMain deletes it after every rep.
+    */
+  private def lakeRoot(dir: String): java.nio.file.Path =
+    java.nio.file.Paths.get(graft.Bench.writableSibling(dir),
+      s"graft_scale_lake_${ProcessHandle.current.pid}")
+
   private def lakeBulkOrders(s: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_scale_lake")
-      .toString
+    val root = lakeRoot(dir).toString
     val orders = s.read.parquet(s"$dir/orders.parquet")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
         col("o_orderdate").cast("string").as("o_orderdate"))
@@ -656,12 +663,15 @@ object ScaleBench {
     try spark.read.parquet(s"$dir/documents.parquet").count()
     catch { case _: Throwable => () }
     val fn = ops.toMap.apply(op)
+    val lake = lakeRoot(dir)
     val times = (1 to Reps).map { _ =>
       val t0 = System.nanoTime()
       // noop sink: count() would let the optimizer prune the very
       // operator under test (see Bench.measure)
-      fn(spark, dir).write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
+      try {
+        fn(spark, dir).write.mode("overwrite").format("noop").save()
+        (System.nanoTime() - t0) / 1e9
+      } finally graft.Bench.deleteRecursively(lake)
     }
     println(s"$Marker $op ${times.mkString(" ")}")
     spark.stop()

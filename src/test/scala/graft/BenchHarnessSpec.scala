@@ -129,7 +129,9 @@ class BenchHarnessSpec extends AnyFunSuite {
   test("summary line counts failed queries and excludes them from value") {
     val s = Bench.renderSummary(Seq(
       "q_ok" -> Seq[Bench.Rep](Right(2.0), Right(1.0)),
-      "q_dead" -> Seq[Bench.Rep](Left("a"), Left("b"))))
+      "q_dead" -> Seq[Bench.Rep](Left("a"), Left("b"))),
+      detail = Some("out/run_failed.json"))
+    assert(s.contains(""""detail":"out/run_failed.json""""))
     assert(s.contains(""""value":1.0"""))
     assert(s.contains(""""n":1""") && s.contains(""""declared":2"""))
     assert(s.contains(""""errors":1"""))

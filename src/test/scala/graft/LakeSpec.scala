@@ -71,8 +71,9 @@ class LakeSpec extends SparkSpec {
     val fg = fs.createFeatureGroup("t5", df, primaryKey = Seq("id"),
       partitionKey = Seq("seg"))
     val root = fg.source.asInstanceOf[graft.model.LakeSource].root
-    // physical layout: seg=... directories under each commit
+    // physical layout: seg=... directories under each commit's directory
     val commitDir = new java.io.File(s"$root/data").listFiles()
+      .filter(_.getName.startsWith("_tx=")).head.listFiles()
       .filter(_.getName.startsWith("_commit_time=")).head
     assert(commitDir.listFiles().exists(_.getName.startsWith("seg=")))
     // declared schema (names, order, types) survives the partition round trip
@@ -151,67 +152,119 @@ class LakeSpec extends SparkSpec {
     assert(Lake.cleanCommits(spark, root, fg, 5) === retained)
   }
 
-  test("crashed cleanCommits: reads fail fast; re-run replays the clean") {
-    import org.apache.spark.sql.functions.lit
+  // -- fault injection: the on-disk state each crash point leaves ---------
+
+  /** A group with four acknowledged commits (one a delete) and the model
+    * state after each, keyed by commit time.
+    */
+  private def history(name: String) = {
     val fs = freshStore()
-    val fg = fs.createFeatureGroup("tcrash",
-      Seq((1L, "v1")).toDF("id", "v"), primaryKey = Seq("id"))
+    val fg = fs.createFeatureGroup(name,
+      Seq((1L, "v1"), (2L, "w1")).toDF("id", "v"), primaryKey = Seq("id"))
     val root = fg.source.asInstanceOf[graft.model.LakeSource].root
-    fs.insert(fg, Seq((1L, "v2")).toDF("id", "v"))
-    fs.insert(fg, Seq((2L, "w1")).toDF("id", "v"))
-    fs.insert(fg, Seq((1L, "v3")).toDF("id", "v"))
-    val commits = Lake.listCommits(spark, root)
-    val baseT = commits(1)
+    val t1 = Lake.listCommits(spark, root).head
+    val t2 = fs.insert(fg, Seq((1L, "v2"), (3L, "x1")).toDF("id", "v")).commitTime
+    val t3 = fs.delete(fg, Seq(Tuple1(2L)).toDF("id")).commitTime
+    val t4 = fs.insert(fg, Seq((1L, "v3")).toDF("id", "v")).commitTime
+    val models = Seq(
+      t1 -> Map(1L -> "v1", 2L -> "w1"),
+      t2 -> Map(1L -> "v2", 2L -> "w1", 3L -> "x1"),
+      t3 -> Map(1L -> "v2", 3L -> "x1"),
+      t4 -> Map(1L -> "v3", 3L -> "x1"))
+    (fs, fg, root, models)
+  }
 
-    // simulate a crash immediately PAST the commit point: squashed base in
-    // clean_tmp + horizon marker down, archived partitions not yet deleted
-    Lake.snapshot(spark, root, fg, Some(baseT))
-      .withColumn("_commit_time", lit(baseT))
-      .withColumn("_deleted", lit(false))
-      .write.mode("overwrite").parquet(s"$root/clean_tmp")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$root/_commit_horizon"),
-      baseT.toString.getBytes)
+  private def rows(df: org.apache.spark.sql.DataFrame): Map[Long, String] =
+    df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
 
-    // reads refuse to serve the intermediate state
-    val e = intercept[IllegalStateException] {
-      Lake.snapshot(spark, root, fg, None)
+  /** Every acknowledged commit at or after `from` reads back as of its
+    * time, and no scan touches a directory named `ghost`.
+    */
+  private def readsBack(root: String, fg: graft.model.FeatureGroup,
+                        models: Seq[(Long, Map[Long, String])], from: Long,
+                        ghost: String): Unit = {
+    val latest = Lake.snapshot(spark, root, fg, None)
+    assert(rows(latest) === models.last._2)
+    assert(!latest.inputFiles.exists(_.contains(ghost)))
+    models.filter(_._1 >= from).foreach { case (t, m) =>
+      assert(rows(Lake.snapshot(spark, root, fg, Some(t))) === m, s"as of $t")
     }
-    assert(e.getMessage.contains("interrupted cleanCommits"))
-    intercept[IllegalStateException] {
-      Lake.readChanges(spark, root, fg, commits(1), commits.last)
-    }
+  }
 
-    // re-running cleanCommits recovers, then completes the retention
+  /** Re-running retention and compaction completes on the crashed state. */
+  private def maintenanceRuns(root: String, fg: graft.model.FeatureGroup,
+                              models: Seq[(Long, Map[Long, String])],
+                              ghost: String): Unit = {
     val retained = Lake.cleanCommits(spark, root, fg, keepLast = 2)
-    assert(retained === commits.drop(1))
-    val snap = Lake.snapshot(spark, root, fg, None).orderBy("id")
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    assert(snap.toSeq === Seq((1L, "v3"), (2L, "w1")))
-    val atH = Lake.snapshot(spark, root, fg, Some(baseT))
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    assert(atH.toSeq === Seq((1L, "v2")))
+    assert(retained === models.map(_._1).takeRight(3))
+    readsBack(root, fg, models, retained.head, ghost)
+    Lake.compact(spark, root, fg)
+    assert(Lake.listCommits(spark, root) === Seq(models.last._1))
+    readsBack(root, fg, models, models.last._1, ghost)
   }
 
-  test("crashed cleanCommits BEFORE its marker: orphan tmp is discarded") {
+  test("fault: staged but unpublished commits are never read") {
     import org.apache.spark.sql.functions.lit
-    val fs = freshStore()
-    val fg = fs.createFeatureGroup("tcrash2",
-      Seq((1L, "v1")).toDF("id", "v"), primaryKey = Seq("id"))
-    val root = fg.source.asInstanceOf[graft.model.LakeSource].root
-    fs.insert(fg, Seq((2L, "w1")).toDF("id", "v"))
-    val commits = Lake.listCommits(spark, root)
-    // tmp written but NO horizon marker → the run aborted pre-commit-point
-    Lake.snapshot(spark, root, fg, Some(commits.head))
-      .withColumn("_commit_time", lit(commits.head))
-      .withColumn("_deleted", lit(false))
-      .write.mode("overwrite").parquet(s"$root/clean_tmp")
-    intercept[IllegalStateException] { Lake.snapshot(spark, root, fg, None) }
-    // nothing to retain (keepLast covers all): recovery just drops the tmp
-    assert(Lake.cleanCommits(spark, root, fg, keepLast = 5) === commits)
-    assert(!new java.io.File(s"$root/clean_tmp").exists)
-    assert(Lake.snapshot(spark, root, fg, None).count() === 2)
+    val (fs, fg, root, models) = history("tstaged")
+    // a writer that crashed after staging its data above the head, and a
+    // cleanCommits that crashed after staging its squashed base
+    Seq(s"_tx=ghost-upsert/_commit_time=${models.last._1 + 1}",
+        s"_tx=ghost-base/_commit_time=${models(1)._1}").foreach { d =>
+      Seq((1L, "ghost"), (9L, "ghost")).toDF("id", "v")
+        .withColumn("_deleted", lit(false))
+        .write.parquet(s"$root/data/$d")
+    }
+    assert(Lake.listCommits(spark, root) === models.map(_._1))
+    readsBack(root, fg, models, models.head._1, "ghost")
+    assert(Lake.readChanges(spark, root, fg, models(2)._1, Long.MaxValue)
+      .collect().map(_.getString(1)).toSeq === Seq("v3"))
+    assert(Lake.commitDetails(spark, root).count() === 4)
+    // the next commit lands above the orphan's time without reading it
+    val t5 = fs.insert(fg, Seq((4L, "y1")).toDF("id", "v")).commitTime
+    val all = models :+ (t5 -> (models.last._2 + (4L -> "y1")))
+    readsBack(root, fg, all, all.head._1, "ghost")
+    maintenanceRuns(root, fg, all, "ghost")
   }
+
+  test("fault: squashed directories left after the publish are not read") {
+    val (_, fg, root, models) = history("tsquashed")
+    val data = new java.io.File(s"$root/data")
+    val saved = java.nio.file.Files.createTempDirectory("graft_squashed").toFile
+    data.listFiles().foreach(d => copyTree(d, new java.io.File(saved, d.getName)))
+    val retained = Lake.cleanCommits(spark, root, fg, keepLast = 2)
+    assert(retained === models.map(_._1).drop(1))
+    // the crash: the entry is published, the squashed directories remain
+    val squashed = saved.listFiles().filterNot(d => new java.io.File(data, d.getName).exists)
+    assert(squashed.length === 2)
+    squashed.foreach(d => copyTree(d, new java.io.File(data, d.getName)))
+    assert(Lake.listCommits(spark, root) === retained)
+    assert(Lake.commitHorizon(spark, root) === Some(models(1)._1))
+    squashed.foreach(d => readsBack(root, fg, models, retained.head, d.getName))
+    intercept[IllegalArgumentException] {
+      Lake.snapshot(spark, root, fg, Some(models.head._1))
+    }
+    maintenanceRuns(root, fg, models, squashed.head.getName)
+  }
+
+  test("fault: a stray .tmp in the log neither blocks nor shows") {
+    val (fs, fg, root, models) = history("tstray")
+    // a publish that crashed after staging the entry for the next version
+    val stray = f"$root/_delta_log/.${models.size}%020d.json.deadbeef.tmp"
+    java.nio.file.Files.write(java.nio.file.Paths.get(stray),
+      """{"add":{"path":"data/_tx=ghost/_commit_time=1","si""".getBytes("UTF-8"))
+    readsBack(root, fg, models, models.head._1, "ghost")
+    val t5 = fs.insert(fg, Seq((4L, "y1")).toDF("id", "v")).commitTime
+    assert(new java.io.File(f"$root/_delta_log/${models.size}%020d.json").exists)
+    val all = models :+ (t5 -> (models.last._2 + (4L -> "y1")))
+    readsBack(root, fg, all, all.head._1, "ghost")
+    maintenanceRuns(root, fg, all, "ghost")
+  }
+
+  private def copyTree(from: java.io.File, to: java.io.File): Unit =
+    if (from.isDirectory) {
+      to.mkdirs()
+      from.listFiles().foreach(c => copyTree(c, new java.io.File(to, c.getName)))
+    } else java.nio.file.Files.copy(from.toPath, to.toPath)
 
   test("compaction preserves the snapshot") {
     val fs = freshStore()
