@@ -95,6 +95,25 @@ object Bench {
   private[graft] def isCalib(name: String): Boolean =
     name.startsWith(CalibName) || name.startsWith(CalibIoName)
 
+  /** Tag of a calibration placement measured in the parent JVM after its
+    * solo child failed twice (see runCalibrationSolo): listed in
+    * `calibration_runs`, never the instrument's minimum.
+    */
+  private[graft] val InprocSuffix = "_inproc"
+
+  /** Per-placement minima of one instrument, in sweep order, and their
+    * min over fresh-JVM placements only.
+    */
+  private def instrument(rows: Seq[(String, Seq[Rep])])
+      : (Seq[Double], Option[Double]) = {
+    val mins = rows.flatMap { case (k, rs) =>
+      val ok = rs.collect { case Right(t) => t }
+      if (ok.nonEmpty) Some(k -> ok.min) else None
+    }
+    val solo = mins.filterNot(_._1.endsWith(InprocSuffix)).map(_._2)
+    (mins.map(_._2), if (solo.isEmpty) None else Some(solo.min))
+  }
+
   def main(args: Array[String]): Unit = args match {
     case Array("one", name) => childMain(name, gated = false)
     case Array("one", name, "gated") => childMain(name, gated = true)
@@ -476,27 +495,20 @@ object Bench {
     val startupJson = results.flatMap { case (k, _) => startups.get(k).map(k -> _) }
       .map { case (k, v) => jsonStr(k) + ":" + v }.mkString("{", ",", "}")
     val startupTotal = results.flatMap { case (k, _) => startups.get(k) }.sum
-    // "calibration" stays the cross-round machine divisor (overall best);
-    // "calibration_runs" carries each placement's min in sweep order so
-    // the drift re-run clause can compare sweep-start vs sweep-end
-    val calibMins = calib.flatMap { case (_, rs) =>
-      val ok = rs.collect { case Right(t) => t }
-      if (ok.nonEmpty) Some(ok.min) else None
+    // "calibration" stays the cross-round machine divisor (best fresh-JVM
+    // placement); "calibration_runs" carries each placement's min in sweep
+    // order (in-process ones too) so the drift re-run clause can compare
+    // sweep-start vs sweep-end
+    def fields(key: String, rows: Seq[(String, Seq[Rep])]): String = {
+      val (runs, best) = instrument(rows)
+      if (runs.isEmpty) ""
+      else best.fold("")(v => s""","$key":$v""") +
+        s""","${key}_runs":""" + runs.mkString("[", ",", "]")
     }
-    val calibJson =
-      if (calibMins.isEmpty) ""
-      else s""","calibration":${calibMins.min},"calibration_runs":""" +
-        calibMins.mkString("[", ",", "]")
+    val calibJson = fields("calibration", calib)
     // the I/O instrument is additive and separately keyed: pooling it
     // into "calibration" would corrupt the pinned cross-round divisor
-    val calibIoMins = calibIo.flatMap { case (_, rs) =>
-      val ok = rs.collect { case Right(t) => t }
-      if (ok.nonEmpty) Some(ok.min) else None
-    }
-    val calibIoJson =
-      (if (calibIoMins.isEmpty) ""
-       else s""","calibration_io":${calibIoMins.min},"calibration_io_runs":""" +
-         calibIoMins.mkString("[", ",", "]")) +
+    val calibIoJson = fields("calibration_io", calibIo) +
       // which device the I/O instrument actually probed (r13 ADVICE)
       ioScratch.fold("")(p => s""","calibration_io_scratch":${jsonStr(p)}""")
     // "declared" = queries attempted (calibration excluded): lets a
@@ -531,12 +543,8 @@ object Bench {
     val nErrors = queries.count(_._2.forall(_.isLeft))
     val total = minima.sum
     val startupTotal = results.flatMap { case (k, _) => startups.get(k) }.sum
-    def instMin(rows: Seq[(String, Seq[Rep])]): Option[Double] = {
-      val ms = rows.flatMap(_._2.collect { case Right(t) => t })
-      if (ms.isEmpty) None else Some(ms.min)
-    }
-    val calibJson = instMin(calib).fold("")(v => s""","calibration":$v""")
-    val calibIoJson = instMin(calibIo).fold("")(v => s""","calibration_io":$v""")
+    val calibJson = instrument(calib)._2.fold("")(v => s""","calibration":$v""")
+    val calibIoJson = instrument(calibIo)._2.fold("")(v => s""","calibration_io":$v""")
     val cpusJson = scala.util.Try(cpus.trim.toInt).toOption
       .map(_.toString).getOrElse(jsonStr(cpus))
     s"""{"metric":"total","value":$total,"unit":"sec","summary":true,"total":$total,"n":${minima.size},"declared":${queries.size},"errors":$nErrors,"startup_total":$startupTotal$calibJson$calibIoJson,"cpus":$cpusJson,"sf":"$sfDir","detail":${detail.fold("null")(jsonStr)}}"""
@@ -782,7 +790,7 @@ object Bench {
               reps.map(repToken).mkString(" "))
             out += ((name, s, reps))
           case None =>
-            val tagged = s"${name}_inproc"
+            val tagged = name + InprocSuffix
             System.err.println(s"[bench] $name solo child failed twice —" +
               s" measuring in-process IN PLACE as $tagged (parent JVM," +
               " not a fresh solo JVM: tagged so the contract violation" +

@@ -18,6 +18,10 @@ import org.apache.spark.sql.SparkSession
   *    reads; read as Long nanos). The current generation writes
   *    timestamp[us] — a no-op for it; queries dispatch on the resolved
   *    type either way.
+  *  - 100 retained SQL executions instead of 1000. The UI is off, so
+  *    nothing reads them, and a session running hundreds of queries a
+  *    second (driver-local feature lookups) would otherwise spend a core
+  *    on evicting them.
   */
 object SparkSessions {
 
@@ -37,7 +41,30 @@ object SparkSessions {
     * other 116 queries' plans and costs are unchanged.
     */
   def local(cpus: String, appName: String,
-            metastoreDir: Option[String]): SparkSession = {
+            metastoreDir: Option[String]): SparkSession =
+    local(cpus, appName, metastoreDir, envConf(), System.err.println)
+
+  /** Deployment settings from `SPARK_GRAFT_SPARK_CONF`. */
+  private def envConf(): Seq[(String, String)] =
+    sys.env.get("SPARK_GRAFT_SPARK_CONF").toSeq.flatMap {
+      _.split(";").map(_.trim).filter(_.nonEmpty).map { kv =>
+        kv.split("=", 2) match {
+          case Array(k, v) if k.trim.nonEmpty => k.trim -> v.trim
+          case _ => throw new IllegalArgumentException(
+            s"SPARK_GRAFT_SPARK_CONF entry is not key=value: '$kv'")
+        }
+      }
+    }
+
+  /** `conf` is applied after the defaults, in order. When getOrCreate()
+    * returns an already running session, Spark keeps only runtime SQL
+    * settings; `warn` then gets one line naming every `conf` key that
+    * did not take effect.
+    */
+  private[graft] def local(cpus: String, appName: String,
+                           metastoreDir: Option[String],
+                           conf: Seq[(String, String)],
+                           warn: String => Unit): SparkSession = {
     val msDir = metastoreDir.getOrElse(
       java.nio.file.Files.createTempDirectory("graft_metastore").toString)
     val b = SparkSession.builder()
@@ -52,6 +79,9 @@ object SparkSessions {
       // instead of one per partial session
       .config("spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition", "true")
       .config("spark.ui.enabled", "false")
+      // with no UI, Spark's SQL status store still keeps finished queries;
+      // past the limit each further query sorts all it keeps to evict one
+      .config("spark.sql.ui.retainedExecutions", "100")
       .config("spark.sql.catalogImplementation", "hive")
       .config("spark.sql.warehouse.dir", s"$msDir/warehouse")
       .config("javax.jdo.option.ConnectionURL",
@@ -62,17 +92,29 @@ object SparkSessions {
     // probe — SCALE.md's maxPartitionBytes sweep) overrides via
     //   SPARK_GRAFT_SPARK_CONF="spark.sql.files.maxPartitionBytes=512m;…"
     // (semicolon-separated key=value pairs, applied in order).
-    sys.env.get("SPARK_GRAFT_SPARK_CONF").foreach {
-      _.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) if k.nonEmpty => b.config(k.trim, v.trim)
-          case _ => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_SPARK_CONF entry is not key=value: '$kv'")
-        }
-      }
-    }
+    conf.foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
+    val ignored = ignoredConf(s, conf)
+    if (ignored.nonEmpty)
+      warn("[graft] SPARK_GRAFT_SPARK_CONF: a running session ignored " +
+        ignored.mkString(", "))
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Keys of `conf` the session does not run with: a setting takes effect
+    * as a runtime SQL setting of the session or as a setting of its
+    * SparkContext. (A warm session copies every non-static key into its
+    * SQL conf, where a core setting such as `spark.driver.maxResultSize`
+    * shows but does nothing, so `s.conf` alone cannot tell.)
+    */
+  private def ignoredConf(s: SparkSession,
+                          conf: Seq[(String, String)]): Seq[String] = {
+    val last = conf.toMap
+    val context = s.sparkContext.getConf
+    conf.map(_._1).distinct.filterNot { k =>
+      (s.conf.isModifiable(k) && s.conf.getOption(k).contains(last(k))) ||
+        context.getOption(k).contains(last(k))
+    }
   }
 }

@@ -1,23 +1,45 @@
 package graft.serving
 
+import graft.ir.JoinSpec
 import graft.model.FeatureGroup
 import graft.ops.Transformations
 import graft.planner.QueryPlanner
 import graft.view.FeatureView
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Cast, GenericInternalRow, Literal}
+import org.apache.spark.sql.execution.GraftKeyedIndex
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Batch serving analog of the reference's online feature-vector path
   * (python/hsfs/core/vector_server.py:486-554 assembly,
   * core/online_store_sql_engine.py per-FG prepared statements).
   *
-  * Instead of per-key MySQL prepared statements, lookups are broadcast-hash
-  * joins of the (small) key set against each feature group's latest
-  * snapshot — one join per feature group, results merged on the serving
-  * keys, missing features null (vector_server missing-feature policy
-  * :509-534). On-demand transformations compute from request-time columns;
+  * One lookup per feature group, results merged on the serving keys,
+  * missing features null (vector_server missing-feature policy :509-534).
+  * On-demand transformations compute from request-time columns;
   * model-dependent ones bind precomputed statistics (vector_server
-  * :924-978).
+  * :924-978). Two serving modes:
+  *  - default: each lookup is a Spark query that semi-prunes every group
+  *    to the requested keys below its latest-per-key window, then
+  *    broadcast-joins the hits onto the keys;
+  *  - online (materializeOnline(), or cacheSnapshots = true for a lazy
+  *    build on the first driver-local lookup): each group's
+  *    latest-per-key snapshot is computed once and held on the driver as
+  *    a keyed index — Spark's own broadcast-join build structure — the
+  *    analog of the reference's online key-value store. Lookups are
+  *    answered on the driver: keys whose plan is driver-local (a
+  *    getFeatureVector map, a list of entries) collect without a Spark
+  *    job; other key frames are collected first, in one job. Key types
+  *    that do not widen losslessly to the index's key types take the
+  *    default path, which compares them as a SQL join does. Until the
+  *    lazy build has run, other key frames take the default path too.
+  * The online state lives on the driver heap: each group's snapshot is
+  * collected once, bounded by `spark.driver.maxResultSize` (an over-size
+  * group fails materializeOnline() with Spark's error and leaves no
+  * index), and then by driver memory. close() drops it for the garbage
+  * collector.
   */
 final class FeatureVectorServer(
     spark: SparkSession,
@@ -26,6 +48,12 @@ final class FeatureVectorServer(
     cacheSnapshots: Boolean = false) {
 
   private val lf = view.query.leftFeatureGroup
+
+  /** Left-side columns a join looks its right group up by. */
+  private def joinKeysOf(j: JoinSpec): Seq[String] =
+    if (j.on.nonEmpty) j.on
+    else if (j.leftOn.nonEmpty) j.leftOn
+    else lf.primaryKey.filter(j.right.leftFeatureGroup.primaryKey.contains)
 
   /** The keys a [[getFeatureVectors]] caller interacts with — the
     * reference's serving-key surface (serving_key.py:26-47,
@@ -37,20 +65,48 @@ final class FeatureVectorServer(
   def servingKeys: Seq[FeatureVectorServer.ServingKey] = {
     val required = lf.primaryKey.map(k =>
       FeatureVectorServer.ServingKey(k, lf.name, required = true))
-    val derived = view.query.joins.zipWithIndex.flatMap { case (j, i) =>
-      val rfg = j.right.leftFeatureGroup
-      val joinKeys =
-        if (j.on.nonEmpty) j.on
-        else if (j.leftOn.nonEmpty) j.leftOn
-        else lf.primaryKey.filter(rfg.primaryKey.contains)
-      val rightKeys = if (j.rightOn.nonEmpty) j.rightOn else joinKeys
-      rightKeys.zip(joinKeys).map { case (rk, lk) =>
-        FeatureVectorServer.ServingKey(rk, rfg.name, required = false,
-          prefix = j.prefix.getOrElse(""), joinIndex = i + 1,
-          joinOn = Seq(lk))
+    val derived = joins.zipWithIndex.flatMap { case (j, i) =>
+      j.rightKeys.zip(j.leftKeys).map { case (rk, lk) =>
+        FeatureVectorServer.ServingKey(rk, j.fg.name, required = false,
+          prefix = j.prefix, joinIndex = i + 1, joinOn = Seq(lk))
       }
     }
     required ++ derived
+  }
+
+  /** One join of the view, resolved for serving. */
+  private final class Lookup(spec: JoinSpec) {
+    val fg: FeatureGroup = spec.right.leftFeatureGroup
+    val leftKeys: Seq[String] = joinKeysOf(spec)
+    val rightKeys: Seq[String] =
+      if (spec.rightOn.nonEmpty) spec.rightOn else leftKeys
+    val wanted: Seq[String] =
+      if (spec.right.features.isEmpty) fg.featureNames
+      else spec.right.features.map(_.name)
+    val prefix: String = spec.prefix.getOrElse("")
+    /** The right query's rows, filters applied, before latest-per-key. */
+    def base: DataFrame = QueryPlanner.plan(spark, spec.right.copy(features = Nil))
+    /** Right keys, then the wanted features under their prefixed names. */
+    def hitColumns(snap: DataFrame): DataFrame = {
+      val projected = snap.select(
+        (rightKeys ++ wanted.filterNot(rightKeys.contains)).distinct.map(col): _*)
+      wanted.filterNot(rightKeys.contains).foldLeft(projected) {
+        (d, c) => d.withColumnRenamed(c, prefix + c)
+      }
+    }
+    /** Right keys a left outer join with the hits drops again. */
+    val dropped: Seq[String] =
+      rightKeys.filterNot(k => leftKeys.contains(k) && wanted.contains(k))
+  }
+
+  private val joins = view.query.joins.map(new Lookup(_))
+
+  // join keys of downstream lookups must ride along even if unselected
+  private val leftWanted: Seq[String] = {
+    val selected =
+      if (view.query.features.isEmpty) lf.featureNames
+      else view.query.features.map(_.name)
+    selected ++ joins.flatMap(_.leftKeys).distinct.filterNot(selected.contains)
   }
 
   // The DEFAULT lookup path semi-prunes each snapshot to the requested
@@ -60,39 +116,42 @@ final class FeatureVectorServer(
   // analog of the reference's online store being a materialized
   // latest-version table) is a real cost that must be opt-in and named:
   // call materializeOnline() — or construct with cacheSnapshots=true to
-  // materialize lazily on first lookup. close() releases.
-  private val snapCache =
-    scala.collection.mutable.Map.empty[String, org.apache.spark.sql.DataFrame]
+  // materialize lazily on the first driver-local lookup. close() releases.
+  //
+  // The online state: one index per lookup — the left group on its
+  // primary key, then each join's right group on its right keys — built
+  // all at once under the server's lock, published only when complete.
+  @volatile private var online: Seq[GraftKeyedIndex] = null
 
-  private def snapshotOf(fg: FeatureGroup,
-                         build: => org.apache.spark.sql.DataFrame) =
-    snapCache.getOrElseUpdate(fg.id, { val d = build.cache(); d })
-
-  private def useCache(fg: FeatureGroup): Boolean =
-    cacheSnapshots || snapCache.contains(fg.id)
-
-  /** Eagerly materialize + cache the latest-per-key snapshot of every
-    * feature group in the view (one full-table window each, paid ONCE,
-    * here, by explicit request). Subsequent lookups are broadcast joins
-    * against the cached state — the "online store" serving mode.
+  /** Eagerly build the online state: each group's latest-per-key snapshot
+    * (one full-table window each, paid ONCE, here, by explicit request)
+    * collected into a driver-resident keyed index. Subsequent lookups
+    * probe it — the "online store" serving mode.
     */
-  def materializeOnline(): this.type = {
-    def add(fg: FeatureGroup, build: => DataFrame): Unit =
-      if (!snapCache.contains(fg.id)) snapshotOf(fg, build).count()
-    add(lf, latestPerKey(lf, QueryPlanner.materialize(spark, lf, None)))
-    view.query.joins.foreach { j =>
-      val rfg = j.right.leftFeatureGroup
-      add(rfg,
-        latestPerKey(rfg, QueryPlanner.plan(spark, j.right.copy(features = Nil))))
+  def materializeOnline(): this.type = { onlineIndexes(); this }
+
+  private def onlineIndexes(): Seq[GraftKeyedIndex] = {
+    val built = online
+    if (built != null) built
+    else synchronized {
+      if (online == null) online = buildIndexes()
+      online
     }
-    this
   }
 
-  /** Release cached snapshots. */
-  def close(): Unit = {
-    snapCache.values.foreach(_.unpersist())
-    snapCache.clear()
-  }
+  private def buildIndexes(): Seq[GraftKeyedIndex] =
+    GraftKeyedIndex.build(
+      latestPerKey(lf, QueryPlanner.materialize(spark, lf, None))
+        .select((lf.primaryKey ++ leftWanted).distinct.map(col): _*),
+      lf.primaryKey.size) +:
+      joins.map(j => GraftKeyedIndex.build(
+        j.hitColumns(latestPerKey(j.fg, j.base)), j.rightKeys.size))
+
+  /** Release the online state; later lookups take the default path (or,
+    * with cacheSnapshots = true, build it again). Lookups already probing
+    * keep their reference, so its memory goes when they finish.
+    */
+  def close(): Unit = synchronized { online = null }
 
   /** Latest row per primary key — the online store holds only the newest
     * version of each key (reference online path semantics; offline history
@@ -128,34 +187,113 @@ final class FeatureVectorServer(
     *      never shuffled;
     *   2. LEFT-OUTER join the keys against the (≤ |keys|) hit set with
     *      the hits as build side (LeftOuter + BuildRight).
-    * When snapshots are not cached, the semi-prune is pushed BELOW the
-    * latest-per-key window (valid because serving joinKeys ⊆ primary key,
-    * so the filter keeps/drops whole window partitions), shrinking the
-    * row_number shuffle to the matched keys only.
+    * The semi-prune is pushed BELOW the latest-per-key window (valid
+    * because serving joinKeys ⊆ primary key, so the filter keeps/drops
+    * whole window partitions), shrinking the row_number shuffle to the
+    * matched keys only.
     */
   private def lookupOne(keys: DataFrame, fg: FeatureGroup,
                         wanted: Seq[String], joinKeys: Seq[String],
                         prefix: String): DataFrame = {
     val probe = keys.select(joinKeys.map(col): _*).distinct()
-    val cached = useCache(fg)
     val snap =
-      if (cached)
-        snapshotOf(fg,
-          latestPerKey(fg, QueryPlanner.materialize(spark, fg, None)))
-      else
-        latestPerKey(fg, QueryPlanner.materialize(spark, fg, None)
-          .join(broadcast(probe), joinKeys, "left_semi"))
+      latestPerKey(fg, QueryPlanner.materialize(spark, fg, None)
+        .join(broadcast(probe), joinKeys, "left_semi"))
     val projected = snap.select((joinKeys ++ wanted).distinct.map(col): _*)
     val renamed = wanted.filterNot(joinKeys.contains).foldLeft(projected) {
       (d, c) => d.withColumnRenamed(c, prefix + c)
     }
-    // uncached path is already pruned (and re-joining the same probe
-    // lineage would be a self-join ambiguity); cached path prunes here
-    val hits =
-      if (cached)
-        renamed.join(broadcast(probe), joinKeys, "left_semi")
-      else renamed
-    keys.join(broadcast(hits), joinKeys, "left")
+    keys.join(broadcast(renamed), joinKeys, "left")
+  }
+
+  /** The default assembly: every group pruned to the keys in Spark. */
+  private def assemblePruned(keys: DataFrame): DataFrame = {
+    var out = lookupOne(keys, lf,
+      leftWanted.filterNot(keys.columns.contains), lf.primaryKey, "")
+    joins.foreach { j =>
+      val baseSnap = j.base
+      val probe = out.select(j.leftKeys.map(col): _*).distinct()
+      // same two-broadcast shape as lookupOne; prune below the window
+      // only when the join keys cover the partition (primary) key
+      val pruned = j.rightKeys.nonEmpty &&
+        j.rightKeys.forall(j.fg.primaryKey.contains)
+      val snap =
+        if (pruned) {
+          val pc = j.rightKeys.zip(j.leftKeys)
+            .map { case (rk, lk) => baseSnap(rk) === probe(lk) }
+            .reduce(_ && _)
+          latestPerKey(j.fg, baseSnap.join(broadcast(probe), pc, "left_semi"))
+        } else latestPerKey(j.fg, baseSnap)
+      val renamed = j.hitColumns(snap)
+      val hits =
+        if (pruned) renamed
+        else {
+          val sc = j.rightKeys.zip(j.leftKeys)
+            .map { case (rk, lk) => renamed(rk) === probe(lk) }
+            .reduce(_ && _)
+          renamed.join(broadcast(probe), sc, "left_semi")
+        }
+      val cond = j.leftKeys.zip(j.rightKeys)
+        .map { case (lk, rk) => out(lk) === hits(rk) }.reduce(_ && _)
+      out = j.dropped.foldLeft(out.join(broadcast(hits), cond, "left")) {
+        (d, k) => d.drop(hits(k))
+      }
+    }
+    out
+  }
+
+  /** Online assembly on the driver for driver-local keys: the same left
+    * outer joins, row by row against the indexes, as a driver-local
+    * frame. None when a key column is missing or its type does not widen
+    * losslessly to the index's key type; the default assembly handles those.
+    */
+  private def assembleOnDriver(ix: Seq[GraftKeyedIndex], keySchema: StructType,
+                               keyRows: Seq[InternalRow]): Option[DataFrame] = {
+    // a USING join puts the keys first, then the other key columns
+    val pk = lf.primaryKey.flatMap(indexOf(keySchema, _))
+    val order = pk ++ keySchema.fields.indices.filterNot(pk.contains)
+    val wanted = leftWanted.filterNot(keySchema.fieldNames.contains).distinct
+    val first = probeRows(keySchema, keyRows, order, lf.primaryKey,
+      ix.head, wanted)
+    joins.zip(ix.tail).foldLeft(first) { case (acc, (j, x)) =>
+      acc.flatMap { case (schema, rows) =>
+        probeRows(schema, rows, schema.fields.indices, j.leftKeys, x,
+          x.schema.fieldNames.toSeq.filterNot(j.dropped.contains))
+      }
+    }.map { case (schema, rows) =>
+      GraftKeyedIndex.localFrame(spark, schema, rows)
+    }
+  }
+
+  private def indexOf(schema: StructType, name: String): Option[Int] =
+    Some(schema.fieldNames.indexOf(name)).filter(_ >= 0)
+
+  /** One left outer join on the driver: each row's `order` columns, then
+    * the index's `take` columns of every match (nulls when none).
+    */
+  private def probeRows(schema: StructType, rows: Seq[InternalRow],
+                        order: Seq[Int], leftKeys: Seq[String],
+                        x: GraftKeyedIndex, take: Seq[String])
+      : Option[(StructType, Seq[InternalRow])] = {
+    val probe = leftKeys.flatMap(k =>
+      indexOf(schema, k).map(i => (i, schema(i).dataType)))
+    if (probe.size != leftKeys.size || !x.exact(probe.map(_._2))) None
+    else {
+      val lookup = x.lookup(probe)
+      val left = order.map(i => (i, schema(i).dataType))
+      val right = take.map(c => (x.schema.fieldIndex(c), x.schema(c).dataType))
+      val misses = Seq.fill(right.size)(null)
+      val out = rows.flatMap { r =>
+        val l = left.map { case (i, t) => r.get(i, t) }
+        val hits = lookup(r)
+        if (hits.isEmpty) Seq(new GenericInternalRow((l ++ misses).toArray))
+        else hits.map(h => new GenericInternalRow(
+          (l ++ right.map { case (i, t) => h.get(i, t) }).toArray))
+      }
+      val fields = order.map(schema(_)) ++
+        take.map(c => x.schema(c).copy(nullable = true))
+      Some((StructType(fields), out))
+    }
   }
 
   /** Assemble feature vectors for a DataFrame of serving keys.
@@ -167,89 +305,56 @@ final class FeatureVectorServer(
     */
   def getFeatureVectors(keys: DataFrame,
                         requestParameters: Map[String, Any] = Map()): DataFrame = {
-    val selected =
-      if (view.query.features.isEmpty) lf.featureNames
-      else view.query.features.map(_.name)
-    // join keys of downstream lookups must ride along even if unselected
-    val joinKeyExtras = view.query.joins.flatMap { j =>
-      if (j.on.nonEmpty) j.on
-      else if (j.leftOn.nonEmpty) j.leftOn
-      else lf.primaryKey.filter(j.right.leftFeatureGroup.primaryKey.contains)
-    }.distinct.filterNot(selected.contains)
-    val leftWanted = selected ++ joinKeyExtras
-    var out = lookupOne(keys, lf,
-      leftWanted.filterNot(keys.columns.contains), lf.primaryKey, "")
+    val local =
+      if (cacheSnapshots || online != null) GraftKeyedIndex.localRows(keys)
+      else None
+    finish(assemble(keys, local), requestParameters)
+  }
 
-    view.query.joins.foreach { j =>
-      val rfg = j.right.leftFeatureGroup
-      val joinKeys =
-        if (j.on.nonEmpty) j.on
-        else if (j.leftOn.nonEmpty) j.leftOn
-        else lf.primaryKey.filter(rfg.primaryKey.contains)
-      val rightKeys = if (j.rightOn.nonEmpty) j.rightOn else joinKeys
-      val wanted =
-        if (j.right.features.isEmpty) rfg.featureNames else j.right.features.map(_.name)
-      val baseSnap = QueryPlanner.plan(spark, j.right.copy(features = Nil))
-      val probe = out.select(joinKeys.map(col): _*).distinct()
-      // same two-broadcast shape as lookupOne; prune below the window
-      // only when the join keys cover the partition (primary) key
-      val canPruneBelowWindow = rightKeys.nonEmpty &&
-        rightKeys.forall(rfg.primaryKey.contains)
-      val pruned = !useCache(rfg) && canPruneBelowWindow
-      val snap =
-        if (pruned) {
-          val pc = rightKeys.zip(joinKeys)
-            .map { case (rk, lk) => baseSnap(rk) === probe(lk) }
-            .reduce(_ && _)
-          latestPerKey(rfg, baseSnap.join(broadcast(probe), pc, "left_semi"))
-        } else if (useCache(rfg)) snapshotOf(rfg, latestPerKey(rfg, baseSnap))
-        else latestPerKey(rfg, baseSnap)
-      val projected = snap.select(
-        (rightKeys ++ wanted.filterNot(rightKeys.contains)).distinct.map(col): _*)
-      val prefix = j.prefix.getOrElse("")
-      val renamed = wanted.filterNot(rightKeys.contains).foldLeft(projected) {
-        (d, c) => d.withColumnRenamed(c, prefix + c)
-      }
-      val hits =
-        if (pruned) renamed
-        else {
-          val sc = rightKeys.zip(joinKeys)
-            .map { case (rk, lk) => renamed(rk) === probe(lk) }
-            .reduce(_ && _)
-          renamed.join(broadcast(probe), sc, "left_semi")
-        }
-      val cond = joinKeys.zip(rightKeys)
-        .map { case (lk, rk) => out(lk) === hits(rk) }.reduce(_ && _)
-      out = out.join(broadcast(hits), cond, "left")
-      rightKeys.filterNot(k => joinKeys.contains(k) && wanted.contains(k))
-        .foreach(k => out = out.drop(hits(k)))
-    }
+  /** Vectors for `keys`, whose rows are `local` when they are driver-local. */
+  private def assemble(keys: => DataFrame,
+                       local: Option[(StructType, Seq[InternalRow])]): DataFrame = {
+    val ix = Option(online).orElse(
+      if (cacheSnapshots && local.nonEmpty) Some(onlineIndexes()) else None)
+    ix.flatMap { x =>
+      val (schema, rows) = local.getOrElse(
+        (keys.schema, GraftKeyedIndex.collect(keys, "serveKeys").toSeq))
+      assembleOnDriver(x, schema, rows)
+    }.getOrElse(assemblePruned(keys))
+  }
 
-    // request parameters become literal columns, then one wide select
-    // applies on-demand + model-dependent transformations together
-    requestParameters.foreach { case (k, v) => out = out.withColumn(k, lit(v)) }
+  /** Request parameters become literal columns, then one wide select
+    * applies on-demand + model-dependent transformations together.
+    */
+  private def finish(vectors: DataFrame,
+                     requestParameters: Map[String, Any]): DataFrame = {
+    val out = requestParameters.foldLeft(vectors) {
+      case (d, (k, v)) => d.withColumn(k, lit(v)) }
     if (view.transformations.nonEmpty)
       Transformations.applyAll(out, view.transformations, stats)
     else out
   }
 
-  /** Single-vector convenience (collect-free plan, 1-row broadcast). */
+  /** Single-vector convenience over a one-row driver-local key frame.
+    * A primary-key value that widens losslessly to the left group's key
+    * type is cast to it (an `Int` probes a bigint key); any other value
+    * keeps its literal type and is compared as a SQL join compares it (a
+    * `Double` 1.5 never finds key 1).
+    */
   def getFeatureVector(key: Map[String, Any]): DataFrame = {
-    val row = org.apache.spark.sql.Row.fromSeq(key.values.toSeq)
-    val schema = org.apache.spark.sql.types.StructType(key.map { case (k, v) =>
-      val dt = v match {
-        case _: Int | _: Long => org.apache.spark.sql.types.LongType
-        case _: Double        => org.apache.spark.sql.types.DoubleType
-        case _                => org.apache.spark.sql.types.StringType
-      }
-      org.apache.spark.sql.types.StructField(k, dt)
-    }.toSeq)
-    val norm = org.apache.spark.sql.Row.fromSeq(key.values.map {
-      case i: Int => i.toLong
-      case other  => other
-    }.toSeq)
-    getFeatureVectors(spark.createDataFrame(
-      java.util.List.of(norm), schema))
+    val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
+    val (fields, values) = key.toSeq.map { case (k, v) =>
+      val value = Literal(v)
+      val dt = lf.schema.find(f => lf.primaryKey.contains(k) && f.name == k)
+        .map(_.dataType).filter(Cast.canUpCast(value.dataType, _))
+        .getOrElse(value.dataType)
+      (StructField(k, dt), Cast(value, dt, tz).eval())
+    }.unzip
+    val schema = StructType(fields)
+    val rows = Seq(new GenericInternalRow(values.toArray))
+    // the key frame is only built for the default assembly
+    finish(assemble(GraftKeyedIndex.localFrame(spark, schema, rows),
+      Some((schema, rows))), Map())
   }
 }
 

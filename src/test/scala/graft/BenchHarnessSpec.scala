@@ -91,6 +91,29 @@ class BenchHarnessSpec extends AnyFunSuite {
       "instruments excluded from the attempted-query count")
   }
 
+  test("in-process calibration placements stay in the runs, out of the minimum") {
+    // a solo child that failed twice is measured in the parent JVM and
+    // tagged: visible in calibration_runs, never the cross-round divisor
+    val results: Seq[(String, Seq[Bench.Rep])] = Seq(
+      "q1" -> Seq(Right(0.5)),
+      Bench.CalibName -> Seq(Right(2.0)),
+      s"${Bench.CalibName}_end${Bench.InprocSuffix}" -> Seq(Right(1.0)),
+      s"${Bench.CalibIoName}${Bench.InprocSuffix}" -> Seq(Right(0.7)),
+      s"${Bench.CalibIoName}_end" -> Seq(Right(3.0)))
+    val json = Bench.render(results)
+    assert(json.contains(""""calibration":2.0,"calibration_runs":[2.0,1.0]"""))
+    assert(json.contains(
+      """"calibration_io":3.0,"calibration_io_runs":[0.7,3.0]"""))
+    assert(json.contains(""""value":0.5"""))
+    val s = Bench.renderSummary(results)
+    assert(s.contains(""""calibration":2.0""") && s.contains(""""calibration_io":3.0"""))
+    // only in-process placements: runs listed, no minimum claimed
+    val alone = Bench.render(Seq(
+      s"${Bench.CalibName}${Bench.InprocSuffix}" -> Seq[Bench.Rep](Right(1.0))))
+    assert(alone.contains(""""calibration_runs":[1.0]"""))
+    assert(!alone.contains(""""calibration":"""))
+  }
+
   test("isCalib covers both instruments and their _end placements") {
     assert(Bench.isCalib(Bench.CalibName))
     assert(Bench.isCalib(s"${Bench.CalibName}_end"))

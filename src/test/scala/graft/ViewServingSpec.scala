@@ -2,16 +2,86 @@ package graft
 
 import graft.catalog.TestTables
 import graft.ir._
+import graft.model.{DataFrameSource, Feature, FeatureGroup}
 import graft.ops.{Transformations, Validation}
+import graft.serving.FeatureVectorServer
 import graft.view.{FeatureView, TrainingDataset}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 class ViewServingSpec extends SparkSpec {
   import spark.implicits._
 
   private def fg(t: String) = TestTables.fg(spark, sfDir, t)
+
+  /** A feature group over an in-memory frame. */
+  private def dfGroup(name: String, df: DataFrame, pk: Seq[String]) =
+    FeatureGroup(name, features = df.schema.fields.toSeq.map(f =>
+      Feature(f.name, f.dataType, primary = pk.contains(f.name))),
+      primaryKey = pk, source = DataFrameSource(df))
+
+  /** Same column names, order and types, and the same multiset of rows. */
+  private def assertSame(got: DataFrame, want: DataFrame, clue: String): Unit = {
+    def shape(d: DataFrame) = d.schema.fields.toSeq.map(f => (f.name, f.dataType))
+    def bag(d: DataFrame) = d.collect().toSeq.groupBy(identity)
+      .map { case (r, rs) => r -> rs.size }
+    assert(shape(got) === shape(want), clue)
+    assert(bag(got) === bag(want), clue)
+  }
+
+  /** Runs `body` in its own job group and counts the Spark jobs it
+    * started, and the SQL executions by name. A sentinel job started after
+    * it drains the listener queue, so a count of 0 is not a race.
+    */
+  private def counted[T](body: => T): (T, Int, Map[String, Int]) = {
+    val sc = spark.sparkContext
+    val group = "counted-" + java.util.UUID.randomUUID()
+    val jobs = new AtomicInteger
+    val drained = new CountDownLatch(1)
+    val names = new ConcurrentLinkedQueue[String]
+    val jobListener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == group + "-end" => drained.countDown()
+          case _ =>
+        }
+    }
+    val qeListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(name: String,
+                    qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit = names.add(name)
+      def onFailure(name: String,
+                    qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = names.add(name)
+    }
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(qeListener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-end", "sentinel")
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener queue drained")
+      (out, jobs.get, names.asScala.toSeq.groupBy(identity).map {
+        case (n, ns) => n -> ns.size })
+    } finally {
+      spark.listenerManager.unregister(qeListener)
+      sc.removeSparkListener(jobListener)
+    }
+  }
+
+  private def customerNation(name: String) = FeatureView(name, 1,
+    Query.select(fg("customer"), Seq("c_custkey", "c_name"))
+      .join(Query.select(fg("nation"), Seq("n_name")),
+        leftOn = Seq("c_nationkey"), rightOn = Seq("n_nationkey"),
+        prefix = Some("nat_")))
 
   test("training dataset: split → fit on train only → apply everywhere") {
     val view = FeatureView("v", 1,
@@ -474,5 +544,185 @@ class ViewServingSpec extends SparkSpec {
     assert(derived.map(k =>
       (k.featureName, k.featureGroup, k.prefix, k.joinIndex, k.joinOn)) ===
       Seq(("n_nationkey", "nation", "nat_", 1, Seq("c_nationkey"))))
+  }
+
+  test("serving: the online index answers exactly what the default path answers") {
+    val single = FeatureView("eq1", 1,
+      Query.select(fg("customer"), Seq("c_custkey", "c_name", "c_acctbal")))
+    // a prefixed PK join, then a fan-out join on a right key that is not
+    // the right group's primary key (one output row per matching order)
+    val multi = FeatureView("eq2", 1,
+      Query.select(fg("customer"), Seq("c_custkey", "c_name", "c_acctbal"))
+        .join(Query.select(fg("nation"), Seq("n_name")),
+          leftOn = Seq("c_nationkey"), rightOn = Seq("n_nationkey"),
+          prefix = Some("nat_"))
+        .join(Query.select(fg("orders"), Seq("o_orderkey", "o_totalprice")),
+          leftOn = Seq("c_custkey"), rightOn = Seq("o_custkey"),
+          prefix = Some("ord_")))
+    val onDemand = FeatureView("eq3", 1, single.query,
+      transformations = Seq(Transformations.Transformation("od",
+        Transformations.OnDemand, inputs = Seq("c_acctbal", "rate"),
+        drop = Seq("rate"),
+        fn = (cols, _) => Seq((cols(0) * cols(1)).as("scaled")))))
+    // (name, keys, whether they widen losslessly to the bigint key)
+    val keySets: Seq[(String, DataFrame, Boolean)] = Seq(
+      ("hits and misses", Seq(1L, 2L, 7L, 0L, 999999L).toDF("c_custkey"), true),
+      ("null key", Seq(Some(3L), None).toDF("c_custkey"), true),
+      ("duplicate keys", Seq(5L, 5L, 6L).toDF("c_custkey"), true),
+      ("extra columns, one shadowing a feature",
+        Seq(("r1", 4L, "shadow"), ("r2", 8L, "x"), ("r3", 0L, "y"))
+          .toDF("req_id", "c_custkey", "c_name"), true),
+      ("int keys probe a bigint key", Seq(1, 2, 999).toDF("c_custkey"), true),
+      // bigint keys compare as double here: 1.5 must not find key 1
+      ("double keys", Seq(1.0, 1.5, 2.0).toDF("c_custkey"), false))
+    val rate = Map[String, Any]("rate" -> 2.0)
+    for ((view, paramSets) <- Seq(single -> Seq(Map.empty[String, Any], rate),
+                                  multi -> Seq(rate), onDemand -> Seq(rate))) {
+      val default = new FeatureVectorServer(spark, view)
+      val online = new FeatureVectorServer(spark, view).materializeOnline()
+      val lazyOnline = new FeatureVectorServer(spark, view, cacheSnapshots = true)
+      for ((name, local, widens) <- keySets; params <- paramSets;
+           (keys, isLocal) <- Seq(local -> true, local.repartition(2) -> false)) {
+        val clue = s"${view.name} / $name / $params / local keys=$isLocal"
+        val want = default.getFeatureVectors(keys, params)
+        val got = online.getFeatureVectors(keys, params)
+        assertSame(got, want, clue)
+        // keys that widen to the key type are assembled on the driver,
+        // others by the default path's joins
+        assert(got.queryExecution.optimizedPlan.isInstanceOf[LocalRelation] ===
+          widens, clue)
+        if (view eq multi) assertSame(lazyOnline.getFeatureVectors(keys, params), want, clue)
+      }
+      if (!(view eq onDemand))
+        for (k <- Seq[Any](7, 7L, 999999L, null, 1.5)) {
+          val want = default.getFeatureVector(Map("c_custkey" -> k))
+          assertSame(online.getFeatureVector(Map("c_custkey" -> k)), want,
+            s"${view.name} / key $k")
+          // a double is compared as a double: 1.5 must not find key 1
+          if (k == 1.5) assert(want.collect().map(_.getAs[String]("c_name")).toSeq ===
+            Seq(null), s"${view.name} / key $k")
+        }
+      online.close(); lazyOnline.close()
+    }
+  }
+
+  test("serving: materialized lookups on driver-local keys start no Spark job") {
+    val view = customerNation("zj")
+    val server = new FeatureVectorServer(spark, view).materializeOnline()
+    val (one, oneJobs, _) =
+      counted(server.getFeatureVector(Map("c_custkey" -> 7)).collect())
+    assert(oneJobs === 0)
+    assert(one.length === 1 && one.head.getAs[String]("nat_n_name") != null)
+    val keys = (1L to 100L).map(Tuple1(_)).toDF("c_custkey")
+    val (batch, batchJobs, _) = counted(server.getFeatureVectors(keys).collect())
+    assert(batchJobs === 0)
+    assert(batch.length === 100)
+    // the listener does see the jobs of a lookup that runs them
+    val (_, defaultJobs, _) = counted(new FeatureVectorServer(spark, view)
+      .getFeatureVector(Map("c_custkey" -> 7)).collect())
+    assert(defaultJobs > 0)
+    server.close()
+  }
+
+  test("serving: concurrent lookups on both online modes; the lazy build runs once per lookup") {
+    val view = customerNation("conc")
+    val all = spark.read.parquet(s"$sfDir/customer.parquet")
+      .select("c_custkey").as[Long].collect().sorted
+    val expected = new FeatureVectorServer(spark, view)
+      .getFeatureVectors(all.toSeq.toDF("c_custkey")).collect()
+      .map(r => r.getAs[Long]("c_custkey") -> r).toMap
+    val keySchema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("c_custkey",
+        org.apache.spark.sql.types.LongType)))
+    def hammer(server: FeatureVectorServer): Seq[String] = {
+      val errors = new ConcurrentLinkedQueue[String]
+      val start = new CountDownLatch(1)
+      val threads = (0 until 4).map { t =>
+        new Thread(() => {
+          val rng = new scala.util.Random(t)
+          start.await()
+          try (0 until 30).foreach { i =>
+            val keys =
+              if (i % 5 == 4) Seq.fill(10)(all(rng.nextInt(all.length)))
+              else Seq(all(rng.nextInt(all.length)))
+            val got =
+              if (keys.size == 1) server.getFeatureVector(Map("c_custkey" -> keys.head)).collect()
+              else server.getFeatureVectors(spark.createDataFrame(
+                keys.map(Row(_)).asJava, keySchema)).collect()
+            if (got.map(_.getAs[Long]("c_custkey")).sorted.toSeq != keys.sorted)
+              errors.add(s"keys $keys answered ${got.toSeq}")
+            got.foreach { r =>
+              if (r != expected(r.getAs[Long]("c_custkey")))
+                errors.add(s"$r != ${expected(r.getAs[Long]("c_custkey"))}")
+            }
+          } catch { case e: Throwable => errors.add(e.toString) }
+        })
+      }
+      threads.foreach(_.start()); start.countDown(); threads.foreach(_.join())
+      errors.asScala.toSeq
+    }
+    val materialized = new FeatureVectorServer(spark, view).materializeOnline()
+    assert(hammer(materialized).isEmpty)
+    materialized.close()
+    val lazyServer = new FeatureVectorServer(spark, view, cacheSnapshots = true)
+    val (errors, _, executions) = counted(hammer(lazyServer))
+    assert(errors.isEmpty, errors.take(3))
+    // two lookups (customer, then nation), each built once by one thread
+    assert(executions.getOrElse("buildIndex", 0) === 2, executions)
+    lazyServer.close()
+  }
+
+  test("serving: an over-size group fails materializeOnline with Spark's error and leaves no index") {
+    val small = dfGroup("mr_small",
+      (1L to 10L).map(k => (k, k * 3)).toDF("k", "bid"), Seq("k"))
+    val big = dfGroup("mr_big", spark.range(0, 60000)
+      .selectExpr("id AS bid", "sha2(CAST(id AS STRING), 256) AS payload"),
+      Seq("bid"))
+    val view = FeatureView("mr", 1, Query.selectAll(small)
+      .join(Query.select(big, Seq("payload")), leftOn = Seq("bid"),
+        rightOn = Seq("bid")))
+    val server = new FeatureVectorServer(spark, view)
+    // the small left group's index builds first; the big one is refused
+    val err = org.apache.spark.GraftTestConf.withConf(spark.sparkContext,
+      "spark.driver.maxResultSize", "1m")(intercept[Exception](server.materializeOnline()))
+    val messages = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).map(String.valueOf(_)).mkString("\n")
+    assert(messages.contains("spark.driver.maxResultSize"), messages)
+    // no partial online state: lookups still take the default path
+    val (got, jobs, _) = counted(server.getFeatureVector(Map("k" -> 2L)).collect())
+    assert(jobs > 0)
+    assert(got.length === 1 && got.head.getAs[Long]("bid") === 6L &&
+      got.head.getAs[String]("payload") != null)
+    // within the limit the same server materializes and serves from the index
+    server.materializeOnline()
+    val (again, onlineJobs, _) = counted(server.getFeatureVector(Map("k" -> 2L)).collect())
+    assert(onlineJobs === 0 && again.toSeq === got.toSeq)
+    server.close()
+  }
+
+  test("serving: getFeatureVector casts key values to the group's key types") {
+    val t0 = java.sql.Timestamp.valueOf("2024-01-02 03:04:05")
+    val t1 = java.sql.Timestamp.valueOf("2024-01-02 03:04:06")
+    val byTime = dfGroup("ts_pk", Seq((t0, "a"), (t1, "b")).toDF("ts", "v"), Seq("ts"))
+    val byFloat = dfGroup("f_pk", Seq((1.5f, "x"), (2.5f, "y")).toDF("f", "v"), Seq("f"))
+    val byDate = dfGroup("d_pk", Seq((java.sql.Date.valueOf("2024-01-02"), "d"))
+      .toDF("d", "v"), Seq("d"))
+    for (online <- Seq(false, true)) {
+      def server(g: FeatureGroup) = {
+        val s = new FeatureVectorServer(spark, FeatureView(g.name, 1, Query.selectAll(g)))
+        if (online) s.materializeOnline() else s
+      }
+      def v(rows: Array[Row]) = rows.toSeq.map(_.getAs[String]("v"))
+      assert(v(server(byTime).getFeatureVector(Map("ts" -> t1)).collect()) === Seq("b"))
+      assert(v(server(byFloat).getFeatureVector(Map("f" -> 2.5f)).collect()) === Seq("y"))
+      // a Short widens to the float key
+      assert(v(server(byFloat).getFeatureVector(Map("f" -> 3.toShort)).collect()) ===
+        Seq(null))
+      // a timestamp does not narrow to a date key: it compares as a
+      // timestamp, so only midnight finds the day
+      assert(v(server(byDate).getFeatureVector(Map("d" -> t0)).collect()) === Seq(null))
+      assert(v(server(byDate).getFeatureVector(
+        Map("d" -> java.sql.Timestamp.valueOf("2024-01-02 00:00:00"))).collect()) === Seq("d"))
+    }
   }
 }
