@@ -135,14 +135,18 @@ object QueryPlanner {
   /** Materialize a feature-group relation, honoring per-branch time travel.
     * Maps the reference's temp-view registration step
     * (python/hsfs/engine/spark.py:195-243) minus the metastore.
+    * With `keys`, only the rows whose key columns match a row of `keys`
+    * ([[graft.ops.KeyPrune.pruneToKeys]]): a lake snapshot prunes its
+    * commit rows below the latest-version window, any other read on top.
     */
   def materialize(
       spark: SparkSession,
       fg: FeatureGroup,
-      tt: Option[TimeTravel]): DataFrame = fg.source match {
-    case ParquetSource(path) => spark.read.parquet(path)
-    case ViewSource(table)   => spark.table(table)
-    case DataFrameSource(df) => df
+      tt: Option[TimeTravel],
+      keys: Option[DataFrame] = None): DataFrame = fg.source match {
+    case ParquetSource(path) => pruned(spark.read.parquet(path), keys)
+    case ViewSource(table)   => pruned(spark.table(table), keys)
+    case DataFrameSource(df) => pruned(df, keys)
     case ConnectorSource(format, options, conf, path) =>
       // pushdown rides in the options (e.g. jdbc "query"/"dbtable"): the
       // external system sees the query, Spark sees only its result
@@ -154,18 +158,21 @@ object QueryPlanner {
       // the DECLARED schema is authoritative for an external group (the
       // reference's server-side ExternalFeatureGroup schema): cast what the
       // connector returned (e.g. csv strings) to it
-      if (fg.features.nonEmpty) graft.ops.SchemaOps.castToSchema(df, fg.schema)
-      else df
+      pruned(if (fg.features.nonEmpty) graft.ops.SchemaOps.castToSchema(df, fg.schema)
+        else df, keys)
     case LakeSource(root) =>
       tt match {
-        case Some(TimeTravel(asOf, Some(t0))) =>
-          Lake.readChanges(spark, root, fg, t0, asOf.getOrElse(Long.MaxValue))
-        case Some(TimeTravel(Some(t), None)) => Lake.snapshot(spark, root, fg, Some(t))
-        case _                               => Lake.snapshot(spark, root, fg, None)
+        case Some(TimeTravel(asOf, Some(t0))) => pruned(
+          Lake.readChanges(spark, root, fg, t0, asOf.getOrElse(Long.MaxValue)), keys)
+        case Some(TimeTravel(Some(t), None)) => Lake.snapshot(spark, root, fg, Some(t), keys)
+        case _                               => Lake.snapshot(spark, root, fg, None, keys)
       }
     case UnboundSource =>
       throw new PlanError(s"feature group ${fg.name} has no bound source")
   }
+
+  private def pruned(df: DataFrame, keys: Option[DataFrame]): DataFrame =
+    keys.fold(df)(k => graft.ops.KeyPrune.pruneToKeys(df, k, k.columns.toSeq))
 
   /** Compile the predicate tree to a Catalyst Column
     * (python/hsfs/constructor/filter.py → Column algebra).

@@ -21,9 +21,12 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * On-demand transformations compute from request-time columns;
   * model-dependent ones bind precomputed statistics (vector_server
   * :924-978). Two serving modes:
-  *  - default: each lookup is a Spark query that semi-prunes every group
-  *    to the requested keys below its latest-per-key window, then
-  *    broadcast-joins the hits onto the keys;
+  *  - default: each lookup is a Spark query that prunes every group to
+  *    the requested keys, then broadcast-joins the hits onto the keys. The
+  *    left group is pruned inside its read (a lake group below the lake's
+  *    latest-version window, a few driver-local keys inside the Parquet
+  *    scan); a right group is pruned below serving's latest-per-key
+  *    window but, on a lake, above the lake's own;
   *  - online (materializeOnline(), or cacheSnapshots = true for a lazy
   *    build on the first driver-local lookup): each group's
   *    latest-per-key snapshot is computed once and held on the driver as
@@ -109,10 +112,12 @@ final class FeatureVectorServer(
     selected ++ joins.flatMap(_.leftKeys).distinct.filterNot(selected.contains)
   }
 
-  // The DEFAULT lookup path semi-prunes each snapshot to the requested
-  // keys BELOW the latest-per-key window — a 10-key lookup against a
-  // 100 TB group touches only matching key partitions and never windows
-  // the full table. Materializing the full latest-per-key state (the
+  // The DEFAULT lookup path prunes the left group to the requested keys
+  // inside its read, BELOW every window — a 10-key lookup against a
+  // 100 TB lake group windows only matching keys' versions. Right groups
+  // are pruned below serving's latest-per-key window, but on a lake still
+  // above the lake's latest-version window. Materializing the full
+  // latest-per-key state (the
   // analog of the reference's online store being a materialized
   // latest-version table) is a real cost that must be opt-in and named:
   // call materializeOnline() — or construct with cacheSnapshots=true to
@@ -181,24 +186,24 @@ final class FeatureVectorServer(
     * A LEFT-OUTER join can only broadcast its non-preserved side
     * (BuildRight), so `broadcast(keys).join(snap, _, "left")` silently
     * drops the hint and sort-merge-shuffles the full snapshot. The
-    * scale-correct shape is two broadcasts of the SMALL side:
-    *   1. broadcast LEFT-SEMI prune the snapshot to the key set
-    *      (LeftSemi + BuildRight) — the 100 TB side is scanned once,
-    *      never shuffled;
+    * scale-correct shape is a keyed read, then a broadcast of the hits:
+    *   1. the keyed read prunes the group to the key set inside its read
+    *      ([[QueryPlanner.materialize]] with the keys hinted for
+    *      broadcast: an `IN` list for a few driver-local keys, else a
+    *      broadcast LEFT-SEMI join) — on a lake
+    *      group below the lake's latest-version window, and always below
+    *      the latest-per-key window here (valid because serving joinKeys ⊆
+    *      primary key ⊆ record key, so the prune keeps/drops whole window
+    *      partitions); the 100 TB side is scanned once, never shuffled
+    *      whole;
     *   2. LEFT-OUTER join the keys against the (≤ |keys|) hit set with
     *      the hits as build side (LeftOuter + BuildRight).
-    * The semi-prune is pushed BELOW the latest-per-key window (valid
-    * because serving joinKeys ⊆ primary key, so the filter keeps/drops
-    * whole window partitions), shrinking the row_number shuffle to the
-    * matched keys only.
     */
   private def lookupOne(keys: DataFrame, fg: FeatureGroup,
                         wanted: Seq[String], joinKeys: Seq[String],
                         prefix: String): DataFrame = {
-    val probe = keys.select(joinKeys.map(col): _*).distinct()
-    val snap =
-      latestPerKey(fg, QueryPlanner.materialize(spark, fg, None)
-        .join(broadcast(probe), joinKeys, "left_semi"))
+    val snap = latestPerKey(fg, QueryPlanner.materialize(spark, fg, None,
+      Some(broadcast(keys.select(joinKeys.map(col): _*)))))
     val projected = snap.select((joinKeys ++ wanted).distinct.map(col): _*)
     val renamed = wanted.filterNot(joinKeys.contains).foldLeft(projected) {
       (d, c) => d.withColumnRenamed(c, prefix + c)
@@ -213,8 +218,9 @@ final class FeatureVectorServer(
     joins.foreach { j =>
       val baseSnap = j.base
       val probe = out.select(j.leftKeys.map(col): _*).distinct()
-      // same two-broadcast shape as lookupOne; prune below the window
-      // only when the join keys cover the partition (primary) key
+      // two broadcasts of the small side: prune below serving's window
+      // only when the join keys cover the partition (primary) key; a lake
+      // group's own latest-version window still runs on the whole group
       val pruned = j.rightKeys.nonEmpty &&
         j.rightKeys.forall(j.fg.primaryKey.contains)
       val snap =

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.model.FeatureGroup
+import graft.ops.KeyPrune.pruneToKeys
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -45,6 +46,10 @@ import org.apache.spark.sql.types._
   *    tombstones; the snapshot read resolves the latest version per record
   *    key with one window over the record key — the same shuffle a
   *    MERGE INTO would need, but without rewriting existing files.
+  *  - Keyed reads (`snapshot(..., keys)`, and the stats and tombstone reads
+  *    of upsert/delete) prune the commit rows to the requested keys BEFORE
+  *    that window; a few driver-local keys become a predicate inside the
+  *    Parquet scan, so a lookup windows only its own keys' versions.
   *  - `compact()`/`cleanCommits()` squash old commits into one base commit
   *    to bound read amplification, mirroring Hudi compaction.
   *
@@ -189,12 +194,11 @@ object Lake {
       if (!computeStats || cs.isEmpty) None
       else {
         // incremental stats: resolve current state ONLY for the incoming
-        // keys — semi-prune the commit log by the batch's key set before
-        // the latest-version window, so an upsert of k keys into a 100 TB
-        // table shuffles O(k · versions) rows, never the whole snapshot
-        val incoming = aligned.select(keys.map(col): _*).distinct()
+        // keys — prune the commit log to the batch's keys before the
+        // latest-version window, so an upsert of k keys into a 100 TB
+        // table windows O(k · versions) rows, never the whole snapshot
         val current = resolve(
-            rawData(spark, root, fg, cs).join(incoming, keys, "left_semi"), fg)
+            pruneToKeys(rawData(spark, root, fg, cs), aligned, keys), fg)
           .select(keys.map(col): _*).withColumn("_m", lit(1))
         val r = aligned.select(keys.map(col): _*)
           .join(current, keys, "left")
@@ -289,23 +293,29 @@ object Lake {
     */
   def delete(spark: SparkSession, root: String, fg: FeatureGroup,
              keysDf: DataFrame): CommitMeta = {
-    // a tombstone row carries the record key's current state; semi-prune
-    // the commit log by the deleted keys BEFORE the latest-version window
-    // so deleting k keys never windows the full table
-    val keys = recordKey(fg)
-    val kdf = keysDf.select(keys.map(col): _*).distinct()
+    // a tombstone row carries the record key's current state; prune the
+    // commit log to the deleted keys BEFORE the latest-version window so
+    // deleting k keys never windows the full table
     val cs = liveCommits(root)
     val full =
       if (cs.isEmpty) emptyFrame(spark, fg)
-      else resolve(rawData(spark, root, fg, cs).join(kdf, keys, "left_semi"), fg)
+      else resolve(pruneToKeys(rawData(spark, root, fg, cs), keysDf,
+        recordKey(fg)), fg)
     writeCommit(spark, root, fg, full, deleted = true, operation = "delete")
   }
 
   /** Latest-state (or as-of) read. `asOf` in epoch millis, inclusive —
     * hudi `as.of.instant` semantics (core/hudi_engine.py:180-192).
+    *
+    * The keyed read: with `keys`, only the records whose key columns equal
+    * a row of `keys` — the rows `snapshot(...).join(keys, cols,
+    * "left_semi")` keeps. The key columns must be record-key columns, so
+    * the commit rows are pruned to them before the latest-version window
+    * ([[graft.ops.KeyPrune.pruneToKeys]]): a lookup of k keys windows O(k · versions) rows.
     */
   def snapshot(spark: SparkSession, root: String, fg: FeatureGroup,
-               asOf: Option[Long]): DataFrame = {
+               asOf: Option[Long],
+               keys: Option[DataFrame] = None): DataFrame = {
     val cs = liveCommits(root)
     // schema-only table (no log yet): the declared schema's empty frame
     if (cs.isEmpty) return emptyFrame(spark, fg)
@@ -313,8 +323,15 @@ object Lake {
       throw new IllegalArgumentException(
         s"as_of $t predates the retained commit horizon $h " +
           "(older commits were cleaned; see cleanCommits)")
-    resolve(window(spark, root, fg, cs, Long.MinValue,
-      asOf.getOrElse(Long.MaxValue)), fg, fillDefaults = true)
+    val raw = window(spark, root, fg, cs, Long.MinValue,
+      asOf.getOrElse(Long.MaxValue))
+    resolve(keys.fold(raw) { k =>
+      val rk = recordKey(raw, fg)
+      require(k.columns.forall(rk.contains),
+        s"keyed read on ${k.columns.mkString(", ")}: not all record-key " +
+          s"columns (${rk.mkString(", ")})")
+      pruneToKeys(raw, k, k.columns.toSeq)
+    }, fg, fillDefaults = true)
   }
 
   /** Partition-column values come back through directory inference with

@@ -1,6 +1,9 @@
 package graft.tools
 
 import graft.SparkEntry
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeMap, AttributeSet, Cast, Expression}
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Project, Window}
 import org.apache.spark.sql.execution._
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -8,8 +11,9 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 /** Automated plan-quality sweep: builds every driver query's physical
   * plan and flags the scale anti-patterns the engine promises to avoid —
   * single-partition exchanges, cartesian products, dropped broadcast
-  * hints, and scans without pushed filters where a filter exists in the
-  * query. Exit code 1 if any hard flag fires.
+  * hints, key prunes above a window over their keys, and scans without
+  * pushed filters where a filter exists in the query. Exit code 1 if any
+  * hard flag fires.
   *
   * `sbt "runMain graft.tools.PlanAudit"` (SPARK_GRAFT_SF_DIR to change
   * data). Stateful queries are RUN so their executed plans — including
@@ -66,6 +70,47 @@ object PlanAudit {
     walk(plan, parentJustifies = false)
   }
 
+  /** Key prunes ABOVE a window partitioned by their keys, in an optimized
+    * logical plan: a LEFT-SEMI join or a Filter whose child reaches a
+    * Window through Filter/Project nodes only, where every attribute it
+    * tests on that side is one of the window's partition attributes
+    * (traced through Project aliases of attributes and their casts).
+    * Catalyst cannot move a semi-join across the window's rank filter, so
+    * the window runs on every key before the prune; prune below it (a
+    * keyed read, [[graft.ops.KeyPrune.pruneToKeys]]) instead.
+    */
+  def keyPruneAboveWindow(plan: LogicalPlan): Seq[String] = {
+    def source(e: Expression): Option[Attribute] = e match {
+      case a: Attribute => Some(a)
+      case c: Cast => source(c.child)
+      case _ => None
+    }
+    def reach(p: LogicalPlan, tested: AttributeSet): Option[(Window, AttributeSet)] =
+      p match {
+        case w: Window => Some((w, tested))
+        case f: Filter => reach(f.child, tested)
+        case pr: Project =>
+          val from = AttributeMap(pr.projectList.collect {
+            case a @ Alias(c, _) if source(c).nonEmpty => a.toAttribute -> source(c).get
+          })
+          reach(pr.child, AttributeSet(tested.toSeq.map(a => from.getOrElse(a, a))))
+        case _ => None
+      }
+    def flag(what: String, child: LogicalPlan, tested: AttributeSet): Option[String] =
+      reach(child, tested).collect {
+        case (w, t) if t.nonEmpty &&
+            t.subsetOf(AttributeSet(w.partitionSpec.collect { case a: Attribute => a })) =>
+          s"$what on ${tested.toSeq.map(_.name).mkString(", ")} above " +
+            s"Window(partition ${w.partitionSpec.mkString(", ")})"
+      }
+    plan.collectWithSubqueries {
+      case j: Join if j.joinType == LeftSemi =>
+        flag("LeftSemi join", j.left, j.condition.fold(AttributeSet.empty)(
+          _.references.filter(j.left.outputSet.contains)))
+      case f: Filter => flag("key Filter", f.child, f.condition.references)
+    }.flatten
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = graft.SparkSessions.local("8", "graft-plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
@@ -86,9 +131,12 @@ object PlanAudit {
           val plan = exec.toString + streamPlan.fold("")(_.toString)
           val offending = unjustifiedSinglePartitions(exec) ++
             streamPlan.toSeq.flatMap(unjustifiedSinglePartitions)
+          val keyPrunes = keyPruneAboveWindow(df.queryExecution.optimizedPlan)
           val hard = Seq(
             s"SinglePartition[${offending.mkString("; ")}]" ->
               offending.nonEmpty,
+            s"KeyPruneAboveWindow[${keyPrunes.mkString("; ")}]" ->
+              keyPrunes.nonEmpty,
             "CartesianProduct" -> plan.contains("CartesianProduct"),
             // nested-loop joins are fine only when one side is broadcast
             // tiny by construction (kNN query sets); flag the rest

@@ -280,4 +280,152 @@ class LakeSpec extends SparkSpec {
     assert(before === after)
     assert(Lake.listCommits(spark, root).size === 1)
   }
+
+  // -- keyed reads ---------------------------------------------------------
+
+  private def bag(df: org.apache.spark.sql.DataFrame) =
+    df.collect().toSeq.groupBy(identity).map { case (r, rs) => r -> rs.size }
+
+  private def hasSemiJoin(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.exists {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join =>
+        j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi
+      case _ => false
+    }
+
+  /** The keyed snapshot has the full snapshot's schema and exactly the
+    * rows of the full snapshot semi-joined to the keys.
+    */
+  private def keyedMatches(root: String, fg: graft.model.FeatureGroup,
+                           asOf: Option[Long],
+                           keys: org.apache.spark.sql.DataFrame,
+                           clue: String): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val got = Lake.snapshot(spark, root, fg, asOf, Some(keys))
+    val full = Lake.snapshot(spark, root, fg, asOf)
+    val want = full.join(keys, keys.columns.toSeq, "left_semi")
+      .select(full.columns.map(col).toIndexedSeq: _*)
+    assert(got.schema === full.schema, clue)
+    assert(bag(got) === bag(want), clue)
+    got
+  }
+
+  test("keyed snapshot equals the pruned full snapshot") {
+    val fs = freshStore()
+    val fg = fs.createFeatureGroup("tkey",
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"),
+      primaryKey = Seq("id"))
+    val root = fg.source.asInstanceOf[graft.model.LakeSource].root
+    val t2 = fs.insert(fg, Seq((1L, "a2"), (2L, "b2")).toDF("id", "v")).commitTime
+    fs.insert(fg, Seq((1L, "a3"), (4L, "d")).toDF("id", "v"))
+    fs.delete(fg, Seq(Tuple1(2L)).toDF("id"))
+    val cases: Seq[(String, Option[Long], org.apache.spark.sql.DataFrame)] = Seq(
+      ("several versions per key", None, Seq(1L, 3L, 99L).toDF("id")),
+      ("a deleted key", None, Seq(2L, 4L).toDF("id")),
+      ("as of before the last upsert", Some(t2), Seq(1L, 2L, 4L).toDF("id")),
+      ("a null key", None, Seq(Some(1L), None).toDF("id")),
+      ("int keys against a bigint key", None, Seq(1, 4, 7).toDF("id")),
+      ("a double key of 1.5", None, Seq(1.5, 3.0).toDF("id")),
+      ("a non-local key frame", None, spark.range(0, 3).toDF("id")))
+    for ((clue, asOf, keys) <- cases) keyedMatches(root, fg, asOf, keys, clue)
+
+    val ints = Lake.snapshot(spark, root, fg, None, Some(Seq(1, 4).toDF("id")))
+    assert(!hasSemiJoin(ints), "int keys widen to bigint: the predicate form")
+    assert(rows(ints) === Map(1L -> "a3", 4L -> "d"))
+    val doubles = Lake.snapshot(spark, root, fg, None, Some(Seq(1.5, 3.0).toDF("id")))
+    assert(hasSemiJoin(doubles), "a double does not widen to bigint: the join form")
+    assert(rows(doubles) === Map(3L -> "c"), "1.5 must not find key 1")
+    assert(hasSemiJoin(Lake.snapshot(spark, root, fg, None,
+      Some(spark.range(0, 3).toDF("id")))))
+  }
+
+  test("keyed snapshot: record key of primary key plus event time") {
+    val fs = freshStore()
+    val fg = fs.createFeatureGroup("tkeyet",
+      Seq((1L, 10L, "a"), (1L, 20L, "b"), (2L, 10L, "c")).toDF("id", "ts", "v"),
+      primaryKey = Seq("id"), eventTime = Some("ts"))
+    val root = fg.source.asInstanceOf[graft.model.LakeSource].root
+    fs.insert(fg, Seq((1L, 10L, "a2"), (2L, 30L, "d")).toDF("id", "ts", "v"))
+    keyedMatches(root, fg, None, Seq(1L, 5L).toDF("id"), "primary key only")
+    keyedMatches(root, fg, None, Seq((1L, 10L), (2L, 20L)).toDF("id", "ts"),
+      "primary key and event time")
+    keyedMatches(root, fg, None, Seq((1L, 20L)).toDF("id", "ts").repartition(2),
+      "non-local primary key and event time")
+    intercept[IllegalArgumentException] {
+      Lake.snapshot(spark, root, fg, None, Some(Seq("a").toDF("v")))
+    }
+  }
+
+  test("keyed snapshot: an appended column takes its declared default") {
+    val fs = freshStore()
+    val fg = fs.createFeatureGroup("tkeyev",
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v"), primaryKey = Seq("id"))
+    val root = fg.source.asInstanceOf[graft.model.LakeSource].root
+    val fg2 = fg.copy(features = fg.features :+ graft.model.Feature(
+      "score", org.apache.spark.sql.types.DoubleType, defaultValue = Some(0.5)))
+    Lake.upsert(spark, root, fg2, Seq((3L, "c", 9.0)).toDF("id", "v", "score"))
+    val got = keyedMatches(root, fg2, None, Seq(1L, 3L).toDF("id"), "evolved")
+    assert(got.orderBy("id").collect().map(_.getDouble(2)).toSeq === Seq(0.5, 9.0))
+  }
+
+  test("a two-column key prunes exactly: delete and upsert stats touch only their pairs") {
+    val fs = freshStore()
+    val fg = fs.createFeatureGroup("tpair",
+      Seq(("a", "b", 1), ("c", "d", 2), ("a", "d", 3), ("c", "b", 4))
+        .toDF("k1", "k2", "v"), primaryKey = Seq("k1", "k2"))
+    val root = fg.source.asInstanceOf[graft.model.LakeSource].root
+    val del = fs.delete(fg, Seq(("a", "b"), ("c", "d")).toDF("k1", "k2"))
+    assert(del.rowsDeleted === 2)
+    val left = Lake.snapshot(spark, root, fg, None).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet
+    assert(left === Set(("a", "d"), ("c", "b")))
+    // (a, b) and (c, d) are gone: an upsert of them counts as inserts
+    val up = fs.insert(fg, Seq(("a", "b", 5), ("c", "d", 6), ("a", "d", 7))
+      .toDF("k1", "k2", "v"))
+    assert(up.rowsInserted === 2 && up.rowsUpdated === 1)
+    keyedMatches(root, fg, None, Seq(("a", "b"), ("c", "b")).toDF("k1", "k2"),
+      "two-column keys")
+  }
+
+  test("keyed snapshot: int keys against a string key match as the join does") {
+    val fs = freshStore()
+    val fg = fs.createFeatureGroup("tkeystr",
+      Seq(("007", "a"), ("7", "b"), ("8", "c")).toDF("id", "v"),
+      primaryKey = Seq("id"))
+    val root = fg.source.asInstanceOf[graft.model.LakeSource].root
+    fs.insert(fg, Seq(("007", "a2")).toDF("id", "v"))
+    // the join compares the string column as the key's type, so "007"
+    // matches 7; a key cast to a string ('7') would miss it
+    val got = keyedMatches(root, fg, None, Seq(7).toDF("id"), "int keys on strings")
+    assert(got.collect().map(_.getString(0)).toSet === Set("007", "7"))
+  }
+
+  test("key batches over the broadcast threshold are not broadcast") {
+    import org.apache.spark.sql.functions.broadcast
+    val fs = freshStore()
+    val fg = fs.createFeatureGroup("tkeysmj",
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"),
+      primaryKey = Seq("id"))
+    val root = fg.source.asInstanceOf[graft.model.LakeSource].root
+    fs.insert(fg, Seq((1L, "a2")).toDF("id", "v"))
+    def plan(keys: org.apache.spark.sql.DataFrame) =
+      Lake.snapshot(spark, root, fg, None, Some(keys)).queryExecution.sparkPlan.toString
+    val conf = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(conf)
+    spark.conf.set(conf, "100")
+    try {
+      // an upsert's or delete's key batch: Spark sizes the join, as it
+      // did before the keyed read
+      for (keys <- Seq(spark.range(0, 1000).toDF("id"),
+                       (0L until 1000L).toDF("id"))) {
+        val p = plan(keys)
+        assert(p.contains("SortMergeJoin") && !p.contains("BroadcastHashJoin"), p)
+      }
+      // a lookup hints its keys: broadcast whatever their size estimate
+      val hinted = plan(broadcast(spark.range(0, 1000).toDF("id")))
+      assert(hinted.contains("BroadcastHashJoin"), hinted)
+      assert(fs.delete(fg, spark.range(1, 3).toDF("id")).rowsDeleted === 2)
+      assert(rows(Lake.snapshot(spark, root, fg, None)) === Map(3L -> "c"))
+    } finally spark.conf.set(conf, prev)
+  }
 }

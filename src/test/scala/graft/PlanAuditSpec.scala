@@ -84,4 +84,27 @@ class PlanAuditSpec extends SparkSpec {
       plan.get.toString)
     assert(plan.get.toString.contains("StateStore"))
   }
+
+  test("keyPruneAboveWindow flags a semi-join above the lake's window, not the keyed read") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_audit_keyed").toString
+    val fs = new graft.catalog.FeatureStore(spark, warehouseDir = wh)
+    val fgrp = fs.createFeatureGroup("keyed",
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v"), primaryKey = Seq("id"))
+    fs.insert(fgrp, Seq((1L, "a2"), (3L, "c")).toDF("id", "v"))
+    val root = fgrp.source.asInstanceOf[graft.model.LakeSource].root
+    val snap = graft.sources.Lake.snapshot(spark, root, fgrp, None)
+    for (keys <- Seq(Seq(1L, 3L).toDF("id"), spark.range(0, 2).toDF("id"))) {
+      val above = snap.join(keys, Seq("id"), "left_semi")
+      val flagged = PlanAudit.keyPruneAboveWindow(above.queryExecution.optimizedPlan)
+      assert(flagged.exists(_.contains("LeftSemi join on id")),
+        above.queryExecution.optimizedPlan.toString)
+      val keyed = graft.sources.Lake.snapshot(spark, root, fgrp, None, Some(keys))
+      assert(PlanAudit.keyPruneAboveWindow(keyed.queryExecution.optimizedPlan) === Nil,
+        keyed.queryExecution.optimizedPlan.toString)
+      assert(keyed.collect().toSet === above.collect().toSet)
+    }
+    // a filter on a non-key column above the window is not a key prune
+    assert(PlanAudit.keyPruneAboveWindow(
+      snap.filter($"v" === "a2").queryExecution.optimizedPlan) === Nil)
+  }
 }

@@ -725,4 +725,50 @@ class ViewServingSpec extends SparkSpec {
         Map("d" -> java.sql.Timestamp.valueOf("2024-01-02 00:00:00"))).collect()) === Seq("d"))
     }
   }
+
+  test("serving: a lake group's default lookup prunes below the lake's window, inside the Parquet scan") {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, In, InSet, Literal}
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, Window => LWindow}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val store = new graft.catalog.FeatureStore(spark,
+      warehouseDir = Files.createTempDirectory("graft_lake_serving").toString)
+    val g = store.createFeatureGroup("lakeserve",
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), primaryKey = Seq("id"))
+    store.insert(g, Seq((3L, "c2"), (4L, "d")).toDF("id", "v"))
+    val server = new FeatureVectorServer(spark, FeatureView("lakeserve", 1, Query.selectAll(g)))
+    def isKey(a: Attribute) = a.name == "id"
+    def windows(d: DataFrame) = {
+      val ws = d.queryExecution.optimizedPlan.collect { case w: LWindow => w }
+      assert(ws.nonEmpty, d.queryExecution.optimizedPlan.toString)
+      ws
+    }
+
+    // driver-local key: a key predicate inside the window's subtree, and
+    // pushed into the Parquet scan
+    val one = server.getFeatureVector(Map("id" -> 3L))
+    assert(one.collect().map(_.getAs[String]("v")).toSeq === Seq("c2"))
+    assert(windows(one).forall(_.exists {
+      case f: Filter => f.condition.exists {
+        case EqualTo(a: Attribute, _: Literal) => isKey(a)
+        case In(a: Attribute, _) => isKey(a)
+        case InSet(a: Attribute, _) => isKey(a)
+        case _ => false
+      }
+      case _ => false
+    }), one.queryExecution.optimizedPlan.toString)
+    val scans = one.queryExecution.sparkPlan.collect { case s: FileSourceScanExec => s }
+    assert(scans.nonEmpty && scans.forall(s =>
+      s.metadata("PushedFilters").contains("EqualTo(id,3)")),
+      one.queryExecution.sparkPlan.toString)
+
+    // other key frames: a left-semi join inside the window's subtree
+    val range = server.getFeatureVectors(spark.range(2, 6).toDF("id"))
+    assert(range.collect().map(r => r.getAs[Long]("id") -> r.getAs[String]("v")).toMap ===
+      Map(2L -> "b", 3L -> "c2", 4L -> "d", 5L -> null))
+    assert(windows(range).forall(_.exists {
+      case j: Join => j.joinType == LeftSemi
+      case _ => false
+    }), range.queryExecution.optimizedPlan.toString)
+  }
 }
