@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.execution.GraftKeyedIndex
 import org.apache.spark.sql.functions._
@@ -37,10 +37,19 @@ object KeyPrune {
     * needs a broadcast hints `keys`.
     */
   def pruneToKeys(df: DataFrame, keys: DataFrame,
-                  cols: Seq[String]): DataFrame = {
+                  cols: Seq[String]): DataFrame =
+    inPredicate(df, keys, cols).fold(semiJoin(df, keys, cols))(df.filter)
+
+  /** The `IN` form of [[pruneToKeys]]: `col IN (values)` when `keys` is
+    * one driver-local column of at most the Parquet point-pushdown
+    * threshold of rows and the column's type admits it; None when the
+    * prune takes the join form.
+    */
+  def inPredicate(df: DataFrame, keys: DataFrame,
+                  cols: Seq[String]): Option[Column] = {
     val probe = keys.select(cols.map(col): _*)
     val limit = SQLConf.get.parquetFilterPushDownInFilterThreshold
-    val in = for {
+    for {
       c <- cols.headOption if cols.size == 1
       to <- df.schema.find(_.name == c).map(_.dataType)
       if (to match {
@@ -59,6 +68,9 @@ object KeyPrune {
       if (values.isEmpty) lit(false)
       else col(c).isin(values.map(lit(_).cast(to)).toIndexedSeq: _*)
     }
-    in.fold(df.join(probe.distinct(), cols, "left_semi"))(p => df.filter(p))
   }
+
+  /** The join form of [[pruneToKeys]]. */
+  def semiJoin(df: DataFrame, keys: DataFrame, cols: Seq[String]): DataFrame =
+    df.join(keys.select(cols.map(col): _*).distinct(), cols, "left_semi")
 }

@@ -18,10 +18,12 @@ object QueryPlanner {
 
   /** Plan a query to a DataFrame. Output columns are the selected left
     * features followed by each join's (optionally prefixed) features, in
-    * declaration order.
+    * declaration order. With `keys`, the left group is read keyed
+    * ([[materialize]]).
     */
-  def plan(spark: SparkSession, q: Query): DataFrame = {
-    val (df, out) = planKeeping(spark, q, Nil)
+  def plan(spark: SparkSession, q: Query,
+           keys: Option[DataFrame] = None): DataFrame = {
+    val (df, out) = planKeeping(spark, q, Nil, keys)
     df.select(out.map(col): _*)
   }
 
@@ -33,9 +35,10 @@ object QueryPlanner {
   private def planKeeping(
       spark: SparkSession,
       q: Query,
-      extraCols: Seq[String]): (DataFrame, Seq[String]) = {
+      extraCols: Seq[String],
+      keys: Option[DataFrame] = None): (DataFrame, Seq[String]) = {
     val fg = q.leftFeatureGroup
-    var df = materialize(spark, fg, q.timeTravel)
+    var df = materialize(spark, fg, q.timeTravel, keys)
 
     val leftSelected: Seq[String] =
       if (q.features.isEmpty) df.columns.toSeq else q.features.map(_.name)
@@ -137,7 +140,8 @@ object QueryPlanner {
     * (python/hsfs/engine/spark.py:195-243) minus the metastore.
     * With `keys`, only the rows whose key columns match a row of `keys`
     * ([[graft.ops.KeyPrune.pruneToKeys]]): a lake snapshot prunes its
-    * commit rows below the latest-version window, any other read on top.
+    * commit rows before it resolves versions ([[Lake.snapshot]]: eagerly,
+    * on the driver, for a few driver-local keys), any other read on top.
     */
   def materialize(
       spark: SparkSession,

@@ -2,7 +2,7 @@ package graft.serving
 
 import graft.ir.JoinSpec
 import graft.model.FeatureGroup
-import graft.ops.Transformations
+import graft.ops.{KeyPrune, Transformations}
 import graft.planner.QueryPlanner
 import graft.view.FeatureView
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -20,13 +20,7 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * missing features null (vector_server missing-feature policy :509-534).
   * On-demand transformations compute from request-time columns;
   * model-dependent ones bind precomputed statistics (vector_server
-  * :924-978). Two serving modes:
-  *  - default: each lookup is a Spark query that prunes every group to
-  *    the requested keys, then broadcast-joins the hits onto the keys. The
-  *    left group is pruned inside its read (a lake group below the lake's
-  *    latest-version window, a few driver-local keys inside the Parquet
-  *    scan); a right group is pruned below serving's latest-per-key
-  *    window but, on a lake, above the lake's own;
+  * :924-978). Three assembly paths:
   *  - online (materializeOnline(), or cacheSnapshots = true for a lazy
   *    build on the first driver-local lookup): each group's
   *    latest-per-key snapshot is computed once and held on the driver as
@@ -34,10 +28,22 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *    analog of the reference's online key-value store. Lookups are
   *    answered on the driver: keys whose plan is driver-local (a
   *    getFeatureVector map, a list of entries) collect without a Spark
-  *    job; other key frames are collected first, in one job. Key types
-  *    that do not widen losslessly to the index's key types take the
-  *    default path, which compares them as a SQL join does. Until the
-  *    lazy build has run, other key frames take the default path too.
+  *    job; other key frames are collected first, in one job;
+  *  - default, driver-local keys: the same assembly on the driver, over
+  *    indexes built per request from each group's keyed read — the
+  *    reference's one key-value read per feature group. Such a lookup is
+  *    EAGER: the reads run inside getFeatureVector(s), and the returned
+  *    frame is driver-local. A lake group read by a few keys is one Spark
+  *    job (a Parquet scan with the keys pushed into it; versions resolve
+  *    on the driver), so a single-group lake lookup runs one job;
+  *  - default, other key frames: a Spark query that prunes every group to
+  *    the requested keys, then broadcast-joins the hits onto the keys. The
+  *    left group is pruned inside its read (a lake group below the lake's
+  *    latest-version window); a right group is pruned below serving's
+  *    latest-per-key window but, on a lake, above the lake's own.
+  * Key types that do not widen losslessly to an index's key types take
+  * the last path, which compares them as a SQL join does. Until the lazy
+  * build has run, non-local key frames take it too.
   * The online state lives on the driver heap: each group's snapshot is
   * collected once, bounded by `spark.driver.maxResultSize` (an over-size
   * group fails materializeOnline() with Spark's error and leaves no
@@ -87,8 +93,25 @@ final class FeatureVectorServer(
       if (spec.right.features.isEmpty) fg.featureNames
       else spec.right.features.map(_.name)
     val prefix: String = spec.prefix.getOrElse("")
-    /** The right query's rows, filters applied, before latest-per-key. */
-    def base: DataFrame = QueryPlanner.plan(spark, spec.right.copy(features = Nil))
+    /** Whether a key set on the right keys may prune the group below its
+      * latest-per-key window: the right keys are primary-key columns, so
+      * the prune keeps or drops whole window partitions.
+      */
+    val keyed: Boolean = rightKeys.nonEmpty && rightKeys.forall(fg.primaryKey.contains)
+    /** The right query's rows, filters applied, before latest-per-key;
+      * with `keys` (on the right keys), only the rows they find.
+      */
+    def base(keys: Option[DataFrame] = None): DataFrame =
+      QueryPlanner.plan(spark, spec.right.copy(features = Nil), keys)
+    /** [[hitColumns]] of the latest row per key; with `keys`, only the
+      * rows they find: a keyed read resolved on the driver when the group
+      * is [[keyed]], else the whole window, then a semi-join.
+      */
+    def hits(keys: Option[DataFrame]): DataFrame = keys match {
+      case Some(_) if keyed => hitColumns(latestPerKey(fg, base(keys), onDriver = true))
+      case Some(k) => KeyPrune.semiJoin(hitColumns(latestPerKey(fg, base())), k, rightKeys)
+      case None => hitColumns(latestPerKey(fg, base()))
+    }
     /** Right keys, then the wanted features under their prefixed names. */
     def hitColumns(snap: DataFrame): DataFrame = {
       val projected = snap.select(
@@ -112,13 +135,10 @@ final class FeatureVectorServer(
     selected ++ joins.flatMap(_.leftKeys).distinct.filterNot(selected.contains)
   }
 
-  // The DEFAULT lookup path prunes the left group to the requested keys
-  // inside its read, BELOW every window — a 10-key lookup against a
-  // 100 TB lake group windows only matching keys' versions. Right groups
-  // are pruned below serving's latest-per-key window, but on a lake still
-  // above the lake's latest-version window. Materializing the full
-  // latest-per-key state (the
-  // analog of the reference's online store being a materialized
+  // The DEFAULT lookup path reads every group keyed by the requested
+  // keys: a 10-key lookup against a 100 TB lake group resolves only the
+  // matching keys' versions. Materializing the full latest-per-key state
+  // (the analog of the reference's online store being a materialized
   // latest-version table) is a real cost that must be opt-in and named:
   // call materializeOnline() — or construct with cacheSnapshots=true to
   // materialize lazily on the first driver-local lookup. close() releases.
@@ -145,12 +165,20 @@ final class FeatureVectorServer(
   }
 
   private def buildIndexes(): Seq[GraftKeyedIndex] =
-    GraftKeyedIndex.build(
-      latestPerKey(lf, QueryPlanner.materialize(spark, lf, None))
+    (0 to joins.size).map(buildIndex(_, None))
+
+  /** The index of lookup `i` (0: the left group on its primary key, then
+    * each join's right group on its right keys) over the whole group, or
+    * with `keys` over the rows those keys find: the online state's build
+    * and the default mode's per-request one.
+    */
+  private def buildIndex(i: Int, keys: Option[DataFrame]): GraftKeyedIndex =
+    if (i == 0) GraftKeyedIndex.build(
+      latestPerKey(lf, QueryPlanner.materialize(spark, lf, None, keys),
+        onDriver = keys.nonEmpty)
         .select((lf.primaryKey ++ leftWanted).distinct.map(col): _*),
-      lf.primaryKey.size) +:
-      joins.map(j => GraftKeyedIndex.build(
-        j.hitColumns(latestPerKey(j.fg, j.base)), j.rightKeys.size))
+      lf.primaryKey.size)
+    else GraftKeyedIndex.build(joins(i - 1).hits(keys), joins(i - 1).rightKeys.size)
 
   /** Release the online state; later lookups take the default path (or,
     * with cacheSnapshots = true, build it again). Lookups already probing
@@ -160,28 +188,32 @@ final class FeatureVectorServer(
 
   /** Latest row per primary key — the online store holds only the newest
     * version of each key (reference online path semantics; offline history
-    * keeps every (pk, event_time) record).
+    * keeps every (pk, event_time) record). `onDriver` resolves it on the
+    * driver over one collect of `df` (a keyed read's few rows).
     */
-  private def latestPerKey(fg: FeatureGroup,
-                           df: org.apache.spark.sql.DataFrame) =
+  private def latestPerKey(fg: FeatureGroup, df: DataFrame,
+                           onDriver: Boolean = false): DataFrame =
     fg.eventTime.filter(df.columns.contains) match {
       case Some(et) if fg.primaryKey.nonEmpty =>
         // ties on (pk, event_time) pick a deterministic winner: precombine
         // columns desc (mirrors Lake.dedupLatest), then a content hash so
         // the choice never depends on partition scan order
-        val tieBreak =
+        val order = col(et).desc +:
           fg.effectivePrecombine.filter(df.columns.contains)
             .filterNot(_ == et).map(col(_).desc).toSeq :+
-            xxhash64(df.columns.sorted.map(col): _*).desc
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(fg.primaryKey.map(col): _*)
-          .orderBy(col(et).desc +: tieBreak: _*)
-        df.withColumn("_sv_rn", row_number().over(w))
-          .filter(col("_sv_rn") === 1).drop("_sv_rn")
+          xxhash64(df.columns.sorted.toIndexedSeq.map(col): _*).desc
+        if (onDriver) GraftKeyedIndex.latest(df, fg.primaryKey, order, "keyedRead")
+        else {
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy(fg.primaryKey.map(col): _*).orderBy(order: _*)
+          df.withColumn("_sv_rn", row_number().over(w))
+            .filter(col("_sv_rn") === 1).drop("_sv_rn")
+        }
       case _ => df
     }
 
-  /** Broadcast-lookup of a small key set against a huge snapshot.
+  /** Broadcast-lookup of a small key set against a huge snapshot (the
+    * default path for key frames that are not driver-local).
     *
     * A LEFT-OUTER join can only broadcast its non-preserved side
     * (BuildRight), so `broadcast(keys).join(snap, _, "left")` silently
@@ -211,20 +243,21 @@ final class FeatureVectorServer(
     keys.join(broadcast(renamed), joinKeys, "left")
   }
 
-  /** The default assembly: every group pruned to the keys in Spark. */
+  /** The default assembly for key frames that are not driver-local (or
+    * whose key types do not widen to an index's): every group pruned to
+    * the keys in Spark.
+    */
   private def assemblePruned(keys: DataFrame): DataFrame = {
     var out = lookupOne(keys, lf,
       leftWanted.filterNot(keys.columns.contains), lf.primaryKey, "")
     joins.foreach { j =>
-      val baseSnap = j.base
+      val baseSnap = j.base()
       val probe = out.select(j.leftKeys.map(col): _*).distinct()
       // two broadcasts of the small side: prune below serving's window
-      // only when the join keys cover the partition (primary) key; a lake
-      // group's own latest-version window still runs on the whole group
-      val pruned = j.rightKeys.nonEmpty &&
-        j.rightKeys.forall(j.fg.primaryKey.contains)
+      // only when the join keys are primary-key columns; a lake group's
+      // own latest-version window still runs on the whole group
       val snap =
-        if (pruned) {
+        if (j.keyed) {
           val pc = j.rightKeys.zip(j.leftKeys)
             .map { case (rk, lk) => baseSnap(rk) === probe(lk) }
             .reduce(_ && _)
@@ -232,7 +265,7 @@ final class FeatureVectorServer(
         } else latestPerKey(j.fg, baseSnap)
       val renamed = j.hitColumns(snap)
       val hits =
-        if (pruned) renamed
+        if (j.keyed) renamed
         else {
           val sc = j.rightKeys.zip(j.leftKeys)
             .map { case (rk, lk) => renamed(rk) === probe(lk) }
@@ -248,21 +281,31 @@ final class FeatureVectorServer(
     out
   }
 
-  /** Online assembly on the driver for driver-local keys: the same left
-    * outer joins, row by row against the indexes, as a driver-local
-    * frame. None when a key column is missing or its type does not widen
-    * losslessly to the index's key type; the default assembly handles those.
+  /** Assembly on the driver for driver-local keys: the same left outer
+    * joins, row by row against one index per lookup, as a driver-local
+    * frame. The indexes are the `online` state's or, without it, built
+    * per request from each lookup's keyed read: the left group's by the
+    * requested keys, each right group's by the join-key values the rows
+    * so far carry. None when a key column is missing or its type does not
+    * widen losslessly to the index's key type; the default assembly
+    * handles those.
     */
-  private def assembleOnDriver(ix: Seq[GraftKeyedIndex], keySchema: StructType,
+  private def assembleOnDriver(online: Option[Seq[GraftKeyedIndex]],
+                               keySchema: StructType,
                                keyRows: Seq[InternalRow]): Option[DataFrame] = {
+    def index(i: Int, keys: => DataFrame): GraftKeyedIndex =
+      online.fold(buildIndex(i, Some(broadcast(keys))))(_(i))
     // a USING join puts the keys first, then the other key columns
     val pk = lf.primaryKey.flatMap(indexOf(keySchema, _))
     val order = pk ++ keySchema.fields.indices.filterNot(pk.contains)
     val wanted = leftWanted.filterNot(keySchema.fieldNames.contains).distinct
-    val first = probeRows(keySchema, keyRows, order, lf.primaryKey,
-      ix.head, wanted)
-    joins.zip(ix.tail).foldLeft(first) { case (acc, (j, x)) =>
+    val first =
+      if (pk.size != lf.primaryKey.size) None
+      else probeRows(keySchema, keyRows, order, lf.primaryKey,
+        index(0, keyFrame(keySchema, keyRows, lf.primaryKey, lf.primaryKey)), wanted)
+    joins.zipWithIndex.foldLeft(first) { case (acc, (j, i)) =>
       acc.flatMap { case (schema, rows) =>
+        val x = index(i + 1, keyFrame(schema, rows, j.leftKeys, j.rightKeys))
         probeRows(schema, rows, schema.fields.indices, j.leftKeys, x,
           x.schema.fieldNames.toSeq.filterNot(j.dropped.contains))
       }
@@ -273,6 +316,18 @@ final class FeatureVectorServer(
 
   private def indexOf(schema: StructType, name: String): Option[Int] =
     Some(schema.fieldNames.indexOf(name)).filter(_ >= 0)
+
+  /** The distinct values of the `cols` of `rows`, named `as`, as a
+    * driver-local key frame.
+    */
+  private def keyFrame(schema: StructType, rows: Seq[InternalRow],
+                       cols: Seq[String], as: Seq[String]): DataFrame = {
+    val at = cols.map(schema.fieldIndex)
+    GraftKeyedIndex.localFrame(spark,
+      StructType(at.zip(as).map { case (i, a) => schema(i).copy(name = a) }),
+      rows.map(r => new GenericInternalRow(
+        at.map(i => r.get(i, schema(i).dataType)).toArray): InternalRow).distinct)
+  }
 
   /** One left outer join on the driver: each row's `order` columns, then
     * the index's `take` columns of every match (nulls when none).
@@ -302,7 +357,9 @@ final class FeatureVectorServer(
     }
   }
 
-  /** Assemble feature vectors for a DataFrame of serving keys.
+  /** Assemble feature vectors for a DataFrame of serving keys. Without
+    * the online state, driver-local keys are looked up here, eagerly, and
+    * other key frames return a lazy plan.
     *
     * @param requestParameters scalar request-time parameters, added as
     *   literal columns before transformation so ON_DEMAND transformations
@@ -310,23 +367,23 @@ final class FeatureVectorServer(
     *   request context rides in as extra columns of `keys`.
     */
   def getFeatureVectors(keys: DataFrame,
-                        requestParameters: Map[String, Any] = Map()): DataFrame = {
-    val local =
-      if (cacheSnapshots || online != null) GraftKeyedIndex.localRows(keys)
-      else None
-    finish(assemble(keys, local), requestParameters)
-  }
+                        requestParameters: Map[String, Any] = Map()): DataFrame =
+    finish(assemble(keys, GraftKeyedIndex.localRows(keys)), requestParameters)
 
-  /** Vectors for `keys`, whose rows are `local` when they are driver-local. */
+  /** Vectors for `keys`, whose rows are `local` when they are driver-local:
+    * on the driver for local keys, and for any keys once the online
+    * state exists (collected first, in one job); else [[assemblePruned]].
+    */
   private def assemble(keys: => DataFrame,
                        local: Option[(StructType, Seq[InternalRow])]): DataFrame = {
     val ix = Option(online).orElse(
       if (cacheSnapshots && local.nonEmpty) Some(onlineIndexes()) else None)
-    ix.flatMap { x =>
-      val (schema, rows) = local.getOrElse(
-        (keys.schema, GraftKeyedIndex.collect(keys, "serveKeys").toSeq))
-      assembleOnDriver(x, schema, rows)
-    }.getOrElse(assemblePruned(keys))
+    val rows =
+      if (ix.isEmpty) local
+      else local.orElse(Some((keys.schema,
+        GraftKeyedIndex.collect(keys, "serveKeys").toSeq)))
+    rows.flatMap { case (schema, r) => assembleOnDriver(ix, schema, r) }
+      .getOrElse(assemblePruned(keys))
   }
 
   /** Request parameters become literal columns, then one wide select
@@ -341,11 +398,12 @@ final class FeatureVectorServer(
     else out
   }
 
-  /** Single-vector convenience over a one-row driver-local key frame.
-    * A primary-key value that widens losslessly to the left group's key
-    * type is cast to it (an `Int` probes a bigint key); any other value
-    * keeps its literal type and is compared as a SQL join compares it (a
-    * `Double` 1.5 never finds key 1).
+  /** Single-vector convenience over a one-row driver-local key frame; like
+    * every driver-local lookup without the online state, it reads the
+    * groups here, eagerly. A primary-key value that widens losslessly to
+    * the left group's key type is cast to it (an `Int` probes a bigint
+    * key); any other value keeps its literal type and is compared as a
+    * SQL join compares it (a `Double` 1.5 never finds key 1).
     */
   def getFeatureVector(key: Map[String, Any]): DataFrame = {
     val tz = Some(spark.conf.get("spark.sql.session.timeZone"))

@@ -1,11 +1,16 @@
 package graft.sources
 
 import graft.model.FeatureGroup
+import graft.ops.KeyPrune
 import graft.ops.KeyPrune.pruneToKeys
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.GraftKeyedIndex
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Commit-logged lakehouse table: the engine's analog of the reference's
@@ -43,13 +48,21 @@ import org.apache.spark.sql.types._
   *    reads select directories from the log — a 100 TB table as-of t scans
   *    only commits ≤ t, and an incremental read only the (t0, t1] commits.
   *  - Writes are append-only (merge-on-read): upsert/delete append rows and
-  *    tombstones; the snapshot read resolves the latest version per record
-  *    key with one window over the record key — the same shuffle a
-  *    MERGE INTO would need, but without rewriting existing files.
-  *  - Keyed reads (`snapshot(..., keys)`, and the stats and tombstone reads
-  *    of upsert/delete) prune the commit rows to the requested keys BEFORE
-  *    that window; a few driver-local keys become a predicate inside the
-  *    Parquet scan, so a lookup windows only its own keys' versions.
+  *    tombstones; reads resolve the latest version per record key in one
+  *    order (commit time, precombine, content hash), by one of three paths:
+  *     1. a full read windows every record key — the same shuffle a
+  *        MERGE INTO would need, but without rewriting existing files;
+  *     2. a keyed read (`snapshot(..., keys)`, and the stats and tombstone
+  *        reads of upsert/delete) prunes the commit rows to the requested
+  *        keys BEFORE that window, so it windows only their versions;
+  *     3. a keyed snapshot by a few driver-local keys is EAGER: the keys
+  *        become a predicate inside the Parquet scan, the pruned commit
+  *        rows are collected in one Spark job with no shuffle, and the
+  *        versions resolve on the driver into a driver-local frame.
+  *  - Published commit directories never change, so each is listed once
+  *    per JVM (a shared file-status cache): a read of n commits lists only
+  *    the ones no read has listed, and starts no listing job however
+  *    large n grows.
   *  - `compact()`/`cleanCommits()` squash old commits into one base commit
   *    to bound read amplification, mirroring Hudi compaction.
   *
@@ -64,6 +77,8 @@ object Lake {
   val DeletedCol = "_deleted"
   /** Partition level that makes each commit's directory its own. */
   private val TxCol = "_tx"
+  /** Columns a commit adds to its rows; [[resolve]] drops them. */
+  private val MetaCols = Seq(CommitCol, DeletedCol, TxCol)
 
   final case class CommitMeta(
       commitTime: Long,
@@ -113,25 +128,55 @@ object Lake {
   private def emptyFrame(spark: SparkSession, fg: FeatureGroup): DataFrame =
     spark.createDataFrame(java.util.Collections.emptyList[Row](), fg.schema)
 
+  /** One client of Spark's file-status cache for every read: a published
+    * commit directory never changes, so each is listed once per JVM.
+    */
+  @volatile private var listed: FileStatusCache = null
+
+  private def listings(spark: SparkSession): FileStatusCache = {
+    if (listed == null) synchronized {
+      if (listed == null) listed = FileStatusCache.getOrCreate(spark)
+    }
+    listed
+  }
+
   /** The raw scan of the given (non-empty) commits: one path per commit
     * directory, `_commit_time` and `_tx` from the directory names
     * ([[resolve]] drops them). With a declared feature schema the read
     * passes it EXPLICITLY — no `mergeSchema` footer sweep over every file
     * on every read, and files predating an appended column surface it as
     * null exactly as the merged scan would (snapshot() then fills declared
-    * defaults). Only schema-less groups (fg.features empty) still pay the
-    * merge (reference schema reconciliation, core/hudi_engine.py:226-244).
+    * defaults) — and lists only commits it has not listed before, so no
+    * number of commits starts Spark's parallel listing job
+    * (`spark.sql.sources.parallelPartitionDiscovery.threshold` roots per
+    * read). The relation is the one `spark.read.schema(...).parquet(...)`
+    * builds, over [[listings]]. Only schema-less groups (fg.features
+    * empty) still pay the merge and the listing (reference schema
+    * reconciliation, core/hudi_engine.py:226-244).
     */
   private def rawData(spark: SparkSession, root: String, fg: FeatureGroup,
                       cs: Seq[Commit]): DataFrame = {
-    val reader = spark.read.option("basePath", s"$root/data")
+    val options = Map("basePath" -> s"$root/data")
     val paths = cs.map(c => s"$root/${c.dir}")
     if (fg.features.isEmpty)
-      reader.option("mergeSchema", "true").parquet(paths: _*)
-    else
-      reader.schema(StructType(fg.schema.fields.toSeq ++ Seq(
+      spark.read.options(options).option("mergeSchema", "true").parquet(paths: _*)
+    else {
+      val schema = StructType(fg.schema.fields.toSeq ++ Seq(
         StructField(CommitCol, LongType), StructField(DeletedCol, BooleanType),
-        StructField(TxCol, StringType)))).parquet(paths: _*)
+        StructField(TxCol, StringType)))
+      val fs = DeltaLite.fs(root)
+      val cache = listings(spark)
+      val roots = paths.map(p => fs.makeQualified(new Path(p)))
+      // the index reads a missing root as empty; fail as the reader does
+      for (r <- roots if cache.getLeafFiles(r).isEmpty && !fs.exists(r))
+        throw new java.io.FileNotFoundException(s"$r: commit directory not found")
+      val index = new InMemoryFileIndex(spark, roots, options, Some(schema), cache)
+      val parts = index.partitionSchema
+      val data = StructType(schema.filterNot(f =>
+        parts.exists(p => SQLConf.get.resolver(p.name, f.name))))
+      spark.baseRelationToDataFrame(HadoopFsRelation(index, parts,
+        data.toNullable, None, new ParquetFileFormat, options)(spark))
+    }
   }
 
   /** Rows of the live commits in (after, upTo]. An empty window reads the
@@ -149,12 +194,18 @@ object Lake {
     * declared schema. `fillDefaults` is the read-path safety net for
     * tables created before a column was declared: appended columns
     * surface as null for pre-append commits and fill their declared
-    * defaults here.
+    * defaults here. `onDriver` resolves the versions on the driver
+    * instead of in a window: `raw` is collected in one Spark action and
+    * the result is a driver-local frame (its projections run no job).
     */
   private def resolve(raw: DataFrame, fg: FeatureGroup,
-                      fillDefaults: Boolean = false): DataFrame = {
-    val winners = dedupLatest(raw, fg).filter(!col(DeletedCol))
-      .drop(CommitCol, DeletedCol, TxCol)
+                      fillDefaults: Boolean = false,
+                      onDriver: Boolean = false): DataFrame = {
+    val latest =
+      if (onDriver) GraftKeyedIndex.latest(raw, recordKey(raw, fg),
+        latestFirst(raw, fg), "keyedRead")
+      else dedupLatest(raw, fg, latestFirst(raw, fg))
+    val winners = latest.filter(!col(DeletedCol)).drop(MetaCols: _*)
     restoreTypes(
       if (fillDefaults && fg.features.nonEmpty)
         graft.ops.SchemaOps.alignToFeatures(winners, fg.features,
@@ -196,9 +247,13 @@ object Lake {
         // incremental stats: resolve current state ONLY for the incoming
         // keys — prune the commit log to the batch's keys before the
         // latest-version window, so an upsert of k keys into a 100 TB
-        // table windows O(k · versions) rows, never the whole snapshot
-        val current = resolve(
-            pruneToKeys(rawData(spark, root, fg, cs), aligned, keys), fg)
+        // table windows O(k · versions) rows, never the whole snapshot.
+        // Only whether a key is live is read, and tied versions share
+        // their delete flag: no content tie-break, so the scan reads the
+        // key, commit, precombine and delete columns only
+        val pruned = pruneToKeys(rawData(spark, root, fg, cs), aligned, keys)
+        val current = dedupLatest(pruned, fg, newestFirst(pruned, fg))
+          .filter(!col(DeletedCol))
           .select(keys.map(col): _*).withColumn("_m", lit(1))
         val r = aligned.select(keys.map(col): _*)
           .join(current, keys, "left")
@@ -310,8 +365,15 @@ object Lake {
     * The keyed read: with `keys`, only the records whose key columns equal
     * a row of `keys` — the rows `snapshot(...).join(keys, cols,
     * "left_semi")` keeps. The key columns must be record-key columns, so
-    * the commit rows are pruned to them before the latest-version window
-    * ([[graft.ops.KeyPrune.pruneToKeys]]): a lookup of k keys windows O(k · versions) rows.
+    * the commit rows are pruned to them before versions are resolved
+    * ([[graft.ops.KeyPrune.pruneToKeys]]): a lookup of k keys resolves
+    * O(k · versions) rows. When the prune is an `IN` list (a few
+    * driver-local keys), the read is EAGER: the pruned commit rows are
+    * collected here, in one Spark action (a Parquet scan with the
+    * predicate pushed into it, no shuffle), the versions are resolved on
+    * the driver, and the result is a driver-local frame. Otherwise the
+    * prune is a semi-join below the latest-version window, as a lazy
+    * plan.
     */
   def snapshot(spark: SparkSession, root: String, fg: FeatureGroup,
                asOf: Option[Long],
@@ -325,13 +387,16 @@ object Lake {
           "(older commits were cleaned; see cleanCommits)")
     val raw = window(spark, root, fg, cs, Long.MinValue,
       asOf.getOrElse(Long.MaxValue))
-    resolve(keys.fold(raw) { k =>
+    keys.fold(resolve(raw, fg, fillDefaults = true)) { k =>
       val rk = recordKey(raw, fg)
       require(k.columns.forall(rk.contains),
         s"keyed read on ${k.columns.mkString(", ")}: not all record-key " +
           s"columns (${rk.mkString(", ")})")
-      pruneToKeys(raw, k, k.columns.toSeq)
-    }, fg, fillDefaults = true)
+      val cols = k.columns.toSeq
+      val in = KeyPrune.inPredicate(raw, k, cols)
+      resolve(in.fold(KeyPrune.semiJoin(raw, k, cols))(raw.filter), fg,
+        fillDefaults = true, onDriver = in.nonEmpty)
+    }
   }
 
   /** Partition-column values come back through directory inference with
@@ -364,17 +429,32 @@ object Lake {
     resolve(window(spark, root, fg, cs, exclusiveStart, inclusiveEnd), fg)
   }
 
-  /** Resolve one winning row per record key: greatest (_commit_time,
-    * precombine). The only shuffle in the read path; commit selection has
+  /** The versions of one record key, newest first: greatest
+    * (_commit_time, precombine). Versions that tie on it share a commit,
+    * and so its delete flag.
+    */
+  private def newestFirst(df: DataFrame, fg: FeatureGroup): Seq[Column] =
+    col(CommitCol).desc +:
+      fg.effectivePrecombine.filter(df.columns.contains).map(col(_).desc).toSeq
+
+  /** [[newestFirst]], then greatest hash of the row's content (its
+    * columns but the commit's own), so rows that tie (one commit, equal
+    * precombine) resolve to the same row whatever the scan order or the
+    * file layout. Both resolvers use it.
+    */
+  private def latestFirst(df: DataFrame, fg: FeatureGroup): Seq[Column] =
+    newestFirst(df, fg) :+
+      xxhash64(df.columns.filterNot(MetaCols.contains).sorted.toIndexedSeq
+        .map(col): _*).desc
+
+  /** Resolve one winning row per record key in a window, first in
+    * `order`. The only shuffle in the read path; commit selection has
     * already bounded its input.
     */
-  private def dedupLatest(df: DataFrame, fg: FeatureGroup): DataFrame = {
+  private def dedupLatest(df: DataFrame, fg: FeatureGroup,
+                          order: Seq[Column]): DataFrame = {
     val keys = recordKey(df, fg)
-    val ordering =
-      col(CommitCol).desc +:
-        fg.effectivePrecombine.filter(df.columns.contains)
-          .map(col(_).desc).toSeq
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(ordering: _*)
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
     df.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
       .drop("_rn")
@@ -383,7 +463,7 @@ object Lake {
   private def recordKey(df: DataFrame, fg: FeatureGroup): Seq[String] = {
     val k = recordKey(fg).filter(df.columns.contains)
     if (k.nonEmpty) k
-    else df.columns.filterNot(Seq(CommitCol, DeletedCol, TxCol).contains).toSeq
+    else df.columns.filterNot(MetaCols.contains).toSeq
   }
 
   /** Squash every live commit but the newest `keep` into one base commit

@@ -1,18 +1,20 @@
 package org.apache.spark.sql.execution
 
-import org.apache.spark.sql.{classic, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{classic, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, Expression, InterpretedUnsafeProjection, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, Expression, InterpretedOrdering, InterpretedUnsafeProjection, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Sort}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.joins.{HashJoin, HashedRelation}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Minimal bridge to Spark's broadcast-join build structure
   * (`joins.HashedRelation`, `private[execution]`), used as a driver-resident
-  * keyed index, and to driver-local frames (`LocalRelation`).
+  * keyed index, to driver-local frames (`LocalRelation`), and to Spark's
+  * row ordering, for resolving a window's first rows on the driver.
   *
   * The index holds the rows of `schema` keyed on its first `keyTypes.size`
   * columns: a `LongHashedRelation` when the keys pack into one long, an
@@ -112,6 +114,34 @@ object GraftKeyedIndex {
     val plan = LocalRelation(DataTypeUtils.toAttributes(schema), rows)
     plan.setAnalyzed()
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+  }
+
+  /** The first row of each group of `df`'s rows in `order`: the rows
+    * `row_number() OVER (PARTITION BY keys ORDER BY order) = 1` keeps,
+    * resolved on the driver with Spark's own ordering. Rows group as the
+    * window partitions them: floating keys normalized (-0.0 = 0.0,
+    * NaN = NaN), null keys together. The rows reach the driver in one
+    * [[collect]] under `name` (no Spark job when `df` is driver-local);
+    * the winners come back as a [[localFrame]] of `df`'s schema.
+    */
+  def latest(df: DataFrame, keys: Seq[String], order: Seq[Column],
+             name: String): DataFrame = {
+    val sort = df.orderBy(order: _*).queryExecution.analyzed
+      .collectFirst { case s: Sort => s }.get
+    val input = sort.child.output
+    val ordering = new InterpretedOrdering(sort.order, input)
+    val key = InterpretedUnsafeProjection.createProjection(keys.map { k =>
+      val i = df.schema.fieldIndex(k)
+      NormalizeFloatingNumbers.normalize(
+        BoundReference(i, input(i).dataType, nullable = true))
+    })
+    val winners = new java.util.LinkedHashMap[UnsafeRow, InternalRow]
+    collect(df, name).foreach { r =>
+      val k = key(r).copy()
+      val best = winners.get(k)
+      if (best == null || ordering.compare(r, best) < 0) winners.put(k, r)
+    }
+    localFrame(df.sparkSession, df.schema, winners.values.asScala.toSeq)
   }
 
   /** Key expressions as a broadcast hash join builds them. */

@@ -428,4 +428,98 @@ class LakeSpec extends SparkSpec {
       assert(rows(Lake.snapshot(spark, root, fg, None)) === Map(3L -> "c"))
     } finally spark.conf.set(conf, prev)
   }
+
+  /** [[keyedMatches]] through both resolvers: one driver-local key column
+    * takes the driver's (a driver-local result), the same keys as a
+    * non-local frame take the window's (a semi-join below it).
+    */
+  private def bothResolvers(root: String, fg: graft.model.FeatureGroup,
+                            asOf: Option[Long],
+                            keys: org.apache.spark.sql.DataFrame,
+                            clue: String): Unit = {
+    val driver = keyedMatches(root, fg, asOf, keys, s"$clue / driver")
+    assert(driver.queryExecution.optimizedPlan.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation], clue)
+    val window = keyedMatches(root, fg, asOf, keys.repartition(1), s"$clue / window")
+    assert(hasSemiJoin(window), clue)
+  }
+
+  private def rootOf(fg: graft.model.FeatureGroup): String =
+    fg.source.asInstanceOf[graft.model.LakeSource].root
+
+  test("keyed snapshot: the driver and window resolvers agree") {
+    val fs = freshStore()
+    val fg = fs.createFeatureGroup("tboth",
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"),
+      primaryKey = Seq("id"))
+    val root = rootOf(fg)
+    val t2 = fs.insert(fg, Seq((1L, "a2"), (2L, "b2")).toDF("id", "v")).commitTime
+    fs.insert(fg, Seq((1L, "a3"), (4L, "d")).toDF("id", "v"))
+    fs.delete(fg, Seq(Tuple1(2L)).toDF("id"))
+    bothResolvers(root, fg, None, Seq(2L, 4L).toDF("id"), "a tombstoned key")
+    bothResolvers(root, fg, Some(t2), Seq(1L, 2L, 4L).toDF("id"),
+      "as of before the last upsert")
+    bothResolvers(root, fg, None, Seq(Some(1L), None).toDF("id"), "a null key")
+
+    val fg2 = fg.copy(features = fg.features :+ graft.model.Feature(
+      "score", org.apache.spark.sql.types.DoubleType, defaultValue = Some(0.5)))
+    Lake.upsert(spark, root, fg2, Seq((3L, "c", 9.0)).toDF("id", "v", "score"))
+    bothResolvers(root, fg2, None, Seq(1L, 3L).toDF("id"),
+      "an appended column with a default")
+
+    // key 1 moves to another partition
+    val parted = fs.createFeatureGroup("tbothp",
+      Seq((1L, "x", "a"), (2L, "y", "b")).toDF("id", "seg", "v"),
+      primaryKey = Seq("id"), partitionKey = Seq("seg"))
+    fs.insert(parted, Seq((1L, "y", "a2"), (3L, "z", "c")).toDF("id", "seg", "v"))
+    bothResolvers(rootOf(parted), parted, None, Seq(1L, 3L, 5L).toDF("id"),
+      "a partitioned group")
+
+    val timed = fs.createFeatureGroup("tbothet",
+      Seq((1L, 10L, "a"), (1L, 20L, "b"), (2L, 10L, "c")).toDF("id", "ts", "v"),
+      primaryKey = Seq("id"), eventTime = Some("ts"))
+    fs.insert(timed, Seq((1L, 10L, "a2"), (2L, 30L, "d")).toDF("id", "ts", "v"))
+    bothResolvers(rootOf(timed), timed, None, Seq(1L, 2L).toDF("id"),
+      "an event-time group")
+  }
+
+  test("rows of one record key that tie on commit and precombine resolve to one row") {
+    // five keys, each written twice in one commit with equal precombine
+    val batch = (1L to 5L).flatMap(k => Seq((k, s"x$k", 1L), (k, s"y$k", 1L)))
+    val winners = for (order <- Seq(batch, batch.reverse); files <- Seq(1, 3)) yield {
+      val clue = s"${order.head} first, $files files"
+      val fg = freshStore().createFeatureGroup("ttie",
+        order.toDF("id", "v", "pc").repartition(files), primaryKey = Seq("id"),
+        precombineKey = Some("pc"))
+      val root = rootOf(fg)
+      val full = rows(Lake.snapshot(spark, root, fg, None))
+      val in = Lake.snapshot(spark, root, fg, None, Some((1L to 5L).toDF("id")))
+      val join = Lake.snapshot(spark, root, fg, None, Some(spark.range(1, 6).toDF("id")))
+      assert(!hasSemiJoin(in) && hasSemiJoin(join), clue)
+      assert(rows(in) === full, clue)
+      assert(rows(join) === full, clue)
+      full
+    }
+    assert(winners.distinct.size === 1, winners)
+  }
+
+  test("a lake of more live commits than the parallel listing threshold lists each once") {
+    val fs = freshStore()
+    val fg = fs.createFeatureGroup("tlist", Seq((0L, "v0")).toDF("id", "v"),
+      primaryKey = Seq("id"))
+    val root = rootOf(fg)
+    (1L until 40L).foreach(i => Lake.upsert(spark, root, fg,
+      Seq((i, s"v$i")).toDF("id", "v"), computeStats = false))
+    assert(Lake.listCommits(spark, root).size === 40)
+    assert(spark.conf.get(
+      "spark.sql.sources.parallelPartitionDiscovery.threshold").toInt < 40)
+    // a read lists only the commits no read has listed yet: after the
+    // first, building the snapshot starts no listing job
+    Lake.snapshot(spark, root, fg, None)
+    val (snap, jobs, _) = counted(Lake.snapshot(spark, root, fg, None))
+    assert(jobs === 0)
+    assert(snap.schema.map(f => f.name -> f.dataType) ===
+      fg.schema.map(f => f.name -> f.dataType))
+    assert(rows(snap) === (0L until 40L).map(i => i -> s"v$i").toMap)
+  }
 }

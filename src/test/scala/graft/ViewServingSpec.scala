@@ -10,8 +10,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 import scala.jdk.CollectionConverters._
 
 class ViewServingSpec extends SparkSpec {
@@ -32,49 +31,6 @@ class ViewServingSpec extends SparkSpec {
       .map { case (r, rs) => r -> rs.size }
     assert(shape(got) === shape(want), clue)
     assert(bag(got) === bag(want), clue)
-  }
-
-  /** Runs `body` in its own job group and counts the Spark jobs it
-    * started, and the SQL executions by name. A sentinel job started after
-    * it drains the listener queue, so a count of 0 is not a race.
-    */
-  private def counted[T](body: => T): (T, Int, Map[String, Int]) = {
-    val sc = spark.sparkContext
-    val group = "counted-" + java.util.UUID.randomUUID()
-    val jobs = new AtomicInteger
-    val drained = new CountDownLatch(1)
-    val names = new ConcurrentLinkedQueue[String]
-    val jobListener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(g) if g == group + "-end" => drained.countDown()
-          case _ =>
-        }
-    }
-    val qeListener = new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(name: String,
-                    qe: org.apache.spark.sql.execution.QueryExecution,
-                    ns: Long): Unit = names.add(name)
-      def onFailure(name: String,
-                    qe: org.apache.spark.sql.execution.QueryExecution,
-                    e: Exception): Unit = names.add(name)
-    }
-    sc.addSparkListener(jobListener)
-    spark.listenerManager.register(qeListener)
-    try {
-      sc.setJobGroup(group, "counted")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(group + "-end", "sentinel")
-      try spark.range(1).collect() finally sc.clearJobGroup()
-      assert(drained.await(60, TimeUnit.SECONDS), "listener queue drained")
-      (out, jobs.get, names.asScala.toSeq.groupBy(identity).map {
-        case (n, ns) => n -> ns.size })
-    } finally {
-      spark.listenerManager.unregister(qeListener)
-      sc.removeSparkListener(jobListener)
-    }
   }
 
   private def customerNation(name: String) = FeatureView(name, 1,
@@ -564,6 +520,27 @@ class ViewServingSpec extends SparkSpec {
         Transformations.OnDemand, inputs = Seq("c_acctbal", "rate"),
         drop = Seq("rate"),
         fn = (cols, _) => Seq((cols(0) * cols(1)).as("scaled")))))
+    // lake groups: a left group with an update and a delete (key 2) over
+    // its load, and a right group with an update
+    val store = new graft.catalog.FeatureStore(spark,
+      warehouseDir = Files.createTempDirectory("graft_lake_eq").toString)
+    val customers = spark.read.parquet(s"$sfDir/customer.parquet")
+      .select("c_custkey", "c_name", "c_acctbal", "c_nationkey")
+    val lakeCustomer = store.createFeatureGroup("eq_customer", customers,
+      primaryKey = Seq("c_custkey"))
+    store.insert(lakeCustomer, customers.filter($"c_custkey".isin(1L, 7L, 8L))
+      .withColumn("c_name", concat($"c_name", lit("-v2"))))
+    store.delete(lakeCustomer, Seq(Tuple1(2L)).toDF("c_custkey"))
+    val nations = spark.read.parquet(s"$sfDir/nation.parquet")
+      .select("n_nationkey", "n_name")
+    val lakeNation = store.createFeatureGroup("eq_nation", nations,
+      primaryKey = Seq("n_nationkey"))
+    store.insert(lakeNation, nations.limit(5).withColumn("n_name", lower($"n_name")))
+    val lake = FeatureView("eq4", 1,
+      Query.select(lakeCustomer, Seq("c_custkey", "c_name", "c_acctbal"))
+        .join(Query.select(lakeNation, Seq("n_name")),
+          leftOn = Seq("c_nationkey"), rightOn = Seq("n_nationkey"),
+          prefix = Some("nat_")))
     // (name, keys, whether they widen losslessly to the bigint key)
     val keySets: Seq[(String, DataFrame, Boolean)] = Seq(
       ("hits and misses", Seq(1L, 2L, 7L, 0L, 999999L).toDF("c_custkey"), true),
@@ -577,7 +554,8 @@ class ViewServingSpec extends SparkSpec {
       ("double keys", Seq(1.0, 1.5, 2.0).toDF("c_custkey"), false))
     val rate = Map[String, Any]("rate" -> 2.0)
     for ((view, paramSets) <- Seq(single -> Seq(Map.empty[String, Any], rate),
-                                  multi -> Seq(rate), onDemand -> Seq(rate))) {
+                                  multi -> Seq(rate), onDemand -> Seq(rate),
+                                  lake -> Seq(rate))) {
       val default = new FeatureVectorServer(spark, view)
       val online = new FeatureVectorServer(spark, view).materializeOnline()
       val lazyOnline = new FeatureVectorServer(spark, view, cacheSnapshots = true)
@@ -588,10 +566,14 @@ class ViewServingSpec extends SparkSpec {
         val got = online.getFeatureVectors(keys, params)
         assertSame(got, want, clue)
         // keys that widen to the key type are assembled on the driver,
-        // others by the default path's joins
+        // others by the default path's joins; without the online state,
+        // only driver-local keys are
         assert(got.queryExecution.optimizedPlan.isInstanceOf[LocalRelation] ===
           widens, clue)
-        if (view eq multi) assertSame(lazyOnline.getFeatureVectors(keys, params), want, clue)
+        assert(want.queryExecution.optimizedPlan.isInstanceOf[LocalRelation] ===
+          (widens && isLocal), clue)
+        if ((view eq multi) || (view eq lake))
+          assertSame(lazyOnline.getFeatureVectors(keys, params), want, clue)
       }
       if (!(view eq onDemand))
         for (k <- Seq[Any](7, 7L, 999999L, null, 1.5)) {
@@ -727,40 +709,42 @@ class ViewServingSpec extends SparkSpec {
   }
 
   test("serving: a lake group's default lookup prunes below the lake's window, inside the Parquet scan") {
-    import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, In, InSet, Literal}
     import org.apache.spark.sql.catalyst.plans.LeftSemi
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, Window => LWindow}
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, Window => LWindow}
     import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
     val store = new graft.catalog.FeatureStore(spark,
       warehouseDir = Files.createTempDirectory("graft_lake_serving").toString)
     val g = store.createFeatureGroup("lakeserve",
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), primaryKey = Seq("id"))
     store.insert(g, Seq((3L, "c2"), (4L, "d")).toDF("id", "v"))
     val server = new FeatureVectorServer(spark, FeatureView("lakeserve", 1, Query.selectAll(g)))
-    def isKey(a: Attribute) = a.name == "id"
     def windows(d: DataFrame) = {
       val ws = d.queryExecution.optimizedPlan.collect { case w: LWindow => w }
       assert(ws.nonEmpty, d.queryExecution.optimizedPlan.toString)
       ws
     }
 
-    // driver-local key: a key predicate inside the window's subtree, and
-    // pushed into the Parquet scan
-    val one = server.getFeatureVector(Map("id" -> 3L))
-    assert(one.collect().map(_.getAs[String]("v")).toSeq === Seq("c2"))
-    assert(windows(one).forall(_.exists {
-      case f: Filter => f.condition.exists {
-        case EqualTo(a: Attribute, _: Literal) => isKey(a)
-        case In(a: Attribute, _) => isKey(a)
-        case InSet(a: Attribute, _) => isKey(a)
-        case _ => false
+    // driver-local key: the keyed read is one Spark job, a Parquet scan
+    // with the key pushed into it and no shuffle; the versions resolve on
+    // the driver, so collecting the vector runs no job
+    val (one, lookupJobs, executions) = observed(server.getFeatureVector(Map("id" -> 3L)))
+    assert(lookupJobs === 1, executions.map(_._1))
+    val keyed = executions.collect { case ("keyedRead", qe) =>
+      qe.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
       }
-      case _ => false
-    }), one.queryExecution.optimizedPlan.toString)
-    val scans = one.queryExecution.sparkPlan.collect { case s: FileSourceScanExec => s }
+    }
+    assert(keyed.size === 1, executions.map(_._1))
+    val scans = keyed.head.collect { case s: FileSourceScanExec => s }
     assert(scans.nonEmpty && scans.forall(s =>
-      s.metadata("PushedFilters").contains("EqualTo(id,3)")),
-      one.queryExecution.sparkPlan.toString)
+      s.metadata("PushedFilters").contains("EqualTo(id,3)")), keyed.head.toString)
+    assert(keyed.head.collect { case e: Exchange => e }.isEmpty, keyed.head.toString)
+    val (rows, collectJobs, _) = counted(one.collect())
+    assert(collectJobs === 0)
+    assert(rows.map(_.getAs[String]("v")).toSeq === Seq("c2"))
 
     // other key frames: a left-semi join inside the window's subtree
     val range = server.getFeatureVectors(spark.range(2, 6).toDF("id"))
