@@ -4,6 +4,7 @@ import graft.functions.VectorFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import graft.ops.Materialize.PinOps
 
 /** Deduplication operators for large-scale training-data pipelines
@@ -43,6 +44,32 @@ object Dedup {
     */
   def exact(df: DataFrame, idCol: String, on: Seq[String]): DataFrame =
     exactImpl(df, idCol, on, xxhash64(on.map(col): _*))
+
+  /** A 64-bit hash of a row's `cols`, taken in name order so it does not
+    * depend on the frame's column order: the deterministic last tie-break
+    * of version resolution. Spark does not hash maps, so a map (at any
+    * depth) hashes as the xor of its entries' hashes, which does not
+    * depend on the order of its entries either.
+    */
+  def contentHash(df: DataFrame, cols: Seq[String]): Column =
+    xxhash64(cols.sorted.map(c => hashable(col(c), df.schema(c).dataType)): _*)
+
+  private def hashable(c: Column, t: DataType): Column = t match {
+    case MapType(k, v, _) =>
+      aggregate(map_entries(c), lit(0L), (acc, e) => acc.bitwiseXOR(
+        xxhash64(hashable(e.getField("key"), k), hashable(e.getField("value"), v))))
+    case ArrayType(e, _) if hasMap(e) => transform(c, x => hashable(x, e))
+    case StructType(fs) if hasMap(t) => when(c.isNotNull,
+      struct(fs.toSeq.map(f => hashable(c.getField(f.name), f.dataType).as(f.name)): _*))
+    case _ => c
+  }
+
+  private def hasMap(t: DataType): Boolean = t match {
+    case _: MapType => true
+    case ArrayType(e, _) => hasMap(e)
+    case StructType(fs) => fs.exists(f => hasMap(f.dataType))
+    case _ => false
+  }
 
   /** Test seam: `h` lets specs force total hash collision to prove the
     * content comparison keeps distinct rows apart.

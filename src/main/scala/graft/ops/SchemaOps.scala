@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.model.Feature
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -21,7 +22,7 @@ object SchemaOps {
     }
   }
 
-  /** Cast columns to a declared schema (engine/spark.py:1464-1474
+  /** Cast columns to a declared schema's types (engine/spark.py:1464-1474
     * cast_columns); unknown columns pass through untouched.
     */
   def castToSchema(df: DataFrame, schema: StructType): DataFrame = {
@@ -29,7 +30,10 @@ object SchemaOps {
       schema.fields.map(f => f.name -> f.dataType).toMap
     df.select(df.columns.toIndexedSeq.map { c =>
       types.get(c) match {
-        case Some(t) if df.schema(c).dataType != t => col(c).cast(t).as(c)
+        // types only: Spark will not cast a map or array of nullable
+        // values to one of non-null values, and a scan reads them nullable
+        case Some(t) if !DataTypeUtils.equalsIgnoreNullability(df.schema(c).dataType, t) =>
+          col(c).cast(t).as(c)
         case _                                     => col(c)
       }
     }: _*)

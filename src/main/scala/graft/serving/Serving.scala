@@ -201,7 +201,7 @@ final class FeatureVectorServer(
         val order = col(et).desc +:
           fg.effectivePrecombine.filter(df.columns.contains)
             .filterNot(_ == et).map(col(_).desc).toSeq :+
-          xxhash64(df.columns.sorted.toIndexedSeq.map(col): _*).desc
+          graft.ops.Dedup.contentHash(df, df.columns.toSeq).desc
         if (onDriver) GraftKeyedIndex.latest(df, fg.primaryKey, order, "keyedRead")
         else {
           val w = org.apache.spark.sql.expressions.Window
@@ -288,7 +288,9 @@ final class FeatureVectorServer(
     * requested keys, each right group's by the join-key values the rows
     * so far carry. None when a key column is missing or its type does not
     * widen losslessly to the index's key type; the default assembly
-    * handles those.
+    * handles those. Without the online state the caller has checked the
+    * key types first ([[widens]]), so no keyed read runs for keys that
+    * take the default assembly.
     */
   private def assembleOnDriver(online: Option[Seq[GraftKeyedIndex]],
                                keySchema: StructType,
@@ -316,6 +318,26 @@ final class FeatureVectorServer(
 
   private def indexOf(schema: StructType, name: String): Option[Int] =
     Some(schema.fieldNames.indexOf(name)).filter(_ >= 0)
+
+  /** Whether driver-local keys of `keySchema` can be assembled on the
+    * driver over per-request indexes: decided from the schemas, before any
+    * keyed read runs. Each lookup's probe columns (the requested keys for
+    * the left group; the key frame's column, else the left group's, for a
+    * join) must widen losslessly to the group's declared key types. A
+    * column a schema does not declare passes here; [[probeRows]] checks it
+    * against the built index.
+    */
+  private def widens(keySchema: StructType): Boolean = {
+    def declared(s: StructType, c: String) = s.find(_.name == c).map(_.dataType)
+    val probes = lf.primaryKey.map(c => declared(keySchema, c) -> declared(lf.schema, c)) ++
+      joins.flatMap(j => j.leftKeys.zip(j.rightKeys).map { case (lk, rk) =>
+        declared(keySchema, lk).orElse(declared(lf.schema, lk)) -> declared(j.fg.schema, rk)
+      })
+    probes.forall {
+      case (Some(p), Some(k)) => GraftKeyedIndex.widens(p, k)
+      case _ => true
+    }
+  }
 
   /** The distinct values of the `cols` of `rows`, named `as`, as a
     * driver-local key frame.
@@ -382,7 +404,8 @@ final class FeatureVectorServer(
       if (ix.isEmpty) local
       else local.orElse(Some((keys.schema,
         GraftKeyedIndex.collect(keys, "serveKeys").toSeq)))
-    rows.flatMap { case (schema, r) => assembleOnDriver(ix, schema, r) }
+    rows.filter { case (schema, _) => ix.nonEmpty || widens(schema) }
+      .flatMap { case (schema, r) => assembleOnDriver(ix, schema, r) }
       .getOrElse(assemblePruned(keys))
   }
 

@@ -5,6 +5,7 @@ import graft.ops.KeyPrune
 import graft.ops.KeyPrune.pruneToKeys
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.GraftKeyedIndex
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -48,8 +49,9 @@ import org.apache.spark.sql.types._
   *    reads select directories from the log — a 100 TB table as-of t scans
   *    only commits ≤ t, and an incremental read only the (t0, t1] commits.
   *  - Writes are append-only (merge-on-read): upsert/delete append rows and
-  *    tombstones; reads resolve the latest version per record key in one
-  *    order (commit time, precombine, content hash), by one of three paths:
+  *    tombstones, one per record key per commit; reads resolve the latest
+  *    version per record key in one order (commit time, precombine), by
+  *    one of three paths:
   *     1. a full read windows every record key — the same shuffle a
   *        MERGE INTO would need, but without rewriting existing files;
   *     2. a keyed read (`snapshot(..., keys)`, and the stats and tombstone
@@ -69,7 +71,9 @@ import org.apache.spark.sql.types._
   * Record identity = primary key + event time (hudi record-key semantics,
   * core/hudi_engine.py:122-145); duplicate versions resolved by
   * (_commit_time desc, precombine desc) — last writer wins, ties broken by
-  * the precombine column (core/hudi_engine.py:141-149).
+  * the precombine column (core/hudi_engine.py:141-149). A batch's own
+  * duplicates are settled as it is written, as Hudi precombines before
+  * a write: by precombine, then by a hash of the row's content.
   */
 object Lake {
 
@@ -201,10 +205,10 @@ object Lake {
   private def resolve(raw: DataFrame, fg: FeatureGroup,
                       fillDefaults: Boolean = false,
                       onDriver: Boolean = false): DataFrame = {
+    val order = latestFirst(raw, fg)
     val latest =
-      if (onDriver) GraftKeyedIndex.latest(raw, recordKey(raw, fg),
-        latestFirst(raw, fg), "keyedRead")
-      else dedupLatest(raw, fg, latestFirst(raw, fg))
+      if (onDriver) GraftKeyedIndex.latest(raw, recordKey(raw, fg), order, "keyedRead")
+      else dedupLatest(raw, fg, order)
     val winners = latest.filter(!col(DeletedCol)).drop(MetaCols: _*)
     restoreTypes(
       if (fillDefaults && fg.features.nonEmpty)
@@ -232,6 +236,8 @@ object Lake {
       if (fg.features.nonEmpty)
         graft.ops.SchemaOps.alignToFeatures(rows, fg.features)
       else rows
+    // tombstones come from a resolved read, one per record key already
+    val batch = if (deleted) aligned else oneRowPerKey(aligned, fg)
 
     // Classify the commit for metadata parity with Hudi commit stats
     // (core/hudi_engine.py:246-274): ONE action — left join against current
@@ -247,15 +253,11 @@ object Lake {
         // incremental stats: resolve current state ONLY for the incoming
         // keys — prune the commit log to the batch's keys before the
         // latest-version window, so an upsert of k keys into a 100 TB
-        // table windows O(k · versions) rows, never the whole snapshot.
-        // Only whether a key is live is read, and tied versions share
-        // their delete flag: no content tie-break, so the scan reads the
-        // key, commit, precombine and delete columns only
-        val pruned = pruneToKeys(rawData(spark, root, fg, cs), aligned, keys)
-        val current = dedupLatest(pruned, fg, newestFirst(pruned, fg))
-          .filter(!col(DeletedCol))
+        // table windows O(k · versions) rows, never the whole snapshot
+        val current = resolve(
+            pruneToKeys(rawData(spark, root, fg, cs), batch, keys), fg)
           .select(keys.map(col): _*).withColumn("_m", lit(1))
-        val r = aligned.select(keys.map(col): _*)
+        val r = batch.select(keys.map(col): _*)
           .join(current, keys, "left")
           .agg(count(lit(1)).as("n"), sum(col("_m")).as("m"))
           .collect().head
@@ -265,7 +267,7 @@ object Lake {
       }
     val t0 = math.max(System.currentTimeMillis(),
       cs.lastOption.fold(0L)(_.time) + 1)
-    commit(spark, root, fg, aligned.withColumn(DeletedCol, lit(deleted)), t0,
+    commit(spark, root, fg, batch.withColumn(DeletedCol, lit(deleted)), t0,
         squashed = Nil) { (t, n) =>
       val (ins, upd, del) =
         if (!computeStats) (-1L, -1L, -1L)
@@ -402,15 +404,20 @@ object Lake {
   /** Partition-column values come back through directory inference with
     * possibly narrowed types (e.g. long → int) and reordered to the end;
     * cast and reorder back to the declared feature-group schema, keeping
-    * any undeclared extra columns.
+    * any undeclared extra columns. Only types are cast: a scan reads every
+    * column as nullable, and Spark will not cast a map or array of
+    * nullable values to one of non-null values.
     */
   private def restoreTypes(df: DataFrame, fg: FeatureGroup): DataFrame =
     if (fg.features.isEmpty) df
     else {
       val declared = fg.schema.fields.filter(f => df.columns.contains(f.name))
       val extras = df.columns.filterNot(fg.schema.fieldNames.contains)
-      df.select(declared.toIndexedSeq.map(f => col(f.name).cast(f.dataType).as(f.name)) ++
-        extras.map(col(_)): _*)
+      df.select(declared.toIndexedSeq.map { f =>
+        if (DataTypeUtils.equalsIgnoreNullability(df.schema(f.name).dataType, f.dataType))
+          col(f.name)
+        else col(f.name).cast(f.dataType).as(f.name)
+      } ++ extras.map(col(_)): _*)
     }
 
   /** Incremental read: latest state of records changed in (t0, t1]
@@ -429,27 +436,33 @@ object Lake {
     resolve(window(spark, root, fg, cs, exclusiveStart, inclusiveEnd), fg)
   }
 
-  /** The versions of one record key, newest first: greatest
-    * (_commit_time, precombine). Versions that tie on it share a commit,
-    * and so its delete flag.
-    */
-  private def newestFirst(df: DataFrame, fg: FeatureGroup): Seq[Column] =
-    col(CommitCol).desc +:
-      fg.effectivePrecombine.filter(df.columns.contains).map(col(_).desc).toSeq
+  private def byPrecombine(df: DataFrame, fg: FeatureGroup): Seq[Column] =
+    fg.effectivePrecombine.filter(df.columns.contains).map(col(_).desc).toSeq
 
-  /** [[newestFirst]], then greatest hash of the row's content (its
-    * columns but the commit's own), so rows that tie (one commit, equal
-    * precombine) resolve to the same row whatever the scan order or the
-    * file layout. Both resolvers use it.
+  /** The versions of one record key, newest first: greatest
+    * (_commit_time, precombine). Both resolvers use it. No two versions
+    * tie on it, because a commit holds one row per record key
+    * ([[oneRowPerKey]]).
     */
   private def latestFirst(df: DataFrame, fg: FeatureGroup): Seq[Column] =
-    newestFirst(df, fg) :+
-      xxhash64(df.columns.filterNot(MetaCols.contains).sorted.toIndexedSeq
-        .map(col): _*).desc
+    col(CommitCol).desc +: byPrecombine(df, fg)
+
+  /** The batch `df` with one row per record key: the greatest precombine,
+    * then the greatest hash of the row's content, so rows that tie resolve
+    * to the same row whatever their order or partitioning. A driver-local
+    * batch is settled on the driver, without a Spark job.
+    */
+  private def oneRowPerKey(df: DataFrame, fg: FeatureGroup): DataFrame = {
+    val order = byPrecombine(df, fg) :+
+      graft.ops.Dedup.contentHash(df, df.columns.toSeq).desc
+    if (GraftKeyedIndex.localRows(df).isEmpty) dedupLatest(df, fg, order)
+    else GraftKeyedIndex.latest(df, recordKey(df, fg), order, "commitBatch")
+  }
 
   /** Resolve one winning row per record key in a window, first in
-    * `order`. The only shuffle in the read path; commit selection has
-    * already bounded its input.
+    * `order`. The read path's only shuffle (commit selection has already
+    * bounded its input); a commit of a batch that is not driver-local pays
+    * one too.
     */
   private def dedupLatest(df: DataFrame, fg: FeatureGroup,
                           order: Seq[Column]): DataFrame = {

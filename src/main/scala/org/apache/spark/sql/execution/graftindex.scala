@@ -35,7 +35,7 @@ final class GraftKeyedIndex private (val schema: StructType,
     * also the type Catalyst's coercion compares them in.
     */
   def exact(probeTypes: Seq[DataType]): Boolean =
-    probeTypes.zip(keyTypes).forall { case (p, k) => p == k || Cast.canUpCast(p, k) }
+    probeTypes.zip(keyTypes).forall { case (p, k) => GraftKeyedIndex.widens(p, k) }
 
   /** A probe for one caller: the copied rows whose key equals the probe
     * row's columns at `probe` (ordinal, type), each cast to the key type (a
@@ -61,6 +61,12 @@ final class GraftKeyedIndex private (val schema: StructType,
 }
 
 object GraftKeyedIndex {
+
+  /** Whether a probe column of type `probe` finds exactly the rows a SQL
+    * equi-join would against a key of type `key` ([[GraftKeyedIndex.exact]]).
+    */
+  def widens(probe: DataType, key: DataType): Boolean =
+    probe == key || Cast.canUpCast(probe, key)
 
   /** Index over the rows of `df`, keyed on its first `numKeys` columns.
     * The rows reach the driver through one `executeCollect`, so
@@ -120,9 +126,9 @@ object GraftKeyedIndex {
     * `row_number() OVER (PARTITION BY keys ORDER BY order) = 1` keeps,
     * resolved on the driver with Spark's own ordering. Rows group as the
     * window partitions them: floating keys normalized (-0.0 = 0.0,
-    * NaN = NaN), null keys together. The rows reach the driver in one
-    * [[collect]] under `name` (no Spark job when `df` is driver-local);
-    * the winners come back as a [[localFrame]] of `df`'s schema.
+    * NaN = NaN), null keys together. The rows of a driver-local `df` are
+    * read from its plan; others reach the driver in one [[collect]] under
+    * `name`. The winners come back as a [[localFrame]] of `df`'s schema.
     */
   def latest(df: DataFrame, keys: Seq[String], order: Seq[Column],
              name: String): DataFrame = {
@@ -136,7 +142,7 @@ object GraftKeyedIndex {
         BoundReference(i, input(i).dataType, nullable = true))
     })
     val winners = new java.util.LinkedHashMap[UnsafeRow, InternalRow]
-    collect(df, name).foreach { r =>
+    localRows(df).fold(collect(df, name).toSeq)(_._2).foreach { r =>
       val k = key(r).copy()
       val best = winners.get(k)
       if (best == null || ordering.compare(r, best) < 0) winners.put(k, r)

@@ -492,6 +492,8 @@ class LakeSpec extends SparkSpec {
         order.toDF("id", "v", "pc").repartition(files), primaryKey = Seq("id"),
         precombineKey = Some("pc"))
       val root = rootOf(fg)
+      // the tie is settled as the batch is written: one row per key
+      assert(spark.read.parquet(s"$root/data").count() === 5, clue)
       val full = rows(Lake.snapshot(spark, root, fg, None))
       val in = Lake.snapshot(spark, root, fg, None, Some((1L to 5L).toDF("id")))
       val join = Lake.snapshot(spark, root, fg, None, Some(spark.range(1, 6).toDF("id")))
@@ -501,6 +503,45 @@ class LakeSpec extends SparkSpec {
       full
     }
     assert(winners.distinct.size === 1, winners)
+  }
+
+  test("a group with a map feature upserts, reads whole and keyed, and settles tied rows") {
+    import org.apache.spark.sql.types.MapType
+    def maps(df: org.apache.spark.sql.DataFrame): Map[Long, Map[String, Double]] =
+      df.collect().map(r => r.getLong(0) ->
+        Option(r.getMap[String, Double](1)).map(_.toMap).orNull).toMap
+    val load = Seq((1L, Map("a" -> 1.0)), (2L, Map("a" -> 2.0, "b" -> 0.5)),
+      (3L, Map.empty[String, Double]))
+    // key 1 twice, tied (the key is its own precombine), with differing maps
+    val batch = Seq((1L, Map("a" -> 9.0)), (1L, Map("b" -> 8.0, "a" -> 7.0)),
+      (2L, Map("b" -> 0.25, "a" -> 2.0)), (4L, null))
+    val winners = for (order <- Seq(batch, batch.reverse); files <- Seq(0, 1, 3)) yield {
+      val clue = s"${order.head} first, ${if (files == 0) "local" else s"$files files"}"
+      val fs = freshStore()
+      val fg = fs.createFeatureGroup("tmap", load.toDF("id", "m"), primaryKey = Seq("id"))
+      assert(fg.schema("m").dataType.isInstanceOf[MapType], clue)
+      val root = rootOf(fg)
+      val up = order.toDF("id", "m")
+      val meta = fs.insert(fg, if (files == 0) up else up.repartition(files))
+      assert(meta.rowsInserted === 1 && meta.rowsUpdated === 2, clue)
+      val full = maps(Lake.snapshot(spark, root, fg, None))
+      assert(full - 1L === Map(2L -> Map("a" -> 2.0, "b" -> 0.25),
+        3L -> Map.empty[String, Double], 4L -> null), clue)
+      val in = Lake.snapshot(spark, root, fg, None, Some(Seq(1L, 2L, 4L).toDF("id")))
+      val join = Lake.snapshot(spark, root, fg, None, Some(spark.range(1, 5).toDF("id")))
+      assert(!hasSemiJoin(in) && hasSemiJoin(join), clue)
+      assert(maps(in) === full - 3L, clue)
+      assert(maps(join) === full, clue)
+      Lake.compact(spark, root, fg)
+      assert(maps(Lake.snapshot(spark, root, fg, None)) === full, clue)
+      full(1L)
+    }
+    assert(winners.distinct.size === 1, winners)
+    // a map's hash does not depend on the order of its entries
+    val hashed = Seq(Map("a" -> 1.0, "b" -> 2.0), Map("b" -> 2.0, "a" -> 1.0),
+      Map("a" -> 1.0)).toDF("m")
+    val h = hashed.select(graft.ops.Dedup.contentHash(hashed, Seq("m"))).as[Long].collect()
+    assert(h(0) === h(1) && h(0) != h(2), h.toSeq)
   }
 
   test("a lake of more live commits than the parallel listing threshold lists each once") {

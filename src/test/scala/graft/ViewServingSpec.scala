@@ -708,6 +708,34 @@ class ViewServingSpec extends SparkSpec {
     }
   }
 
+  test("serving: driver-local keys that do not widen start no keyed read before the default joins") {
+    val store = new graft.catalog.FeatureStore(spark,
+      warehouseDir = Files.createTempDirectory("graft_lake_widen").toString)
+    val g = store.createFeatureGroup("widen",
+      Seq((1L, 10.0, "a"), (2L, 20.0, "b")).toDF("id", "rk", "v"), primaryKey = Seq("id"))
+    val r = store.createFeatureGroup("widen_r",
+      Seq((10L, "x"), (20L, "y")).toDF("rid", "w"), primaryKey = Seq("rid"))
+    val single = new FeatureVectorServer(spark, FeatureView("widen", 1, Query.selectAll(g)))
+    // a double does not widen to the bigint key: the lookup is the default
+    // joins' lazy plan, and building it reads nothing
+    for ((k, want) <- Seq(1.5 -> null, 1.0 -> "a")) {
+      val (vector, jobs, _) = counted(single.getFeatureVector(Map("id" -> k)))
+      assert(jobs === 0, s"key $k")
+      assert(vector.collect().map(_.getAs[String]("v")).toSeq === Seq(want), s"key $k")
+    }
+    // the left key widens, but the join's double left key does not widen
+    // to its bigint right key
+    val joined = new FeatureVectorServer(spark, FeatureView("widen2", 1,
+      Query.selectAll(g).join(Query.select(r, Seq("w")), leftOn = Seq("rk"),
+        rightOn = Seq("rid"))))
+    val (vector, jobs, executions) = counted(joined.getFeatureVector(Map("id" -> 2L)))
+    // only the default joins' own read runs: the left group's keyed read,
+    // once; no index is built
+    assert(jobs === 1 && executions.get("buildIndex").isEmpty &&
+      executions.get("keyedRead").contains(1), executions)
+    assert(vector.collect().map(_.getAs[String]("w")).toSeq === Seq("y"))
+  }
+
   test("serving: a lake group's default lookup prunes below the lake's window, inside the Parquet scan") {
     import org.apache.spark.sql.catalyst.plans.LeftSemi
     import org.apache.spark.sql.catalyst.plans.logical.{Join, Window => LWindow}
