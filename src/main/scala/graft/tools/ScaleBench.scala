@@ -2,42 +2,37 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 
-/** Scaling-curve probe for the heaviest operators: run each op at two
-  * (or more) data scales generated by [[ScaleData]] and report seconds
-  * per scale plus the wall-time growth ratio. One fresh JVM per (op,
-  * dir) measurement — the same isolation lesson as [[graft.Bench]].
+/** The scale registry: operators whose wall time is measured at two data
+  * scales generated by [[ScaleData]] by `graft.Bench scale <dir1x>
+  * <dirNx> [out.json]`, which reports seconds per scale plus the growth
+  * ratio (SCALE.md).
   *
-  * Ops: the five heaviest driver queries (corpus chain, statistics
-  * engine, salted PIT, embedding near-dup, token sharding) reused
-  * verbatim from SparkEntry, plus a dedicated salted-vs-unsalted PIT
-  * pair over a deliberately skewed spine (60% of click rows collapse
-  * onto one hot user; `maxKeyRowsPerBucket` forces the split at test
-  * scale the way a per-task sort budget would at 100 TB).
-  *
-  * Usage: `runMain graft.tools.ScaleBench <dir1x> <dirNx> [out.json]`
+  * Ops: the heaviest driver queries reused verbatim from SparkEntry, plus
+  * operator probes over the tables ScaleData amplifies — e.g. a
+  * salted-vs-unsalted PIT pair over a deliberately skewed spine (60% of
+  * click rows collapse onto one hot user; `maxKeyRowsPerBucket` forces
+  * the split at test scale the way a per-task sort budget would at
+  * 100 TB).
   */
 object ScaleBench {
-  private val Marker = "GRAFT_SCALE_TIMES"
-  private val Reps = 2
-  private val ChildTimeoutSec = 1200L
+  /** Click-row amplification of the skewed PIT probe. */
+  private val SkewAmp = 20
 
-  /** Skewed PIT probe: clicks amplified ×20 (so the hot key's rows
+  /** Skewed PIT probe: clicks amplified [[SkewAmp]]× (so the hot key's rows
     * dominate a single task's sort at the 10× scale the way one hot
     * entity does at 100 TB) with 60% of spine rows collapsed onto one
     * user. Unsalted, that key's whole window sorts on ONE task; AutoSalt
     * must detect it and spread the key.
     */
   private def pitSkew(saltBuckets: Int)(s: SparkSession, dir: String): DataFrame = {
-    val amp = sys.env.getOrElse("SPARK_GRAFT_SKEW_AMP", "20").toInt
     val ev = s.read.parquet(s"$dir/events.parquet")
     // schema-robust: ts may be int64 nanos or timestamp[us] depending on
     // the testdata generation — normalize to long micros up front (the
     // PIT join's own converter then sniffs the micros magnitude)
     val tsUs = graft.functions.TimeFunctions.eventTimeToMicros(ev, "ts")
     val clicks = ev.filter(col("event_type") === "click")
-      .crossJoin(s.range(amp).select(col("id").as("_amp")))
+      .crossJoin(s.range(SkewAmp).select(col("id").as("_amp")))
       .select((col("event_id") * 32 + col("_amp")).as("event_id"),
         when(pmod(col("user_id"), lit(10)) < 6, lit(42L))
           .otherwise(col("user_id")).as("user_id"),
@@ -551,7 +546,7 @@ object ScaleBench {
       Seq("event_type", "user_bucket", "day"), k = 5L)
   }
 
-  private def ops: Seq[(String, (SparkSession, String) => DataFrame)] =
+  private[graft] def ops: Seq[(String, graft.Bench.QueryFn)] =
     heavyQueries.map(n => n -> graft.SparkEntry.queries(n)) ++ Seq(
       "bootstrap_events" -> (bootstrapEvents _),
       "decayed_events" -> (decayedEvents _),
@@ -621,16 +616,9 @@ object ScaleBench {
       // sublinear in wall), not commit-bound.
       "lake_bulk_orders" -> (lakeBulkOrders _))
 
-  /** Where `lake_bulk_orders` commits: beside the data dir when that is
-    * writable, so the write lands on the data filesystem, not tmpfs.
-    * childMain deletes it after every rep.
-    */
-  private def lakeRoot(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(graft.Bench.writableSibling(dir),
-      s"graft_scale_lake_${ProcessHandle.current.pid}")
-
   private def lakeBulkOrders(s: SparkSession, dir: String): DataFrame = {
-    val root = lakeRoot(dir).toString
+    // the rep's scratch, which the runner deletes after every rep
+    val root = graft.Bench.repScratch(dir).toString
     val orders = s.read.parquet(s"$dir/orders.parquet")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
         col("o_orderdate").cast("string").as("o_orderdate"))
@@ -647,86 +635,5 @@ object ScaleBench {
     graft.sources.Lake.snapshot(s, root, fgrp, asOf = None)
       .groupBy().agg(count(lit(1)).as("n"),
         sum(col("o_totalprice")).as("s"))
-  }
-
-  def main(args: Array[String]): Unit = args match {
-    case Array("one", op, dir) => childMain(op, dir)
-    case _ =>
-      require(args.length >= 2, "usage: ScaleBench <dir1x> <dirNx> [out.json]")
-      orchestrate(args(0), args(1), args.lift(2))
-  }
-
-  private def childMain(op: String, dir: String): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.SparkSessions.local(cpus, s"graft-scale-$op")
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    try spark.read.parquet(s"$dir/documents.parquet").count()
-    catch { case _: Throwable => () }
-    val fn = ops.toMap.apply(op)
-    val lake = lakeRoot(dir)
-    val times = (1 to Reps).map { _ =>
-      val t0 = System.nanoTime()
-      // noop sink: count() would let the optimizer prune the very
-      // operator under test (see Bench.measure)
-      try {
-        fn(spark, dir).write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      } finally graft.Bench.deleteRecursively(lake)
-    }
-    println(s"$Marker $op ${times.mkString(" ")}")
-    spark.stop()
-    sys.exit(0)
-  }
-
-  private def forkOne(op: String, dir: String): Option[Double] = {
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq
-    val cp = System.getProperty("java.class.path")
-    val cmd = Seq(javaBin) ++ jvmArgs ++
-      Seq("-cp", cp, "graft.tools.ScaleBench", "one", op, dir)
-    val proc = new ProcessBuilder(cmd.asJava).redirectErrorStream(true).start()
-    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val reader = new Thread(() => {
-      val br = new java.io.BufferedReader(
-        new java.io.InputStreamReader(proc.getInputStream))
-      var l = br.readLine()
-      while (l != null) { lines.add(l); l = br.readLine() }
-    })
-    reader.setDaemon(true)
-    reader.start()
-    val done = proc.waitFor(ChildTimeoutSec, java.util.concurrent.TimeUnit.SECONDS)
-    if (!done) { proc.destroyForcibly(); proc.waitFor() }
-    reader.join(5000)
-    lines.asScala.find(_.startsWith(s"$Marker $op ")).map { l =>
-      l.stripPrefix(s"$Marker $op ").trim.split("\\s+").map(_.toDouble).min
-    }
-  }
-
-  private def orchestrate(dir1: String, dirN: String, out: Option[String]): Unit = {
-    val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val rows = ops.map(_._1)
-      .filter(op => only.forall(f => f.exists(op.startsWith))).map { op =>
-      System.err.println(s"[scale] $op @ 1x ...")
-      val t1 = forkOne(op, dir1)
-      System.err.println(s"[scale] $op @ Nx ...")
-      val tN = forkOne(op, dirN)
-      System.err.println(s"[scale] $op: 1x=${t1.getOrElse(-1.0)} Nx=${tN.getOrElse(-1.0)}")
-      (op, t1, tN)
-    }
-    val body = rows.map { case (op, t1, tN) =>
-      val ratio = for (a <- t1; b <- tN) yield b / a
-      s""""$op":{"x1":${t1.getOrElse(null)},"xN":${tN.getOrElse(null)},""" +
-        s""""ratio":${ratio.map(r => f"$r%.2f").getOrElse(null)}}"""
-    }.mkString("{", ",", "}")
-    val json = s"""{"dir1":"$dir1","dirN":"$dirN","reps":$Reps,"ops":$body}"""
-    out.foreach { p =>
-      val path = java.nio.file.Paths.get(p)
-      Option(path.getParent).foreach(java.nio.file.Files.createDirectories(_))
-      java.nio.file.Files.write(path, (json + "\n").getBytes("UTF-8"))
-    }
-    println(json)
-    if (rows.exists(r => r._2.isEmpty || r._3.isEmpty)) sys.exit(1)
   }
 }

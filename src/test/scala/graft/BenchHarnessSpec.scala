@@ -169,4 +169,81 @@ class BenchHarnessSpec extends AnyFunSuite {
     assert(json.contains(""""startup_total":1.4"""))
     assert(json.contains(""""value":1.2"""), "value stays pure operator time")
   }
+
+  test("a throwing query: MaxReps ERR reps, listed in errors, written to _failed.json, exit 1") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bench_spec")
+    try {
+      val reps = Bench.measure(TestSession.spark,
+        (_, _) => throw new RuntimeException("forced failure"), dir.toString)
+      assert(reps.size === Bench.MaxReps, "a failed rep never converges")
+      assert(reps.map(Bench.repToken).forall(_.startsWith("ERR:")))
+      val results = Seq("q_ok" -> Seq[Bench.Rep](Right(0.5)), "q_boom" -> reps)
+      val json = Bench.render(results)
+      assert(json.contains(""""errors":{"q_boom":"RuntimeException: forced failure"""))
+      assert(json.contains(""""queries":{"q_ok":0.5}"""))
+      assert(json.contains(""""value":0.5"""))
+      val (written, code) =
+        Bench.persist(json, dir.resolve("latest.json").toString, results)
+      assert(code === 1)
+      assert(written.contains(dir.resolve("latest_failed.json").toString))
+      assert(!java.nio.file.Files.exists(dir.resolve("latest.json")))
+      val (ok, okCode) = Bench.persist("{}", dir.resolve("latest.json").toString,
+        Seq("q_ok" -> Seq[Bench.Rep](Right(0.5))))
+      assert(okCode === 0 && ok.contains(dir.resolve("latest.json").toString))
+    } finally Bench.deleteRecursively(dir)
+  }
+
+  test("measure deletes the rep scratch after every rep") {
+    // a scale op (lake_bulk_orders) commits a whole lake there per rep
+    val dir = java.nio.file.Files.createTempDirectory("graft_bench_spec")
+    try {
+      val data = dir.resolve("data").toString
+      val scratch = Bench.repScratch(data)
+      var leftovers = 0
+      val reps = Bench.measure(TestSession.spark, (s, d) => {
+        val root = Bench.repScratch(d)
+        if (java.nio.file.Files.exists(root)) leftovers += 1
+        java.nio.file.Files.createDirectories(root.resolve("lake"))
+        s.range(10).toDF()
+      }, data)
+      assert(reps.size >= 3 && reps.forall(_.isRight))
+      assert(leftovers === 0, "each rep starts without the previous rep's writes")
+      assert(!java.nio.file.Files.exists(scratch))
+    } finally Bench.deleteRecursively(dir)
+  }
+
+  test("without a runnable java, in-process calibration is tagged and never the minimum") {
+    val measured = Bench.pipelined("queries", "/nonexistent",
+      Seq(Bench.CalibName, "q1", s"${Bench.CalibIoName}_end"),
+      canFork = false, _ => (Some(0.1), Seq[Bench.Rep](Right(1.0))))
+    assert(measured.map(_._1) === Seq(s"${Bench.CalibName}${Bench.InprocSuffix}",
+      "q1", s"${Bench.CalibIoName}_end${Bench.InprocSuffix}"))
+    val json = Bench.render(measured.map { case (n, _, r) => n -> r })
+    assert(json.contains(""""calibration_runs":[1.0]"""))
+    assert(!json.contains(""""calibration":""") && !json.contains(""""calibration_io":"""))
+  }
+
+  test("scale output: ratio for ops green at both dirs, errors carry the reason otherwise") {
+    val json = Bench.renderScale("d1", "d10",
+      Seq(Bench.CalibName -> Seq[Bench.Rep](Right(2.0)),
+        "op_ok" -> Seq[Bench.Rep](Right(1.0), Right(0.8)),
+        "op_half" -> Seq[Bench.Rep](Right(2.0)),
+        "op_dead" -> Seq[Bench.Rep](Left("boom1"))),
+      Seq(Bench.CalibName -> Seq[Bench.Rep](Right(2.5)),
+        "op_ok" -> Seq[Bench.Rep](Right(1.6)),
+        "op_half" -> Seq[Bench.Rep](Left("OutOfMemoryError: heap"), Left("again")),
+        "op_dead" -> Seq[Bench.Rep](Left("boom2"))))
+    assert(!json.contains("\n"), "one line")
+    assert(json.startsWith("""{"dir1":"d1","dirN":"d10","""))
+    assert(json.contains(""""op_ok":{"x1":0.8,"xN":1.6,"ratio":2.00}"""))
+    assert(json.contains(""""op_half":{"x1":2.0,"xN":null,"ratio":null}"""))
+    assert(json.contains(""""op_half":"xN: OutOfMemoryError: heap; again""""))
+    assert(json.contains(""""op_dead":"x1: boom1 | xN: boom2""""))
+    assert(!json.contains(""""op_ok":"x"""), "a green op has no errors entry")
+    assert(json.contains(
+      """"calibration":{"x1":{"calibration":2.0,"calibration_runs":[2.0]},""" +
+        """"xN":{"calibration":2.5,"calibration_runs":[2.5]}}"""))
+    assert(!json.contains(""""calibration_fixed":{"x1""""),
+      "instruments are not listed as ops")
+  }
 }
