@@ -52,7 +52,8 @@ import org.apache.spark.sql.types._
   * [[Lake]] deletes a squashed commit's files right after publishing the
   * entry that removes it, and concurrent writers only ever add). A live
   * add's `commitInfo` is restated in the checkpoint's `add.stats` string,
-  * so [[Lake]]'s per-commit row counts survive checkpoints.
+  * so [[Lake]]'s per-commit row counts and record-key Bloom filters
+  * survive checkpoints.
   *
   * [[Lake]] publishes every feature-group commit through this log: its
   * `add` paths name commit DIRECTORIES, each entry carries a

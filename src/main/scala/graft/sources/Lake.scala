@@ -1,8 +1,11 @@
 package graft.sources
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
 import graft.model.FeatureGroup
 import graft.ops.KeyPrune
-import graft.ops.KeyPrune.pruneToKeys
+import java.util.Base64
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
@@ -13,6 +16,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.util.sketch.BloomFilter
+import scala.jdk.CollectionConverters._
 
 /** Commit-logged lakehouse table: the engine's analog of the reference's
   * Hudi/Delta feature-group storage (python/hsfs/core/hudi_engine.py:85-274,
@@ -61,6 +66,15 @@ import org.apache.spark.sql.types._
   *        become a predicate inside the Parquet scan, the pruned commit
   *        rows are collected in one Spark job with no shuffle, and the
   *        versions resolve on the driver into a driver-local frame.
+  *  - A keyed read by such keys (the `IN` form of [[KeyPrune]]) also
+  *    skips whole commits. A commit written from a driver-local batch
+  *    carries in its log entry one Bloom filter per record-key column over
+  *    the batch's values, as Hudi's record-key Bloom index does per file;
+  *    the read opens only the commits without a filter for the key column
+  *    and those whose filter may hold a requested key (~1% false
+  *    positives). A lookup's cost then grows with the commits holding its
+  *    keys, not with history; when no commit may hold them it runs no
+  *    Spark job. Each filter is decoded once per JVM.
   *  - Published commit directories never change, so each is listed once
   *    per JVM (a shared file-status cache): a read of n commits lists only
   *    the ones no read has listed, and starts no listing job however
@@ -91,8 +105,11 @@ object Lake {
       rowsUpdated: Long,
       rowsDeleted: Long)
 
-  /** A live commit: its table-relative directory and its record. */
-  private final case class Commit(dir: String, meta: CommitMeta) {
+  /** A live commit: its table-relative directory, its record, and the
+    * JSON of its key filters ([[keyFilters]]) when it has any.
+    */
+  private final case class Commit(dir: String, meta: CommitMeta,
+                                  filters: Option[JsonNode]) {
     def time: Long = meta.commitTime
   }
 
@@ -106,10 +123,19 @@ object Lake {
   private def recordKey(fg: FeatureGroup): Seq[String] =
     (fg.primaryKey ++ fg.eventTime).distinct
 
-  private def metaJson(m: CommitMeta): String =
-    s"""{"commitTime":${m.commitTime},"operation":"${m.operation}",""" +
-      s""""rowsInserted":${m.rowsInserted},"rowsUpdated":${m.rowsUpdated},""" +
-      s""""rowsDeleted":${m.rowsDeleted}}"""
+  /** A commit's `commitInfo`: its record and, when it has any, its key
+    * filters under `keyFilters`.
+    */
+  private def commitInfo(m: CommitMeta, filters: Option[ObjectNode]): String = {
+    val n = DeltaLite.mapper.createObjectNode()
+    n.put("commitTime", m.commitTime)
+    n.put("operation", m.operation)
+    n.put("rowsInserted", m.rowsInserted)
+    n.put("rowsUpdated", m.rowsUpdated)
+    n.put("rowsDeleted", m.rowsDeleted)
+    filters.foreach(n.set[JsonNode]("keyFilters", _))
+    DeltaLite.mapper.writeValueAsString(n)
+  }
 
   /** Live commits at the log head, oldest first (empty without a log). */
   private def liveCommits(root: String): Seq[Commit] =
@@ -121,7 +147,8 @@ object Lake {
         val n = DeltaLite.mapper.readTree(st.info(dir))
         Commit(dir, CommitMeta(n.get("commitTime").asLong,
           n.get("operation").asText, n.get("rowsInserted").asLong,
-          n.get("rowsUpdated").asLong, n.get("rowsDeleted").asLong))
+          n.get("rowsUpdated").asLong, n.get("rowsDeleted").asLong),
+          Option(n.get("keyFilters")))
       }
     }.sortBy(_.time)
 
@@ -183,16 +210,99 @@ object Lake {
     }
   }
 
-  /** Rows of the live commits in (after, upTo]. An empty window reads the
-    * oldest commit under a false filter, which keeps the table's columns
-    * and plans no scan.
+  /** Rows of the live commits `cs` that `keep` selects. Selecting none
+    * reads the oldest commit under a false filter, which keeps the table's
+    * columns and plans no scan.
     */
   private def window(spark: SparkSession, root: String, fg: FeatureGroup,
-                     cs: Seq[Commit], after: Long, upTo: Long): DataFrame = {
-    val in = cs.filter(c => c.time > after && c.time <= upTo)
+                     cs: Seq[Commit])(keep: Commit => Boolean): DataFrame = {
+    val in = cs.filter(keep)
     if (in.nonEmpty) rawData(spark, root, fg, in)
     else rawData(spark, root, fg, cs.take(1)).filter(lit(false))
   }
+
+  /** The rows of the live commits up to `upTo` whose `cols`, record-key
+    * columns, equal a row of `keys` ([[KeyPrune.pruneToKeys]]), and
+    * whether the prune took the `IN` form. The `IN` form reads only the
+    * commits that may hold a requested key ([[mayHold]]). A declared
+    * group's scan has its declared types, so the form is chosen without
+    * building a scan.
+    */
+  private def keyedRaw(spark: SparkSession, root: String, fg: FeatureGroup,
+                       cs: Seq[Commit], upTo: Long, keys: DataFrame,
+                       cols: Seq[String]): (DataFrame, Boolean) = {
+    lazy val all = window(spark, root, fg, cs)(_.time <= upTo)
+    val schema = if (fg.features.isEmpty) all.schema else fg.schema
+    val rk = recordKey(schema.fieldNames.toSeq, fg)
+    require(cols.forall(rk.contains),
+      s"keyed read on ${cols.mkString(", ")}: not all record-key " +
+        s"columns (${rk.mkString(", ")})")
+    KeyPrune.inPredicate(schema, keys, cols) match {
+      case Some(p) =>
+        val q = qualified(root)
+        (window(spark, root, fg, cs)(c => c.time <= upTo &&
+          mayHold(new Path(q, c.dir), c, cols.head, p)).filter(p.predicate), true)
+      case None => (KeyPrune.semiJoin(all, keys, cols), false)
+    }
+  }
+
+  // -- key filters -------------------------------------------------------
+
+  /** The key filters of a commit of `batch`: when its rows are on the
+    * driver, a Bloom filter ([[KeyPrune.keyFilter]]) per declared
+    * record-key column of a [[KeyPrune.filterable]] type, as
+    * `{column: {"type": catalog type, "bloom": base64 of its serialized
+    * form}}` (1,624 characters for 1k keys). A batch that is not
+    * driver-local (a bulk load from files, a squash base, a micro-batch
+    * of a file or Kafka stream, the tombstones of a delete) gets none, and
+    * its commit is always read: building them would cost a pass over the
+    * batch.
+    */
+  private def keyFilters(batch: DataFrame, fg: FeatureGroup): Option[ObjectNode] =
+    GraftKeyedIndex.localRows(batch).flatMap { case (schema, rows) =>
+      val cols = recordKey(fg).filter(c => schema.fieldNames.contains(c) &&
+        KeyPrune.filterable(schema(c).dataType))
+      Option.when(cols.nonEmpty) {
+        val n = DeltaLite.mapper.createObjectNode()
+        cols.foreach { c =>
+          val i = schema.fieldIndex(c)
+          val t = schema(i).dataType
+          val out = new java.io.ByteArrayOutputStream()
+          KeyPrune.keyFilter(rows.map(_.get(i, t))).writeTo(out)
+          n.putObject(c).put("type", t.catalogString)
+            .put("bloom", Base64.getEncoder.encodeToString(out.toByteArray))
+        }
+        n
+      }
+    }
+
+  /** Decoded key filters (column -> (type, filter)) by qualified commit
+    * directory. A published commit directory never changes, so an entry
+    * never goes stale; a squash drops the entries of the commits it
+    * replaces.
+    */
+  private val decoded =
+    new ConcurrentHashMap[Path, Map[String, (String, BloomFilter)]]()
+
+  private def qualified(root: String): Path =
+    DeltaLite.fs(root).makeQualified(new Path(root))
+
+  /** Whether commit `c` (at qualified directory `dir`) may hold a row
+    * whose `column` equals one of the values of `p`: it has no filter for
+    * the column, or one built for another type (a key column whose
+    * declared type was widened since hashes differently), or its filter
+    * may contain one of them.
+    */
+  private def mayHold(dir: Path, c: Commit, column: String,
+                      p: KeyPrune.InList): Boolean =
+    c.filters.forall(js => decoded.computeIfAbsent(dir, _ =>
+      js.properties.asScala.map { e =>
+        e.getKey -> (e.getValue.get("type").asText,
+          BloomFilter.readFrom(Base64.getDecoder.decode(e.getValue.get("bloom").asText)))
+      }.toMap
+    ).get(column).forall { case (t, f) =>
+      t != p.dataType.catalogString || p.values.exists(KeyPrune.mightContain(f, _))
+    })
 
   /** The winning live row per record key, tombstones applied, in the
     * declared schema. `fillDefaults` is the read-path safety net for
@@ -207,7 +317,7 @@ object Lake {
                       onDriver: Boolean = false): DataFrame = {
     val order = latestFirst(raw, fg)
     val latest =
-      if (onDriver) GraftKeyedIndex.latest(raw, recordKey(raw, fg), order, "keyedRead")
+      if (onDriver) GraftKeyedIndex.latest(raw, recordKey(raw.columns.toSeq, fg), order, "keyedRead")
       else dedupLatest(raw, fg, order)
     val winners = latest.filter(!col(DeletedCol)).drop(MetaCols: _*)
     restoreTypes(
@@ -255,7 +365,7 @@ object Lake {
         // latest-version window, so an upsert of k keys into a 100 TB
         // table windows O(k · versions) rows, never the whole snapshot
         val current = resolve(
-            pruneToKeys(rawData(spark, root, fg, cs), batch, keys), fg)
+            keyedRaw(spark, root, fg, cs, Long.MaxValue, batch, keys)._1, fg)
           .select(keys.map(col): _*).withColumn("_m", lit(1))
         val r = batch.select(keys.map(col): _*)
           .join(current, keys, "left")
@@ -268,7 +378,7 @@ object Lake {
     val t0 = math.max(System.currentTimeMillis(),
       cs.lastOption.fold(0L)(_.time) + 1)
     commit(spark, root, fg, batch.withColumn(DeletedCol, lit(deleted)), t0,
-        squashed = Nil) { (t, n) =>
+        squashed = Nil, keyFilters(batch, fg)) { (t, n) =>
       val (ins, upd, del) =
         if (!computeStats) (-1L, -1L, -1L)
         else pre.getOrElse(if (deleted) (0L, 0L, n) else (n, 0L, 0L))
@@ -277,9 +387,10 @@ object Lake {
   }
 
   /** Stage `df` in a new commit directory at time `t0`, then publish one
-    * log entry that adds it and removes `squashed`, then delete the
-    * squashed directories. `meta(t, n)` builds the record from the final
-    * commit time and the row count observed on the write.
+    * log entry that adds it, with its key `filters`, and removes
+    * `squashed`, then delete the squashed directories. `meta(t, n)` builds
+    * the record from the final commit time and the row count observed on
+    * the write.
     *
     * A new commit (nothing squashed) must sit above the head: if it loses
     * the publish race to a commit at or above its time, it renames its own
@@ -288,7 +399,8 @@ object Lake {
     * it aborts if a concurrent squash already replaced its commits.
     */
   private def commit(spark: SparkSession, root: String, fg: FeatureGroup,
-                     df: DataFrame, t0: Long, squashed: Seq[Commit])
+                     df: DataFrame, t0: Long, squashed: Seq[Commit],
+                     filters: Option[ObjectNode] = None)
                     (meta: (Long, Long) => CommitMeta): CommitMeta = {
     val fs = DeltaLite.fs(root)
     val tx = java.util.UUID.randomUUID.toString
@@ -325,10 +437,13 @@ object Lake {
         else Nil
       header ++ squashed.map(c => DeltaLite.removeAction(c.dir)) ++ Seq(
         DeltaLite.addAction(commitDir(tx, t), bytes),
-        s"""{"commitInfo":${metaJson(out)}}""")
+        s"""{"commitInfo":${commitInfo(out, filters)}}""")
     }
     // each commit owns its `_tx=` directory outright
-    squashed.foreach(c => fs.delete(new Path(root, c.dir).getParent, true))
+    squashed.foreach { c =>
+      fs.delete(new Path(root, c.dir).getParent, true)
+      decoded.remove(new Path(qualified(root), c.dir))
+    }
     out
   }
 
@@ -356,8 +471,8 @@ object Lake {
     val cs = liveCommits(root)
     val full =
       if (cs.isEmpty) emptyFrame(spark, fg)
-      else resolve(pruneToKeys(rawData(spark, root, fg, cs), keysDf,
-        recordKey(fg)), fg)
+      else resolve(keyedRaw(spark, root, fg, cs, Long.MaxValue, keysDf,
+        recordKey(fg))._1, fg)
     writeCommit(spark, root, fg, full, deleted = true, operation = "delete")
   }
 
@@ -387,17 +502,11 @@ object Lake {
       throw new IllegalArgumentException(
         s"as_of $t predates the retained commit horizon $h " +
           "(older commits were cleaned; see cleanCommits)")
-    val raw = window(spark, root, fg, cs, Long.MinValue,
-      asOf.getOrElse(Long.MaxValue))
-    keys.fold(resolve(raw, fg, fillDefaults = true)) { k =>
-      val rk = recordKey(raw, fg)
-      require(k.columns.forall(rk.contains),
-        s"keyed read on ${k.columns.mkString(", ")}: not all record-key " +
-          s"columns (${rk.mkString(", ")})")
-      val cols = k.columns.toSeq
-      val in = KeyPrune.inPredicate(raw, k, cols)
-      resolve(in.fold(KeyPrune.semiJoin(raw, k, cols))(raw.filter), fg,
-        fillDefaults = true, onDriver = in.nonEmpty)
+    val upTo = asOf.getOrElse(Long.MaxValue)
+    keys.fold(resolve(window(spark, root, fg, cs)(_.time <= upTo), fg,
+        fillDefaults = true)) { k =>
+      val (raw, in) = keyedRaw(spark, root, fg, cs, upTo, k, k.columns.toSeq)
+      resolve(raw, fg, fillDefaults = true, onDriver = in)
     }
   }
 
@@ -433,7 +542,8 @@ object Lake {
       throw new IllegalArgumentException(
         s"incremental read from $exclusiveStart predates the retained " +
           s"commit horizon $h (older commits were cleaned)")
-    resolve(window(spark, root, fg, cs, exclusiveStart, inclusiveEnd), fg)
+    resolve(window(spark, root, fg, cs)(c =>
+      c.time > exclusiveStart && c.time <= inclusiveEnd), fg)
   }
 
   private def byPrecombine(df: DataFrame, fg: FeatureGroup): Seq[Column] =
@@ -456,7 +566,7 @@ object Lake {
     val order = byPrecombine(df, fg) :+
       graft.ops.Dedup.contentHash(df, df.columns.toSeq).desc
     if (GraftKeyedIndex.localRows(df).isEmpty) dedupLatest(df, fg, order)
-    else GraftKeyedIndex.latest(df, recordKey(df, fg), order, "commitBatch")
+    else GraftKeyedIndex.latest(df, recordKey(df.columns.toSeq, fg), order, "commitBatch")
   }
 
   /** Resolve one winning row per record key in a window, first in
@@ -466,17 +576,19 @@ object Lake {
     */
   private def dedupLatest(df: DataFrame, fg: FeatureGroup,
                           order: Seq[Column]): DataFrame = {
-    val keys = recordKey(df, fg)
+    val keys = recordKey(df.columns.toSeq, fg)
     val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
     df.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
       .drop("_rn")
   }
 
-  private def recordKey(df: DataFrame, fg: FeatureGroup): Seq[String] = {
-    val k = recordKey(fg).filter(df.columns.contains)
-    if (k.nonEmpty) k
-    else df.columns.filterNot(MetaCols.contains).toSeq
+  /** The record key among `columns`: the declared one, or every column
+    * but the commit's own when none of it is present.
+    */
+  private def recordKey(columns: Seq[String], fg: FeatureGroup): Seq[String] = {
+    val k = recordKey(fg).filter(columns.contains)
+    if (k.nonEmpty) k else columns.filterNot(MetaCols.contains)
   }
 
   /** Squash every live commit but the newest `keep` into one base commit
@@ -542,7 +654,7 @@ object Lake {
     * parity). Columns in the order a JSON read of the records infers.
     */
   def commitDetails(spark: SparkSession, root: String): DataFrame = {
-    val rows = liveCommits(root).map { case Commit(_, m) =>
+    val rows = liveCommits(root).map { case Commit(_, m, _) =>
       Row(m.commitTime, m.operation, m.rowsDeleted, m.rowsInserted, m.rowsUpdated)
     }
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), detailsSchema)

@@ -563,4 +563,165 @@ class LakeSpec extends SparkSpec {
       fg.schema.map(f => f.name -> f.dataType))
     assert(rows(snap) === (0L until 40L).map(i => i -> s"v$i").toMap)
   }
+
+  // -- commit skipping by key filter -----------------------------------------
+
+  /** Parquet files per live commit, by commit time. */
+  private def commitFiles(root: String): Map[Long, Int] = {
+    def parquet(f: java.io.File): Int =
+      if (f.isDirectory) f.listFiles().map(parquet).sum
+      else if (f.getName.endsWith(".parquet")) 1 else 0
+    new java.io.File(s"$root/data").listFiles().filter(_.getName.startsWith("_tx="))
+      .flatMap(_.listFiles().filter(_.getName.startsWith("_commit_time=")))
+      .map(d => d.getName.stripPrefix("_commit_time=").toLong -> parquet(d)).toMap
+  }
+
+  /** Whether the log entry that published commit version `v` carries key
+    * filters.
+    */
+  private def hasKeyFilters(root: String, v: Long): Boolean =
+    new String(Files.readAllBytes(java.nio.file.Paths.get(root, "_delta_log",
+      f"$v%020d.json")), "UTF-8").contains("keyFilters")
+
+  /** A keyed read of one bigint `id`: its rows, the Spark jobs it ran and
+    * the files its scan opened (`numFiles`; 0 without a scan).
+    */
+  private def keyedScan(root: String, fg: graft.model.FeatureGroup, key: Long,
+                        asOf: Option[Long] = None): (Map[Long, String], Int, Long) = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val (df, jobs, executions) = observed(
+      Lake.snapshot(spark, root, fg, asOf, Some(Seq(key).toDF("id"))))
+    val opened = executions.collect { case ("keyedRead", qe) =>
+      (qe.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }).collect { case s: FileSourceScanExec => s.metrics("numFiles").value }.sum
+    }.sum
+    (rows(df), jobs, opened)
+  }
+
+  test("a keyed read opens only the commits whose key filter may hold its key") {
+    val fs = freshStore()
+    // a bulk load that is not driver-local: its base commit has no filter
+    val fg = fs.createFeatureGroup("tskip",
+      spark.range(0, 200).selectExpr("id", "concat('b', id) AS v").repartition(3),
+      primaryKey = Seq("id"))
+    val root = rootOf(fg)
+    val ups = (1 to 4).map(i => fs.insert(fg,
+      (1000L * i until 1000L * i + 20).map(k => (k, s"u$k")).toDF("id", "v")).commitTime)
+    assert(!hasKeyFilters(root, 0) && (1 to 4).forall(hasKeyFilters(root, _)))
+    val files = commitFiles(root)
+    val base = files(Lake.listCommits(spark, root).head)
+    assert(base > 0 && ups.forall(files(_) > 0), files)
+
+    // a key only the base holds: the upserts' filters exclude every upsert
+    val (onlyBase, jobs, opened) = keyedScan(root, fg, 7L)
+    assert(onlyBase === Map(7L -> "b7"))
+    assert(jobs === 1 && opened === base, files)
+    // a key of one upsert: the base and that upsert
+    val (one, _, openedOne) = keyedScan(root, fg, 2005L)
+    assert(one === Map(2005L -> "u2005"))
+    assert(openedOne === base + files(ups(1)), files)
+    // as of the first upsert, the later ones are not in the window
+    assert(keyedScan(root, fg, 3005L, Some(ups(0)))._1 === Map.empty)
+    for ((clue, asOf, keys) <- Seq(
+        ("keys of the base and upserts", None, Seq(7L, 1001L, 4019L, 5000L).toDF("id")),
+        ("as of an upsert", Some(ups(1)), Seq(7L, 2005L, 3005L).toDF("id")),
+        ("int keys", None, Seq(7, 1001).toDF("id"))))
+      keyedMatches(root, fg, asOf, keys, clue)
+  }
+
+  test("a keyed read of keys no commit holds runs no Spark job, past a checkpoint too") {
+    val fs = freshStore()
+    val fg = fs.createFeatureGroup("tnojob", Seq((0L, "a"), (1L, "b")).toDF("id", "v"),
+      primaryKey = Seq("id"))
+    val root = rootOf(fg)
+    (1 to 3).foreach(i => fs.insert(fg, Seq((10L * i, s"w$i")).toDF("id", "v")))
+    val (none, jobs, _) = counted(rows(
+      Lake.snapshot(spark, root, fg, None, Some(Seq(999L, 998L).toDF("id")))))
+    assert(none === Map.empty && jobs === 0)
+
+    // no read before the checkpoint: the filters of the commits it holds
+    // come back from the checkpoint's add.stats
+    val cp = freshStore()
+    val g = cp.createFeatureGroup("tnojobcp", Seq((0L, "a"), (1L, "b")).toDF("id", "v"),
+      primaryKey = Seq("id"))
+    val r = rootOf(g)
+    (1 to 11).foreach(i => cp.insert(g, Seq((10L * i, s"w$i")).toDF("id", "v")))
+    assert(graft.sources.DeltaLite.checkpointVersions(r) === Seq(10L))
+    assert(Lake.listCommits(spark, r).size === 12)
+    val (absent, cpJobs, opened) = keyedScan(r, g, 999L)
+    assert(absent === Map.empty && cpJobs === 0 && opened === 0)
+    val (found, _, openedFound) = keyedScan(r, g, 30L)
+    assert(found === Map(30L -> "w3"))
+    assert(openedFound === commitFiles(r)(Lake.listCommits(spark, r)(3)))
+  }
+
+  test("a commit of a batch that is not driver-local is always read") {
+    val fs = freshStore()
+    val fg = fs.createFeatureGroup("tnonlocal",
+      Seq((1L, "a"), (2L, "b"), (7L, "c")).toDF("id", "v"), primaryKey = Seq("id"))
+    val root = rootOf(fg)
+    val far = fs.insert(fg, Seq((50L, "x"), (51L, "y")).toDF("id", "v").repartition(2))
+    fs.insert(fg, Seq((60L, "z")).toDF("id", "v"))
+    assert(hasKeyFilters(root, 0) && !hasKeyFilters(root, 1) && hasKeyFilters(root, 2))
+    val files = commitFiles(root)
+    val (got, _, opened) = keyedScan(root, fg, 7L)
+    assert(got === Map(7L -> "c"))
+    assert(opened === files(Lake.listCommits(spark, root).head) + files(far.commitTime),
+      files)
+  }
+
+  test("a tombstone commit is read for the keys it deletes") {
+    val fs = freshStore()
+    val fg = fs.createFeatureGroup("ttomb",
+      (1L to 5L).map(k => (k, s"v$k")).toDF("id", "v"), primaryKey = Seq("id"))
+    val root = rootOf(fg)
+    val del = fs.delete(fg, Seq(Tuple1(3L)).toDF("id"))
+    assert(del.rowsDeleted === 1 && !hasKeyFilters(root, 1))
+    fs.insert(fg, Seq((8L, "w8")).toDF("id", "v"))
+    val files = commitFiles(root)
+    val (got, _, opened) = keyedScan(root, fg, 3L)
+    assert(got === Map.empty)
+    assert(opened === files(Lake.listCommits(spark, root).head) + files(del.commitTime),
+      files)
+    keyedMatches(root, fg, None, Seq(3L, 4L, 8L).toDF("id"), "deleted and live keys")
+    // as of before the delete, the key reads back
+    assert(keyedScan(root, fg, 3L, Some(del.commitTime - 1))._1 === Map(3L -> "v3"))
+  }
+
+  test("a collated string key takes the join form and carries no key filter") {
+    import org.apache.spark.sql.functions.{col, collate}
+    val lcase = (df: org.apache.spark.sql.DataFrame) =>
+      df.withColumn("id", collate(col("id"), "UTF8_LCASE"))
+    val fs = freshStore()
+    val fg = fs.createFeatureGroup("tcoll",
+      lcase(Seq(("a", "1"), ("B", "2"), ("c", "3")).toDF("id", "v")),
+      primaryKey = Seq("id"))
+    val root = rootOf(fg)
+    fs.insert(fg, lcase(Seq(("C", "4")).toDF("id", "v")))
+    assert(!hasKeyFilters(root, 0) && !hasKeyFilters(root, 1))
+    for (keys <- Seq(Seq("b", "C"), Seq("A"), Seq("x"))) {
+      val k = lcase(keys.toDF("id"))
+      val got = keyedMatches(root, fg, None, k, keys.mkString(","))
+      assert(hasSemiJoin(got), keys)
+    }
+    val found = Lake.snapshot(spark, root, fg, None, Some(lcase(Seq("b", "C").toDF("id"))))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(found === Map("B" -> "2", "C" -> "4"))
+  }
+
+  test("a keyed read of a new bigint key compiles no new code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val fs = freshStore()
+    val fg = fs.createFeatureGroup("tcodegen",
+      (1L to 50L).map(k => (k, s"v$k")).toDF("id", "v"), primaryKey = Seq("id"))
+    val root = rootOf(fg)
+    fs.insert(fg, (40L to 60L).map(k => (k, s"w$k")).toDF("id", "v"))
+    assert(keyedScan(root, fg, 41L)._1 === Map(41L -> "w41"))
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(keyedScan(root, fg, 42L)._1 === Map(42L -> "w42"))
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiled)
+  }
 }

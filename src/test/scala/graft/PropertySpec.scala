@@ -160,6 +160,16 @@ class PropertySpec extends SparkSpec {
           .map(r => r.getLong(0) -> r.getString(1)).toMap
         assert(at === m, s"as-of $t")
       }
+
+      // a one-key keyed read, which skips commits by their key filters,
+      // finds each key's state at the head and as of every commit
+      ((None -> model) :: history.map { case (t, m) => Some(t) -> m }).foreach {
+        case (asOf, m) => (0L to 6L).foreach { k =>
+          val got = Lake.snapshot(spark, root, fg, asOf, Some(Seq(k).toDF("id")))
+            .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+          assert(got === m.filter(_._1 == k), s"key $k as of $asOf")
+        }
+      }
     }
   }
 

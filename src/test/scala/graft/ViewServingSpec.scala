@@ -768,7 +768,7 @@ class ViewServingSpec extends SparkSpec {
     assert(keyed.size === 1, executions.map(_._1))
     val scans = keyed.head.collect { case s: FileSourceScanExec => s }
     assert(scans.nonEmpty && scans.forall(s =>
-      s.metadata("PushedFilters").contains("EqualTo(id,3)")), keyed.head.toString)
+      s.metadata("PushedFilters").contains("In(id, [3])")), keyed.head.toString)
     assert(keyed.head.collect { case e: Exchange => e }.isEmpty, keyed.head.toString)
     val (rows, collectJobs, _) = counted(one.collect())
     assert(collectJobs === 0)
