@@ -349,9 +349,9 @@ object Bench {
       }
     }
     if (StreamingQueries.contains(name)) {
+      val warmDir = java.nio.file.Files.createTempDirectory("graft_stream_warm")
       try {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_stream_warm").toString
+        val dir = warmDir.toString
         spark.sql("SELECT 1L AS user_id, TIMESTAMP'2024-01-01' AS ts2, " +
             "1.0 AS value UNION ALL SELECT 2L, TIMESTAMP'2024-01-02', 2.0")
           .write.mode("overwrite").parquet(dir)
@@ -365,7 +365,7 @@ object Bench {
           .collect()
       } catch { case e: Throwable =>
         System.err.println(s"[bench] streaming warmup skipped: $e")
-      }
+      } finally deleteRecursively(warmDir) // its query has stopped
     }
   }
 

@@ -29,10 +29,10 @@ object SparkSessions {
     local(cpus, appName, metastoreDir = None)
 
   /** `metastoreDir`: where the HIVE METASTORE (embedded Derby) and the
-    * managed-table warehouse live. Default = a fresh per-JVM temp dir —
-    * Derby allows ONE JVM per database, so concurrent Verify/Bench/test
-    * JVMs must not share one. Pass a fixed dir to prove metastore
-    * persistence across real process restarts
+    * managed-table warehouse live. Default = a fresh per-JVM temp dir,
+    * deleted when the JVM exits — Derby allows ONE JVM per database, so
+    * concurrent Verify/Bench/test JVMs must not share one. Pass a fixed
+    * dir to prove metastore persistence across real process restarts
     * ([[graft.tools.MetastoreCheck]]). Catalog implementation is `hive`
     * (the jars ship in /opt/spark/jars): `saveAsTable`/`spark.table`
     * hit a real HiveExternalCatalog, the reference's
@@ -65,8 +65,16 @@ object SparkSessions {
                            metastoreDir: Option[String],
                            conf: Seq[(String, String)],
                            warn: String => Unit): SparkSession = {
-    val msDir = metastoreDir.getOrElse(
-      java.nio.file.Files.createTempDirectory("graft_metastore").toString)
+    val msDir = metastoreDir.getOrElse {
+      val d = java.nio.file.Files.createTempDirectory("graft_metastore")
+      // deleted at JVM exit after Spark's own shutdown hook (which stops
+      // the context; Hadoop priority FileSystem.SHUTDOWN_HOOK_PRIORITY
+      // + 30) and before the Hadoop filesystem cache closes
+      org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+        () => Bench.deleteRecursively(d),
+        org.apache.hadoop.fs.FileSystem.SHUTDOWN_HOOK_PRIORITY + 20)
+      d.toString
+    }
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)

@@ -1,12 +1,11 @@
 package graft.catalog
 
+import graft.catalog.JsonDocs._
 import graft.model._
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType}
 import org.json4s._
 import org.json4s.JsonDSL._
-import org.json4s.jackson.JsonMethods
 
 /** JSON persistence for feature-group definitions — one file per group
   * under `warehouseDir/_catalog/<name>_<version>.json`, accessed through
@@ -20,41 +19,21 @@ import org.json4s.jackson.JsonMethods
   */
 object CatalogPersistence {
 
-  private def dir(warehouseDir: String) = s"$warehouseDir/_catalog"
-
-  private def fsOf(spark: SparkSession, path: String): (FileSystem, Path) = {
-    val p = new Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  private def defaultToJson(v: Any): JValue = v match {
-    case s: String  => JString(s)
-    case i: Int     => JInt(i)
-    case l: Long    => JInt(l)
-    case d: Double  => JDouble(d)
-    case f: Float   => JDouble(f.toDouble)
-    case b: Boolean => JBool(b)
-    case other      => JString(other.toString)
-  }
+  private def docs(spark: SparkSession, warehouseDir: String) =
+    JsonDocs(spark, s"$warehouseDir/_catalog")
 
   /** Coerce a parsed JSON default back to the feature's declared type so
     * write-path fills (`lit(default)`) stay type-correct after a reload.
     */
   private def defaultFromJson(j: JValue, dt: DataType): Option[Any] = j match {
     case JNothing | JNull => None
-    case JString(s)       => Some(s)
-    case JBool(b)         => Some(b)
-    case JInt(i) => dt match {
-      case org.apache.spark.sql.types.IntegerType => Some(i.toInt)
-      case org.apache.spark.sql.types.DoubleType  => Some(i.toDouble)
-      case org.apache.spark.sql.types.FloatType   => Some(i.toFloat)
-      case _                                      => Some(i.toLong)
-    }
-    case JDouble(d) => dt match {
-      case org.apache.spark.sql.types.FloatType => Some(d.toFloat)
-      case _                                    => Some(d)
-    }
-    case other => Some(JsonMethods.compact(JsonMethods.render(other)))
+    case _ => Some((valueFrom(j), dt) match {
+      case (i: Long, IntegerType)  => i.toInt
+      case (i: Long, DoubleType)   => i.toDouble
+      case (i: Long, FloatType)    => i.toFloat
+      case (d: Double, FloatType)  => d.toFloat
+      case (v, _)                  => v
+    })
   }
 
   private def sourceToJson(src: FgSource): Option[JValue] = src match {
@@ -71,23 +50,17 @@ object CatalogPersistence {
   }
 
   private def sourceFromJson(j: JValue): FgSource = {
-    val path = (j \ "path") match { case JString(s) => s; case _ => "" }
-    def strMap(v: JValue): Map[String, String] = v match {
-      case JObject(fields) =>
-        fields.collect { case JField(k, JString(s)) => k -> s }.toMap
-      case _ => Map.empty
-    }
-    (j \ "type") match {
-      case JString("parquet") => ParquetSource(path)
-      case JString("lake")    => LakeSource(path)
-      case JString("view")    => ViewSource(path)
-      case JString("connector") => ConnectorSource(
-        format = (j \ "format") match { case JString(s) => s; case _ => "" },
+    val path = str(j \ "path").getOrElse("")
+    str(j \ "type") match {
+      case Some("parquet") => ParquetSource(path)
+      case Some("lake")    => LakeSource(path)
+      case Some("view")    => ViewSource(path)
+      case Some("connector") => ConnectorSource(
+        format = str(j \ "format").getOrElse(""),
         options = strMap(j \ "options"),
         hadoopConf = strMap(j \ "hadoopConf"),
-        path = (j \ "loadPath") match {
-          case JString(s) => Some(s); case _ => None })
-      case _                  => UnboundSource
+        path = str(j \ "loadPath"))
+      case _               => UnboundSource
     }
   }
 
@@ -114,72 +87,50 @@ object CatalogPersistence {
             ("partition" -> f.partition) ~
             ("nullable" -> f.nullable) ~
             ("description" -> f.description) ~
-            ("default" -> f.defaultValue.map(defaultToJson))
+            ("default" -> f.defaultValue.map(valueJson))
         })
     }
 
   private[catalog] def fromJson(j: JValue): FeatureGroup = {
-    def str(v: JValue): Option[String] =
-      v match { case JString(s) => Some(s); case _ => None }
-    def strs(v: JValue): Seq[String] =
-      v match { case JArray(xs) => xs.flatMap(str); case _ => Nil }
-    def bool(v: JValue, dflt: Boolean): Boolean =
-      v match { case JBool(b) => b; case _ => dflt }
     val features = (j \ "features") match {
       case JArray(fs) => fs.map { f =>
         val dt = DataType.fromJson(str(f \ "dataType").getOrElse("\"string\""))
         Feature(
           name = str(f \ "name").getOrElse(""),
           dataType = dt,
-          primary = bool(f \ "primary", dflt = false),
-          partition = bool(f \ "partition", dflt = false),
-          nullable = bool(f \ "nullable", dflt = true),
+          primary = bool(f \ "primary").getOrElse(false),
+          partition = bool(f \ "partition").getOrElse(false),
+          nullable = bool(f \ "nullable").getOrElse(true),
           description = str(f \ "description"),
           defaultValue = defaultFromJson(f \ "default", dt))
       }
       case _ => Nil
     }
+    val stats = j \ "statisticsConfig"
     FeatureGroup(
       name = str(j \ "name").getOrElse(""),
-      version = (j \ "version") match { case JInt(i) => i.toInt; case _ => 1 },
+      version = lng(j \ "version").fold(1)(_.toInt),
       features = features,
       primaryKey = strs(j \ "primaryKey"),
       partitionKey = strs(j \ "partitionKey"),
       eventTime = str(j \ "eventTime"),
       precombineKey = str(j \ "precombineKey"),
       source = sourceFromJson(j \ "source"),
-      online = bool(j \ "online", dflt = false),
+      online = bool(j \ "online").getOrElse(false),
       // absent in pre-upgrade catalogs → reference defaults
       statisticsConfig = StatisticsConfig(
-        enabled = bool(j \ "statisticsConfig" \ "enabled", dflt = true),
-        correlations = bool(j \ "statisticsConfig" \ "correlations", dflt = false),
-        histograms = bool(j \ "statisticsConfig" \ "histograms", dflt = false),
-        exactUniqueness =
-          bool(j \ "statisticsConfig" \ "exactUniqueness", dflt = false),
-        columns = strs(j \ "statisticsConfig" \ "columns")))
+        enabled = bool(stats \ "enabled").getOrElse(true),
+        correlations = bool(stats \ "correlations").getOrElse(false),
+        histograms = bool(stats \ "histograms").getOrElse(false),
+        exactUniqueness = bool(stats \ "exactUniqueness").getOrElse(false),
+        columns = strs(stats \ "columns")))
   }
 
   def save(spark: SparkSession, warehouseDir: String, fg: FeatureGroup): Unit =
-    toJson(fg).foreach { j =>
-      val (fs, _) = fsOf(spark, dir(warehouseDir))
-      val out = fs.create(new Path(s"${dir(warehouseDir)}/${fg.id}.json"), true)
-      try out.write(JsonMethods.compact(JsonMethods.render(j))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
+    toJson(fg).foreach(docs(spark, warehouseDir).put(fg.id, _))
 
   def load(spark: SparkSession, warehouseDir: String): Seq[FeatureGroup] = {
-    val (fs, p) = fsOf(spark, dir(warehouseDir))
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(_.getPath.getName.endsWith(".json"))
-      .map { st =>
-        val in = fs.open(st.getPath)
-        val txt =
-          try new String(in.readAllBytes,
-            java.nio.charset.StandardCharsets.UTF_8)
-          finally in.close()
-        fromJson(JsonMethods.parse(txt))
-      }
+    val d = docs(spark, warehouseDir)
+    d.ids.flatMap(d.get).map(fromJson)
   }
 }

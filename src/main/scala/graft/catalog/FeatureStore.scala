@@ -49,9 +49,12 @@ final class FeatureStore(
     registry.put((fg.name, fg.version), fg)
   }
 
+  /** Persist, then register: a definition that failed to persist is not
+    * served by this store either.
+    */
   def register(fg: FeatureGroup): FeatureGroup = {
-    registry.put((fg.name, fg.version), fg)
     CatalogPersistence.save(spark, warehouseDir, fg)
+    registry.put((fg.name, fg.version), fg)
     fg
   }
 

@@ -1,11 +1,10 @@
 package graft.catalog
 
+import graft.catalog.JsonDocs._
 import graft.ops.Transformations.FeatureStatistics
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.json4s._
 import org.json4s.JsonDSL._
-import org.json4s.jackson.JsonMethods
 
 /** Training-dataset transformation statistics, persisted per
   * (view, version) under `warehouseDir/_stats/` — the values a serving
@@ -16,88 +15,45 @@ import org.json4s.jackson.JsonMethods
   */
 object StatsPersistence {
 
-  private def dir(warehouseDir: String) = s"$warehouseDir/_stats"
+  private def docs(spark: SparkSession, warehouseDir: String) =
+    JsonDocs(spark, s"$warehouseDir/_stats")
 
-  private def fsOf(spark: SparkSession, path: String): (FileSystem, Path) = {
-    val p = new Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  private def valueJson(v: Any): JValue = v match {
-    case s: String  => JString(s)
-    case i: Int     => JInt(i)
-    case l: Long    => JInt(l)
-    case d: Double  => JDouble(d)
-    case f: Float   => JDouble(f.toDouble)
-    case b: Boolean => JBool(b)
-    case other      => JString(other.toString)
-  }
-
-  private def valueFrom(j: JValue): Any = j match {
-    case JString(s) => s
-    case JInt(i)    => i.toLong
-    case JDouble(d) => d
-    case JBool(b)   => b
-    case other      => JsonMethods.compact(JsonMethods.render(other))
-  }
-
-  /** File key: view-level latest (no td), or one file per
-    * training-dataset version — the reference binds statistics per
-    * TRAINING DATASET (init_serving(training_dataset_version),
+  /** Document id: view-level latest (no td), or one per training-dataset
+    * version — the reference binds statistics per TRAINING DATASET
+    * (init_serving(training_dataset_version),
     * core/vector_server.py:924-978), so two datasets of one view must
     * not overwrite each other's distributions.
     */
-  private def fileOf(viewName: String, version: Int,
-                     tdVersion: Option[Int]): String =
-    s"${viewName}_$version${tdVersion.map(td => s"_td$td").getOrElse("")}.json"
+  private def idOf(viewName: String, version: Int,
+                   tdVersion: Option[Int]): String =
+    s"${viewName}_$version${tdVersion.map(td => s"_td$td").getOrElse("")}"
 
   def save(spark: SparkSession, warehouseDir: String, viewName: String,
            version: Int, stats: Map[String, FeatureStatistics],
-           tdVersion: Option[Int] = None): Unit = {
-    val j: JValue = JObject(stats.toList.map { case (feature, s) =>
-      feature -> (
-        ("min" -> s.min) ~ ("max" -> s.max) ~ ("mean" -> s.mean) ~
-          ("stddev" -> s.stddev) ~ ("p25" -> s.p25) ~
-          ("median" -> s.median) ~ ("p75" -> s.p75) ~
-          ("uniqueValues" -> JArray(s.uniqueValues.map(valueJson).toList))
-        : JValue)
-    })
-    val (fs, _) = fsOf(spark, dir(warehouseDir))
-    val out = fs.create(new Path(
-      s"${dir(warehouseDir)}/${fileOf(viewName, version, tdVersion)}"), true)
-    try out.write(JsonMethods.compact(JsonMethods.render(j))
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+           tdVersion: Option[Int] = None): Unit =
+    docs(spark, warehouseDir).put(idOf(viewName, version, tdVersion),
+      JObject(stats.toList.map { case (feature, s) =>
+        feature -> (
+          ("min" -> s.min) ~ ("max" -> s.max) ~ ("mean" -> s.mean) ~
+            ("stddev" -> s.stddev) ~ ("p25" -> s.p25) ~
+            ("median" -> s.median) ~ ("p75" -> s.p75) ~
+            ("uniqueValues" -> JArray(s.uniqueValues.map(valueJson).toList))
+          : JValue)
+      }))
 
   def load(spark: SparkSession, warehouseDir: String, viewName: String,
            version: Int,
-           tdVersion: Option[Int] = None): Option[Map[String, FeatureStatistics]] = {
-    val (fs, _) = fsOf(spark, dir(warehouseDir))
-    val p = new Path(
-      s"${dir(warehouseDir)}/${fileOf(viewName, version, tdVersion)}")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt =
-        try new String(in.readAllBytes, java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      def dbl(v: JValue): Double = v match {
-        case JDouble(d) => d; case JInt(i) => i.toDouble
-        case _ => Double.NaN }
-      JsonMethods.parse(txt) match {
-        case JObject(fields) => Some(fields.map { case (feature, s) =>
-          feature -> FeatureStatistics(
-            min = dbl(s \ "min"), max = dbl(s \ "max"),
-            mean = dbl(s \ "mean"), stddev = dbl(s \ "stddev"),
-            p25 = dbl(s \ "p25"), median = dbl(s \ "median"),
-            p75 = dbl(s \ "p75"),
-            uniqueValues = (s \ "uniqueValues") match {
-              case JArray(xs) => xs.map(valueFrom); case _ => Nil
-            })
-        }.toMap)
-        case _ => None
-      }
+           tdVersion: Option[Int] = None): Option[Map[String, FeatureStatistics]] =
+    docs(spark, warehouseDir).get(idOf(viewName, version, tdVersion)).collect {
+      case JObject(fields) => fields.map { case (feature, s) =>
+        def num(field: String) = dbl(s \ field).getOrElse(Double.NaN)
+        feature -> FeatureStatistics(
+          min = num("min"), max = num("max"), mean = num("mean"),
+          stddev = num("stddev"), p25 = num("p25"), median = num("median"),
+          p75 = num("p75"),
+          uniqueValues = (s \ "uniqueValues") match {
+            case JArray(xs) => xs.map(valueFrom); case _ => Nil
+          })
+      }.toMap
     }
-  }
 }

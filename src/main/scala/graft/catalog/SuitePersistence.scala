@@ -1,11 +1,10 @@
 package graft.catalog
 
+import graft.catalog.JsonDocs._
 import graft.ops.Validation._
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.json4s._
 import org.json4s.JsonDSL._
-import org.json4s.jackson.JsonMethods
 
 /** Expectation-suite metadata CRUD, persisted as JSON under
   * `warehouseDir/_suites/<fg_id>.json` — the reference's suite metadata
@@ -14,12 +13,8 @@ import org.json4s.jackson.JsonMethods
   */
 object SuitePersistence {
 
-  private def dir(warehouseDir: String) = s"$warehouseDir/_suites"
-
-  private def fsOf(spark: SparkSession, path: String): (FileSystem, Path) = {
-    val p = new Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
+  private def docs(spark: SparkSession, warehouseDir: String) =
+    JsonDocs(spark, s"$warehouseDir/_suites")
 
   private def specJson(s: ExpectationSpec): JValue = s match {
     case NotNullSpec(c) => ("kind" -> "not_null") ~ ("column" -> c)
@@ -33,58 +28,34 @@ object SuitePersistence {
   }
 
   private def specFrom(j: JValue): Option[ExpectationSpec] = {
-    def str(v: JValue) = v match { case JString(s) => Some(s); case _ => None }
-    def dbl(v: JValue) = v match {
-      case JDouble(d) => Some(d); case JInt(i) => Some(i.toDouble)
-      case _ => None }
     val c = str(j \ "column").getOrElse("")
     str(j \ "kind").collect {
       case "not_null" => NotNullSpec(c)
       case "between" => BetweenSpec(c,
         dbl(j \ "min").getOrElse(Double.NegativeInfinity),
         dbl(j \ "max").getOrElse(Double.PositiveInfinity))
-      case "in_set" => InSetSpec(c, (j \ "values") match {
-        case JArray(xs) => xs.flatMap(str); case _ => Nil })
+      case "in_set" => InSetSpec(c, strs(j \ "values"))
       case "regex" => RegexSpec(c, str(j \ "regex").getOrElse(".*"))
       case "unique" => UniqueSpec(c)
     }
   }
 
   def save(spark: SparkSession, warehouseDir: String, fgId: String,
-           suite: SuiteDef): Unit = {
-    val j: JValue = ("name" -> suite.name) ~ ("policy" -> suite.policy) ~
-      ("expectations" -> suite.specs.map(specJson))
-    val (fs, _) = fsOf(spark, dir(warehouseDir))
-    val out = fs.create(new Path(s"${dir(warehouseDir)}/$fgId.json"), true)
-    try out.write(JsonMethods.compact(JsonMethods.render(j))
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+           suite: SuiteDef): Unit =
+    docs(spark, warehouseDir).put(fgId,
+      ("name" -> suite.name) ~ ("policy" -> suite.policy) ~
+        ("expectations" -> suite.specs.map(specJson)))
 
   def load(spark: SparkSession, warehouseDir: String,
-           fgId: String): Option[SuiteDef] = {
-    val (fs, _) = fsOf(spark, dir(warehouseDir))
-    val p = new Path(s"${dir(warehouseDir)}/$fgId.json")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt =
-        try new String(in.readAllBytes, java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      val j = JsonMethods.parse(txt)
-      def str(v: JValue) = v match { case JString(s) => s; case _ => "" }
-      Some(SuiteDef(
-        name = str(j \ "name"),
+           fgId: String): Option[SuiteDef] =
+    docs(spark, warehouseDir).get(fgId).map { j =>
+      SuiteDef(
+        name = str(j \ "name").getOrElse(""),
         specs = (j \ "expectations") match {
           case JArray(xs) => xs.flatMap(specFrom); case _ => Nil },
-        policy = str(j \ "policy") match {
-          case "" => Policy.Strict; case p2 => p2 }))
+        policy = str(j \ "policy").filter(_.nonEmpty).getOrElse(Policy.Strict))
     }
-  }
 
-  def delete(spark: SparkSession, warehouseDir: String, fgId: String): Unit = {
-    val (fs, _) = fsOf(spark, dir(warehouseDir))
-    fs.delete(new Path(s"${dir(warehouseDir)}/$fgId.json"), false)
-    ()
-  }
+  def delete(spark: SparkSession, warehouseDir: String, fgId: String): Unit =
+    docs(spark, warehouseDir).remove(fgId)
 }

@@ -1,12 +1,9 @@
 package graft.catalog
 
+import graft.catalog.JsonDocs._
 import graft.ir.Query
-import graft.model.FeatureGroup
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
-import org.json4s._
 import org.json4s.JsonDSL._
-import org.json4s.jackson.JsonMethods
 
 /** Tags, keywords, and query-derived provenance — the metadata surface of
   * the reference's tag/keyword/provenance APIs
@@ -26,61 +23,27 @@ object TagPersistence {
   final case class Tags(tags: Map[String, String] = Map(),
                         keywords: Seq[String] = Nil)
 
-  private def dir(warehouseDir: String) = s"$warehouseDir/_tags"
-
-  private def fsOf(spark: SparkSession, path: String): (FileSystem, Path) = {
-    val p = new Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
+  private def docs(spark: SparkSession, warehouseDir: String) =
+    JsonDocs(spark, s"$warehouseDir/_tags")
 
   def save(spark: SparkSession, warehouseDir: String, entityId: String,
-           t: Tags): Unit = {
-    val j: JValue = ("tags" -> t.tags) ~ ("keywords" -> t.keywords)
-    val (fs, _) = fsOf(spark, dir(warehouseDir))
-    val out = fs.create(new Path(s"${dir(warehouseDir)}/$entityId.json"), true)
-    try out.write(JsonMethods.compact(JsonMethods.render(j))
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+           t: Tags): Unit =
+    docs(spark, warehouseDir).put(entityId,
+      ("tags" -> t.tags) ~ ("keywords" -> t.keywords))
 
   def load(spark: SparkSession, warehouseDir: String,
-           entityId: String): Tags = {
-    val (fs, _) = fsOf(spark, dir(warehouseDir))
-    val p = new Path(s"${dir(warehouseDir)}/$entityId.json")
-    if (!fs.exists(p)) Tags()
-    else {
-      val in = fs.open(p)
-      val txt =
-        try new String(in.readAllBytes, java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      val j = JsonMethods.parse(txt)
-      Tags(
-        tags = (j \ "tags") match {
-          case JObject(fields) =>
-            fields.collect { case JField(k, JString(v)) => k -> v }.toMap
-          case _ => Map.empty
-        },
-        keywords = (j \ "keywords") match {
-          case JArray(xs) => xs.collect { case JString(s) => s }
-          case _ => Nil
-        })
+           entityId: String): Tags =
+    docs(spark, warehouseDir).get(entityId).fold(Tags()) { j =>
+      Tags(strMap(j \ "tags"), strs(j \ "keywords"))
     }
-  }
 
   /** Every entity id with persisted tag state. */
-  def list(spark: SparkSession, warehouseDir: String): Seq[String] = {
-    val (fs, p) = fsOf(spark, dir(warehouseDir))
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.endsWith(".json")).map(_.stripSuffix(".json"))
-  }
+  def list(spark: SparkSession, warehouseDir: String): Seq[String] =
+    docs(spark, warehouseDir).ids
 
   def delete(spark: SparkSession, warehouseDir: String,
-             entityId: String): Unit = {
-    val (fs, _) = fsOf(spark, dir(warehouseDir))
-    fs.delete(new Path(s"${dir(warehouseDir)}/$entityId.json"), false)
-    ()
-  }
+             entityId: String): Unit =
+    docs(spark, warehouseDir).remove(entityId)
 }
 
 /** Provenance derived from query IR (core/explicit_provenance.py Links,

@@ -1,10 +1,9 @@
 package graft.catalog
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.catalog.JsonDocs._
 import org.apache.spark.sql.SparkSession
 import org.json4s._
 import org.json4s.JsonDSL._
-import org.json4s.jackson.JsonMethods
 
 /** Training-dataset VERSION metadata CRUD, persisted as JSON under
   * `warehouseDir/_training_datasets/<view>_<viewVersion>_<tdVersion>.json`
@@ -37,124 +36,85 @@ object TrainingDatasetPersistence {
       else Seq("train")
   }
 
-  private def dir(warehouseDir: String) = s"$warehouseDir/_training_datasets"
-  private def fileId(view: String, viewVersion: Int, version: Int) =
+  private def docs(spark: SparkSession, warehouseDir: String) =
+    JsonDocs(spark, s"$warehouseDir/_training_datasets")
+  private def idOf(view: String, viewVersion: Int, version: Int) =
     s"${view}_${viewVersion}_$version"
 
-  private def fsOf(spark: SparkSession, path: String): (FileSystem, Path) = {
-    val p = new Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
   def save(spark: SparkSession, warehouseDir: String,
-           meta: TrainingDatasetMeta): Unit = {
-    val j: JValue = ("viewName" -> meta.viewName) ~
-      ("viewVersion" -> meta.viewVersion) ~
-      ("version" -> meta.version) ~
-      ("format" -> meta.format) ~
-      ("path" -> meta.path) ~
-      ("randomWeights" -> meta.randomWeights) ~
-      ("timeBounds" -> meta.timeBounds.map { case (k, (lo, hi)) =>
-        k -> List(lo, hi) }) ~
-      ("seed" -> meta.seed) ~
-      ("exactSizes" -> meta.exactSizes) ~
-      ("coalesce" -> meta.coalesce) ~
-      ("createdMillis" -> meta.createdMillis) ~
-      ("groupSplit" -> meta.groupSplit.map(g =>
-        ("groupCol" -> g.groupCol) ~
-          ("salt" -> g.salt) ~
-          ("weights" -> g.weights.map { case (k, w) =>
-            ("name" -> k) ~ ("w" -> w): JValue })))
-    val (fs, _) = fsOf(spark, dir(warehouseDir))
-    val out = fs.create(new Path(s"${dir(warehouseDir)}/${fileId(
-      meta.viewName, meta.viewVersion, meta.version)}.json"), true)
-    try out.write(JsonMethods.compact(JsonMethods.render(j))
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+           meta: TrainingDatasetMeta): Unit =
+    docs(spark, warehouseDir).put(
+      idOf(meta.viewName, meta.viewVersion, meta.version),
+      ("viewName" -> meta.viewName) ~
+        ("viewVersion" -> meta.viewVersion) ~
+        ("version" -> meta.version) ~
+        ("format" -> meta.format) ~
+        ("path" -> meta.path) ~
+        ("randomWeights" -> meta.randomWeights) ~
+        ("timeBounds" -> meta.timeBounds.map { case (k, (lo, hi)) =>
+          k -> List(lo, hi) }) ~
+        ("seed" -> meta.seed) ~
+        ("exactSizes" -> meta.exactSizes) ~
+        ("coalesce" -> meta.coalesce) ~
+        ("createdMillis" -> meta.createdMillis) ~
+        ("groupSplit" -> meta.groupSplit.map(g =>
+          ("groupCol" -> g.groupCol) ~
+            ("salt" -> g.salt) ~
+            ("weights" -> g.weights.map { case (k, w) =>
+              ("name" -> k) ~ ("w" -> w): JValue }))))
 
   def load(spark: SparkSession, warehouseDir: String, viewName: String,
-           viewVersion: Int, version: Int): Option[TrainingDatasetMeta] = {
-    val (fs, _) = fsOf(spark, dir(warehouseDir))
-    val p = new Path(
-      s"${dir(warehouseDir)}/${fileId(viewName, viewVersion, version)}.json")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt =
-        try new String(in.readAllBytes, java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      val j = JsonMethods.parse(txt)
-      def str(v: JValue) = v match { case JString(s) => s; case _ => "" }
-      def num(v: JValue): Long = v match {
-        case JInt(i) => i.toLong; case JLong(l) => l
-        case JDouble(d) => d.toLong; case _ => 0L }
-      Some(TrainingDatasetMeta(
-        viewName = str(j \ "viewName"),
-        viewVersion = num(j \ "viewVersion").toInt,
-        version = num(j \ "version").toInt,
-        format = str(j \ "format"),
-        path = str(j \ "path"),
-        randomWeights = (j \ "randomWeights") match {
-          case JObject(fields) => fields.collect {
-            case JField(k, JDouble(d)) => k -> d
-            case JField(k, JInt(i)) => k -> i.toDouble
-          }.toMap
-          case _ => Map.empty
-        },
-        timeBounds = (j \ "timeBounds") match {
-          case JObject(fields) => fields.collect {
-            case JField(k, JArray(List(lo, hi))) => k -> (num(lo), num(hi))
-          }.toMap
-          case _ => Map.empty
-        },
-        seed = num(j \ "seed"),
-        exactSizes = (j \ "exactSizes") match {
-          case JBool(b) => b; case _ => false },
-        coalesce = (j \ "coalesce") match {
-          case JBool(b) => b; case _ => false },
-        createdMillis = num(j \ "createdMillis"),
-        // absent in descriptors written before grouped splits existed
-        groupSplit = (j \ "groupSplit") match {
-          case JObject(_) =>
-            val g = j \ "groupSplit"
-            val ws = (g \ "weights") match {
-              case JArray(items) => items.collect {
-                case item @ JObject(_) =>
-                  val w = (item \ "w") match {
-                    case JDouble(d) => d
-                    case JInt(i)    => i.toDouble
-                    case _          => 0.0
-                  }
-                  str(item \ "name") -> w
+           viewVersion: Int, version: Int): Option[TrainingDatasetMeta] =
+    docs(spark, warehouseDir).get(idOf(viewName, viewVersion, version)).map {
+      j =>
+        def num(v: JValue): Long = lng(v).getOrElse(0L)
+        TrainingDatasetMeta(
+          viewName = str(j \ "viewName").getOrElse(""),
+          viewVersion = num(j \ "viewVersion").toInt,
+          version = num(j \ "version").toInt,
+          format = str(j \ "format").getOrElse(""),
+          path = str(j \ "path").getOrElse(""),
+          randomWeights = (j \ "randomWeights") match {
+            case JObject(fields) =>
+              fields.flatMap { case (k, w) => dbl(w).map(k -> _) }.toMap
+            case _ => Map.empty
+          },
+          timeBounds = (j \ "timeBounds") match {
+            case JObject(fields) => fields.collect {
+              case JField(k, JArray(List(lo, hi))) => k -> (num(lo), num(hi))
+            }.toMap
+            case _ => Map.empty
+          },
+          seed = num(j \ "seed"),
+          exactSizes = bool(j \ "exactSizes").getOrElse(false),
+          coalesce = bool(j \ "coalesce").getOrElse(false),
+          createdMillis = num(j \ "createdMillis"),
+          // absent in descriptors written before grouped splits existed
+          groupSplit = (j \ "groupSplit") match {
+            case g @ JObject(_) =>
+              val ws = (g \ "weights") match {
+                case JArray(items) => items.collect { case item @ JObject(_) =>
+                  str(item \ "name").getOrElse("") ->
+                    dbl(item \ "w").getOrElse(0.0)
+                }
+                case _ => Nil
               }
-              case _ => Nil
-            }
-            Some(graft.ops.Splits.GroupSplit(str(g \ "groupCol"), ws,
-              str(g \ "salt")))
-          case _ => None
-        }))
+              Some(graft.ops.Splits.GroupSplit(
+                str(g \ "groupCol").getOrElse(""), ws,
+                str(g \ "salt").getOrElse("")))
+            case _ => None
+          })
     }
-  }
 
   /** Every persisted version of a view's training datasets. */
   def list(spark: SparkSession, warehouseDir: String, viewName: String,
            viewVersion: Int): Seq[Int] = {
-    val (fs, p) = fsOf(spark, dir(warehouseDir))
     val prefix = s"${viewName}_${viewVersion}_"
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith(prefix) && n.endsWith(".json"))
-      .flatMap(n => n.stripPrefix(prefix).stripSuffix(".json").toIntOption)
-      .sorted
+    docs(spark, warehouseDir).ids.filter(_.startsWith(prefix))
+      .flatMap(_.stripPrefix(prefix).toIntOption).sorted
   }
 
   def delete(spark: SparkSession, warehouseDir: String, viewName: String,
-             viewVersion: Int, version: Int): Unit = {
-    val (fs, _) = fsOf(spark, dir(warehouseDir))
-    fs.delete(new Path(
-      s"${dir(warehouseDir)}/${fileId(viewName, viewVersion, version)}.json"),
-      false)
-    ()
-  }
+             viewVersion: Int, version: Int): Unit =
+    docs(spark, warehouseDir).remove(idOf(viewName, viewVersion, version))
 }
