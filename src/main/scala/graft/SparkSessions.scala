@@ -33,7 +33,7 @@ object SparkSessions {
     * deleted when the JVM exits — Derby allows ONE JVM per database, so
     * concurrent Verify/Bench/test JVMs must not share one. Pass a fixed
     * dir to prove metastore persistence across real process restarts
-    * ([[graft.tools.MetastoreCheck]]). Catalog implementation is `hive`
+    * (`MetastoreSpec`'s probe `graft.tools.MetastoreCheck`). Catalog implementation is `hive`
     * (the jars ship in /opt/spark/jars): `saveAsTable`/`spark.table`
     * hit a real HiveExternalCatalog, the reference's
     * `engine/spark.py:160-163` storage path. The catalog initializes

@@ -3,8 +3,11 @@ package graft.catalog
 import graft.ir.Query
 import graft.model._
 import graft.planner.QueryPlanner
-import graft.sources.Lake
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.{DeltaLite, Lake}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, concat, lit}
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** In-process feature-store catalog: named, versioned feature groups backed
   * by parquet paths, lake tables, views, or caller DataFrames. Replaces the
@@ -192,11 +195,16 @@ final class FeatureStore(
   private def reportDir(fg: FeatureGroup) =
     s"$warehouseDir/_validation_reports/${fg.id}"
 
+  private val reportSchema = new StructType().add("run_millis", LongType)
+    .add("run_success", BooleanType).add("expectation", StringType)
+    .add("success", BooleanType).add("unexpected_count", LongType)
+    .add("observed_rows", LongType)
+
   /** Append a validation run to the group's persisted report history —
     * the reference's save_validation_report / get_validation_history
     * surface (feature_group.py, core/validation_report_engine.py): one
-    * row per expectation result, stamped with the run time, plain
-    * append-mode parquet so history reads are a partition-pruned scan.
+    * row per expectation result, stamped with the run time. The history
+    * is a [[DeltaLite]] table; each run is one append.
     */
   def saveValidationReport(fg: FeatureGroup,
                            report: graft.ops.Validation.ValidationReport,
@@ -205,44 +213,28 @@ final class FeatureStore(
                              * never merge into one "latest" report.
                              */
                            atMillis: Long = -1L): Unit = {
-    import spark.implicits._
     val stamp = if (atMillis >= 0) atMillis else nextReportStamp(fg)
     noteStamp(s"report:${fg.id}", stamp)
-    report.results
-      .map(r => (stamp, report.success, r.name, r.success,
-        r.unexpectedCount, r.observedRows))
-      .toDF("run_millis", "run_success", "expectation", "success",
-        "unexpected_count", "observed_rows")
-      .write.mode("append").parquet(reportDir(fg))
+    val rows = report.results.map(r => Row(stamp, report.success, r.name,
+      r.success, r.unexpectedCount, r.observedRows))
+    DeltaLite.append(spark.createDataFrame(rows.asJava, reportSchema)
+      .coalesce(1), reportDir(fg))
   }
 
   /** Full persisted history, newest first (empty frame if none). */
-  def getValidationHistory(fg: FeatureGroup): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(reportDir(fg))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq()))
-    else spark.read.parquet(reportDir(fg))
-      .orderBy(org.apache.spark.sql.functions.col("run_millis").desc)
-  }
+  def getValidationHistory(fg: FeatureGroup): DataFrame =
+    DeltaLite.history(spark, reportDir(fg), reportSchema)
+      .orderBy(col("run_millis").desc)
 
   /** Latest run reconstructed as a ValidationReport (None if no history). */
   def getLatestValidationReport(fg: FeatureGroup)
       : Option[graft.ops.Validation.ValidationReport] = {
-    val hist = getValidationHistory(fg)
-    if (hist.schema.isEmpty) None
-    else {
-      val rows = hist.collect()
-      if (rows.isEmpty) None
-      else {
-        val latest = rows.map(_.getLong(0)).max
-        val ofRun = rows.filter(_.getLong(0) == latest)
-        Some(graft.ops.Validation.ValidationReport(
-          ofRun.head.getBoolean(1),
-          ofRun.toSeq.map(r => graft.ops.Validation.ExpectationResult(
-            r.getString(2), r.getBoolean(3), r.getLong(4), r.getLong(5)))))
-      }
+    val rows = getValidationHistory(fg).collect()
+    rows.headOption.map { latest =>
+      val ofRun = rows.filter(_.getLong(0) == latest.getLong(0))
+      graft.ops.Validation.ValidationReport(latest.getBoolean(1),
+        ofRun.toSeq.map(r => graft.ops.Validation.ExpectationResult(
+          r.getString(2), r.getBoolean(3), r.getLong(4), r.getLong(5))))
     }
   }
 
@@ -265,18 +257,9 @@ final class FeatureStore(
   private def fgStatsDir(fg: FeatureGroup) =
     s"$warehouseDir/_fg_statistics/${fg.id}"
 
-  private val fgStatsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("computed_at",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("feature",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("metric",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("value",
-      org.apache.spark.sql.types.DoubleType)))
-
-  private def emptyFgStats: DataFrame = spark.createDataFrame(
-    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fgStatsSchema)
+  private val fgStatsSchema = new StructType().add("computed_at", LongType)
+    .add("feature", StringType).add("metric", StringType)
+    .add("value", DoubleType)
 
   /** Compute the group's CONFIGURED statistics over its offline state —
     * optionally as of a commit time for lake-backed groups — and append
@@ -294,9 +277,9 @@ final class FeatureStore(
   def computeStatistics(fg: FeatureGroup,
                         atMillis: Long = System.currentTimeMillis(),
                         asOf: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions._
     val cfg = fg.statisticsConfig
-    if (!cfg.enabled) return emptyFgStats
+    if (!cfg.enabled)
+      return spark.createDataFrame(java.util.Collections.emptyList[Row](), fgStatsSchema)
     val raw = QueryPlanner.materialize(spark, fg,
       asOf.map(t => graft.ir.TimeTravel(Some(t))))
     val cols =
@@ -356,10 +339,9 @@ final class FeatureStore(
     noteStamp(s"stats:${fg.id}", atMillis)
     // one file per run: the batch is |features × metrics| rows (tiny) and
     // the history is re-read on every retrieval — don't shard it
-    batch.coalesce(1).write.mode("append").parquet(fgStatsDir(fg))
+    val v = DeltaLite.append(batch.to(fgStatsSchema).coalesce(1), fgStatsDir(fg))
     if (passes > 1) frame.unpersist()
-    spark.read.schema(fgStatsSchema).parquet(fgStatsDir(fg))
-      .filter(col("computed_at") === atMillis)
+    DeltaLite.readChanges(spark, fgStatsDir(fg), v - 1, v)
   }
 
   /** Last issued run stamp per (kind, group): the persisted history is
@@ -404,21 +386,18 @@ final class FeatureStore(
     * one millisecond never merge into one logical run.
     */
   private def nextStatsStamp(fg: FeatureGroup): Long =
-    bumpStamp(s"stats:${fg.id}", {
-      import org.apache.spark.sql.functions.max
-      val hist = getAllStatistics(fg)
-      if (hist.isEmpty) None
-      else Some(hist.agg(max("computed_at")).head.getLong(0))
-    })
+    bumpStamp(s"stats:${fg.id}", newest(getAllStatistics(fg), "computed_at"))
 
   /** Same monotonic-bump contract for validation-report run stamps. */
   private def nextReportStamp(fg: FeatureGroup): Long =
-    bumpStamp(s"report:${fg.id}", {
-      import org.apache.spark.sql.functions.max
-      val hist = getValidationHistory(fg)
-      if (hist.schema.isEmpty || hist.isEmpty) None
-      else Some(hist.agg(max("run_millis")).head.getLong(0))
-    })
+    bumpStamp(s"report:${fg.id}", newest(getValidationHistory(fg), "run_millis"))
+
+  /** The newest run stamp (column `stamp`) of a history, if it has a run:
+    * a top-1 read, which an empty history answers without a Spark job.
+    */
+  private def newest(hist: DataFrame, stamp: String): Option[Long] =
+    hist.select(col(stamp)).orderBy(col(stamp).desc).head(1)
+      .headOption.map(_.getLong(0))
 
   /** Statistics computed at the LATEST run ≤ `computationTime` (or the
     * most recent run when None), optionally restricted to some features —
@@ -428,11 +407,8 @@ final class FeatureStore(
   def getStatistics(fg: FeatureGroup,
                     computationTime: Option[Long] = None,
                     featureNames: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions._
     val hist = getAllStatistics(fg, computationTime)
-    if (hist.isEmpty) emptyFgStats
-    else {
-      val latest = hist.agg(max("computed_at")).head.getLong(0)
+    newest(hist, "computed_at").fold(hist) { latest =>
       val run = hist.filter(col("computed_at") === latest)
       if (featureNames.isEmpty) run
       else run.filter(col("feature").isin(featureNames: _*))
@@ -444,16 +420,8 @@ final class FeatureStore(
     */
   def getAllStatistics(fg: FeatureGroup,
                        before: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val p = new org.apache.hadoop.fs.Path(fgStatsDir(fg))
-    val hfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!hfs.exists(p)) emptyFgStats
-    else {
-      // declared schema: the history's layout is fixed by this class, so
-      // skip the footer-inference pass on every retrieval
-      val all = spark.read.schema(fgStatsSchema).parquet(fgStatsDir(fg))
-      before.map(t => all.filter(col("computed_at") <= t)).getOrElse(all)
-    }
+    val all = DeltaLite.history(spark, fgStatsDir(fg), fgStatsSchema)
+    before.fold(all)(t => all.filter(col("computed_at") <= t))
   }
 
   // -- feature views (persisted query IR) -----------------------------------

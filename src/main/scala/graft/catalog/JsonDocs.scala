@@ -1,6 +1,7 @@
 package graft.catalog
 
-import java.io.{FileNotFoundException, IOException}
+import graft.sources.DeltaLite
+import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
@@ -15,12 +16,9 @@ import org.json4s.jackson.JsonMethods
   *
   * Writes are atomic where the filesystem's rename is: [[put]] stages the
   * document in a hidden file beside the target and renames it over the
-  * target, so a write that fails part-way leaves the previous document
-  * whole. The local filesystem's rename replaces the target atomically
-  * (Hadoop's hidden checksum file follows in a second rename). HDFS and
-  * object stores refuse to rename over an existing file; there `put`
-  * deletes the old document and then renames, so a reader in that window
-  * sees no document, never a truncated one.
+  * target ([[graft.sources.DeltaLite.publishStaged]], the commit log's
+  * own staged publish), so a write that fails part-way leaves the
+  * previous document whole.
   */
 final class JsonDocs(spark: SparkSession, dir: String) {
   private val root = new Path(dir)
@@ -29,21 +27,10 @@ final class JsonDocs(spark: SparkSession, dir: String) {
 
   def put(id: String, doc: JValue): Unit = {
     val fs = this.fs
-    val target = file(id)
-    val staged = new Path(root, s".$id.json.${java.util.UUID.randomUUID}.tmp")
-    try {
+    DeltaLite.publishStaged(fs, file(id)) { staged =>
       val out = fs.create(staged, true)
       try out.write(JsonMethods.compact(JsonMethods.render(doc)).getBytes(UTF_8))
       finally out.close()
-      if (!fs.rename(staged, target)) {
-        fs.delete(target, false)
-        if (!fs.rename(staged, target))
-          throw new IOException(s"cannot rename $staged to $target")
-      }
-    } catch {
-      case e: Throwable =>
-        try fs.delete(staged, false) catch { case _: IOException => }
-        throw e
     }
   }
 

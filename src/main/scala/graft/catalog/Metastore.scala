@@ -8,8 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `_save_offline_dataframe` drives). Backed by a REAL
   * HiveExternalCatalog (embedded Derby; jars ship with this Spark), so
   * tables survive session AND process restarts — proven across forked
-  * JVMs by `tools.MetastoreCheck` / `MetastoreSpec`, not just within a
-  * session.
+  * JVMs by `MetastoreSpec` (through its probe `graft.tools.MetastoreCheck`,
+  * which lives beside the specs), not just within a session.
   *
   * The catalog stores table metadata (schema, partitioning, location);
   * the data itself is parquet under the warehouse dir — identical file

@@ -9,7 +9,6 @@ import org.apache.avro.io.{DecoderFactory, EncoderFactory}
 import org.apache.avro.util.Utf8
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Binary-Avro wire codec for the online/Kafka path — the reference's

@@ -255,7 +255,6 @@ object GraphOps {
     // hub-heavy graphs (Σxy grows up to deg²·|E|); decimal buys 10³⁸
     // headroom and the final ratio casts to double anyway
     val xd = col("_x").cast("decimal(38,0)")
-    val yd = col("_y").cast("decimal(38,0)")
     val sums = sym.agg(count(lit(1)).cast("decimal(38,0)").as("_n"),
       sum(xd).as("_sx"),
       sum(xd * col("_x")).as("_sxx"),

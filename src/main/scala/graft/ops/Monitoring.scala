@@ -1,13 +1,15 @@
 package graft.ops
 
 import graft.catalog.JsonDocs
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.DeltaLite
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.JsonDSL._
 import graft.ops.Materialize.PinOps
+import scala.jdk.CollectionConverters._
 
 /** Feature-monitoring configuration engine: persisted monitoring configs,
   * schedule bookkeeping, and window-comparison execution — the analog of
@@ -548,6 +550,10 @@ object Monitoring {
 
     private val configs = JsonDocs(spark, s"$warehouseDir/_monitoring/configs")
     private def resultsDir = s"$warehouseDir/_monitoring/results"
+    private val resultSchema = new StructType().add("configName", StringType)
+      .add("executedAt", LongType).add("detectionValue", DoubleType)
+      .add("referenceValue", DoubleType).add("difference", DoubleType)
+      .add("shiftDetected", BooleanType)
 
     def saveConfig(cfg: MonitoringConfig): Unit =
       configs.put(cfg.name,
@@ -612,24 +618,15 @@ object Monitoring {
 
     def deleteConfig(name: String): Unit = configs.remove(name)
 
-    /** Persisted result log (parquet append). */
-    def results(): DataFrame = {
-      val p = new Path(resultsDir)
-      if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) {
-        import spark.implicits._
-        Seq.empty[MonitoringResult].toDF()
-      } else spark.read.parquet(resultsDir)
-    }
+    /** Persisted result log: a [[DeltaLite]] table, one append per
+      * [[runDue]] that fired.
+      */
+    def results(): DataFrame = DeltaLite.history(spark, resultsDir, resultSchema)
 
-    private def lastRun(name: String): Option[Long] = {
-      val df = results()
-      if (df.isEmpty) None
-      else {
-        val r = df.filter(col("configName") === name)
-          .agg(max(col("executedAt"))).collect().head
-        if (r.isNullAt(0)) None else Some(r.getLong(0))
-      }
-    }
+    /** A top-1 read, which an empty log answers without a Spark job. */
+    private def lastRun(name: String): Option[Long] =
+      results().filter(col("configName") === name).select(col("executedAt"))
+        .orderBy(col("executedAt").desc).head(1).headOption.map(_.getLong(0))
 
     /** Configs whose schedule fires at `nowMillis`: enabled, past their
       * start, and at least `everyMillis` since the last recorded run.
@@ -644,10 +641,9 @@ object Monitoring {
     def runDue(nowMillis: Long,
                dataFor: MonitoringConfig => DataFrame): Seq[MonitoringResult] = {
       val fired = due(nowMillis).map(c => run(spark, dataFor(c), c, nowMillis))
-      if (fired.nonEmpty) {
-        import spark.implicits._
-        fired.toDF().coalesce(1).write.mode("append").parquet(resultsDir)
-      }
+      if (fired.nonEmpty)
+        DeltaLite.append(spark.createDataFrame(
+          fired.map(Row.fromTuple).asJava, resultSchema).coalesce(1), resultsDir)
       fired
     }
   }

@@ -3,8 +3,16 @@ package graft.sources
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import scala.util.control.NonFatal
 
 /** Delta Lake tables at the PROTOCOL level (the public delta-io
   * PROTOCOL.md), without the delta-spark jar: a `_delta_log/` of
@@ -30,11 +38,18 @@ import org.apache.spark.sql.types._
   * commute so the retry is just a version bump; overwrite recomputes
   * its remove set), and tries the next version. Data files are staged
   * ONCE under a per-transaction directory before the first attempt, so
-  * retries never rewrite data — only the ~1 KB commit JSON. The one
-  * unsynchronized residue is the `_last_checkpoint` pointer: two
-  * winners checkpointing different versions race last-writer-wins on
-  * the pointer, and either value is a valid seed (resolution probes
-  * the contiguous tail forward).
+  * retries never rewrite data — only the ~1 KB commit JSON.
+  *
+  * A checkpoint and the `_last_checkpoint` pointer publish as a catalog
+  * document does: each is written under a hidden staged name ending
+  * `.tmp`, which the log listing ignores, and then renamed into place,
+  * so no reader lists a partial one. Two winners checkpointing different
+  * versions race last-writer-wins on the pointer, and either value is a
+  * valid seed (resolution probes the contiguous tail forward). A pointer
+  * or checkpoint that cannot be read (say, one a crashed writer of an
+  * older build cut short) is never a seed: replay falls back to an older
+  * checkpoint, or to version 0, which is always correct because JSON
+  * entries are never deleted.
   *
   * CHECKPOINTS (PROTOCOL.md §"Checkpoints"): every
   * [[CheckpointInterval]] commits the full replay state is written as
@@ -55,9 +70,15 @@ import org.apache.spark.sql.types._
   * so [[Lake]]'s per-commit row counts and record-key Bloom filters
   * survive checkpoints.
   *
-  * [[Lake]] publishes every feature-group commit through this log: its
-  * `add` paths name commit DIRECTORIES, each entry carries a
-  * `commitInfo`, and its writers rebase through [[commitWithRetry]].
+  * Tables that publish through this log:
+  *  - [[Lake]], every feature-group commit: its `add` paths name commit
+  *    DIRECTORIES, each entry carries a `commitInfo`, and its writers
+  *    rebase through [[commitWithRetry]];
+  *  - the feature store's three append-only histories (validation
+  *    reports, group statistics, monitoring results): each run is one
+  *    [[append]], the first of which writes the [[header]] with the
+  *    schema the store declares, and [[history]] reads a history with no
+  *    entry yet as that schema's empty frame.
   *
   * What makes it "real" interop rather than an analog: the on-disk
   * layout is the published protocol — a stock delta-spark reader
@@ -66,10 +87,10 @@ import org.apache.spark.sql.types._
   * is absent from this environment).
   *
   * Scale shape: data files are written and read by Spark's parquet
-  * path (pushdown/pruning intact — snapshot reads pass the live file
-  * list to `spark.read.parquet`); the log replay is driver-side and
-  * O(tail) thanks to checkpoints. The checkpoint itself is a tiny
-  * |live files|+2-row frame written through Spark's parquet writer.
+  * path (pushdown/pruning intact — snapshot reads hand the live files to
+  * Spark's parquet scan through [[scan]]); the log replay is driver-side
+  * and O(tail) thanks to checkpoints. The checkpoint itself is a tiny
+  * |live files|+2-row file written driver-side with parquet-hadoop.
   */
 object DeltaLite {
 
@@ -125,26 +146,25 @@ object DeltaLite {
       .map(_.stripSuffix(".checkpoint.parquet").toLong).sorted
   }
 
-  /** The `_last_checkpoint` pointer, if present and readable. */
+  /** The `_last_checkpoint` pointer, if present and readable. The
+    * pointer is only a hint, so one that cannot be read is absent.
+    */
   private[graft] def lastCheckpoint(table: String): Option[Long] = {
     val f = fs(table)
     val p = lastCheckpointFile(table)
     if (!f.exists(p)) None
-    else {
-      val bytes = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-      val in = f.open(p)
-      try in.readFully(bytes) finally in.close()
-      val node = mapper.readTree(new String(bytes, "UTF-8"))
-      if (node.has("version")) Some(node.get("version").asLong) else None
-    }
+    else
+      try {
+        val in = f.open(p)
+        val node = try mapper.readTree(in) finally in.close()
+        Option(node).filter(_.has("version")).map(_.get("version").asLong)
+      } catch { case NonFatal(_) => None }
   }
 
-  private def writeCommit(table: String, v: Long,
-                          actions: Seq[String]): Unit = {
-    val out = fs(table).create(commitFile(table, v), false)
-    actions.foreach { a => out.write((a + "\n").getBytes("UTF-8")) }
-    out.close()
-  }
+  /** A hidden name beside `target` that the log listing ignores. */
+  private def staged(target: Path): Path =
+    new Path(target.getParent,
+      s".${target.getName}.${java.util.UUID.randomUUID.toString.take(8)}.tmp")
 
   /** Atomic put-if-absent publish of commit `v`. Returns false when the
     * version already exists — the caller lost the race and must rebase.
@@ -157,8 +177,7 @@ object DeltaLite {
     val f = fs(table)
     val target = commitFile(table, v)
     if (f.getScheme == "file") {
-      val tmp = new Path(logDir(table),
-        f".$v%020d.json.${java.util.UUID.randomUUID.toString.take(8)}.tmp")
+      val tmp = staged(target)
       val out = f.create(tmp, false)
       try actions.foreach(a => out.write((a + "\n").getBytes("UTF-8")))
       finally out.close()
@@ -209,19 +228,20 @@ object DeltaLite {
     sys.error(s"$table: lost the commit race $maxAttempts times")
   }
 
-  private[sources] def protocolAction: String =
-    """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
-
-  private[sources] def metaDataAction(schema: StructType, id: String): String = {
+  /** The actions that declare a table, which the entry publishing
+    * version 0 carries: `protocol`, and `metaData` with `schema`.
+    */
+  private[sources] def header(schema: StructType): Seq[String] = {
     val node = mapper.createObjectNode()
     val md = node.putObject("metaData")
-    md.put("id", id)
+    md.put("id", java.util.UUID.randomUUID.toString)
     md.put("schemaString", schema.json)
     md.putObject("format").put("provider", "parquet")
     md.putArray("partitionColumns")
     md.putObject("configuration")
     md.put("createdTime", 0L)
-    mapper.writeValueAsString(node)
+    Seq("""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
+      mapper.writeValueAsString(node))
   }
 
   private[sources] def addAction(relPath: String, size: Long): String = {
@@ -272,35 +292,37 @@ object DeltaLite {
     fs(table).mkdirs(logDir(table))
     val files = writeData(df, table, "v0")
     val won = tryPublish(table, 0L,
-      Seq(protocolAction,
-        metaDataAction(df.schema, java.util.UUID.randomUUID.toString)) ++
-        files.map { case (p, s) => addAction(p, s) })
+      header(df.schema) ++ files.map { case (p, s) => addAction(p, s) })
     require(won, s"$table: concurrent create — another writer owns v0")
     0L
   }
 
   /** Append commit: adds only. Appends commute with appends, so a lost
-    * race rebases by just bumping the version (data staged once).
+    * race rebases by just bumping the version (data staged once). The
+    * first append to an empty log also writes the [[header]], declaring
+    * `df`'s schema, so an append-only table needs no create.
     */
   def append(df: DataFrame, table: String): Long = {
+    requireNoBareParquet(table)
     val files = writeData(df, table, txDir())
     val adds = files.map { case (p, s) => addAction(p, s) }
     commitWithRetry(table) { head =>
-      require(head.nonEmpty, s"$table has no log — create first")
-      adds
+      if (head.isEmpty) header(df.schema) ++ adds else adds
     }
   }
 
-  /** Log-only append for scale probes and tests: one add action with a
-    * caller-supplied relative path — no data files are written, so a
-    * 10³-commit log can be built in milliseconds to measure replay cost
-    * in isolation (replay never opens data files). NOT part of the
-    * table API; no auto-checkpoint (probes cut their own).
+  /** A directory that holds Parquet files but no log was written around
+    * the log (for example a history saved as bare append-mode parquet
+    * before it was a table of this log). Reading it as an empty table
+    * would hide its rows, and appending to it would shadow them.
     */
-  private[graft] def syntheticAppend(table: String, v: Long,
-                                     relPath: String, size: Long): Long = {
-    writeCommit(table, v, Seq(addAction(relPath, size)))
-    v
+  private def requireNoBareParquet(table: String): Unit = {
+    val f = fs(table)
+    val dir = new Path(table)
+    if (f.exists(dir) && !f.exists(logDir(table)) && f.listStatus(dir)
+        .exists(s => s.isFile && s.getPath.getName.endsWith(".parquet")))
+      throw new IllegalStateException(s"$table holds Parquet files but no " +
+        "_delta_log: it is not a table of this log")
   }
 
   /** Overwrite commit: remove every live file, add the new ones. A
@@ -379,21 +401,55 @@ object DeltaLite {
 
   /** Write the `%020d.checkpoint.parquet` + `_last_checkpoint` pair for
     * version `v`. Driver-side parquet-hadoop write — one tiny file,
-    * exact protocol name, no Spark job and no temp-dir rename dance.
-    * Commits call it automatically every [[CheckpointInterval]]
-    * versions.
+    * exact protocol name, no Spark job. Each file is written staged and
+    * renamed into place ([[publishStaged]]), the checkpoint before the
+    * pointer that names it. Commits call it automatically every
+    * [[CheckpointInterval]] versions.
     */
   private[graft] def writeCheckpoint(table: String, v: Long): Unit = {
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
     val st = replayState(table, Some(v))
     val f = fs(table)
-    val cpPath = checkpointFile(table, v)
-    if (f.exists(cpPath)) f.delete(cpPath, false)
-    val writer = ExampleParquetWriter.builder(
-      org.apache.parquet.hadoop.util.HadoopOutputFile
-        .fromPath(cpPath, hadoopConf))
-      .withType(cpMessage).build()
+    publishStaged(f, checkpointFile(table, v)) { tmp =>
+      val writer = ExampleParquetWriter.builder(
+        org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(tmp, hadoopConf))
+        .withType(cpMessage).build()
+      try writeState(writer, st) finally writer.close()
+    }
+    publishStaged(f, lastCheckpointFile(table)) { tmp =>
+      val out = f.create(tmp, false)
+      try out.write(s"""{"version":$v,"size":${st.adds.size + 2}}"""
+        .getBytes("UTF-8"))
+      finally out.close()
+    }
+  }
+
+  /** Write `target` through `write(staged)` under a hidden staged name
+    * beside it, then rename it into place. A write that fails part-way
+    * leaves only the staged file, which is removed when it can be and is
+    * never listed either way. The local filesystem's rename replaces an
+    * older target atomically (Hadoop's hidden checksum file follows in a
+    * second rename). HDFS and object stores refuse to rename over an
+    * existing file; there the old target is deleted first, so a reader in
+    * that window sees no file, never a truncated one.
+    */
+  private[graft] def publishStaged(f: FileSystem, target: Path)
+                                  (write: Path => Unit): Unit = {
+    val tmp = staged(target)
+    try {
+      write(tmp)
+      if (!f.rename(tmp, target)) {
+        f.delete(target, false)
+        if (!f.rename(tmp, target))
+          throw new java.io.IOException(s"cannot rename $tmp to $target")
+      }
+    } catch {
+      case e: Throwable =>
+        try f.delete(tmp, false) catch { case NonFatal(_) => }
+        throw e
+    }
+  }
+
+  private def writeState(writer: ParquetWriter[Group], st: State): Unit = {
     val factory = new SimpleGroupFactory(cpMessage)
     val gp = factory.newGroup()
     val pr = gp.addGroup("protocol")
@@ -422,11 +478,6 @@ object DeltaLite {
       st.info.get(p).foreach(a.add("stats", _))
       writer.write(g)
     }
-    writer.close()
-    val out = f.create(lastCheckpointFile(table), true)
-    out.write(s"""{"version":$v,"size":${st.adds.size + 2}}"""
-      .getBytes("UTF-8"))
-    out.close()
   }
 
   private def maybeCheckpoint(table: String, v: Long): Unit =
@@ -460,9 +511,6 @@ object DeltaLite {
     * O(tail) with a tiny constant.
     */
   private def readCheckpoint(table: String, v: Long): State = {
-    import org.apache.parquet.example.data.Group
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.GroupReadSupport
     val reader: ParquetReader[Group] = ParquetReader
       .builder(new GroupReadSupport(), checkpointFile(table, v))
       .withConf(hadoopConf).build()
@@ -515,18 +563,25 @@ object DeltaLite {
 
   private def replay(table: String, asOf: Option[Long]): Option[State] = {
     val f = fs(table)
-    val ptr = lastCheckpoint(table)
-    val (cp, upTo): (Option[Long], Long) = (ptr, asOf) match {
-      case (Some(v), None) =>
-        // latest = pointer + contiguous tail, probed without a listing
-        var u = v
-        while (f.exists(commitFile(table, u + 1))) u += 1
-        (Some(v), u)
-      case (Some(v), Some(u)) if v <= u =>
-        require(u == v || f.exists(commitFile(table, u)),
-          s"version $u not in log")
-        (Some(v), u)
-      case _ => // no pointer, or time travel behind it
+    // a checkpoint seeds replay only if it reads back whole
+    def seedAt(v: Long): Option[State] =
+      try Some(loadCheckpoint(table, v)) catch { case NonFatal(_) => None }
+    val fromPointer =
+      lastCheckpoint(table).filter(v => asOf.forall(v <= _)).flatMap(seedAt)
+    val (seed, upTo): (Option[State], Long) = fromPointer match {
+      case Some(cp) =>
+        val u = asOf match {
+          case Some(u) =>
+            require(u == cp.version || f.exists(commitFile(table, u)),
+              s"version $u not in log")
+            u
+          case None => // pointer + contiguous tail, probed without a listing
+            var u = cp.version
+            while (f.exists(commitFile(table, u + 1))) u += 1
+            u
+        }
+        (Some(cp), u)
+      case None => // no usable pointer, or time travel behind it
         val vs = versions(table)
         val cps = checkpointVersions(table)
         if (vs.isEmpty && cps.isEmpty && asOf.isEmpty) return None
@@ -534,16 +589,15 @@ object DeltaLite {
         val u = asOf.getOrElse((vs ++ cps).max)
         require(vs.contains(u) || cps.contains(u),
           s"version $u not in ${(vs ++ cps).distinct.sorted.mkString(",")}")
-        (cps.filter(_ <= u).lastOption, u)
+        (cps.filter(_ <= u).reverseIterator.flatMap(seedAt).nextOption(), u)
     }
-    val seed = cp.map(loadCheckpoint(table, _))
     val live = scala.collection.mutable.LinkedHashMap[String, Long]()
     seed.foreach(_.adds.foreach { case (p, s) => live(p) = s })
     val info = scala.collection.mutable.Map[String, String]()
     seed.foreach(info ++= _.info)
     var schema: StructType = seed.map(_.schema).orNull
     var metaId: String = seed.map(_.metaId).orNull
-    ((cp.getOrElse(-1L) + 1) to upTo).foreach { v =>
+    ((seed.fold(-1L)(_.version) + 1) to upTo).foreach { v =>
       val in = new java.io.BufferedReader(new java.io.InputStreamReader(
         f.open(commitFile(table, v)), "UTF-8"))
       val added = Seq.newBuilder[String]
@@ -576,13 +630,6 @@ object DeltaLite {
     Some(State(upTo, schema, metaId, live.toSeq, info.toMap))
   }
 
-  /** Replay the log up to `asOf` (inclusive; default latest) → live
-    * table-relative file paths, in add order.
-    */
-  private[graft] def liveFiles(table: String,
-                               asOf: Option[Long]): Seq[String] =
-    replayState(table, asOf).adds.map(_._1)
-
   /** Snapshot read at `asOf` (default latest): the live files through
     * Spark's parquet reader under the log's declared schema. An empty
     * snapshot (everything removed) is the schema's empty frame.
@@ -590,27 +637,83 @@ object DeltaLite {
   def snapshot(spark: SparkSession, table: String,
                asOf: Option[Long] = None): DataFrame = {
     val st = replayState(table, asOf)
-    val files = st.adds.map { case (p, _) => s"$table/$p" }
-    if (files.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st.schema)
-    else spark.read.schema(st.schema).parquet(files: _*)
+    read(spark, table, st.schema, st.adds.map(_._1))
+  }
+
+  /** The latest snapshot of an append-only table under the `schema` its
+    * appends declare; while no entry is published yet, that schema's empty
+    * frame, so an empty history and a one-run history read alike. A
+    * directory of bare Parquet files is refused, never read as empty.
+    */
+  def history(spark: SparkSession, table: String,
+              schema: StructType): DataFrame = latest(table) match {
+    case Some(st) => read(spark, table, schema, st.adds.map(_._1))
+    case None =>
+      requireNoBareParquet(table)
+      read(spark, table, schema, Nil)
   }
 
   /** Incremental read: rows in files ADDED in versions (`fromExclusive`,
-    * `toInclusive`] — the protocol-level `read_changes`.
+    * `toInclusive`] — the protocol-level `read_changes`; `fromExclusive`
+    * −1 reads from the first version on.
     */
   def readChanges(spark: SparkSession, table: String, fromExclusive: Long,
                   toInclusive: Long): DataFrame = {
-    val before = replayState(table, Some(fromExclusive))
-      .adds.map(_._1).toSet
+    val before =
+      if (fromExclusive < 0) Set.empty[String]
+      else replayState(table, Some(fromExclusive)).adds.map(_._1).toSet
     val after = replayState(table, Some(toInclusive))
-    val newFiles = after.adds.map(_._1).filterNot(before)
-      .map(p => s"$table/$p")
-    if (newFiles.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        after.schema)
-    else spark.read.schema(after.schema).parquet(newFiles: _*)
+    read(spark, table, after.schema, after.adds.map(_._1).filterNot(before))
+  }
+
+  /** The rows of `files` (table-relative) under `schema`, through [[scan]];
+    * no files is the schema's empty frame.
+    */
+  private def read(spark: SparkSession, table: String, schema: StructType,
+                   files: Seq[String]): DataFrame =
+    if (files.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema.toNullable)
+    else scan(spark, table, files, schema, Map.empty)
+
+  /** One client of Spark's file-status cache for every read of a table
+    * of this log: a published data file or commit directory never
+    * changes, so each is listed once per JVM.
+    */
+  @volatile private var listed: FileStatusCache = null
+
+  private def listings(spark: SparkSession): FileStatusCache = {
+    if (listed == null) synchronized {
+      if (listed == null) listed = FileStatusCache.getOrCreate(spark)
+    }
+    listed
+  }
+
+  /** Spark's parquet scan of `paths` (table-relative data files or
+    * directories) under `schema`: the relation
+    * `spark.read.schema(schema).options(options).parquet(...)` builds, but
+    * over [[listings]]. A path no read has listed yet is looked up on the
+    * driver first, and a missing one fails there as the reader does; a
+    * file goes into the cache from that lookup. Only directories are
+    * listed, each once per JVM, so a read of many files starts no Spark
+    * listing job (`spark.sql.sources.parallelPartitionDiscovery.threshold`
+    * unlisted roots start one).
+    */
+  private[sources] def scan(spark: SparkSession, table: String,
+                            paths: Seq[String], schema: StructType,
+                            options: Map[String, String]): DataFrame = {
+    val f = fs(table)
+    val cache = listings(spark)
+    val base = f.makeQualified(new Path(table))
+    val roots = paths.map(new Path(base, _))
+    for (r <- roots if cache.getLeafFiles(r).isEmpty) {
+      val st = f.getFileStatus(r)
+      if (st.isFile) cache.putLeafFiles(r, Array(st))
+    }
+    val index = new InMemoryFileIndex(spark, roots, options, Some(schema), cache)
+    val parts = index.partitionSchema
+    val data = StructType(schema.filterNot(c =>
+      parts.exists(p => SQLConf.get.resolver(p.name, c.name))))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, parts,
+      data.toNullable, None, new ParquetFileFormat, options)(spark))
   }
 }

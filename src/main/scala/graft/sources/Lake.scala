@@ -10,11 +10,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.GraftKeyedIndex
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.util.sketch.BloomFilter
 import scala.jdk.CollectionConverters._
@@ -159,54 +156,28 @@ object Lake {
   private def emptyFrame(spark: SparkSession, fg: FeatureGroup): DataFrame =
     spark.createDataFrame(java.util.Collections.emptyList[Row](), fg.schema)
 
-  /** One client of Spark's file-status cache for every read: a published
-    * commit directory never changes, so each is listed once per JVM.
-    */
-  @volatile private var listed: FileStatusCache = null
-
-  private def listings(spark: SparkSession): FileStatusCache = {
-    if (listed == null) synchronized {
-      if (listed == null) listed = FileStatusCache.getOrCreate(spark)
-    }
-    listed
-  }
-
   /** The raw scan of the given (non-empty) commits: one path per commit
     * directory, `_commit_time` and `_tx` from the directory names
     * ([[resolve]] drops them). With a declared feature schema the read
     * passes it EXPLICITLY — no `mergeSchema` footer sweep over every file
     * on every read, and files predating an appended column surface it as
     * null exactly as the merged scan would (snapshot() then fills declared
-    * defaults) — and lists only commits it has not listed before, so no
-    * number of commits starts Spark's parallel listing job
-    * (`spark.sql.sources.parallelPartitionDiscovery.threshold` roots per
-    * read). The relation is the one `spark.read.schema(...).parquet(...)`
-    * builds, over [[listings]]. Only schema-less groups (fg.features
-    * empty) still pay the merge and the listing (reference schema
+    * defaults) — and lists only commits it has not listed before
+    * ([[DeltaLite.scan]]). Only schema-less groups (fg.features empty)
+    * still pay the merge and the listing (reference schema
     * reconciliation, core/hudi_engine.py:226-244).
     */
   private def rawData(spark: SparkSession, root: String, fg: FeatureGroup,
                       cs: Seq[Commit]): DataFrame = {
     val options = Map("basePath" -> s"$root/data")
-    val paths = cs.map(c => s"$root/${c.dir}")
     if (fg.features.isEmpty)
-      spark.read.options(options).option("mergeSchema", "true").parquet(paths: _*)
+      spark.read.options(options).option("mergeSchema", "true")
+        .parquet(cs.map(c => s"$root/${c.dir}"): _*)
     else {
       val schema = StructType(fg.schema.fields.toSeq ++ Seq(
         StructField(CommitCol, LongType), StructField(DeletedCol, BooleanType),
         StructField(TxCol, StringType)))
-      val fs = DeltaLite.fs(root)
-      val cache = listings(spark)
-      val roots = paths.map(p => fs.makeQualified(new Path(p)))
-      // the index reads a missing root as empty; fail as the reader does
-      for (r <- roots if cache.getLeafFiles(r).isEmpty && !fs.exists(r))
-        throw new java.io.FileNotFoundException(s"$r: commit directory not found")
-      val index = new InMemoryFileIndex(spark, roots, options, Some(schema), cache)
-      val parts = index.partitionSchema
-      val data = StructType(schema.filterNot(f =>
-        parts.exists(p => SQLConf.get.resolver(p.name, f.name))))
-      spark.baseRelationToDataFrame(HadoopFsRelation(index, parts,
-        data.toNullable, None, new ParquetFileFormat, options)(spark))
+      DeltaLite.scan(spark, root, cs.map(_.dir), schema, options)
     }
   }
 
@@ -377,7 +348,7 @@ object Lake {
       }
     val t0 = math.max(System.currentTimeMillis(),
       cs.lastOption.fold(0L)(_.time) + 1)
-    commit(spark, root, fg, batch.withColumn(DeletedCol, lit(deleted)), t0,
+    commit(root, fg, batch.withColumn(DeletedCol, lit(deleted)), t0,
         squashed = Nil, keyFilters(batch, fg)) { (t, n) =>
       val (ins, upd, del) =
         if (!computeStats) (-1L, -1L, -1L)
@@ -398,8 +369,8 @@ object Lake {
     * the newest squashed time, which is below the head by construction;
     * it aborts if a concurrent squash already replaced its commits.
     */
-  private def commit(spark: SparkSession, root: String, fg: FeatureGroup,
-                     df: DataFrame, t0: Long, squashed: Seq[Commit],
+  private def commit(root: String, fg: FeatureGroup, df: DataFrame,
+                     t0: Long, squashed: Seq[Commit],
                      filters: Option[ObjectNode] = None)
                     (meta: (Long, Long) => CommitMeta): CommitMeta = {
     val fs = DeltaLite.fs(root)
@@ -431,10 +402,7 @@ object Lake {
         t = moved
       }
       out = meta(t, n)
-      val header =
-        if (head.isEmpty) Seq(DeltaLite.protocolAction,
-          DeltaLite.metaDataAction(df.schema, java.util.UUID.randomUUID.toString))
-        else Nil
+      val header = if (head.isEmpty) DeltaLite.header(df.schema) else Nil
       header ++ squashed.map(c => DeltaLite.removeAction(c.dir)) ++ Seq(
         DeltaLite.addAction(commitDir(tx, t), bytes),
         s"""{"commitInfo":${commitInfo(out, filters)}}""")
@@ -602,7 +570,7 @@ object Lake {
     squashed.lastOption.map { last =>
       val base = resolve(rawData(spark, root, fg, squashed), fg,
         fillDefaults = true).withColumn(DeletedCol, lit(false))
-      commit(spark, root, fg, base, last.time, squashed) { (t, n) =>
+      commit(root, fg, base, last.time, squashed) { (t, n) =>
         CommitMeta(t, operation, n, 0L, 0L)
       }
     }

@@ -96,7 +96,7 @@ object Streaming {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
           Lake.upsert(batch.sparkSession, root, fg, batch, computeStats = false)
         }

@@ -17,7 +17,7 @@ class AvroFilesSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_avro_files").toString +
+    tempDir("graft_avro_files").toString +
       "/td"
 
   test("write → read round trip preserves rows, types, and nulls") {

@@ -1,13 +1,11 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The bench harness must never let a failure masquerade as a time: a
   * thrown rep becomes an ERR token, a query with zero successes lands in
   * "errors" (not "queries"), and partial failures stay visible in "runs"
   * while the min only considers successful reps.
   */
-class BenchHarnessSpec extends AnyFunSuite {
+class BenchHarnessSpec extends SparkSpec {
 
   test("rep tokens round-trip times and collapse error text") {
     assert(Bench.parseToken(Bench.repToken(Right(1.25))) === Right(1.25))
@@ -171,7 +169,7 @@ class BenchHarnessSpec extends AnyFunSuite {
   }
 
   test("a throwing query: MaxReps ERR reps, listed in errors, written to _failed.json, exit 1") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bench_spec")
+    val dir = tempDir("graft_bench_spec")
     try {
       val reps = Bench.measure(TestSession.spark,
         (_, _) => throw new RuntimeException("forced failure"), dir.toString)
@@ -195,7 +193,7 @@ class BenchHarnessSpec extends AnyFunSuite {
 
   test("measure deletes the rep scratch after every rep") {
     // a scale op (lake_bulk_orders) commits a whole lake there per rep
-    val dir = java.nio.file.Files.createTempDirectory("graft_bench_spec")
+    val dir = tempDir("graft_bench_spec")
     try {
       val data = dir.resolve("data").toString
       val scratch = Bench.repScratch(data)

@@ -133,7 +133,7 @@ class CatalogFormatSpec extends SparkSpec {
   }
 
   test("each kind writes the fixture documents, name for name, byte for byte") {
-    val wh = Files.createTempDirectory("graft_format")
+    val wh = tempDir("graft_format")
     try {
       writeAll(wh.toString)
       Kinds.foreach { kind =>
@@ -149,7 +149,7 @@ class CatalogFormatSpec extends SparkSpec {
   }
 
   test("each fixture document loads back into the entity it was written from") {
-    val wh = Files.createTempDirectory("graft_format_load")
+    val wh = tempDir("graft_format_load")
     try {
       Kinds.foreach { kind =>
         Files.createDirectories(wh.resolve(kind))

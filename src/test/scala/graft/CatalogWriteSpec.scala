@@ -20,7 +20,7 @@ class CatalogWriteSpec extends SparkSpec {
   private def withFailfsDir[T](prefix: String)(body: String => T): T = {
     spark.sparkContext.hadoopConfiguration
       .set(s"fs.${FailingFs.Scheme}.impl", classOf[FailingFs].getName)
-    val dir = Files.createTempDirectory(prefix)
+    val dir = tempDir(prefix)
     try body(s"${FailingFs.Scheme}://$dir") finally Bench.deleteRecursively(dir)
   }
 

@@ -2,7 +2,6 @@ package graft
 
 import graft.ops.SchemaOps
 import graft.sources.Connectors
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 class ConnectorSchemaSpec extends SparkSpec {
@@ -42,7 +41,7 @@ class ConnectorSchemaSpec extends SparkSpec {
 
   test("insertStream writes a checkpointed file sink") {
     import graft.streaming.Streaming
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val tmp = tempDir("graft_sink").toString
     val src = s"$tmp/src"; new java.io.File(src).mkdirs()
     import spark.implicits._
     val data = Seq((1L, "a"), (2L, "b")).toDF("id", "v")

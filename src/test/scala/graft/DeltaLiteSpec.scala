@@ -12,8 +12,7 @@ import org.apache.spark.sql.functions._
 class DeltaLiteSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_delta").toString + "/tbl"
+  private def tmp(): String = tempDir("graft_delta").toString + "/tbl"
 
   test("log layout matches the published protocol shapes") {
     val t = tmp()
@@ -122,6 +121,46 @@ class DeltaLiteSpec extends SparkSpec {
     val ids = DeltaLite.snapshot(spark, t, Some(15L)).select("id")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(ids == (1L to 16L))
+  }
+
+  test("a checkpoint cut to 0 bytes with no pointer is never a seed: " +
+    "a fresh reader reads v10 and the next append lands") {
+    val t = tmp()
+    DeltaLite.create(Seq((0L, "r0")).toDF("id", "v").coalesce(1), t)
+    (1 to 10).foreach { i =>
+      DeltaLite.append(Seq((i.toLong, s"r$i")).toDF("id", "v").coalesce(1), t)
+    }
+    // the state a writer leaves when it dies inside an in-place
+    // checkpoint write: a truncated checkpoint and no pointer yet
+    val log = new java.io.File(s"$t/_delta_log")
+    java.nio.file.Files.write(
+      new java.io.File(log, f"${10L}%020d.checkpoint.parquet").toPath,
+      Array.emptyByteArray)
+    log.listFiles().filter(_.getName.contains("_last_checkpoint"))
+      .foreach(_.delete())
+    def ids(asOf: Option[Long]) =
+      DeltaLite.snapshot(spark, t, asOf).select("id").collect()
+        .map(_.getLong(0)).sorted.toSeq
+    assert(ids(None) == (0L to 10L))
+    assert(ids(Some(10L)) == (0L to 10L))
+    assert(DeltaLite.append(Seq((11L, "r11")).toDF("id", "v"), t) == 11L)
+    assert(ids(None) == (0L to 11L))
+  }
+
+  test("a checkpoint and its pointer are published staged: nothing the " +
+    "log lists is ever partial, and no staged file is left") {
+    val t = tmp()
+    DeltaLite.create(Seq((0L, "r0")).toDF("id", "v").coalesce(1), t)
+    (1 to 10).foreach { i =>
+      DeltaLite.append(Seq((i.toLong, s"r$i")).toDF("id", "v").coalesce(1), t)
+    }
+    // a second cut of the same version replaces the first whole
+    DeltaLite.writeCheckpoint(t, 10L)
+    val names = new java.io.File(s"$t/_delta_log").listFiles().map(_.getName)
+    assert(!names.exists(_.endsWith(".tmp")), names.mkString(","))
+    assert(DeltaLite.checkpointVersions(t) == Seq(10L))
+    assert(DeltaLite.lastCheckpoint(t).contains(10L))
+    assert(DeltaLite.snapshot(spark, t).count() == 11L)
   }
 
   test("checkpoint parquet carries the protocol's action-struct layout " +

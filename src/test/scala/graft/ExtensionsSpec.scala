@@ -83,7 +83,7 @@ class ExtensionsSpec extends SparkSpec {
     val q = emb.filter($"vec_id" < 5)
       .select($"vec_id".as("qid"), $"embedding".as("qe"))
     val idx = IvfIndex.build(emb, "vec_id", "embedding", nCells = 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val dir = tempDir("graft_ivf").toString
     IvfIndex.save(idx, dir)
     val loaded = IvfIndex.load(spark, dir)
     assert(loaded.centroids.map(_._1).toSeq ===

@@ -5,7 +5,6 @@ import graft.ir._
 import graft.ops.{Statistics, Transformations, Validation}
 import graft.view.{FeatureView, TrainingDataset}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Golden path: the full reference workflow end-to-end through the public
   * API — validate → ingest (lake) → feature view → PIT training data →
@@ -16,7 +15,7 @@ class GoldenPathSpec extends SparkSpec {
   import spark.implicits._
 
   test("feature-store lifecycle from ingest to monitoring") {
-    val tmp = Files.createTempDirectory("graft_golden").toString
+    val tmp = tempDir("graft_golden").toString
     val fs = new FeatureStore(spark, warehouseDir = tmp)
 
     // 1. ingest with validation gate: user profile feature group
@@ -96,7 +95,7 @@ class GoldenPathSpec extends SparkSpec {
   }
 
   test("catalog survives a restart: new store over the same warehouse") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_restart").toString
+    val wh = tempDir("graft_restart").toString
     val fs1 = new graft.catalog.FeatureStore(spark, warehouseDir = wh)
     val fg = fs1.createFeatureGroup("persisted",
       Seq((1L, "a", 0.5), (2L, "b", 1.5)).toDF("id", "v", "x"),

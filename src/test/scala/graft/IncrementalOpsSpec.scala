@@ -278,7 +278,7 @@ class IncrementalOpsSpec extends SparkSpec {
 
   test("monitoring engine runs a persisted PSI drift config end-to-end") {
     import graft.ops.Monitoring._
-    val wh = java.nio.file.Files.createTempDirectory("graft_mon").toString
+    val wh = tempDir("graft_mon").toString
     val eng = new MonitoringEngine(spark, wh)
     // detection = last hour, reference = the hour before it; detection
     // values concentrated high, reference low → strong drift
@@ -385,7 +385,6 @@ class IncrementalOpsSpec extends SparkSpec {
     // user 1: click at t=100; views at 100 (same instant — excluded),
     // 150 (in), 86400000100 (exactly t+24h — inclusive), later (out);
     // purchase at 200 (in)
-    val us = 1L
     val rows = Seq(
       (10L, 1L, 100L, "click", 0L), (11L, 1L, 100L, "view", 0L),
       (12L, 1L, 150L, "view", 0L), (13L, 1L, 86400000100L, "view", 0L),

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.{Callable, CountDownLatch, Executors}
 
 import scala.jdk.CollectionConverters._
@@ -21,7 +20,7 @@ class LakeLogSpec extends SparkSpec {
     .set(s"fs.${CountingFs.Scheme}.impl", classOf[CountingFs].getName)
 
   private def countfsDir(prefix: String): String =
-    s"${CountingFs.Scheme}://${Files.createTempDirectory(prefix)}"
+    s"${CountingFs.Scheme}://${tempDir(prefix)}"
 
   private def group(root: String): FeatureGroup = FeatureGroup("c",
     features = Seq(Feature("id", LongType, primary = true),
@@ -94,7 +93,7 @@ class LakeLogSpec extends SparkSpec {
 
   test("concurrent writers: distinct ordered commits, model snapshot") {
     val fs = new FeatureStore(spark,
-      warehouseDir = Files.createTempDirectory("graft_lake_conc").toString)
+      warehouseDir = tempDir("graft_lake_conc").toString)
     val fg = fs.createFeatureGroup("conc",
       (0L until 10L).map(k => (k, "init")).toDF("id", "v"), Seq("id"))
     val root = fg.source.asInstanceOf[LakeSource].root

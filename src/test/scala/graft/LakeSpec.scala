@@ -9,7 +9,7 @@ class LakeSpec extends SparkSpec {
 
   private def freshStore(): FeatureStore =
     new FeatureStore(spark,
-      warehouseDir = Files.createTempDirectory("graft_lake").toString)
+      warehouseDir = tempDir("graft_lake").toString)
 
   test("create / upsert / delete with precombine last-writer-wins") {
     val fs = freshStore()
@@ -81,9 +81,6 @@ class LakeSpec extends SparkSpec {
     assert(snap.columns.toSeq === Seq("id", "seg", "x"))
     assert(snap.schema("seg").dataType ===
       org.apache.spark.sql.types.StringType)
-    // a filter on the partition key prunes partitions in the plan
-    val planned = snap.filter($"seg" === "AUTO")
-    val expl = planned.queryExecution.executedPlan.toString
     assert(snap.filter($"seg" === "AUTO").count() === 1)
   }
 
@@ -229,7 +226,7 @@ class LakeSpec extends SparkSpec {
   test("fault: squashed directories left after the publish are not read") {
     val (_, fg, root, models) = history("tsquashed")
     val data = new java.io.File(s"$root/data")
-    val saved = java.nio.file.Files.createTempDirectory("graft_squashed").toFile
+    val saved = tempDir("graft_squashed").toFile
     data.listFiles().foreach(d => copyTree(d, new java.io.File(saved, d.getName)))
     val retained = Lake.cleanCommits(spark, root, fg, keepLast = 2)
     assert(retained === models.map(_._1).drop(1))

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.{Monitoring, Validation}
-import java.nio.file.Files
 
 /** Persisted metadata engines: expectation suites (validated on insert)
   * and monitoring configs (scheduled window comparisons).
@@ -10,7 +9,7 @@ class MetadataSpec extends SparkSpec {
   import spark.implicits._
 
   test("expectation suite persists, gates inserts, honors policy") {
-    val wh = Files.createTempDirectory("graft_suites").toString
+    val wh = tempDir("graft_suites").toString
     val fs = new graft.catalog.FeatureStore(spark, warehouseDir = wh)
     val fg = fs.createFeatureGroup("gated",
       Seq((1L, 50.0), (2L, 70.0)).toDF("id", "x"), primaryKey = Seq("id"))
@@ -54,7 +53,7 @@ class MetadataSpec extends SparkSpec {
   test("feature view persists its full query IR and rebinds transformations") {
     import graft.ir._
     import graft.ops.Transformations
-    val wh = Files.createTempDirectory("graft_views").toString
+    val wh = tempDir("graft_views").toString
     val fs = new graft.catalog.FeatureStore(spark, warehouseDir = wh)
     def fg(t: String) = graft.catalog.TestTables.fg(spark, sfDir, t)
 
@@ -114,7 +113,7 @@ class MetadataSpec extends SparkSpec {
   test("training statistics persist and serve with the training distribution") {
     import graft.ir.Query
     import graft.ops.Transformations
-    val wh = Files.createTempDirectory("graft_stats").toString
+    val wh = tempDir("graft_stats").toString
     val fs = new graft.catalog.FeatureStore(spark, warehouseDir = wh)
     def fg(t: String) = graft.catalog.TestTables.fg(spark, sfDir, t)
 
@@ -178,7 +177,7 @@ class MetadataSpec extends SparkSpec {
 
   test("monitoring engine: config CRUD, due-schedule, one-pass run, results") {
     import Monitoring._
-    val wh = Files.createTempDirectory("graft_mon").toString
+    val wh = tempDir("graft_mon").toString
     val eng = new MonitoringEngine(spark, wh)
     val hour = 3600L * 1000
 
@@ -234,7 +233,7 @@ class MetadataSpec extends SparkSpec {
   test("external feature groups are first-class and survive restarts") {
     import graft.model._
     import graft.sources.Connectors
-    val wh = Files.createTempDirectory("graft_ext").toString
+    val wh = tempDir("graft_ext").toString
     val csvDir = s"$wh/nation_csv"
     spark.read.parquet(s"$sfDir/nation.parquet")
       .select("n_nationkey", "n_name", "n_regionkey")
@@ -276,7 +275,7 @@ class MetadataSpec extends SparkSpec {
 
     // a group whose source is gone must not block SQL over healthy groups,
     // but the failure must surface as the root cause when targeted
-    val broken = fs2.register(FeatureGroup("gone", version = 1,
+    fs2.register(FeatureGroup("gone", version = 1,
       source = ParquetSource(s"$wh/missing.parquet")))
     assert(fs2.sql("SELECT count(*) AS n FROM nation_ext_1")
       .collect().head.getLong(0) === 25)
@@ -288,7 +287,7 @@ class MetadataSpec extends SparkSpec {
   }
 
   test("tags/keywords persist and search; provenance derives from query IR") {
-    val wh = Files.createTempDirectory("graft_tags").toString
+    val wh = tempDir("graft_tags").toString
     val fs = new graft.catalog.FeatureStore(spark, warehouseDir = wh)
     val cust = fs.createFeatureGroup("cust",
       Seq((1L, "a"), (2L, "b")).toDF("id", "seg"), primaryKey = Seq("id"))
@@ -337,7 +336,7 @@ class MetadataSpec extends SparkSpec {
 
   test("appendFeatures evolves the declared schema without data rewrite") {
     import org.apache.spark.sql.types._
-    val wh = Files.createTempDirectory("graft_append").toString
+    val wh = tempDir("graft_append").toString
     val fs = new graft.catalog.FeatureStore(spark, warehouseDir = wh)
     val fg = fs.createFeatureGroup("evolves",
       Seq((1L, "a"), (2L, "b")).toDF("id", "v"), primaryKey = Seq("id"))
@@ -361,7 +360,7 @@ class MetadataSpec extends SparkSpec {
 
   test("training-dataset versions persist and read back across restart") {
     import graft.ir.Query
-    val wh = Files.createTempDirectory("graft_td").toString
+    val wh = tempDir("graft_td").toString
     val fs = new graft.catalog.FeatureStore(spark, warehouseDir = wh)
     def fg(t: String) = graft.catalog.TestTables.fg(spark, sfDir, t)
     val view = graft.view.FeatureView("tdspec", 1,
@@ -399,7 +398,7 @@ class MetadataSpec extends SparkSpec {
   test("persisted builtin transformation functions rebuild views unaided") {
     import graft.ir.Query
     import graft.ops.Transformations
-    val wh = Files.createTempDirectory("graft_tf").toString
+    val wh = tempDir("graft_tf").toString
     val fs = new graft.catalog.FeatureStore(spark, warehouseDir = wh)
     def fg(t: String) = graft.catalog.TestTables.fg(spark, sfDir, t)
     fs.createTransformationFunction("bal_scaled", "min_max_scaler",
@@ -429,7 +428,7 @@ class MetadataSpec extends SparkSpec {
 
   test("getOrCreateFeatureGroup and version listings") {
     import graft.ir.Query
-    val wh = Files.createTempDirectory("graft_goc").toString
+    val wh = tempDir("graft_goc").toString
     val fs = new graft.catalog.FeatureStore(spark, warehouseDir = wh)
     val df = spark.read.parquet(s"$sfDir/nation.parquet")
       .selectExpr("CAST(n_nationkey AS LONG) AS id", "n_name AS v")
@@ -445,7 +444,7 @@ class MetadataSpec extends SparkSpec {
 
   test("validation reports persist as history and reconstruct the latest") {
     import graft.ops.Validation
-    val wh = Files.createTempDirectory("graft_valrep").toString
+    val wh = tempDir("graft_valrep").toString
     val fs = new graft.catalog.FeatureStore(spark, warehouseDir = wh)
     val good = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     val fg = fs.createFeatureGroup("valfg", good, Seq("id"))
@@ -473,7 +472,7 @@ class MetadataSpec extends SparkSpec {
 
   test("recreateTrainingDataset rebuilds purged files from the descriptor") {
     import graft.ir.Query
-    val wh = Files.createTempDirectory("graft_rtd").toString
+    val wh = tempDir("graft_rtd").toString
     val fs = new graft.catalog.FeatureStore(spark, warehouseDir = wh)
     def fg(t: String) = graft.catalog.TestTables.fg(spark, sfDir, t)
     val view = graft.view.FeatureView("rtd", 1,
@@ -510,7 +509,7 @@ class MetadataSpec extends SparkSpec {
 
   test("grouped training dataset keeps groups atomic and persists the spec") {
     import graft.ir.Query
-    val wh = Files.createTempDirectory("graft_tdg").toString
+    val wh = tempDir("graft_tdg").toString
     val fs = new graft.catalog.FeatureStore(spark, warehouseDir = wh)
     def fg(t: String) = graft.catalog.TestTables.fg(spark, sfDir, t)
     val view = graft.view.FeatureView("tdgrouped", 1,
@@ -540,7 +539,7 @@ class MetadataSpec extends SparkSpec {
 
   test("statistics engine: config gates, as-of snapshots, persisted history") {
     import graft.model.StatisticsConfig
-    val wh = Files.createTempDirectory("graft_fgstats").toString
+    val wh = tempDir("graft_fgstats").toString
     val fs = new graft.catalog.FeatureStore(spark, warehouseDir = wh)
     val cfg = StatisticsConfig(histograms = true, exactUniqueness = true,
       correlations = true, columns = Seq("x", "y"))
@@ -593,7 +592,7 @@ class MetadataSpec extends SparkSpec {
   test("training statistics are versioned per training dataset") {
     import graft.ir.Query
     import graft.ops.Transformations
-    val wh = Files.createTempDirectory("graft_tdstats").toString
+    val wh = tempDir("graft_tdstats").toString
     val fs = new graft.catalog.FeatureStore(spark, warehouseDir = wh)
     def fg(t: String) = graft.catalog.TestTables.fg(spark, sfDir, t)
     val view = graft.view.FeatureView("tdvstats", 1,
@@ -622,7 +621,7 @@ class MetadataSpec extends SparkSpec {
 
   test("auto statistics on ingestion when the store opts in") {
     import graft.model.StatisticsConfig
-    val wh = Files.createTempDirectory("graft_autostats").toString
+    val wh = tempDir("graft_autostats").toString
     val fs = new graft.catalog.FeatureStore(spark, warehouseDir = wh,
       autoComputeStatistics = true)
     val fg = fs.createFeatureGroup("auto",

@@ -26,8 +26,7 @@ class MetastoreSpec extends SparkSpec {
   }
 
   test("managed + external tables survive a process restart") {
-    val msDir = java.nio.file.Files
-      .createTempDirectory("graft_ms_spec").toString
+    val msDir = tempDir("graft_ms_spec").toString
     val w = fork(Seq("write", msDir, sfDir))
     val wLine = w.find(_.startsWith("GRAFT_MS_WRITE")).getOrElse(
       fail(s"no write marker in:\n${w.takeRight(20).mkString("\n")}"))

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.PointInTimeJoin
-import org.apache.spark.sql.Row
 
 class PitJoinSpec extends SparkSpec {
   import spark.implicits._

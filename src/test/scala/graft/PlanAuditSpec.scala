@@ -42,7 +42,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("stateful plans pass the same walker: lake snapshot and monitoring agg") {
     // q36 analog: lake lifecycle's read side
-    val wh = java.nio.file.Files.createTempDirectory("graft_audit").toString
+    val wh = tempDir("graft_audit").toString
     val fs = new graft.catalog.FeatureStore(spark, warehouseDir = wh)
     val fgrp = fs.createFeatureGroup("audited",
       Seq((1L, "a"), (2L, "b")).toDF("id", "v"), primaryKey = Seq("id"))
@@ -60,7 +60,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("stateful plans pass the same walker: streaming micro-batch (q34/q48 analogs)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_audit_stream")
+    val dir = tempDir("graft_audit_stream")
     val src = dir.resolve("src").toString
     spark.read.parquet(s"$sfDir/events.parquet")
       .select("event_id", "user_id", "ts", "value")
@@ -86,7 +86,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("keyPruneAboveWindow flags a semi-join above the lake's window, not the keyed read") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_audit_keyed").toString
+    val wh = tempDir("graft_audit_keyed").toString
     val fs = new graft.catalog.FeatureStore(spark, warehouseDir = wh)
     val fgrp = fs.createFeatureGroup("keyed",
       Seq((1L, "a"), (2L, "b")).toDF("id", "v"), primaryKey = Seq("id"))

@@ -2,7 +2,6 @@ package graft
 
 import graft.ir._
 import graft.ir.Dsl._
-import graft.model.FeatureGroup
 import graft.ops.PointInTimeJoin
 import graft.planner.QueryPlanner
 import org.apache.spark.sql.functions._
@@ -129,7 +128,7 @@ class PropertySpec extends SparkSpec {
 
     forSamples(opsGen, n = 5) { ops =>
       val fs = new graft.catalog.FeatureStore(spark, warehouseDir =
-        java.nio.file.Files.createTempDirectory("graft_prop_lake").toString)
+        tempDir("graft_prop_lake").toString)
       val init = Seq((0L, "init0"), (1L, "init1")).toDF("id", "v")
       val fg = fs.createFeatureGroup("m", init, primaryKey = Seq("id"))
       val root = fg.source.asInstanceOf[graft.model.LakeSource].root

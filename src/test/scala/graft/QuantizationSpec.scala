@@ -61,7 +61,7 @@ class QuantizationSpec extends SparkSpec {
 
   test("quantized IVF index persists and searches with high recall") {
     import graft.ops.IvfIndex
-    val tmp = java.nio.file.Files.createTempDirectory("graft_qivf").toString
+    val tmp = tempDir("graft_qivf").toString
     val idx = IvfIndex.build(emb, "vec_id", "embedding",
       nCells = 4, trainSampleFraction = 0.5, maxIter = 8)
     val qi = IvfIndex.quantize(idx, "vec_id", "embedding")

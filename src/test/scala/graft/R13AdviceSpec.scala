@@ -101,8 +101,7 @@ class R13AdviceSpec extends SparkSpec {
       pinned.unpersist()
       // reliable = Dataset.checkpoint — the cluster setting: blocks
       // survive executor loss because they live in the checkpoint dir
-      val ckDir = java.nio.file.Files
-        .createTempDirectory("graft_ck").toString
+      val ckDir = tempDir("graft_ck").toString
       spark.sparkContext.setCheckpointDir(ckDir)
       spark.conf.set(Materialize.ModeKey, "reliable")
       val rel = Materialize.pin(df)

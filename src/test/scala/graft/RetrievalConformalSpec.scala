@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.{ProductQuantization, Similarity, Statistics, TextAnalysis}
-import org.apache.spark.sql.functions._
 
 /** Round-10 retrieval + calibration additions: BM25, reciprocal-rank
   * fusion, product quantization, split-conformal thresholds.

@@ -16,7 +16,7 @@ class SparkSessionsSpec extends SparkSpec {
     // shared session's settings; put them back for the suites after this one
     val sqlConf = running.sessionState.conf
     val before = sqlConf.getAllConfs
-    val metastore = Files.createTempDirectory("graft_warm_metastore")
+    val metastore = tempDir("graft_warm_metastore")
     try {
       val warnings = scala.collection.mutable.Buffer.empty[String]
       val s = SparkSessions.local(partitions, "graft-warm", Some(metastore.toString),

@@ -35,6 +35,15 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val sfDir = "/root/testdata/sf0.001"
 
+  /** A fresh directory named `prefix…` under the system temp dir, deleted
+    * with everything in it when the JVM exits.
+    */
+  protected def tempDir(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    SparkSpec.made.add(dir)
+    dir
+  }
+
   /** Runs `body` in its own job group and counts the Spark jobs it
     * started, and returns the SQL executions it ran, with their names. A
     * sentinel job started after it drains the listener queue, so a count
@@ -80,4 +89,10 @@ abstract class SparkSpec extends AnyFunSuite {
     val (out, jobs, executions) = observed(body)
     (out, jobs, executions.groupBy(_._1).map { case (n, es) => n -> es.size })
   }
+}
+
+object SparkSpec {
+  private val made = new ConcurrentLinkedQueue[java.nio.file.Path]
+  Runtime.getRuntime.addShutdownHook(
+    new Thread(() => made.forEach(Bench.deleteRecursively(_))))
 }

@@ -1,9 +1,8 @@
 package graft
 
-import graft.ir.{Query, TimeTravel}
+import graft.ir.Query
 import graft.planner.QueryPlanner
 import graft.sources.Lake
-import java.nio.file.Files
 
 class SqlExtensionsSpec extends SparkSpec {
   import spark.implicits._
@@ -61,7 +60,7 @@ class SqlExtensionsSpec extends SparkSpec {
 
   test("planner honors per-branch time travel on lake-backed groups") {
     val fs = new graft.catalog.FeatureStore(spark,
-      warehouseDir = Files.createTempDirectory("graft_tt").toString)
+      warehouseDir = tempDir("graft_tt").toString)
     val fg = fs.createFeatureGroup("tt_fg",
       Seq((1L, "v1"), (2L, "w1")).toDF("id", "v"), primaryKey = Seq("id"))
     val root = fg.source.asInstanceOf[graft.model.LakeSource].root
@@ -96,7 +95,7 @@ class SqlExtensionsSpec extends SparkSpec {
 
   test("as_of stamps nested join branches unless they carry their own") {
     val fs = new graft.catalog.FeatureStore(spark,
-      warehouseDir = Files.createTempDirectory("graft_tt2").toString)
+      warehouseDir = tempDir("graft_tt2").toString)
     val a = fs.createFeatureGroup("tt_a",
       Seq((1L, "a1")).toDF("id", "av"), primaryKey = Seq("id"))
     val b = fs.createFeatureGroup("tt_b",

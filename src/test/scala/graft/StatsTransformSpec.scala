@@ -85,7 +85,7 @@ class StatsTransformSpec extends SparkSpec {
 
   test("feature store sql() runs over registered group views") {
     val fs = new graft.catalog.FeatureStore(spark,
-      warehouseDir = java.nio.file.Files.createTempDirectory("graft_sql").toString)
+      warehouseDir = tempDir("graft_sql").toString)
     fs.createFeatureGroup("sqlfg",
       Seq((1L, 5.0), (2L, 7.0)).toDF("id", "x"), primaryKey = Seq("id"))
     val n = fs.sql("SELECT sum(x) AS s FROM sqlfg_1").collect().head.getDouble(0)

@@ -2,7 +2,6 @@ package graft
 
 import graft.sources.TfRecordFiles
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** TFRecord format: golden-byte protobuf encoding (hand-computed from
@@ -74,8 +73,7 @@ class TfRecordFilesSpec extends SparkSpec {
       (2L, None, Some("x"), Some(false)),
       (3L, Some(-0.75d), None, None))
       .toDF("id", "score", "name", "flag").repartition(2)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_tfr").toString + "/td"
+    val path = tempDir("graft_tfr").toString + "/td"
     TfRecordFiles.write(df, path)
     val parts = new java.io.File(path).listFiles()
       .filter(_.getName.endsWith(".tfrecord"))
@@ -115,8 +113,7 @@ class TfRecordFilesSpec extends SparkSpec {
       (2L, "b", Some(Seq.empty[Option[Long]]), None),
       (3L, null.asInstanceOf[String], None, Some(Seq.empty[Float])))
       .toDF("id", "tag", "xs", "ws").repartition(2)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_tfr_seq").toString + "/td"
+    val path = tempDir("graft_tfr_seq").toString + "/td"
     TfRecordFiles.writeSequence(df, path)
     val back = TfRecordFiles.readSequence(spark, path, df.schema)
       .orderBy("id").collect()
@@ -131,8 +128,7 @@ class TfRecordFilesSpec extends SparkSpec {
   }
 
   test("corrupted payload fails the crc check loudly") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_tfr_bad").toString + "/td"
+    val path = tempDir("graft_tfr_bad").toString + "/td"
     TfRecordFiles.write(Seq((1L, "a")).toDF("id", "v").coalesce(1), path)
     val part = new java.io.File(path).listFiles()
       .filter(_.getName.endsWith(".tfrecord")).head

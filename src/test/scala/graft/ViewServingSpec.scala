@@ -9,7 +9,6 @@ import graft.view.{FeatureView, TrainingDataset}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 import scala.jdk.CollectionConverters._
 
@@ -61,7 +60,7 @@ class ViewServingSpec extends SparkSpec {
     val df = spark.read.parquet(s"$sfDir/nation.parquet")
     val res = TrainingDataset.Result(Map("train" -> df), Map())
     Seq("parquet", "csv", "tsv", "orc", "json").foreach { f =>
-      val dir = Files.createTempDirectory(s"graft_td_$f").toString + "/out"
+      val dir = tempDir(s"graft_td_$f").toString + "/out"
       TrainingDataset.write(res, dir, format = f, coalesce = true)
       val back = TrainingDataset.read(spark, dir, format = f)
       assert(back.count() === df.count(), s"format $f")
@@ -79,7 +78,7 @@ class ViewServingSpec extends SparkSpec {
       .union(Seq((99, "x,y"), (100, "q\"z")).toDF("n_nationkey", "n_name"))
     val rows = base.collect().map(r => (r.getInt(0), r.getString(1)))
     for (f <- Seq("csv", "tsv")) {
-      val dir = Files.createTempDirectory(s"graft_opts_$f").toString + "/out"
+      val dir = tempDir(s"graft_opts_$f").toString + "/out"
       TrainingDataset.write(
         TrainingDataset.Result(Map("train" -> base), Map()),
         dir, format = f, coalesce = true)
@@ -145,7 +144,7 @@ class ViewServingSpec extends SparkSpec {
 
   test("streaming materialization lands batches in the lake exactly once") {
     import graft.streaming.Streaming
-    val tmp = Files.createTempDirectory("graft_stream").toString
+    val tmp = tempDir("graft_stream").toString
     val src = s"$tmp/src"; new java.io.File(src).mkdirs()
     val fs = new graft.catalog.FeatureStore(spark, warehouseDir = s"$tmp/wh")
 
@@ -192,7 +191,7 @@ class ViewServingSpec extends SparkSpec {
 
   test("in-stream dedup drops duplicate keys within the watermark") {
     import graft.streaming.Streaming
-    val tmp = Files.createTempDirectory("graft_dedup").toString
+    val tmp = tempDir("graft_dedup").toString
     val src = s"$tmp/src"; new java.io.File(src).mkdirs()
     val data = Seq(
       (1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), "a"),
@@ -215,7 +214,7 @@ class ViewServingSpec extends SparkSpec {
 
   test("streaming dedup drops rows already fingerprinted in the corpus") {
     import graft.streaming.Streaming
-    val tmp = Files.createTempDirectory("graft_histdedup").toString
+    val tmp = tempDir("graft_histdedup").toString
     val src = s"$tmp/src"; new java.io.File(src).mkdirs()
     val incoming = Seq((10L, "brand new words entirely"),
       (11L, "Hello   World"), (12L, "another fresh document"))
@@ -242,7 +241,7 @@ class ViewServingSpec extends SparkSpec {
 
   test("sessionization: custom state closes sessions by gap and watermark") {
     import graft.streaming.Streaming
-    val tmp = Files.createTempDirectory("graft_sess").toString
+    val tmp = tempDir("graft_sess").toString
     val src = s"$tmp/src"; new java.io.File(src).mkdirs()
     def minutes(m: Long) = new java.sql.Timestamp(m * 60000L)
     // batch 1: key a has two bursts separated by > gap; key b one burst
@@ -295,7 +294,7 @@ class ViewServingSpec extends SparkSpec {
 
   test("sessionization under the RocksDB state store matches the default provider") {
     import graft.streaming.Streaming
-    val tmp = Files.createTempDirectory("graft_rocks").toString
+    val tmp = tempDir("graft_rocks").toString
     val src = s"$tmp/src"; new java.io.File(src).mkdirs()
     def minutes(m: Long) = new java.sql.Timestamp(m * 60000L)
     Seq(("a", minutes(1), 1.0), ("a", minutes(2), 2.0),
@@ -329,7 +328,7 @@ class ViewServingSpec extends SparkSpec {
 
   test("sessionization: native session_window path matches the custom-state path") {
     import graft.streaming.Streaming
-    val tmp = Files.createTempDirectory("graft_sessn").toString
+    val tmp = tempDir("graft_sessn").toString
     val src = s"$tmp/src"; new java.io.File(src).mkdirs()
     def minutes(m: Long) = new java.sql.Timestamp(m * 60000L)
     Seq(("a", minutes(1), 1.0), ("a", minutes(2), 2.0),
@@ -519,7 +518,7 @@ class ViewServingSpec extends SparkSpec {
     // lake groups: a left group with an update and a delete (key 2) over
     // its load, and a right group with an update
     val store = new graft.catalog.FeatureStore(spark,
-      warehouseDir = Files.createTempDirectory("graft_lake_eq").toString)
+      warehouseDir = tempDir("graft_lake_eq").toString)
     val customers = spark.read.parquet(s"$sfDir/customer.parquet")
       .select("c_custkey", "c_name", "c_acctbal", "c_nationkey")
     val lakeCustomer = store.createFeatureGroup("eq_customer", customers,
@@ -702,7 +701,7 @@ class ViewServingSpec extends SparkSpec {
 
   test("serving: driver-local keys that do not widen start no keyed read before the default joins") {
     val store = new graft.catalog.FeatureStore(spark,
-      warehouseDir = Files.createTempDirectory("graft_lake_widen").toString)
+      warehouseDir = tempDir("graft_lake_widen").toString)
     val g = store.createFeatureGroup("widen",
       Seq((1L, 10.0, "a"), (2L, 20.0, "b")).toDF("id", "rk", "v"), primaryKey = Seq("id"))
     val r = store.createFeatureGroup("widen_r",
@@ -735,7 +734,7 @@ class ViewServingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.Exchange
     val store = new graft.catalog.FeatureStore(spark,
-      warehouseDir = Files.createTempDirectory("graft_lake_serving").toString)
+      warehouseDir = tempDir("graft_lake_serving").toString)
     val g = store.createFeatureGroup("lakeserve",
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), primaryKey = Seq("id"))
     store.insert(g, Seq((3L, "c2"), (4L, "d")).toDF("id", "v"))
