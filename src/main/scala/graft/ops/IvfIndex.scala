@@ -5,7 +5,6 @@ import graft.functions.VectorFunctions.{Cosine, Metric}
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** IVF (inverted-file) approximate nearest neighbor index: the classic
@@ -320,24 +319,8 @@ object IvfIndex {
       .select(col(queryIdCol), col(idCol),
         VectorFunctions.vecInt8L2(col("_qv"), col("_qq"), qi.params.scales)
           .as("_ad"))
-    val w1 = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("_ad").asc, col(idCol).asc)
-    val cands = approx.withColumn("_r", row_number().over(w1))
-      .filter(col("_r") <= k * refine)
-      .select(col(queryIdCol), col(idCol))
-
-    val w2 = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("_score").asc, col(idCol).asc)
-    cands
-      .join(corpus.select(col(idCol), col(vecCol)), Seq(idCol))
-      .join(broadcast(queries.select(col(queryIdCol), col(queryVecCol))),
-        Seq(queryIdCol))
-      .withColumn("_score",
-        VectorFunctions.vecL2(col(vecCol), col(queryVecCol)))
-      .withColumn("_rank", row_number().over(w2))
-      .filter(col("_rank") <= k)
-      .select(col(queryIdCol), col(idCol), col("_score").as("score"),
-        col("_rank").as("rank"))
+    Quantization.rerankL2(approx, corpus, idCol, vecCol,
+      queries, queryIdCol, queryVecCol, k, refine)
   }
 
   /** Search: probe the `nProbe` nearest cells per query, exact-score only
@@ -358,12 +341,10 @@ object IvfIndex {
       case VectorFunctions.L2 => col("_score").asc
       case _                  => col("_score").desc
     }
-    val w = Window.partitionBy(col(queryIdCol)).orderBy(ord, col(idCol).asc)
-    index.assigned.join(broadcast(probes), "_cell")
+    val scored = index.assigned.join(broadcast(probes), "_cell")
       .filter(if (excludeSelf) col(idCol) =!= col(queryIdCol) else lit(true))
       .withColumn("_score", score)
-      .withColumn("_rank", row_number().over(w))
-      .filter(col("_rank") <= k)
+    ProductQuantization.topK(scored, queryIdCol, idCol, ord, k)
       .select(col(queryIdCol), col(idCol), col("_score").as("score"),
         col("_rank").as("rank"))
   }

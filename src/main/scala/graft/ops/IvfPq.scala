@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** IVF-PQ: the composition that makes billion-vector ANN tractable
@@ -83,10 +82,7 @@ object IvfPq {
     val scored = index.encoded.join(broadcast(lut), Seq("_cell"))
       .withColumn("_adc", VectorFunctions.vecAdcScore(
         col("codes"), col("_lut"), index.pq.stride))
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("_adc").asc, col(idCol).asc)
-    scored.withColumn("_rank", row_number().over(w))
-      .filter(col("_rank") <= k)
+    ProductQuantization.topK(scored, queryIdCol, idCol, col("_adc").asc, k)
       .select(col(queryIdCol), col(idCol), col("_adc").as("adc_score"),
         col("_rank").as("rank"))
   }

@@ -159,6 +159,43 @@ object Monitoring {
     MonitoringResult(cfg.name, nowMillis, det, ref, diff, shift)
   }
 
+  /** The drift family's one data-sized pass: per (keys, `cell`) the
+    * reference and detection row counts, both windows in one
+    * map-side-combined groupBy. Rows with a NULL window flag belong to
+    * NEITHER window (the SQL oracle's CASE WHEN / CASE WHEN NOT counts
+    * them in neither total) — filtered out so engine and oracle agree
+    * (r12 ADVICE, battery-wide).
+    */
+  private def windowCounts(df: DataFrame, keys: Seq[String],
+                           cell: org.apache.spark.sql.Column,
+                           isRef: org.apache.spark.sql.Column): DataFrame =
+    df.filter(isRef.isNotNull)
+      .groupBy((keys.map(col) :+ cell): _*)
+      .agg(sum(when(isRef, 1L).otherwise(0L)).as("ref_n"),
+        sum(when(isRef, 0L).otherwise(1L)).as("det_n"))
+
+  /** `valueCol`'s cell `bin` on the fixed grid of `bins` equal-width
+    * slices of [lo, hi), the tails clamped into the edge bins.
+    */
+  private def binOf(valueCol: org.apache.spark.sql.Column, bins: Int,
+                    lo: Double, hi: Double): org.apache.spark.sql.Column = {
+    require(bins > 0 && hi > lo, "need bins > 0 and hi > lo")
+    val width = (hi - lo) / bins
+    least(greatest(floor((valueCol - lit(lo)) / lit(width)),
+      lit(0L)), lit((bins - 1).toLong)).cast("int").as("bin")
+  }
+
+  /** A count frame's cells merged: the input may carry UNMERGED stored
+    * partials (several rows per (keys, bin) cell — the documented "fold
+    * the new window's counts into the store" usage); merging first makes
+    * smoothing / cumsums apply once per cell, not once per partial row
+    * (r12 ADVICE). Same grouping keys as the producing aggregate, so no
+    * extra exchange when the input is already merged.
+    */
+  private def mergedCounts(counts: DataFrame, keys: Seq[String]): DataFrame =
+    counts.groupBy((keys.map(col) :+ col("bin")): _*)
+      .agg(sum("ref_n").as("ref_n"), sum("det_n").as("det_n"))
+
   /** Population stability index between a reference and a detection
     * population of `valueCol`, per key group — THE standard
     * feature-drift score (PSI = Σ (pᵢ − qᵢ)·ln(pᵢ/qᵢ) over value bins;
@@ -181,17 +218,7 @@ object Monitoring {
                valueCol: org.apache.spark.sql.Column,
                isRef: org.apache.spark.sql.Column,
                bins: Int, lo: Double, hi: Double): DataFrame = {
-    require(bins > 0 && hi > lo, "need bins > 0 and hi > lo")
-    val width = (hi - lo) / bins
-    val bin = least(greatest(floor((valueCol - lit(lo)) / lit(width)),
-      lit(0L)), lit((bins - 1).toLong)).cast("int")
-    // rows with a NULL window flag belong to NEITHER window (the SQL
-    // oracle's CASE WHEN / CASE WHEN NOT counts them in neither total) —
-    // filter them out so engine and oracle agree (r12 ADVICE, battery-wide)
-    val counts = df.filter(isRef.isNotNull)
-      .groupBy((keys.map(col) :+ bin.as("bin")): _*)
-      .agg(sum(when(isRef, 1L).otherwise(0L)).as("ref_n"),
-        sum(when(isRef, 0L).otherwise(1L)).as("det_n"))
+    val counts = windowCounts(df, keys, binOf(valueCol, bins, lo, hi), isRef)
     psiFromCounts(counts, keys, bins)
   }
 
@@ -203,14 +230,7 @@ object Monitoring {
     */
   def psiFromCounts(counts0: DataFrame, keys: Seq[String],
                     bins: Int): DataFrame = {
-    // input may carry UNMERGED stored partials (several rows per
-    // (keys, bin) cell — the documented "fold the new window's counts
-    // into the store" usage); merge them first so smoothing / cumsums
-    // apply once per cell, not once per partial row (r12 ADVICE). Same
-    // grouping keys as the producing aggregate, so no extra exchange
-    // when the input is already merged.
-    val counts = counts0.groupBy((keys.map(col) :+ col("bin")): _*)
-      .agg(sum("ref_n").as("ref_n"), sum("det_n").as("det_n"))
+    val counts = mergedCounts(counts0, keys)
     // complete the bin grid from the counts frame itself (already tiny —
     // never a data scan): empty cells must smooth identically on both
     // sides of an oracle compare
@@ -245,17 +265,7 @@ object Monitoring {
               valueCol: org.apache.spark.sql.Column,
               isRef: org.apache.spark.sql.Column,
               bins: Int, lo: Double, hi: Double): DataFrame = {
-    require(bins > 0 && hi > lo, "need bins > 0 and hi > lo")
-    val width = (hi - lo) / bins
-    val bin = least(greatest(floor((valueCol - lit(lo)) / lit(width)),
-      lit(0L)), lit((bins - 1).toLong)).cast("int")
-    // rows with a NULL window flag belong to NEITHER window (the SQL
-    // oracle's CASE WHEN / CASE WHEN NOT counts them in neither total) —
-    // filter them out so engine and oracle agree (r12 ADVICE, battery-wide)
-    val counts = df.filter(isRef.isNotNull)
-      .groupBy((keys.map(col) :+ bin.as("bin")): _*)
-      .agg(sum(when(isRef, 1L).otherwise(0L)).as("ref_n"),
-        sum(when(isRef, 0L).otherwise(1L)).as("det_n"))
+    val counts = windowCounts(df, keys, binOf(valueCol, bins, lo, hi), isRef)
     ksFromCounts(counts, keys)
   }
 
@@ -264,14 +274,7 @@ object Monitoring {
     * the ECDF is constant across them, so they can never host the max.
     */
   def ksFromCounts(counts0: DataFrame, keys: Seq[String]): DataFrame = {
-    // input may carry UNMERGED stored partials (several rows per
-    // (keys, bin) cell — the documented "fold the new window's counts
-    // into the store" usage); merge them first so smoothing / cumsums
-    // apply once per cell, not once per partial row (r12 ADVICE). Same
-    // grouping keys as the producing aggregate, so no extra exchange
-    // when the input is already merged.
-    val counts = counts0.groupBy((keys.map(col) :+ col("bin")): _*)
-      .agg(sum("ref_n").as("ref_n"), sum("det_n").as("det_n"))
+    val counts = mergedCounts(counts0, keys)
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col("bin").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -300,18 +303,8 @@ object Monitoring {
                        valueCol: org.apache.spark.sql.Column,
                        isRef: org.apache.spark.sql.Column,
                        bins: Int, lo: Double, hi: Double): DataFrame = {
-    require(bins > 0 && hi > lo, "need bins > 0 and hi > lo")
-    val width = (hi - lo) / bins
-    val bin = least(greatest(floor((valueCol - lit(lo)) / lit(width)),
-      lit(0L)), lit((bins - 1).toLong)).cast("int")
-    // rows with a NULL window flag belong to NEITHER window (the SQL
-    // oracle's CASE WHEN / CASE WHEN NOT counts them in neither total) —
-    // filter them out so engine and oracle agree (r12 ADVICE, battery-wide)
-    val counts = df.filter(isRef.isNotNull)
-      .groupBy((keys.map(col) :+ bin.as("bin")): _*)
-      .agg(sum(when(isRef, 1L).otherwise(0L)).as("ref_n"),
-        sum(when(isRef, 0L).otherwise(1L)).as("det_n"))
-    wassersteinFromCounts(counts, keys, width)
+    val counts = windowCounts(df, keys, binOf(valueCol, bins, lo, hi), isRef)
+    wassersteinFromCounts(counts, keys, (hi - lo) / bins)
   }
 
   /** W1 from a stored per-(keys, bin) count frame — zero-scan. Empty
@@ -323,14 +316,7 @@ object Monitoring {
     */
   def wassersteinFromCounts(counts0: DataFrame, keys: Seq[String],
                             binWidth: Double): DataFrame = {
-    // input may carry UNMERGED stored partials (several rows per
-    // (keys, bin) cell — the documented "fold the new window's counts
-    // into the store" usage); merge them first so smoothing / cumsums
-    // apply once per cell, not once per partial row (r12 ADVICE). Same
-    // grouping keys as the producing aggregate, so no extra exchange
-    // when the input is already merged.
-    val counts = counts0.groupBy((keys.map(col) :+ col("bin")): _*)
-      .agg(sum("ref_n").as("ref_n"), sum("det_n").as("det_n"))
+    val counts = mergedCounts(counts0, keys)
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col("bin").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -370,17 +356,7 @@ object Monitoring {
                valueCol: org.apache.spark.sql.Column,
                isRef: org.apache.spark.sql.Column,
                bins: Int, lo: Double, hi: Double): DataFrame = {
-    require(bins > 0 && hi > lo, "need bins > 0 and hi > lo")
-    val width = (hi - lo) / bins
-    val bin = least(greatest(floor((valueCol - lit(lo)) / lit(width)),
-      lit(0L)), lit((bins - 1).toLong)).cast("int")
-    // rows with a NULL window flag belong to NEITHER window (the SQL
-    // oracle's CASE WHEN / CASE WHEN NOT counts them in neither total) —
-    // filter them out so engine and oracle agree (r12 ADVICE, battery-wide)
-    val counts = df.filter(isRef.isNotNull)
-      .groupBy((keys.map(col) :+ bin.as("bin")): _*)
-      .agg(sum(when(isRef, 1L).otherwise(0L)).as("ref_n"),
-        sum(when(isRef, 0L).otherwise(1L)).as("det_n"))
+    val counts = windowCounts(df, keys, binOf(valueCol, bins, lo, hi), isRef)
     jsdFromCounts(counts, keys, bins)
   }
 
@@ -391,14 +367,7 @@ object Monitoring {
     */
   def jsdFromCounts(counts0: DataFrame, keys: Seq[String],
                     bins: Int): DataFrame = {
-    // input may carry UNMERGED stored partials (several rows per
-    // (keys, bin) cell — the documented "fold the new window's counts
-    // into the store" usage); merge them first so smoothing / cumsums
-    // apply once per cell, not once per partial row (r12 ADVICE). Same
-    // grouping keys as the producing aggregate, so no extra exchange
-    // when the input is already merged.
-    val counts = counts0.groupBy((keys.map(col) :+ col("bin")): _*)
-      .agg(sum("ref_n").as("ref_n"), sum("det_n").as("det_n"))
+    val counts = mergedCounts(counts0, keys)
     val grid = counts.select(keys.map(col): _*).distinct()
       .withColumn("bin", explode(sequence(lit(0), lit(bins - 1))))
     val filled = grid.join(counts, keys :+ "bin", "left")
@@ -435,10 +404,7 @@ object Monitoring {
   def chiSquareDrift(df: DataFrame, keys: Seq[String],
                      categoryCol: org.apache.spark.sql.Column,
                      isRef: org.apache.spark.sql.Column): DataFrame = {
-    val counts = df.filter(isRef.isNotNull)
-      .groupBy((keys.map(col) :+ categoryCol.as("category")): _*)
-      .agg(sum(when(isRef, 1L).otherwise(0L)).as("ref_n"),
-        sum(when(isRef, 0L).otherwise(1L)).as("det_n"))
+    val counts = windowCounts(df, keys, categoryCol.as("category"), isRef)
     val wAll = Window.partitionBy(keys.map(col): _*)
     val t = counts
       .withColumn("_rt", sum(col("ref_n")).over(wAll))

@@ -150,10 +150,7 @@ object ProductQuantization {
     val scored = encoded.crossJoin(broadcast(lut))
       .withColumn("_adc",
         VectorFunctions.vecAdcScore(col(codesCol), col("_lut"), model.stride))
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("_adc").asc, col(idCol).asc)
-    scored.withColumn("_rank", row_number().over(w))
-      .filter(col("_rank") <= k)
+    topK(scored, queryIdCol, idCol, col("_adc").asc, k)
       .select(col(queryIdCol), col(idCol), col("_adc").as("adc_score"),
         col("_rank").as("rank"))
   }
@@ -202,10 +199,23 @@ object ProductQuantization {
       case VectorFunctions.L2 => col("_score").asc
       case _                  => col("_score").desc
     }
-    val w = Window.partitionBy(col(queryIdCol)).orderBy(ord, col(idCol).asc)
-    rescored.withColumn("_rank", row_number().over(w))
-      .filter(col("_rank") <= k)
+    topK(rescored, queryIdCol, idCol, ord, k)
       .select(col(queryIdCol), col(idCol), col("_score").as("score"),
         col("_rank").as("rank"))
   }
+
+  /** The vector searches' one per-query top-k: `scored` ranked within
+    * each `queryIdCol` by `order`, ties broken by `idCol` ascending, with
+    * the ranks ≤ `k` kept in column `rank`. ONE window: Spark's
+    * InferWindowGroupLimit already plants a partial (map-side)
+    * WindowGroupLimit before the exchange, so the shuffle carries
+    * ≤ k × partitions × queries rows — a hand-rolled two-stage top-k
+    * just adds a second full Exchange for the same pruning.
+    */
+  private[graft] def topK(scored: DataFrame, queryIdCol: String,
+                          idCol: String, order: org.apache.spark.sql.Column,
+                          k: Int, rank: String = "_rank"): DataFrame =
+    scored.withColumn(rank, row_number().over(
+        Window.partitionBy(col(queryIdCol)).orderBy(order, col(idCol).asc)))
+      .filter(col(rank) <= k)
 }

@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Int8 scalar quantization for embedding columns — the memory/bandwidth
@@ -84,22 +83,30 @@ object Quantization {
       .filter(if (excludeSelf) col(idCol) =!= col(queryIdCol) else lit(true))
       .select(col(queryIdCol), col(idCol),
         VectorFunctions.vecInt8L2(col("_qv"), col("_qq"), p.scales).as("_ad"))
-    val w1 = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("_ad").asc, col(idCol).asc)
-    val cands = approx.withColumn("_r", row_number().over(w1))
-      .filter(col("_r") <= k * refine)
-      .select(col(queryIdCol), col(idCol))
+    rerankL2(approx, corpus, idCol, vecCol,
+      queries, queryIdCol, queryVecCol, k, refine)
+  }
 
+  /** The int8 searches' shared tail: the top k·refine of `approx`
+    * (queryId, id, int8 distance `_ad`) per query, joined back to
+    * `corpus` for float vectors and re-ranked by exact L2 to the top k.
+    * Used by [[quantizedKnn]] and [[IvfIndex.searchQuantized]].
+    */
+  private[graft] def rerankL2(approx: DataFrame, corpus: DataFrame,
+                              idCol: String, vecCol: String,
+                              queries: DataFrame, queryIdCol: String,
+                              queryVecCol: String, k: Int,
+                              refine: Int): DataFrame = {
+    val cands = ProductQuantization.topK(approx, queryIdCol, idCol,
+        col("_ad").asc, k * refine, rank = "_r")
+      .select(col(queryIdCol), col(idCol))
     val withVecs = cands
       .join(corpus.select(col(idCol), col(vecCol)), Seq(idCol))
       .join(broadcast(queries.select(col(queryIdCol), col(queryVecCol))),
         Seq(queryIdCol))
       .withColumn("_score",
         VectorFunctions.vecL2(col(vecCol), col(queryVecCol)))
-    val w2 = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("_score").asc, col(idCol).asc)
-    withVecs.withColumn("_rank", row_number().over(w2))
-      .filter(col("_rank") <= k)
+    ProductQuantization.topK(withVecs, queryIdCol, idCol, col("_score").asc, k)
       .select(col(queryIdCol), col(idCol), col("_score").as("score"),
         col("_rank").as("rank"))
   }

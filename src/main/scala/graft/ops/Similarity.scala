@@ -58,15 +58,8 @@ object Similarity {
       .withColumn("_score", score(metric, col(vecCol), col(queryVecCol)))
       .select(col(queryIdCol), col(idCol), col("_score"))
 
-    // ONE window: Spark's InferWindowGroupLimit already plants a partial
-    // (map-side) WindowGroupLimit before the exchange, so the shuffle
-    // carries ≤ k × partitions × queries rows — a hand-rolled two-stage
-    // top-k just adds a second full Exchange for the same pruning
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(ordering(metric, col("_score")), col(idCol).asc)
-    pairs
-      .withColumn("_rank", row_number().over(w))
-      .filter(col("_rank") <= k)
+    ProductQuantization.topK(pairs, queryIdCol, idCol,
+        ordering(metric, col("_score")), k)
       .select(col(queryIdCol), col(idCol), col("_score").as("score"),
         col("_rank").as("rank"))
   }
@@ -291,11 +284,8 @@ object Similarity {
       .dropDuplicates(queryIdCol, idCol)
       .withColumn("_score", score(metric, col(vecCol), col(queryVecCol)))
 
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(ordering(metric, col("_score")), col(idCol).asc)
-    candidates
-      .withColumn("_rank", row_number().over(w))
-      .filter(col("_rank") <= k)
+    ProductQuantization.topK(candidates, queryIdCol, idCol,
+        ordering(metric, col("_score")), k)
       .select(col(queryIdCol), col(idCol), col("_score").as("score"),
         col("_rank").as("rank"))
   }
@@ -356,10 +346,8 @@ object Similarity {
       .filter(col(idCol) =!= col(queryIdCol) &&
         col(idCol) =!= col(relevantIdCol))
       .withColumn("_score", score(metric, col(vecCol), col(queryVecCol)))
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(ordering(metric, col("_score")), col(idCol).asc)
-    pairs.withColumn("_rank", row_number().over(w))
-      .filter(col("_rank") <= k)
+    ProductQuantization.topK(pairs, queryIdCol, idCol,
+        ordering(metric, col("_score")), k)
       .select(col(queryIdCol), col(idCol).as("negative_id"),
         col("_score").as("score"), col("_rank").as("rank"))
   }

@@ -437,8 +437,9 @@ private[graft] object StreamQueries {
       scale = Seq(AsIs)),
 
     // Avro CONTAINER-FILE training-dataset round trip: distributed write
-    // of real Object Container Files (core Avro runtime, no datasource
-    // jar), read back via the schema embedded in the container header.
+    // of real Object Container Files (core Avro runtime through the
+    // engine's own `avro` file source, no spark-avro jar), read back via
+    // the schema embedded in the container header.
     // The oracle is the plain projection — parity proves the container
     // write/read is lossless end to end under the driver's hash gate.
     // `price` rides the r10 logical-decimal path (bytes + decimal
@@ -455,8 +456,8 @@ private[graft] object StreamQueries {
           round(col("n_chars") / 7.0, 3).as("score"),
           (col("n_chars") * lit(3)).cast("decimal(12,2)").as("price"))
       val path = scratch(dir, "q115_avro_td") + "/td"
-      graft.sources.AvroFiles.write(docs, path)
-      graft.sources.AvroFiles.read(s, path)
+      docs.write.format("avro").mode("overwrite").save(path)
+      s.read.format("avro").load(path)
         .withColumn("price", col("price").cast("double"))
     }, by("doc_id"),
       // the avro container round trip is lossless, so the oracle is the
@@ -478,8 +479,8 @@ private[graft] object StreamQueries {
         .select(col("doc_id"), col("lang"), col("n_chars"),
           (col("n_chars") / 8.0).as("score"))
       val path = scratch(dir, "q116_tfrecord_td") + "/td"
-      graft.sources.TfRecordFiles.write(docs, path)
-      graft.sources.TfRecordFiles.read(s, path, docs.schema)
+      docs.write.format("tfrecord").mode("overwrite").save(path)
+      s.read.format("tfrecord").schema(docs.schema).load(path)
     }, by("doc_id"),
       // float32-exact values → the tfrecord round trip is lossless too
       """SELECT doc_id, lang, n_chars, n_chars / 8.0 AS score

@@ -1,109 +1,111 @@
 package graft.sources
 
+import java.io.OutputStream
+
 import org.apache.avro.Schema
 import org.apache.avro.file.{CodecFactory, DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader,
   GenericDatumWriter, GenericRecord}
 import org.apache.avro.mapred.FsInput
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
 
 import graft.functions.AvroCodec
 
-/** Avro CONTAINER-FILE training-dataset format (engine/spark.py:921-949
-  * writes `format("avro")`) without the spark-avro datasource jar: the
+/** Avro CONTAINER-FILE training-dataset format, `format("avro")`
+  * (engine/spark.py:921-949) without the spark-avro datasource jar: the
   * Object Container File layout — magic, schema JSON in the header,
   * sync-marker-delimited blocks — comes from Avro core's own
   * `DataFileWriter`/`DataFileReader`, which IS what the datasource wraps,
   * so the files interoperate with any stock Avro consumer and the schema
-  * travels inside the file.
+  * travels inside the file. Spark's side (task files, commit, session
+  * settings, projection) is [[RowFileFormat]]'s.
   *
-  * Scale shape: write is one `mapPartitions` pass — each task streams its
-  * partition into its own `part-*.avro` via the Hadoop FileSystem API
-  * (exactly the datasource's task layout; no driver funnel, no second
-  * shuffle). Read parallelizes the file list and streams each container
-  * per task. Row conversion reuses [[AvroCodec]]'s datum mapping, so the
-  * type contract (nullable unions, timestamp-micros, date) is identical
-  * to the wire codec's.
+  * Write option `codec` ∈ {null, deflate, snappy}; deflate by default.
+  * Row conversion reuses [[AvroCodec]]'s datum mapping, so the type
+  * contract (nullable unions, timestamp-micros, date, decimal) is
+  * identical to the wire codec's.
   *
-  * The FileSystem is resolved from the path URI with a fresh Hadoop conf
-  * on each task — local paths and default-conf HDFS work as-is;
-  * credentialed object stores would need their conf injected here the
-  * way [[Connectors]] does for the built-in readers.
+  * Read: the schema is the first file's (by sorted path) embedded writer
+  * schema — the container format's point — so no declared schema is
+  * needed. Each file is decoded against the reader schema of the columns
+  * the query needs, and Avro's schema resolution matches fields by NAME
+  * per file: a directory appended with a reordered writer schema decodes
+  * correctly instead of mis-assigning columns by position (ADVICE r9 #2).
   */
-object AvroFiles {
+class AvroFiles extends RowFileFormat {
+  override def shortName(): String = "avro"
+  override protected def extension: String = ".avro"
 
-  private def fs(path: String): FileSystem =
-    FileSystem.get(new java.net.URI(path).normalize() match {
-      case u if u.getScheme == null => new java.io.File(path).toURI
-      case u => u
-    }, new Configuration())
-
-  /** Write `df` as a directory of Avro container files. `codec` ∈
-    * {null, deflate, snappy}; mode ∈ {overwrite, append, errorifexists}.
-    */
-  def write(df: DataFrame, path: String, mode: String = "overwrite",
-            codec: String = "deflate",
-            recordName: String = "training_dataset"): Unit = {
-    val target = fs(path)
-    val dir = new Path(path)
-    if (target.exists(dir)) mode match {
-      case "overwrite" => target.delete(dir, true)
-      case "append" => ()
-      case _ => throw new IllegalStateException(
-        s"$path exists and mode is $mode")
+  override def inferSchema(spark: SparkSession, options: Map[String, String],
+                           files: Seq[FileStatus]): Option[StructType] =
+    files.map(_.getPath).sortBy(_.toString).headOption.map { first =>
+      val in = new DataFileReader[GenericRecord](
+        new FsInput(first, spark.sessionState.newHadoopConfWithOptions(options)),
+        new GenericDatumReader[GenericRecord]())
+      try AvroFiles.sparkSchema(in.getSchema) finally in.close()
     }
-    target.mkdirs(dir)
-    val schemaJson = AvroCodec.avroSchemaJson(df.schema, recordName)
-    val fieldTypes = df.schema.fields.map(_.dataType)
-    val pathStr = path
-    val codecName = codec
-    // one (file, rows-written) row per task — the collect is
-    // |partitions|-sized bookkeeping, the data never leaves the executors
-    val written = df.mapPartitions { rows =>
-      if (rows.isEmpty) Iterator.empty
-      else {
-        val schema = new Schema.Parser().parse(schemaJson)
-        val part = new Path(pathStr,
-          s"part-${java.util.UUID.randomUUID.toString.take(12)}.avro")
-        val out = FileSystem.get(part.toUri match {
-          case u if u.getScheme == null =>
-            new java.io.File(pathStr).toURI
-          case u => u
-        }, new Configuration()).create(part, true)
-        val writer = new DataFileWriter[GenericRecord](
-          new GenericDatumWriter[GenericRecord](schema))
-        writer.setCodec(codecName match {
-          case "null" => CodecFactory.nullCodec()
-          case "snappy" => CodecFactory.snappyCodec()
-          case _ => CodecFactory.deflateCodec(6)
-        })
-        writer.create(schema, out)
-        var n = 0L
-        rows.foreach { row =>
-          val rec = new GenericData.Record(schema)
+
+  override protected def encoder(schema: StructType,
+                                 options: Map[String, String])
+      : OutputStream => RowFileFormat.Sink = {
+    val schemaJson = AvroCodec.avroSchemaJson(schema, AvroFiles.RecordName)
+    val fieldTypes = schema.fields.map(_.dataType)
+    val codec = options.getOrElse("codec", "deflate")
+    out => {
+      val avroSchema = new Schema.Parser().parse(schemaJson)
+      val writer = new DataFileWriter[GenericRecord](
+        new GenericDatumWriter[GenericRecord](avroSchema))
+      writer.setCodec(codec match {
+        case "null" => CodecFactory.nullCodec()
+        case "snappy" => CodecFactory.snappyCodec()
+        case _ => CodecFactory.deflateCodec(6)
+      })
+      writer.create(avroSchema, out)
+      new RowFileFormat.Sink {
+        def write(row: Row): Unit = {
+          val rec = new GenericData.Record(avroSchema)
           var i = 0
           while (i < fieldTypes.length) {
             rec.put(i, AvroCodec.toDatum(row.get(i), fieldTypes(i)))
             i += 1
           }
           writer.append(rec)
-          n += 1
         }
-        writer.close()
-        Iterator(Row(part.toString, n))
+        def close(): Unit = writer.close()
       }
-    }(RowEncoder.encoderFor(StructType(Seq(
-      StructField("file", StringType), StructField("rows", LongType)))))
-      .collect()
-    require(written.map(_.getLong(1)).sum >= 0, "write bookkeeping")
+    }
   }
 
-  /** Avro writer schema (as written by [[write]]: flat nullable unions,
-    * logical timestamp-micros/date) → Spark schema.
+  override protected def decoder(required: StructType,
+                                 options: Map[String, String])
+      : (Path, Configuration) => RowFileFormat.Source = {
+    val readerJson = AvroCodec.avroSchemaJson(required, AvroFiles.RecordName)
+    val fieldTypes = required.fields.map(_.dataType)
+    (file, conf) => {
+      val reader = new DataFileReader[GenericRecord](new FsInput(file, conf),
+        new GenericDatumReader[GenericRecord](
+          new Schema.Parser().parse(readerJson)))
+      new RowFileFormat.Source {
+        def hasNext: Boolean = reader.hasNext
+        def next(): Row = {
+          val rec = reader.next()
+          Row.fromSeq(fieldTypes.indices.map(i =>
+            AvroCodec.fromDatum(rec.get(i), fieldTypes(i))))
+        }
+        def close(): Unit = reader.close()
+      }
+    }
+  }
+}
+
+object AvroFiles {
+  private val RecordName = "training_dataset"
+
+  /** Avro writer schema (as [[AvroFiles]] writes it: flat nullable
+    * unions, logical timestamp-micros/date/decimal) → Spark schema.
     */
   private[graft] def sparkSchema(schema: Schema): StructType = {
     def leaf(s: Schema): DataType = s.getType match {
@@ -145,65 +147,5 @@ object AvroFiles {
       }
       StructField(f.name(), dt)
     }.toSeq)
-  }
-
-  /** Read a directory (or single file) of Avro container files. The
-    * schema comes from the first file's embedded writer schema — the
-    * container format's point — so no caller-declared schema is needed.
-    * That first schema is then passed as the READER (expected) schema
-    * for every file, so Avro's own schema resolution matches fields by
-    * NAME per file: a directory appended with a reordered or widened
-    * writer schema decodes correctly instead of silently mis-assigning
-    * columns by position (ADVICE r9 #2).
-    */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val target = fs(path)
-    val p = new Path(path)
-    val files: Seq[String] =
-      if (target.getFileStatus(p).isDirectory)
-        target.listStatus(p).toSeq.map(_.getPath)
-          .filter(_.getName.endsWith(".avro")).map(_.toString).sorted
-      else Seq(path)
-    require(files.nonEmpty, s"no .avro files under $path")
-    val first = new DataFileReader[GenericRecord](
-      new FsInput(new Path(files.head), new Configuration()),
-      new GenericDatumReader[GenericRecord]())
-    val writerSchemaJson = first.getSchema.toString
-    first.close()
-    val declared = sparkSchema(new Schema.Parser().parse(writerSchemaJson))
-    val fieldTypes = declared.fields.map(_.dataType)
-    val parallelism = math.min(files.size,
-      spark.sparkContext.defaultParallelism).max(1)
-    val fileList = spark.createDataset(files)(Encoders.STRING)
-    // repartition only when it buys parallel readers — a repartition(1)
-    // of the file LIST is a pointless single-partition exchange that
-    // the plan audit rightly flags
-    val spread =
-      if (parallelism > 1) fileList.repartition(parallelism) else fileList
-    spread
-      .mapPartitions { paths =>
-        // expected/reader schema: DataFileReader sets each file's writer
-        // schema on the datum reader, and Avro resolves writer→reader by
-        // field name, so rec.get(i) below is always positions of THIS
-        // schema regardless of the file's field order
-        val expected = new Schema.Parser().parse(writerSchemaJson)
-        paths.flatMap { f =>
-          val reader = new DataFileReader[GenericRecord](
-            new FsInput(new Path(f), new Configuration()),
-            new GenericDatumReader[GenericRecord](expected))
-          new Iterator[Row] {
-            def hasNext: Boolean = {
-              val h = reader.hasNext
-              if (!h) reader.close()
-              h
-            }
-            def next(): Row = {
-              val rec = reader.next()
-              Row.fromSeq(fieldTypes.indices.map(i =>
-                AvroCodec.fromDatum(rec.get(i), fieldTypes(i))))
-            }
-          }
-        }
-      }(RowEncoder.encoderFor(declared))
   }
 }

@@ -1,18 +1,17 @@
 package graft.sources
 
-import java.io.{DataInputStream, EOFException}
+import java.io.{DataInputStream, EOFException, OutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.CRC32C
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
 
-/** TFRecord training-dataset format (engine/spark.py:921-949 writes
-  * `format("tfrecord")` via the spark-tensorflow-connector jar, absent
-  * here) hand-built from the two PUBLIC specs it stacks:
+/** TFRecord training-dataset format, `format("tfrecord")`
+  * (engine/spark.py:921-949 writes it via the spark-tensorflow-connector
+  * jar, absent here), hand-built from the two PUBLIC specs it stacks:
   *
   *  - TFRecord framing: per record `length:uint64le,
   *    masked_crc32c(length):uint32le, payload, masked_crc32c(payload)`
@@ -22,7 +21,10 @@ import org.apache.spark.sql.types._
   *    Features}` (field 1), `Features{feature: map<string, Feature>}`
   *    (field 1), `Feature` a oneof of `BytesList`(1) / `FloatList`(2) /
   *    `Int64List`(3), each with repeated `value` at field 1 (floats and
-  *    int64s packed).
+  *    int64s packed) — or, with the connector's option
+  *    `recordType` = `SequenceExample`, a `tf.train.SequenceExample`
+  *    (see [[TfRecordFiles.sequenceExampleBytes]]). `Example` is the
+  *    default.
   *
   * Type mapping matches the connector's: integral/boolean → int64_list,
   * float/double → float_list (Example has no double list — doubles are
@@ -32,13 +34,69 @@ import org.apache.spark.sql.types._
   * proto3-idiomatic encoding of absence); reads surface missing
   * features as null.
   *
-  * Scale shape: identical to [[AvroFiles]] — write is one
-  * `mapPartitions` pass, one `part-*.tfrecord` per task via the Hadoop
-  * FileSystem API; read parallelizes the file list. Byte-level
-  * correctness is spec-verified (golden framing + protobuf bytes in
-  * TfRecordFilesSpec) since no TensorFlow reader exists in this
-  * environment.
+  * The files carry no schema, so a read needs a declared one
+  * (`spark.read.format("tfrecord").schema(s)`), as the connector does;
+  * CRCs are verified per record, and a mismatch fails the read. Spark's
+  * side (task files, commit, session settings, projection) is
+  * [[RowFileFormat]]'s. Byte-level correctness is spec-verified (golden
+  * framing + protobuf bytes in TfRecordFilesSpec) since no TensorFlow
+  * reader exists in this environment.
   */
+class TfRecordFiles extends RowFileFormat {
+  import TfRecordFiles._
+
+  override def shortName(): String = "tfrecord"
+  override protected def extension: String = ".tfrecord"
+
+  override def inferSchema(spark: SparkSession, options: Map[String, String],
+                           files: Seq[FileStatus]): Option[StructType] = None
+
+  override protected def encoder(schema: StructType,
+                                 options: Map[String, String])
+      : OutputStream => RowFileFormat.Sink = {
+    val encode: Row => Array[Byte] =
+      if (!sequence(options)) {
+        val fields = schema.fields
+        row => exampleBytes(row, fields)
+      } else {
+        // every ARRAY column becomes a FeatureList, the rest is context
+        val (seqs, context) = schema.fields.toSeq.zipWithIndex
+          .partition(_._1.dataType.isInstanceOf[ArrayType])
+        require(seqs.nonEmpty,
+          "recordType SequenceExample needs ≥1 array column (else use Example)")
+        row => sequenceExampleBytes(row, context, seqs)
+      }
+    out => new RowFileFormat.Sink {
+      def write(row: Row): Unit = out.write(frame(encode(row)))
+      def close(): Unit = out.close()
+    }
+  }
+
+  override protected def decoder(required: StructType,
+                                 options: Map[String, String])
+      : (Path, Configuration) => RowFileFormat.Source = {
+    val fields = required.fields.toIndexedSeq
+    val decode: Array[Byte] => Row =
+      if (!sequence(options)) { payload =>
+        val feats = parseExample(payload)
+        Row.fromSeq(fields.map { fld =>
+          feats.get(fld.name).map(coerce(_, fld.dataType)).orNull
+        })
+      } else { payload =>
+        // ARRAY columns come from feature_lists, the rest from context
+        val (ctx, lists) = parseSequenceExample(payload)
+        Row.fromSeq(fields.map { fld =>
+          fld.dataType match {
+            case ArrayType(et, _) => lists.get(fld.name)
+              .map(_.map(e => if (e == null) null else coerce(e, et))).orNull
+            case dt => ctx.get(fld.name).map(coerce(_, dt)).orNull
+          }
+        })
+      }
+    (file, conf) => new Frames(file, conf, decode)
+  }
+}
+
 object TfRecordFiles {
 
   // ------------------------------------------------------------------
@@ -193,69 +251,6 @@ object TfRecordFiles {
     out.put(lenLe).putInt(maskedCrc(lenLe)).put(payload)
       .putInt(maskedCrc(payload))
     out.array()
-  }
-
-  // ------------------------------------------------------------------
-  // write
-  // ------------------------------------------------------------------
-
-  private def fsFor(path: String): FileSystem =
-    FileSystem.get(new java.net.URI(path).normalize() match {
-      case u if u.getScheme == null => new java.io.File(path).toURI
-      case u => u
-    }, new Configuration())
-
-  def write(df: DataFrame, path: String, mode: String = "overwrite"): Unit = {
-    val fields = df.schema.fields
-    writeFrames(df, path, mode, row => frame(exampleBytes(row, fields)))
-  }
-
-  /** Write `df` as SequenceExample tfrecords: every ARRAY column becomes
-    * a FeatureList, everything else goes to `context`.
-    */
-  def writeSequence(df: DataFrame, path: String,
-                    mode: String = "overwrite"): Unit = {
-    val (seqs, context) = df.schema.fields.toSeq.zipWithIndex
-      .partition(_._1.dataType.isInstanceOf[ArrayType])
-    require(seqs.nonEmpty,
-      "writeSequence needs ≥1 array column (else use write)")
-    writeFrames(df, path, mode,
-      row => frame(sequenceExampleBytes(row, context, seqs)))
-  }
-
-  private def writeFrames(df: DataFrame, path: String, mode: String,
-                          encode: Row => Array[Byte]): Unit = {
-    val target = fsFor(path)
-    val dir = new Path(path)
-    if (target.exists(dir)) mode match {
-      case "overwrite" => target.delete(dir, true)
-      case "append" => ()
-      case _ => throw new IllegalStateException(
-        s"$path exists and mode is $mode")
-    }
-    target.mkdirs(dir)
-    val pathStr = path
-    df.mapPartitions { rows =>
-      if (rows.isEmpty) Iterator.empty
-      else {
-        val part = new Path(pathStr,
-          s"part-${java.util.UUID.randomUUID.toString.take(12)}.tfrecord")
-        val out = FileSystem.get(part.toUri match {
-          case u if u.getScheme == null => new java.io.File(pathStr).toURI
-          case u => u
-        }, new Configuration()).create(part, true)
-        var n = 0L
-        rows.foreach { row =>
-          out.write(encode(row))
-          n += 1
-        }
-        out.close()
-        Iterator(Row(part.toString, n))
-      }
-    }(RowEncoder.encoderFor(StructType(Seq(
-      StructField("file", StringType), StructField("rows", LongType)))))
-      .collect()
-    ()
   }
 
   // ------------------------------------------------------------------
@@ -445,105 +440,54 @@ object TfRecordFiles {
   }
 
   // ------------------------------------------------------------------
-  // read
+  // record type, file read
   // ------------------------------------------------------------------
 
-  /** Read a tfrecord directory back under `declared` (tfrecord carries
-    * no schema — the connector requires one too). CRCs are verified per
-    * record; a mismatch fails loudly (silent corruption is worse).
-    */
-  def read(spark: SparkSession, path: String,
-           declared: StructType): DataFrame =
-    readFrames(spark, path, declared, sequence = false)
+  private def sequence(options: Map[String, String]): Boolean =
+    options.getOrElse("recordType", "Example") match {
+      case "Example" => false
+      case "SequenceExample" => true
+      case other => throw new IllegalArgumentException(
+        s"recordType must be Example or SequenceExample, not $other")
+    }
 
-  /** Read SequenceExample tfrecords: ARRAY columns of `declared` come
-    * from feature_lists, the rest from context.
-    */
-  def readSequence(spark: SparkSession, path: String,
-                   declared: StructType): DataFrame =
-    readFrames(spark, path, declared, sequence = true)
+  /** The records of one tfrecord file, each CRC-checked and decoded. */
+  private final class Frames(file: Path, conf: Configuration,
+                             decode: Array[Byte] => Row)
+      extends RowFileFormat.Source {
+    private val in = new DataInputStream(file.getFileSystem(conf).open(file))
+    private var pending: Array[Byte] = _
+    private var fetched = false
 
-  private def readFrames(spark: SparkSession, path: String,
-                         declared: StructType, sequence: Boolean): DataFrame = {
-    val target = fsFor(path)
-    val p = new Path(path)
-    val files: Seq[String] =
-      if (target.getFileStatus(p).isDirectory)
-        target.listStatus(p).toSeq.map(_.getPath)
-          .filter(_.getName.endsWith(".tfrecord")).map(_.toString).sorted
-      else Seq(path)
-    require(files.nonEmpty, s"no .tfrecord files under $path")
-    val fields = declared.fields
-    val parallelism = math.min(files.size,
-      spark.sparkContext.defaultParallelism).max(1)
-    val fileList = spark.createDataset(files)(Encoders.STRING)
-    // repartition only when it buys parallel readers — a repartition(1)
-    // of the file LIST is a pointless single-partition exchange that
-    // the plan audit rightly flags
-    val spread =
-      if (parallelism > 1) fileList.repartition(parallelism) else fileList
-    spread
-      .mapPartitions { paths =>
-        paths.flatMap { f =>
-          val in = new DataInputStream(FileSystem.get(
-            new java.net.URI(f), new Configuration()).open(new Path(f)))
-          // a partially consumed task iterator (limit, take, task kill)
-          // never reaches clean EOF — close at task completion too
-          val tc = org.apache.spark.TaskContext.get()
-          if (tc != null) tc.addTaskCompletionListener[Unit] { _ =>
-            try in.close() catch { case _: java.io.IOException => () }
-          }
-          new Iterator[Row] {
-            private var nextPayload: Array[Byte] = advance()
-            // the handle survives only the success path; clean EOF and
-            // any failure (CRC mismatch, truncation) both close it
-            private def advance(): Array[Byte] = {
-              var keepOpen = false
-              try {
-                val lenLe = new Array[Byte](8)
-                in.readFully(lenLe)
-                val lenCrc = java.lang.Integer.reverseBytes(in.readInt())
-                require(lenCrc == maskedCrc(lenLe),
-                  s"tfrecord length crc mismatch in $f")
-                val n = ByteBuffer.wrap(lenLe)
-                  .order(ByteOrder.LITTLE_ENDIAN).getLong.toInt
-                val payload = new Array[Byte](n)
-                in.readFully(payload)
-                val dataCrc = java.lang.Integer.reverseBytes(in.readInt())
-                require(dataCrc == maskedCrc(payload),
-                  s"tfrecord payload crc mismatch in $f")
-                keepOpen = true
-                payload
-              } catch {
-                case _: EOFException => null
-              } finally {
-                if (!keepOpen) in.close()
-              }
-            }
-            def hasNext: Boolean = nextPayload != null
-            def next(): Row = {
-              val payload = nextPayload
-              nextPayload = advance()
-              if (!sequence) {
-                val feats = parseExample(payload)
-                Row.fromSeq(fields.toIndexedSeq.map { fld =>
-                  feats.get(fld.name).map(coerce(_, fld.dataType)).orNull
-                })
-              } else {
-                val (ctx, lists) = parseSequenceExample(payload)
-                Row.fromSeq(fields.toIndexedSeq.map { fld =>
-                  fld.dataType match {
-                    case ArrayType(et, _) => lists.get(fld.name)
-                      .map(_.map(e =>
-                        if (e == null) null else coerce(e, et))).orNull
-                    case dt => ctx.get(fld.name).map(coerce(_, dt)).orNull
-                  }
-                })
-              }
-            }
-          }
-        }
-      }(RowEncoder.encoderFor(declared))
+    private def advance(): Array[Byte] =
+      try {
+        val lenLe = new Array[Byte](8)
+        in.readFully(lenLe)
+        val lenCrc = java.lang.Integer.reverseBytes(in.readInt())
+        require(lenCrc == maskedCrc(lenLe),
+          s"tfrecord length crc mismatch in $file")
+        val n = ByteBuffer.wrap(lenLe)
+          .order(ByteOrder.LITTLE_ENDIAN).getLong.toInt
+        val payload = new Array[Byte](n)
+        in.readFully(payload)
+        val dataCrc = java.lang.Integer.reverseBytes(in.readInt())
+        require(dataCrc == maskedCrc(payload),
+          s"tfrecord payload crc mismatch in $file")
+        payload
+      } catch {
+        case _: EOFException => null
+      }
+
+    def hasNext: Boolean = {
+      if (!fetched) { pending = advance(); fetched = true }
+      pending != null
+    }
+    def next(): Row = {
+      if (!hasNext) throw new NoSuchElementException(s"end of $file")
+      fetched = false
+      decode(pending)
+    }
+    def close(): Unit = in.close()
   }
 
   private def coerce(v: Any, dt: DataType): Any = (v, dt) match {

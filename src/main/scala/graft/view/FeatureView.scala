@@ -164,9 +164,9 @@ object TrainingDataset {
   /** Per-split file write: format ∈ {csv, tsv, parquet, orc, json, avro,
     * tfrecord}, per-split subdirectories, overwrite/append, optional
     * coalesce(1) (engine/spark.py:865-919 + default write options
-    * :1111-1127). avro routes through [[graft.sources.AvroFiles]] (real
-    * container files on the core Avro runtime — no datasource jar
-    * needed, r9); tfrecord still needs its datasource jar.
+    * :1111-1127). Every format is one `df.write.format(...)` call: avro
+    * and tfrecord are this engine's own file sources
+    * ([[graft.sources.AvroFiles]], [[graft.sources.TfRecordFiles]]).
     */
   def write(result: Result, path: String, format: String = "parquet",
             mode: String = "overwrite", coalesce: Boolean = false,
@@ -181,14 +181,7 @@ object TrainingDataset {
     result.splits.foreach { case (name, df) =>
       val out = if (result.splits.size == 1) path else s"$path/$name"
       val d = if (coalesce) df.coalesce(1) else df
-      if (fmt == "avro")
-        graft.sources.AvroFiles.write(d, out, mode,
-          codec = options.getOrElse("codec", "deflate"))
-      else if (fmt == "tfrecord")
-        graft.sources.TfRecordFiles.write(d, out, mode)
-      else
-        d.write.format(fmt).options(defaultOpts ++ options).mode(mode)
-          .save(out)
+      d.write.format(fmt).options(defaultOpts ++ options).mode(mode).save(out)
     }
   }
 
@@ -201,15 +194,12 @@ object TrainingDataset {
            schema: Option[org.apache.spark.sql.types.StructType] = None)
       : DataFrame = {
     val fmt = formatAliases.getOrElse(format, format)
-    if (fmt == "avro") return graft.sources.AvroFiles.read(spark, path)
-    if (fmt == "tfrecord") return graft.sources.TfRecordFiles.read(spark,
-      path, schema.getOrElse(throw new IllegalArgumentException(
-        "tfrecord read needs the declared schema — the format stores none")))
     val defaultOpts: Map[String, String] = fmt match {
       case "csv" => Map("header" -> "true", "inferSchema" -> "true") ++
         (if (format == "tsv") Map("delimiter" -> "\t") else Map())
       case _ => Map.empty
     }
-    spark.read.format(fmt).options(defaultOpts ++ options).load(path)
+    val reader = spark.read.format(fmt).options(defaultOpts ++ options)
+    schema.fold(reader)(reader.schema).load(path)
   }
 }

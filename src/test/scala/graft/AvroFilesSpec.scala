@@ -1,11 +1,11 @@
 package graft
 
-import graft.sources.AvroFiles
 import org.apache.avro.file.DataFileReader
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.avro.mapred.FsInput
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Avro container-file training-dataset format: distributed write/read
@@ -29,8 +29,8 @@ class AvroFilesSpec extends SparkSpec {
         "2020-01-01 00:00:00"))))
       .toDF("id", "score", "name", "ts").repartition(3)
     val path = tmp()
-    AvroFiles.write(df, path)
-    val back = AvroFiles.read(spark, path)
+    df.write.format("avro").save(path)
+    val back = spark.read.format("avro").load(path)
     assert(back.schema == df.schema ||
       back.schema.map(f => (f.name, f.dataType)) ==
         df.schema.map(f => (f.name, f.dataType)),
@@ -43,7 +43,7 @@ class AvroFilesSpec extends SparkSpec {
     val df = spark.range(100).select(col("id"),
       (col("id") * 2).cast("double").as("v")).repartition(4)
     val path = tmp()
-    AvroFiles.write(df, path, codec = "null")
+    df.write.format("avro").option("codec", "null").save(path)
     val parts = new java.io.File(path).listFiles()
       .filter(_.getName.endsWith(".avro"))
     assert(parts.length == 4, s"expected 4 part files, got ${parts.length}")
@@ -61,17 +61,16 @@ class AvroFilesSpec extends SparkSpec {
 
   test("overwrite replaces; errorifexists refuses; append adds") {
     val path = tmp()
-    AvroFiles.write(Seq((1L, "a")).toDF("id", "v").coalesce(1), path)
-    AvroFiles.write(Seq((2L, "b")).toDF("id", "v").coalesce(1), path)
-    assert(AvroFiles.read(spark, path).collect().map(_.getLong(0)).toSeq
-      == Seq(2L))
-    AvroFiles.write(Seq((3L, "c")).toDF("id", "v").coalesce(1), path,
-      mode = "append")
-    assert(AvroFiles.read(spark, path).collect().map(_.getLong(0)).sorted
-      .toSeq == Seq(2L, 3L))
-    intercept[IllegalStateException] {
-      AvroFiles.write(Seq((4L, "d")).toDF("id", "v"), path,
-        mode = "errorifexists")
+    def write(df: DataFrame, mode: String): Unit =
+      df.write.format("avro").mode(mode).save(path)
+    def ids = spark.read.format("avro").load(path).collect().map(_.getLong(0))
+    write(Seq((1L, "a")).toDF("id", "v").coalesce(1), "overwrite")
+    write(Seq((2L, "b")).toDF("id", "v").coalesce(1), "overwrite")
+    assert(ids.toSeq == Seq(2L))
+    write(Seq((3L, "c")).toDF("id", "v").coalesce(1), "append")
+    assert(ids.sorted.toSeq == Seq(2L, 3L))
+    intercept[AnalysisException] {
+      write(Seq((4L, "d")).toDF("id", "v"), "errorifexists")
     }
   }
 
@@ -84,8 +83,8 @@ class AvroFilesSpec extends SparkSpec {
       .select(col("id"), col("price").cast("decimal(10,2)").as("price"),
         col("xs"))
     val path = tmp()
-    AvroFiles.write(df, path)
-    val back = AvroFiles.read(spark, path)
+    df.write.format("avro").save(path)
+    val back = spark.read.format("avro").load(path)
     assert(back.schema("price").dataType ==
       org.apache.spark.sql.types.DecimalType(10, 2))
     assert(back.schema("xs").dataType.isInstanceOf[
@@ -106,10 +105,10 @@ class AvroFilesSpec extends SparkSpec {
     // file written with columns swapped must still land values in the
     // right columns, not positionally mis-assign them.
     val path = tmp()
-    AvroFiles.write(Seq((1L, "a")).toDF("id", "v").coalesce(1), path)
-    AvroFiles.write(Seq(("b", 2L)).toDF("v", "id").coalesce(1), path,
-      mode = "append")
-    val back = AvroFiles.read(spark, path).orderBy("id").collect()
+    Seq((1L, "a")).toDF("id", "v").coalesce(1).write.format("avro").save(path)
+    Seq(("b", 2L)).toDF("v", "id").coalesce(1).write.format("avro")
+      .mode("append").save(path)
+    val back = spark.read.format("avro").load(path).orderBy("id").collect()
     assert(back.map(r => (r.getAs[Long]("id"), r.getAs[String]("v")))
       .toSeq == Seq((1L, "a"), (2L, "b")))
   }

@@ -147,6 +147,45 @@ class DeltaLiteSpec extends SparkSpec {
     assert(ids(None) == (0L to 11L))
   }
 
+  test("a checkpoint that fails after its entry is published does not " +
+    "fail the commit: v10 reads, and the next append lands at v11") {
+    spark.sparkContext.hadoopConfiguration
+      .set(s"fs.${FailingFs.Scheme}.impl", classOf[FailingFs].getName)
+    def upTo9(t: String): Unit = {
+      DeltaLite.create(Seq((0L, "r0")).toDF("id", "v").coalesce(1), t)
+      (1 to 9).foreach { i =>
+        DeltaLite.append(Seq((i.toLong, s"r$i")).toDF("id", "v").coalesce(1), t)
+      }
+    }
+    val row10 = Seq((10L, "r10")).toDF("id", "v").coalesce(1)
+    // a twin table sizes the cut: it must pass v10's data files and entry
+    // and stop inside its checkpoint
+    val twin = tmp()
+    upTo9(twin)
+    DeltaLite.append(row10, twin)
+    def files(dir: java.io.File): Seq[java.io.File] =
+      dir.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    val cp = new java.io.File(twin, f"_delta_log/${10L}%020d.checkpoint.parquet")
+    val others = files(new java.io.File(twin))
+      .filterNot(f => f == cp || f.getName.endsWith(".crc")).map(_.length)
+    assert(others.max < cp.length - 1, s"${others.max} vs ${cp.length}")
+
+    val local = tmp()
+    val t = s"${FailingFs.Scheme}://$local"
+    upTo9(t)
+    FailingFs.failAfter.set(cp.length - 1)
+    val v = try DeltaLite.append(row10, t) finally FailingFs.failAfter.set(-1L)
+    assert(v === 10L)
+    assert(DeltaLite.checkpointVersions(t).isEmpty)
+    def ids = DeltaLite.snapshot(spark, t).select("id").as[Long].collect()
+      .sorted.toSeq
+    assert(ids === (0L to 10L))
+    assert(DeltaLite.append(Seq((11L, "r11")).toDF("id", "v"), t) === 11L)
+    assert(ids === (0L to 11L))
+    val names = new java.io.File(s"$local/_delta_log").listFiles().map(_.getName)
+    assert(!names.exists(_.contains(".tmp")), names.mkString(","))
+  }
+
   test("a checkpoint and its pointer are published staged: nothing the " +
     "log lists is ever partial, and no staged file is left") {
     val t = tmp()

@@ -74,11 +74,11 @@ class TfRecordFilesSpec extends SparkSpec {
       (3L, Some(-0.75d), None, None))
       .toDF("id", "score", "name", "flag").repartition(2)
     val path = tempDir("graft_tfr").toString + "/td"
-    TfRecordFiles.write(df, path)
+    df.write.format("tfrecord").save(path)
     val parts = new java.io.File(path).listFiles()
       .filter(_.getName.endsWith(".tfrecord"))
     assert(parts.length == 2)
-    val back = TfRecordFiles.read(spark, path, df.schema)
+    val back = spark.read.format("tfrecord").schema(df.schema).load(path)
       .orderBy("id").collect()
     assert(back.toSeq == df.orderBy("id").collect().toSeq,
       "float32-exact doubles and nulls must survive the round trip")
@@ -114,22 +114,25 @@ class TfRecordFilesSpec extends SparkSpec {
       (3L, null.asInstanceOf[String], None, Some(Seq.empty[Float])))
       .toDF("id", "tag", "xs", "ws").repartition(2)
     val path = tempDir("graft_tfr_seq").toString + "/td"
-    TfRecordFiles.writeSequence(df, path)
-    val back = TfRecordFiles.readSequence(spark, path, df.schema)
+    df.write.format("tfrecord").option("recordType", "SequenceExample")
+      .save(path)
+    val back = spark.read.format("tfrecord")
+      .option("recordType", "SequenceExample").schema(df.schema).load(path)
       .orderBy("id").collect()
     val orig = df.orderBy("id").collect()
     assert(back.toSeq == orig.toSeq,
       s"got ${back.toSeq} want ${orig.toSeq}")
-    // and writeSequence refuses a frame with no sequence column
+    // and SequenceExample refuses a frame with no sequence column
     intercept[IllegalArgumentException] {
-      TfRecordFiles.writeSequence(Seq((1L, "x")).toDF("id", "v"),
-        path + "_bad")
+      Seq((1L, "x")).toDF("id", "v").write.format("tfrecord")
+        .option("recordType", "SequenceExample").save(path + "_bad")
     }
   }
 
   test("corrupted payload fails the crc check loudly") {
     val path = tempDir("graft_tfr_bad").toString + "/td"
-    TfRecordFiles.write(Seq((1L, "a")).toDF("id", "v").coalesce(1), path)
+    Seq((1L, "a")).toDF("id", "v").coalesce(1).write.format("tfrecord")
+      .save(path)
     val part = new java.io.File(path).listFiles()
       .filter(_.getName.endsWith(".tfrecord")).head
     val bytes = java.nio.file.Files.readAllBytes(part.toPath)
@@ -139,9 +142,9 @@ class TfRecordFilesSpec extends SparkSpec {
     // fire first — the point is exercising the TFRecord-level crc
     new java.io.File(part.getParent, s".${part.getName}.crc").delete()
     val ex = intercept[org.apache.spark.SparkException] {
-      TfRecordFiles.read(spark, path,
-        StructType(Seq(StructField("id", LongType),
-          StructField("v", StringType)))).collect()
+      spark.read.format("tfrecord")
+        .schema(StructType(Seq(StructField("id", LongType),
+          StructField("v", StringType)))).load(path).collect()
     }
     assert(ex.getMessage.contains("crc") ||
       Option(ex.getCause).exists(_.getMessage.contains("crc")))
