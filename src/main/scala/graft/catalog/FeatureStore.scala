@@ -558,7 +558,8 @@ final class FeatureStore(
       view.name, view.version, version, format, path,
       randomWeights, timeBounds, seed, exactSizes,
       createdMillis = System.currentTimeMillis(),
-      groupSplit = groupSplit, coalesce = coalesce)
+      groupSplit = groupSplit, coalesce = coalesce,
+      schema = res.splits.headOption.map(_._2.schema))
     TrainingDatasetPersistence.save(spark, warehouseDir, meta)
     meta
   }
@@ -582,7 +583,7 @@ final class FeatureStore(
     val names = meta.splitNames
     names.map { n =>
       val p = if (names.size == 1) meta.path else s"${meta.path}/$n"
-      n -> graft.view.TrainingDataset.read(spark, p, meta.format)
+      n -> graft.view.TrainingDataset.read(spark, p, meta.format, schema = meta.schema)
     }.toMap
   }
 

@@ -2,6 +2,7 @@ package graft.catalog
 
 import graft.catalog.JsonDocs._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.json4s._
 import org.json4s.JsonDSL._
 
@@ -25,7 +26,12 @@ object TrainingDatasetPersistence {
       createdMillis: Long = 0L,
       groupSplit: Option[graft.ops.Splits.GroupSplit] = None,
       /** Persisted so recreate reproduces the original file layout. */
-      coalesce: Boolean = false) {
+      coalesce: Boolean = false,
+      /** The schema the splits were written with, so a format whose files
+        * carry none (tfrecord) reads back; absent in descriptors written
+        * before it was kept.
+        */
+      schema: Option[StructType] = None) {
     /** Split names in their deterministic (sorted) order; a dataset built
       * with no split spec is the single `train` split.
       */
@@ -61,7 +67,8 @@ object TrainingDatasetPersistence {
           ("groupCol" -> g.groupCol) ~
             ("salt" -> g.salt) ~
             ("weights" -> g.weights.map { case (k, w) =>
-              ("name" -> k) ~ ("w" -> w): JValue }))))
+              ("name" -> k) ~ ("w" -> w): JValue }))) ~
+        ("schema" -> meta.schema.map(_.json)))
 
   def load(spark: SparkSession, warehouseDir: String, viewName: String,
            viewVersion: Int, version: Int): Option[TrainingDatasetMeta] =
@@ -103,7 +110,8 @@ object TrainingDatasetPersistence {
                 str(g \ "groupCol").getOrElse(""), ws,
                 str(g \ "salt").getOrElse("")))
             case _ => None
-          })
+          },
+          schema = str(j \ "schema").map(DataType.fromJson(_).asInstanceOf[StructType]))
     }
 
   /** Every persisted version of a view's training datasets. */

@@ -32,9 +32,10 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *    indexes built per request from each group's keyed read — the
   *    reference's one key-value read per feature group. Such a lookup is
   *    EAGER: the reads run inside getFeatureVector(s), and the returned
-  *    frame is driver-local. A lake group read by a few keys is one Spark
-  *    job (a Parquet scan with the keys pushed into it; versions resolve
-  *    on the driver), so a single-group lake lookup runs one job;
+  *    frame is driver-local. A lake group read by a few keys reads, on
+  *    the driver, the files whose footer statistics may hold them (a
+  *    Spark job only past a fixed byte bound; versions resolve on the
+  *    driver), so a single-group lake lookup runs no job;
   *  - default, other key frames: a Spark query that prunes every group to
   *    the requested keys, then broadcast-joins the hits onto the keys. The
   *    left group is pruned inside its read (a lake group below the lake's
@@ -231,7 +232,7 @@ final class FeatureVectorServer(
                         wanted: Seq[String], joinKeys: Seq[String],
                         prefix: String): DataFrame = {
     val snap = latestPerKey(fg, QueryPlanner.materialize(spark, fg, None,
-      Some(broadcast(keys.select(joinKeys.map(col): _*)))))
+      Some(forKeyedRead(fg, keys.select(joinKeys.map(col): _*), joinKeys))))
     val projected = snap.select((joinKeys ++ wanted).distinct.map(col): _*)
     val renamed = wanted.filterNot(joinKeys.contains).foldLeft(projected) {
       (d, c) => d.withColumnRenamed(c, prefix + c)
@@ -292,7 +293,10 @@ final class FeatureVectorServer(
                                keySchema: StructType,
                                keyRows: Seq[InternalRow]): Option[DataFrame] = {
     def index(i: Int, keys: => DataFrame): GraftKeyedIndex =
-      online.fold(buildIndex(i, Some(broadcast(keys))))(_(i))
+      online.fold(buildIndex(i, Some(
+        if (i == 0) forKeyedRead(lf, keys, lf.primaryKey)
+        else if (joins(i - 1).keyed) forKeyedRead(joins(i - 1).fg, keys, joins(i - 1).rightKeys)
+        else broadcast(keys))))(_(i))
     // a USING join puts the keys first, then the other key columns
     val pk = lf.primaryKey.flatMap(indexOf(keySchema, _))
     val order = pk ++ keySchema.fields.indices.filterNot(pk.contains)
@@ -311,6 +315,16 @@ final class FeatureVectorServer(
       GraftKeyedIndex.localFrame(spark, schema, rows)
     }
   }
+
+  /** `keys` for a keyed read of `fg` on `cols`, hinted for broadcast
+    * unless the read takes the `IN` form ([[KeyPrune.inPredicate]]),
+    * where no join consumes the hint and the optimizer would warn that
+    * none does.
+    */
+  private def forKeyedRead(fg: FeatureGroup, keys: DataFrame,
+                           cols: Seq[String]): DataFrame =
+    if (KeyPrune.inPredicate(fg.schema, keys, cols).isDefined) keys
+    else broadcast(keys)
 
   private def indexOf(schema: StructType, name: String): Option[Int] =
     Some(schema.fieldNames.indexOf(name)).filter(_ >= 0)

@@ -706,7 +706,13 @@ object DeltaLite {
     */
   private[sources] def scan(spark: SparkSession, table: String,
                             paths: Seq[String], schema: StructType,
-                            options: Map[String, String]): DataFrame = {
+                            options: Map[String, String]): DataFrame =
+    spark.baseRelationToDataFrame(relation(spark, table, paths, schema, options))
+
+  /** The relation [[scan]] reads. */
+  private[sources] def relation(spark: SparkSession, table: String,
+                                paths: Seq[String], schema: StructType,
+                                options: Map[String, String]): HadoopFsRelation = {
     val f = fs(table)
     val cache = listings(spark)
     val base = f.makeQualified(new Path(table))
@@ -719,7 +725,7 @@ object DeltaLite {
     val parts = index.partitionSchema
     val data = StructType(schema.filterNot(c =>
       parts.exists(p => SQLConf.get.resolver(p.name, c.name))))
-    spark.baseRelationToDataFrame(HadoopFsRelation(index, parts,
-      data.toNullable, None, new ParquetFileFormat, options)(spark))
+    HadoopFsRelation(index, parts, data.toNullable, None, new ParquetFileFormat,
+      options)(spark)
   }
 }

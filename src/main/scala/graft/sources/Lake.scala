@@ -9,7 +9,7 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.GraftKeyedIndex
+import org.apache.spark.sql.execution.{GraftKeyedIndex, GraftPointRead}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -60,9 +60,12 @@ import scala.jdk.CollectionConverters._
   *        reads of upsert/delete) prunes the commit rows to the requested
   *        keys BEFORE that window, so it windows only their versions;
   *     3. a keyed snapshot by a few driver-local keys is EAGER: the keys
-  *        become a predicate inside the Parquet scan, the pruned commit
-  *        rows are collected in one Spark job with no shuffle, and the
-  *        versions resolve on the driver into a driver-local frame.
+  *        pick the commits (key filters, below), then the files or row
+  *        groups whose footer statistics may hold them. When those total
+  *        at most a fixed bound, Spark's Parquet reader reads them on the
+  *        driver, in no Spark job; else one Spark job scans the commits
+  *        with the keys pushed into the scan. Either way the versions
+  *        resolve on the driver into a driver-local frame.
   *  - A keyed read by such keys (the `IN` form of [[KeyPrune]]) also
   *    skips whole commits. A commit written from a driver-local batch
   *    carries in its log entry one Bloom filter per record-key column over
@@ -72,6 +75,10 @@ import scala.jdk.CollectionConverters._
   *    positives). A lookup's cost then grows with the commits holding its
   *    keys, not with history; when no commit may hold them it runs no
   *    Spark job. Each filter is decoded once per JVM.
+  *  - A commit written from a batch that is not driver-local (a bulk load
+  *    from files, a squash base) is range-partitioned on the record key
+  *    before its versions settle, so each of its files holds a contiguous,
+  *    sorted key range, and a few-key read opens about one file of it.
   *  - Published commit directories never change, so each is listed once
   *    per JVM (a shared file-status cache): a read of n commits lists only
   *    the ones no read has listed, and starts no listing job however
@@ -168,18 +175,19 @@ object Lake {
     * reconciliation, core/hudi_engine.py:226-244).
     */
   private def rawData(spark: SparkSession, root: String, fg: FeatureGroup,
-                      cs: Seq[Commit]): DataFrame = {
-    val options = Map("basePath" -> s"$root/data")
+                      cs: Seq[Commit]): DataFrame =
     if (fg.features.isEmpty)
-      spark.read.options(options).option("mergeSchema", "true")
+      spark.read.options(scanOptions(root)).option("mergeSchema", "true")
         .parquet(cs.map(c => s"$root/${c.dir}"): _*)
-    else {
-      val schema = StructType(fg.schema.fields.toSeq ++ Seq(
-        StructField(CommitCol, LongType), StructField(DeletedCol, BooleanType),
-        StructField(TxCol, StringType)))
-      DeltaLite.scan(spark, root, cs.map(_.dir), schema, options)
-    }
-  }
+    else DeltaLite.scan(spark, root, cs.map(_.dir), rawSchema(fg), scanOptions(root))
+
+  private def scanOptions(root: String) = Map("basePath" -> s"$root/data")
+
+  /** A declared group's commit rows: its columns, then the commit's own. */
+  private def rawSchema(fg: FeatureGroup): StructType =
+    StructType(fg.schema.fields.toSeq ++ Seq(
+      StructField(CommitCol, LongType), StructField(DeletedCol, BooleanType),
+      StructField(TxCol, StringType)))
 
   /** Rows of the live commits `cs` that `keep` selects. Selecting none
     * reads the oldest commit under a false filter, which keeps the table's
@@ -192,16 +200,17 @@ object Lake {
     else rawData(spark, root, fg, cs.take(1)).filter(lit(false))
   }
 
-  /** The rows of the live commits up to `upTo` whose `cols`, record-key
-    * columns, equal a row of `keys` ([[KeyPrune.pruneToKeys]]), and
-    * whether the prune took the `IN` form. The `IN` form reads only the
-    * commits that may hold a requested key ([[mayHold]]). A declared
-    * group's scan has its declared types, so the form is chosen without
-    * building a scan.
+  /** How a keyed read prunes the live commits `cs` up to `upTo` to the
+    * rows whose `cols`, record-key columns, equal a row of `keys`
+    * ([[KeyPrune.pruneToKeys]]): `Left`, the join form, as the rows of
+    * every such commit semi-joined with the keys; `Right`, the `IN` form,
+    * as its predicate and the commits that may hold a requested key
+    * ([[mayHold]]). A declared group's scan has its declared types, so the
+    * form is chosen without building a scan.
     */
   private def keyedRaw(spark: SparkSession, root: String, fg: FeatureGroup,
                        cs: Seq[Commit], upTo: Long, keys: DataFrame,
-                       cols: Seq[String]): (DataFrame, Boolean) = {
+                       cols: Seq[String]): Either[DataFrame, (Seq[Commit], KeyPrune.InList)] = {
     lazy val all = window(spark, root, fg, cs)(_.time <= upTo)
     val schema = if (fg.features.isEmpty) all.schema else fg.schema
     val rk = recordKey(schema.fieldNames.toSeq, fg)
@@ -211,11 +220,51 @@ object Lake {
     KeyPrune.inPredicate(schema, keys, cols) match {
       case Some(p) =>
         val q = qualified(root)
-        (window(spark, root, fg, cs)(c => c.time <= upTo &&
-          mayHold(new Path(q, c.dir), c, cols.head, p)).filter(p.predicate), true)
-      case None => (KeyPrune.semiJoin(all, keys, cols), false)
+        Right((cs.filter(c => c.time <= upTo &&
+          mayHold(new Path(q, c.dir), c, cols.head, p)), p))
+      case None => Left(KeyPrune.semiJoin(all, keys, cols))
     }
   }
+
+  /** The rows [[keyedRaw]] selects, as a Spark scan. */
+  private def keyedScan(spark: SparkSession, root: String, fg: FeatureGroup,
+                        cs: Seq[Commit], upTo: Long, keys: DataFrame,
+                        cols: Seq[String]): DataFrame =
+    keyedRaw(spark, root, fg, cs, upTo, keys, cols).fold(identity, { case (in, p) =>
+      window(spark, root, fg, cs)(in.contains).filter(p.predicate) })
+
+  // -- point reads -------------------------------------------------------
+
+  /** The most compressed bytes a keyed read reads on the driver. The
+    * driver decodes ~1 MB per 10 ms (a 25k-row, 2 MB base file of the
+    * benchmark's 11-column group in ~20 ms on a 4-core box), so this many
+    * bytes cost about what a Spark job's fixed cost does.
+    */
+  private val PointReadBytes = 4L << 20
+
+  /** Footer facts of published data files, by qualified path
+    * ([[GraftPointRead.Footer]]: row-group ranges and record-key
+    * statistics). A published file never changes, so an entry never goes
+    * stale; a squash drops the entries of the commits it replaces.
+    */
+  private val footers = new ConcurrentHashMap[Path, GraftPointRead.Footer]()
+
+  /** The rows of commits `in` whose `column` holds one of the values of
+    * `p`, read on the driver ([[GraftPointRead.read]]) when the row groups
+    * whose footer statistics may hold them total at most
+    * [[PointReadBytes]]: a driver-local frame of the scan's schema. None
+    * for a group without a declared schema, when no commit may hold the
+    * keys (the scan plans none) and over the bound.
+    */
+  private def pointRead(spark: SparkSession, root: String, fg: FeatureGroup,
+                        in: Seq[Commit], column: String,
+                        p: KeyPrune.InList): Option[DataFrame] =
+    if (fg.features.isEmpty || in.isEmpty) None
+    else {
+      val rel = DeltaLite.relation(spark, root, in.map(_.dir), rawSchema(fg), scanOptions(root))
+      GraftPointRead.read(rel, column, p.dataType, p.values, PointReadBytes, st =>
+        footers.computeIfAbsent(st.getPath, _ => GraftPointRead.footer(rel, st, recordKey(fg))))
+    }
 
   // -- key filters -------------------------------------------------------
 
@@ -336,7 +385,7 @@ object Lake {
         // latest-version window, so an upsert of k keys into a 100 TB
         // table windows O(k · versions) rows, never the whole snapshot
         val current = resolve(
-            keyedRaw(spark, root, fg, cs, Long.MaxValue, batch, keys)._1, fg)
+            keyedScan(spark, root, fg, cs, Long.MaxValue, batch, keys), fg)
           .select(keys.map(col): _*).withColumn("_m", lit(1))
         val r = batch.select(keys.map(col): _*)
           .join(current, keys, "left")
@@ -410,7 +459,9 @@ object Lake {
     // each commit owns its `_tx=` directory outright
     squashed.foreach { c =>
       fs.delete(new Path(root, c.dir).getParent, true)
-      decoded.remove(new Path(qualified(root), c.dir))
+      val dir = new Path(qualified(root), c.dir)
+      decoded.remove(dir)
+      footers.keySet.removeIf(_.toString.startsWith(s"$dir/"))
     }
     out
   }
@@ -439,8 +490,8 @@ object Lake {
     val cs = liveCommits(root)
     val full =
       if (cs.isEmpty) emptyFrame(spark, fg)
-      else resolve(keyedRaw(spark, root, fg, cs, Long.MaxValue, keysDf,
-        recordKey(fg))._1, fg)
+      else resolve(keyedScan(spark, root, fg, cs, Long.MaxValue, keysDf,
+        recordKey(fg)), fg)
     writeCommit(spark, root, fg, full, deleted = true, operation = "delete")
   }
 
@@ -454,11 +505,12 @@ object Lake {
     * ([[graft.ops.KeyPrune.pruneToKeys]]): a lookup of k keys resolves
     * O(k · versions) rows. When the prune is an `IN` list (a few
     * driver-local keys), the read is EAGER: the pruned commit rows are
-    * collected here, in one Spark action (a Parquet scan with the
-    * predicate pushed into it, no shuffle), the versions are resolved on
-    * the driver, and the result is a driver-local frame. Otherwise the
-    * prune is a semi-join below the latest-version window, as a lazy
-    * plan.
+    * read here, on the driver without a Spark job when the row groups
+    * that may hold them are small enough ([[pointRead]]), else in one
+    * Spark action (a Parquet scan with the predicate pushed into it, no
+    * shuffle); the versions are resolved on the driver, and the result is
+    * a driver-local frame. Otherwise the prune is a semi-join below the
+    * latest-version window, as a lazy plan.
     */
   def snapshot(spark: SparkSession, root: String, fg: FeatureGroup,
                asOf: Option[Long],
@@ -473,8 +525,13 @@ object Lake {
     val upTo = asOf.getOrElse(Long.MaxValue)
     keys.fold(resolve(window(spark, root, fg, cs)(_.time <= upTo), fg,
         fillDefaults = true)) { k =>
-      val (raw, in) = keyedRaw(spark, root, fg, cs, upTo, k, k.columns.toSeq)
-      resolve(raw, fg, fillDefaults = true, onDriver = in)
+      keyedRaw(spark, root, fg, cs, upTo, k, k.columns.toSeq) match {
+        case Left(raw) => resolve(raw, fg, fillDefaults = true)
+        case Right((in, p)) =>
+          resolve(pointRead(spark, root, fg, in, k.columns.head, p).getOrElse(
+            window(spark, root, fg, cs)(in.contains).filter(p.predicate)),
+            fg, fillDefaults = true, onDriver = true)
+      }
     }
   }
 
@@ -533,9 +590,18 @@ object Lake {
   private def oneRowPerKey(df: DataFrame, fg: FeatureGroup): DataFrame = {
     val order = byPrecombine(df, fg) :+
       graft.ops.Dedup.contentHash(df, df.columns.toSeq).desc
-    if (GraftKeyedIndex.localRows(df).isEmpty) dedupLatest(df, fg, order)
+    if (GraftKeyedIndex.localRows(df).isEmpty) dedupLatest(rangeClustered(df, fg), fg, order)
     else GraftKeyedIndex.latest(df, recordKey(df.columns.toSeq, fg), order, "commitBatch")
   }
+
+  /** `df` range-partitioned on its record key. The window that settles
+    * its versions is clustered by that partitioning, so it still shuffles
+    * once (plus Spark's range-sampling job), and each file of a commit
+    * written from it holds a contiguous, sorted key range: a keyed read's
+    * footer statistics then skip every file that cannot hold its keys.
+    */
+  private def rangeClustered(df: DataFrame, fg: FeatureGroup): DataFrame =
+    df.repartitionByRange(recordKey(df.columns.toSeq, fg).map(col): _*)
 
   /** Resolve one winning row per record key in a window, first in
     * `order`. The read path's only shuffle (commit selection has already
@@ -568,7 +634,7 @@ object Lake {
                      keep: Int, operation: String): Option[CommitMeta] = {
     val squashed = liveCommits(root).dropRight(keep)
     squashed.lastOption.map { last =>
-      val base = resolve(rawData(spark, root, fg, squashed), fg,
+      val base = resolve(rangeClustered(rawData(spark, root, fg, squashed), fg), fg,
         fillDefaults = true).withColumn(DeletedCol, lit(false))
       commit(root, fg, base, last.time, squashed) { (t, n) =>
         CommitMeta(t, operation, n, 0L, 0L)

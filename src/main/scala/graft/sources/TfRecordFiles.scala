@@ -459,10 +459,17 @@ object TfRecordFiles {
     private var pending: Array[Byte] = _
     private var fetched = false
 
-    private def advance(): Array[Byte] =
+    /** The next frame's payload; null at a clean end of file, which is
+      * only an end before a frame's first byte. A file that ends inside
+      * a frame was cut, and reading it fails.
+      */
+    private def advance(): Array[Byte] = {
+      val first = in.read()
+      if (first < 0) return null
       try {
         val lenLe = new Array[Byte](8)
-        in.readFully(lenLe)
+        lenLe(0) = first.toByte
+        in.readFully(lenLe, 1, 7)
         val lenCrc = java.lang.Integer.reverseBytes(in.readInt())
         require(lenCrc == maskedCrc(lenLe),
           s"tfrecord length crc mismatch in $file")
@@ -475,8 +482,10 @@ object TfRecordFiles {
           s"tfrecord payload crc mismatch in $file")
         payload
       } catch {
-        case _: EOFException => null
+        case e: EOFException =>
+          throw new java.io.IOException(s"tfrecord file $file ends inside a record", e)
       }
+    }
 
     def hasNext: Boolean = {
       if (!fetched) { pending = advance(); fetched = true }

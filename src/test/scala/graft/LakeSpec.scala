@@ -3,6 +3,8 @@ package graft
 import graft.catalog.FeatureStore
 import graft.sources.Lake
 import java.nio.file.Files
+import org.apache.spark.sql.execution.GraftPointRead
+import scala.jdk.CollectionConverters._
 
 class LakeSpec extends SparkSpec {
   import spark.implicits._
@@ -580,22 +582,21 @@ class LakeSpec extends SparkSpec {
     new String(Files.readAllBytes(java.nio.file.Paths.get(root, "_delta_log",
       f"$v%020d.json")), "UTF-8").contains("keyFilters")
 
-  /** A keyed read of one bigint `id`: its rows, the Spark jobs it ran and
-    * the files its scan opened (`numFiles`; 0 without a scan).
+  /** A keyed read of one bigint `id` on the driver: its rows, the Spark
+    * jobs it ran, and the commit times of the files its point read was
+    * given (the commits whose key filter may hold the key) and of the
+    * files it opened (those whose footer statistics may hold it); both
+    * empty when no commit may hold the key.
     */
   private def keyedScan(root: String, fg: graft.model.FeatureGroup, key: Long,
-                        asOf: Option[Long] = None): (Map[Long, String], Int, Long) = {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val (df, jobs, executions) = observed(
+                        asOf: Option[Long] = None)
+      : (Map[Long, String], Int, Set[Long], Set[Long]) = {
+    val (df, jobs, reads) = pointReads(
       Lake.snapshot(spark, root, fg, asOf, Some(Seq(key).toDF("id"))))
-    val opened = executions.collect { case ("keyedRead", qe) =>
-      (qe.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }).collect { case s: FileSourceScanExec => s.metrics("numFiles").value }.sum
-    }.sum
-    (rows(df), jobs, opened)
+    assert(reads.size <= 1, reads)
+    def commits(files: Seq[String]) = files.map(f =>
+      "_commit_time=(\\d+)".r.findFirstMatchIn(f).get.group(1).toLong).toSet
+    (rows(df), jobs, commits(reads.flatMap(_.listed)), commits(reads.flatMap(_.opened)))
   }
 
   test("a keyed read opens only the commits whose key filter may hold its key") {
@@ -608,18 +609,16 @@ class LakeSpec extends SparkSpec {
     val ups = (1 to 4).map(i => fs.insert(fg,
       (1000L * i until 1000L * i + 20).map(k => (k, s"u$k")).toDF("id", "v")).commitTime)
     assert(!hasKeyFilters(root, 0) && (1 to 4).forall(hasKeyFilters(root, _)))
-    val files = commitFiles(root)
-    val base = files(Lake.listCommits(spark, root).head)
-    assert(base > 0 && ups.forall(files(_) > 0), files)
+    val base = Lake.listCommits(spark, root).head
 
     // a key only the base holds: the upserts' filters exclude every upsert
-    val (onlyBase, jobs, opened) = keyedScan(root, fg, 7L)
+    val (onlyBase, jobs, listed, _) = keyedScan(root, fg, 7L)
     assert(onlyBase === Map(7L -> "b7"))
-    assert(jobs === 1 && opened === base, files)
+    assert(jobs === 0 && listed === Set(base))
     // a key of one upsert: the base and that upsert
-    val (one, _, openedOne) = keyedScan(root, fg, 2005L)
+    val (one, _, listedOne, _) = keyedScan(root, fg, 2005L)
     assert(one === Map(2005L -> "u2005"))
-    assert(openedOne === base + files(ups(1)), files)
+    assert(listedOne === Set(base, ups(1)))
     // as of the first upsert, the later ones are not in the window
     assert(keyedScan(root, fg, 3005L, Some(ups(0)))._1 === Map.empty)
     for ((clue, asOf, keys) <- Seq(
@@ -648,11 +647,11 @@ class LakeSpec extends SparkSpec {
     (1 to 11).foreach(i => cp.insert(g, Seq((10L * i, s"w$i")).toDF("id", "v")))
     assert(graft.sources.DeltaLite.checkpointVersions(r) === Seq(10L))
     assert(Lake.listCommits(spark, r).size === 12)
-    val (absent, cpJobs, opened) = keyedScan(r, g, 999L)
-    assert(absent === Map.empty && cpJobs === 0 && opened === 0)
-    val (found, _, openedFound) = keyedScan(r, g, 30L)
+    val (absent, cpJobs, listed, _) = keyedScan(r, g, 999L)
+    assert(absent === Map.empty && cpJobs === 0 && listed.isEmpty)
+    val (found, _, listedFound, _) = keyedScan(r, g, 30L)
     assert(found === Map(30L -> "w3"))
-    assert(openedFound === commitFiles(r)(Lake.listCommits(spark, r)(3)))
+    assert(listedFound === Set(Lake.listCommits(spark, r)(3)))
   }
 
   test("a commit of a batch that is not driver-local is always read") {
@@ -663,11 +662,12 @@ class LakeSpec extends SparkSpec {
     val far = fs.insert(fg, Seq((50L, "x"), (51L, "y")).toDF("id", "v").repartition(2))
     fs.insert(fg, Seq((60L, "z")).toDF("id", "v"))
     assert(hasKeyFilters(root, 0) && !hasKeyFilters(root, 1) && hasKeyFilters(root, 2))
-    val files = commitFiles(root)
-    val (got, _, opened) = keyedScan(root, fg, 7L)
+    val base = Lake.listCommits(spark, root).head
+    val (got, _, listed, opened) = keyedScan(root, fg, 7L)
     assert(got === Map(7L -> "c"))
-    assert(opened === files(Lake.listCommits(spark, root).head) + files(far.commitTime),
-      files)
+    assert(listed === Set(base, far.commitTime))
+    // the far commit's footer statistics exclude the key
+    assert(opened === Set(base))
   }
 
   test("a tombstone commit is read for the keys it deletes") {
@@ -678,14 +678,157 @@ class LakeSpec extends SparkSpec {
     val del = fs.delete(fg, Seq(Tuple1(3L)).toDF("id"))
     assert(del.rowsDeleted === 1 && !hasKeyFilters(root, 1))
     fs.insert(fg, Seq((8L, "w8")).toDF("id", "v"))
-    val files = commitFiles(root)
-    val (got, _, opened) = keyedScan(root, fg, 3L)
+    val (got, _, listed, opened) = keyedScan(root, fg, 3L)
     assert(got === Map.empty)
-    assert(opened === files(Lake.listCommits(spark, root).head) + files(del.commitTime),
-      files)
+    assert(listed === Set(Lake.listCommits(spark, root).head, del.commitTime))
+    assert(opened === listed)
     keyedMatches(root, fg, None, Seq(3L, 4L, 8L).toDF("id"), "deleted and live keys")
     // as of before the delete, the key reads back
     assert(keyedScan(root, fg, 3L, Some(del.commitTime - 1))._1 === Map(3L -> "v3"))
+  }
+
+  /** A keyed read that must be a driver point read: it runs no Spark job,
+    * reads on the driver once, and equals the join-form oracle
+    * ([[keyedMatches]]).
+    */
+  private def pointMatches(root: String, fg: graft.model.FeatureGroup,
+                           asOf: Option[Long], keys: org.apache.spark.sql.DataFrame,
+                           clue: String): GraftPointRead.Read = {
+    val (_, jobs, reads) = pointReads(
+      Lake.snapshot(spark, root, fg, asOf, Some(keys)).collect())
+    assert(jobs === 0 && reads.size === 1, clue)
+    keyedMatches(root, fg, asOf, keys, clue)
+    reads.head
+  }
+
+  test("a driver point read equals the join-form read") {
+    import org.apache.spark.sql.types.DoubleType
+    val fs = freshStore()
+    val fg = fs.createFeatureGroup("tpoint",
+      spark.range(0, 300).selectExpr("id", "concat('b', id) AS v").repartition(3),
+      primaryKey = Seq("id"))
+    val root = rootOf(fg)
+    val t1 = fs.insert(fg, Seq((5L, "u5"), (400L, "u400")).toDF("id", "v")).commitTime
+    fs.delete(fg, Seq(Tuple1(7L), Tuple1(400L)).toDF("id"))
+    for ((clue, asOf, keys) <- Seq(
+        ("base, upserted and tombstoned keys", None, Seq(5L, 6L, 7L, 400L, 999L).toDF("id")),
+        ("as of the upsert", Some(t1), Seq(5L, 7L, 400L).toDF("id")),
+        ("int keys", None, Seq(5, 6).toDF("id")),
+        ("a null key", None, Seq(Some(6L), None).toDF("id"))))
+      pointMatches(root, fg, asOf, keys, clue)
+
+    val evolved = fs.appendFeatures(fg, Seq(
+      graft.model.Feature("w", DoubleType, defaultValue = Some(9.0))))
+    fs.insert(evolved, Seq((6L, "u6", 1.0)).toDF("id", "v", "w"))
+    pointMatches(root, evolved, None, Seq(5L, 6L, 8L).toDF("id"), "an appended column")
+
+    val parted = fs.createFeatureGroup("tpointp",
+      spark.range(0, 200).selectExpr("id", "concat('s', id % 3) AS seg",
+        "concat('v', id) AS v").repartition(2),
+      primaryKey = Seq("id"), partitionKey = Seq("seg"))
+    fs.insert(parted, Seq((1L, "s0", "moved"), (500L, "s9", "new")).toDF("id", "seg", "v"))
+    pointMatches(rootOf(parted), parted, None, Seq(1L, 2L, 500L).toDF("id"),
+      "a partitioned group")
+    val byKey = fs.createFeatureGroup("tpointk",
+      spark.range(0, 5).selectExpr("id", "concat('v', id) AS v"),
+      primaryKey = Seq("id"), partitionKey = Seq("id"))
+    fs.insert(byKey, Seq((3L, "w3")).toDF("id", "v"))
+    val read = pointMatches(rootOf(byKey), byKey, None, Seq(3L).toDF("id"),
+      "a group partitioned by its key")
+    assert(read.opened.nonEmpty && read.opened.forall(_.contains("/id=3/")), read)
+
+    val mapped = fs.createFeatureGroup("tpointm",
+      Seq((1L, Map("a" -> 1.0)), (2L, Map("a" -> 2.0, "b" -> 0.5)),
+        (3L, Map.empty[String, Double])).toDF("id", "m").repartition(2),
+      primaryKey = Seq("id"))
+    fs.insert(mapped, Seq((2L, Map("b" -> 0.25)), (4L, null)).toDF("id", "m"))
+    pointMatches(rootOf(mapped), mapped, None, Seq(1L, 2L, 3L, 4L).toDF("id"),
+      "a map feature")
+
+    val ts = (s: String) => java.sql.Timestamp.valueOf(s)
+    val timed = fs.createFeatureGroup("tpointt",
+      Seq((ts("2024-01-01 00:00:00"), ts("2024-01-01 01:00:00"), "a"),
+        (ts("2024-01-01 00:00:00"), ts("2024-01-01 02:00:00"), "b"),
+        (ts("2024-01-02 00:00:00"), ts("2024-01-02 01:00:00"), "c"))
+        .toDF("at", "seen", "v").repartition(2),
+      primaryKey = Seq("at"), eventTime = Some("seen"))
+    val t2 = fs.insert(timed, Seq((ts("2024-01-02 00:00:00"), ts("2024-01-02 01:00:00"), "c2"))
+      .toDF("at", "seen", "v")).commitTime
+    fs.delete(timed, Seq((ts("2024-01-01 00:00:00"), ts("2024-01-01 01:00:00")))
+      .toDF("at", "seen"))
+    for (asOf <- Seq(None, Some(t2)))
+      pointMatches(rootOf(timed), timed, asOf,
+        Seq(ts("2024-01-01 00:00:00"), ts("2024-01-02 00:00:00")).toDF("at"),
+        s"a timestamp key as of $asOf")
+  }
+
+  test("a bulk load from files is range-clustered: a one-key read opens one base file, in no job") {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+    val fs = freshStore()
+    // AQE would coalesce so small a load into one file
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    val fg =
+      try fs.createFeatureGroup("trange",
+        spark.range(0, 4000).selectExpr("id", "concat('b', id) AS v").repartition(4),
+        primaryKey = Seq("id"))
+      finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    val root = rootOf(fg)
+    val base = Lake.listCommits(spark, root).head
+    val files = new java.io.File(root, "data").listFiles().flatMap(_.listFiles())
+      .filter(_.getName == s"_commit_time=$base").flatMap(_.listFiles())
+      .filter(_.getName.endsWith(".parquet")).toSeq
+    assert(files.size === 4 && commitFiles(root)(base) === 4)
+    // each file's footer statistics: one row group, a key range no other
+    // file's overlaps, and the keys in order within it
+    val conf = spark.sparkContext.hadoopConfiguration
+    val ranges = files.map { f =>
+      val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toURI), conf), ParquetMetadataConverter.NO_FILTER)
+      val stats = footer.getBlocks.asScala.toSeq.map(_.getColumns.asScala
+        .find(_.getPath.toDotString == "id").get.getStatistics)
+      assert(stats.size === 1, f)
+      val ids = spark.read.parquet(f.toString).select("id").as[Long].collect().toSeq
+      assert(ids === ids.sorted, f)
+      (stats.head.genericGetMin.asInstanceOf[Long], stats.head.genericGetMax.asInstanceOf[Long])
+    }.sortBy(_._1)
+    assert(ranges.head._1 === 0L && ranges.last._2 === 3999L, ranges)
+    assert(ranges.zip(ranges.tail).forall { case (a, b) => a._2 < b._1 }, ranges)
+
+    val read = pointMatches(root, fg, None, Seq(1234L).toDF("id"), "one key")
+    assert(read.listed.size === 4 && read.opened.size === 1, read)
+    assert(read.rowsKept === 1 && read.rowsDecoded < 2000, read)
+    // a squash keeps the layout, and its base is read as freshly
+    fs.insert(fg, Seq((1234L, "u")).toDF("id", "v"))
+    Lake.compact(spark, root, fg)
+    val squashed = pointMatches(root, fg, None, Seq(1234L).toDF("id"), "after a squash")
+    assert(squashed.opened.size === 1 && !squashed.opened.exists(p =>
+      read.opened.contains(p)), squashed)
+  }
+
+  test("a keyed read whose files may hold its key past the driver bound scans in Spark") {
+    import org.apache.spark.sql.functions.col
+    val rnd = new scala.util.Random(7)
+    // ~4.6 MB of text snappy cannot compress, in one driver-local commit
+    // of shuffled keys, so every file of it may hold any key
+    val load = rnd.shuffle((0L until 48000L).map(k =>
+      (k, Seq.fill(6)(f"${rnd.nextLong()}%016x").mkString)))
+    val fs = freshStore()
+    val fg = fs.createFeatureGroup("tbig", load.toDF("id", "v"), primaryKey = Seq("id"))
+    val root = rootOf(fg)
+    def bytes(f: java.io.File): Long =
+      if (f.isDirectory) f.listFiles().map(bytes).sum
+      else if (f.getName.endsWith(".parquet")) f.length else 0L
+    assert(bytes(new java.io.File(root, "data")) > (4L << 20))
+    val keys = Seq(17L, 40000L).toDF("id")
+    val (got, jobs, reads) = pointReads(
+      Lake.snapshot(spark, root, fg, None, Some(keys)).collect().toSeq)
+    assert(reads.isEmpty && jobs === 1, reads)
+    val full = Lake.snapshot(spark, root, fg, None)
+    assert(got.toSet === full.join(keys, Seq("id"), "left_semi")
+      .select(full.columns.map(col).toIndexedSeq: _*).collect().toSet)
+    assert(got.map(_.getLong(0)).toSet === Set(17L, 40000L))
   }
 
   test("a collated string key takes the join form and carries no key filter") {

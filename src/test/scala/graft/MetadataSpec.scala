@@ -395,6 +395,23 @@ class MetadataSpec extends SparkSpec {
     intercept[NoSuchElementException] { fs2.getTrainingDataset("tdspec") }
   }
 
+  test("a tfrecord training dataset reads back through the store") {
+    val wh = tempDir("graft_td_tfr").toString
+    val fs = new graft.catalog.FeatureStore(spark, warehouseDir = wh)
+    val fg = fs.createFeatureGroup("tdtfr",
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), primaryKey = Seq("id"))
+    val view = graft.view.FeatureView("tdtfr", 1, fg.selectAll())
+    fs.saveFeatureView(view)
+    val meta = fs.createTrainingDataset(view, 1, format = "tfrecord")
+    assert(meta.schema.map(_.fieldNames.toSeq) === Some(Seq("id", "v")))
+    // a restarted store reads the files under the descriptor's schema
+    val back = new graft.catalog.FeatureStore(spark, warehouseDir = wh)
+      .readTrainingDataset("tdtfr", 1, 1)
+    assert(back.keySet === Set("train"))
+    assert(back("train").orderBy("id").collect().map(r => (r.getLong(0), r.getString(1)))
+      .toSeq === Seq((1L, "a"), (2L, "b"), (3L, "c")))
+  }
+
   test("persisted builtin transformation functions rebuild views unaided") {
     import graft.ir.Query
     import graft.ops.Transformations

@@ -169,6 +169,25 @@ class PropertySpec extends SparkSpec {
           assert(got === m.filter(_._1 == k), s"key $k as of $asOf")
         }
       }
+
+      // every key at once, read on the driver in no Spark job, equals the
+      // join-form oracle at the head and as of every commit, and at the
+      // head after a squash replaces the commits
+      val all = (0L to 6L).toDF("id")
+      def pairs(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      def oracle(asOf: Option[Long]) =
+        pairs(Lake.snapshot(spark, root, fg, asOf).join(all, Seq("id"), "left_semi"))
+      def driverRead(asOf: Option[Long]) = {
+        val (got, jobs, _) = observed(pairs(Lake.snapshot(spark, root, fg, asOf, Some(all))))
+        assert(jobs === 0, s"as of $asOf")
+        got
+      }
+      (None :: history.map(h => Some(h._1))).foreach { asOf =>
+        assert(driverRead(asOf) === oracle(asOf), s"all keys as of $asOf")
+      }
+      Lake.compact(spark, root, fg)
+      assert(driverRead(None) === oracle(None) && oracle(None) === model, "after a squash")
     }
   }
 

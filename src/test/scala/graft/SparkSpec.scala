@@ -2,9 +2,9 @@ package graft
 
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{GraftPointRead, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -82,6 +82,26 @@ abstract class SparkSpec extends AnyFunSuite {
       spark.listenerManager.unregister(qeListener)
       sc.removeSparkListener(jobListener)
     }
+  }
+
+  /** [[observed]]'s result and job count, with the driver point reads
+    * ([[GraftPointRead.Read]]) posted while `body` ran. The listener queue
+    * is drained before `body` too, so no earlier read is counted.
+    */
+  protected def pointReads[T](body: => T): (T, Int, Seq[GraftPointRead.Read]) = {
+    val reads = new ConcurrentLinkedQueue[GraftPointRead.Read]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case r: GraftPointRead.Read => reads.add(r)
+        case _ =>
+      }
+    }
+    observed(())
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (out, jobs, _) = observed(body)
+      (out, jobs, reads.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   /** [[observed]], with the SQL executions counted by name. */

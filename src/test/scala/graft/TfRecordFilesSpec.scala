@@ -149,4 +149,32 @@ class TfRecordFilesSpec extends SparkSpec {
     assert(ex.getMessage.contains("crc") ||
       Option(ex.getCause).exists(_.getMessage.contains("crc")))
   }
+
+  test("a file cut inside its last record fails to read; whole and empty files read") {
+    val schema = StructType(Seq(StructField("id", LongType), StructField("v", StringType)))
+    def write(rows: Seq[(Long, String)]): (String, java.io.File) = {
+      val path = tempDir("graft_tfr_cut").toString + "/td"
+      rows.toDF("id", "v").coalesce(1).write.format("tfrecord").save(path)
+      (path, new java.io.File(path).listFiles()
+        .filter(_.getName.endsWith(".tfrecord")).head)
+    }
+    def count(path: String) = scala.util.Try(
+      spark.read.format("tfrecord").schema(schema).load(path).count())
+
+    val (whole, _) = write(Seq((1L, "a"), (2L, "b"), (3L, "c")))
+    assert(count(whole) === scala.util.Success(3L))
+    val (empty, _) = write(Nil)
+    assert(count(empty) === scala.util.Success(0L))
+
+    val (cut, part) = write(Seq((1L, "a"), (2L, "b"), (3L, "c")))
+    val bytes = java.nio.file.Files.readAllBytes(part.toPath)
+    java.nio.file.Files.write(part.toPath, bytes.dropRight(6))
+    // Hadoop's .crc sidecar would fail the cut file first
+    new java.io.File(part.getParent, s".${part.getName}.crc").delete()
+    val failed = count(cut)
+    assert(failed.isFailure, failed)
+    val causes = Iterator.iterate(failed.failed.get)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(e => e.isInstanceOf[java.io.IOException] &&
+      e.getMessage.contains(part.getName)), failed)
+  }
 }

@@ -719,20 +719,52 @@ class ViewServingSpec extends SparkSpec {
     val joined = new FeatureVectorServer(spark, FeatureView("widen2", 1,
       Query.selectAll(g).join(Query.select(r, Seq("w")), leftOn = Seq("rk"),
         rightOn = Seq("rid"))))
-    val (vector, jobs, executions) = counted(joined.getFeatureVector(Map("id" -> 2L)))
+    val (vector, jobs, reads) = pointReads(joined.getFeatureVector(Map("id" -> 2L)))
     // only the default joins' own read runs: the left group's keyed read,
-    // once; no index is built
-    assert(jobs === 1 && executions.get("buildIndex").isEmpty &&
-      executions.get("keyedRead").contains(1), executions)
+    // once, on the driver; no index is built, and no job runs
+    val left = g.source.asInstanceOf[graft.model.LakeSource].root
+    assert(jobs === 0 && reads.size === 1 && reads.head.listed.nonEmpty &&
+      reads.head.listed.forall(_.contains(left)), reads)
     assert(vector.collect().map(_.getAs[String]("w")).toSeq === Seq("y"))
+  }
+
+  test("serving: a default-mode lookup on a lake group logs no unconsumed-hint warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val store = new graft.catalog.FeatureStore(spark,
+      warehouseDir = tempDir("graft_lake_hints").toString)
+    val g = store.createFeatureGroup("hints",
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v"), primaryKey = Seq("id"))
+    val r = store.createFeatureGroup("hints_r",
+      Seq((1L, "x"), (2L, "y")).toDF("id", "w"), primaryKey = Seq("id"))
+    val server = new FeatureVectorServer(spark, FeatureView("hints", 1,
+      Query.selectAll(g).join(Query.select(r, Seq("w")))))
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.catalyst.analysis.HintErrorLogger").asInstanceOf[CoreLogger]
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("hints", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = warned.add(e.getMessage.getFormattedMessage)
+    }
+    val level = logger.getLevel
+    appender.start()
+    logger.addAppender(appender)
+    logger.setLevel(Level.WARN)
+    try {
+      val got = server.getFeatureVector(Map("id" -> 1L)).collect()
+      assert(got.map(r => (r.getAs[String]("v"), r.getAs[String]("w"))).toSeq === Seq(("a", "x")))
+    } finally {
+      logger.removeAppender(appender)
+      logger.setLevel(level)
+      appender.stop()
+    }
+    assert(warned.isEmpty, warned)
   }
 
   test("serving: a lake group's default lookup prunes below the lake's window, inside the Parquet scan") {
     import org.apache.spark.sql.catalyst.plans.LeftSemi
     import org.apache.spark.sql.catalyst.plans.logical.{Join, Window => LWindow}
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.Exchange
     val store = new graft.catalog.FeatureStore(spark,
       warehouseDir = tempDir("graft_lake_serving").toString)
     val g = store.createFeatureGroup("lakeserve",
@@ -745,22 +777,13 @@ class ViewServingSpec extends SparkSpec {
       ws
     }
 
-    // driver-local key: the keyed read is one Spark job, a Parquet scan
-    // with the key pushed into it and no shuffle; the versions resolve on
-    // the driver, so collecting the vector runs no job
-    val (one, lookupJobs, executions) = observed(server.getFeatureVector(Map("id" -> 3L)))
-    assert(lookupJobs === 1, executions.map(_._1))
-    val keyed = executions.collect { case ("keyedRead", qe) =>
-      qe.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }
-    }
-    assert(keyed.size === 1, executions.map(_._1))
-    val scans = keyed.head.collect { case s: FileSourceScanExec => s }
-    assert(scans.nonEmpty && scans.forall(s =>
-      s.metadata("PushedFilters").contains("In(id, [3])")), keyed.head.toString)
-    assert(keyed.head.collect { case e: Exchange => e }.isEmpty, keyed.head.toString)
+    // driver-local key: the keyed read runs no Spark job. Spark's Parquet
+    // reader reads, on the driver, only the files whose footer statistics
+    // may hold the key, and keeps the key's two versions; they resolve on
+    // the driver, so collecting the vector runs no job either
+    val (one, lookupJobs, reads) = pointReads(server.getFeatureVector(Map("id" -> 3L)))
+    assert(lookupJobs === 0 && reads.size === 1, reads)
+    assert(reads.head.rowsKept === 2 && reads.head.opened.size < reads.head.listed.size, reads)
     val (rows, collectJobs, _) = counted(one.collect())
     assert(collectJobs === 0)
     assert(rows.map(_.getAs[String]("v")).toSeq === Seq("c2"))
