@@ -10,6 +10,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{GraftKeyedIndex, GraftPointRead}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -60,12 +61,15 @@ import scala.jdk.CollectionConverters._
   *        reads of upsert/delete) prunes the commit rows to the requested
   *        keys BEFORE that window, so it windows only their versions;
   *     3. a keyed snapshot by a few driver-local keys is EAGER: the keys
-  *        pick the commits (key filters, below), then the files or row
-  *        groups whose footer statistics may hold them. When those total
-  *        at most a fixed bound, Spark's Parquet reader reads them on the
-  *        driver, in no Spark job; else one Spark job scans the commits
-  *        with the keys pushed into the scan. Either way the versions
-  *        resolve on the driver into a driver-local frame.
+  *        pick the commits (key filters, below), then the files whose
+  *        footer statistics may hold them. When their row groups that may
+  *        hold them total at most a fixed bound, Spark's Parquet reader
+  *        reads them on the driver, in no Spark job, with the keys pushed
+  *        into it: through each file's page index it decodes only the
+  *        pages that may hold them, about [[PageRows]] rows per file of a
+  *        sorted commit. Else one Spark job scans the commits with the
+  *        keys pushed into the scan. Either way the versions resolve on
+  *        the driver into a driver-local frame.
   *  - A keyed read by such keys (the `IN` form of [[KeyPrune]]) also
   *    skips whole commits. A commit written from a driver-local batch
   *    carries in its log entry one Bloom filter per record-key column over
@@ -77,8 +81,11 @@ import scala.jdk.CollectionConverters._
   *    Spark job. Each filter is decoded once per JVM.
   *  - A commit written from a batch that is not driver-local (a bulk load
   *    from files, a squash base) is range-partitioned on the record key
-  *    before its versions settle, so each of its files holds a contiguous,
-  *    sorted key range, and a few-key read opens about one file of it.
+  *    before its versions settle, and a driver-local batch is sorted on it
+  *    on the driver, so each file of a commit holds a contiguous, sorted
+  *    key range, and a few-key read opens about one file of it. Every
+  *    file is written in pages of at most [[PageRows]] rows, so within a
+  *    sorted file the key pages hold disjoint ranges too.
   *  - Published commit directories never change, so each is listed once
   *    per JVM (a shared file-status cache): a read of n commits lists only
   *    the ones no read has listed, and starts no listing job however
@@ -235,12 +242,34 @@ object Lake {
 
   // -- point reads -------------------------------------------------------
 
-  /** The most compressed bytes a keyed read reads on the driver. The
-    * driver decodes ~1 MB per 10 ms (a 25k-row, 2 MB base file of the
-    * benchmark's 11-column group in ~20 ms on a 4-core box), so this many
-    * bytes cost about what a Spark job's fixed cost does.
+  /** The most compressed bytes of row groups that may hold its keys a
+    * keyed read reads on the driver. Read whole, the driver decodes ~1 MB
+    * per 6–7 ms (a 25.6k-row, 1.8 MB file shaped like the benchmark's
+    * 11-column base, in 1,000-row pages, in 11–13 ms on a 4-core box), so
+    * this many bytes cost about what a Spark job's fixed cost does; a file
+    * with a page index decodes only the pages that may hold the keys.
     */
   private val PointReadBytes = 4L << 20
+
+  /** The most rows a data page of a commit's file holds
+    * (`parquet.page.row.count.limit`): the rows a point read decodes per
+    * key and file of a sorted commit. Smaller pages skip more finely but
+    * make a file larger and slower to decode whole; measured choices are
+    * in CHANGES.md. A fixed value, not a setting.
+    */
+  private[graft] val PageRows = 1000
+
+  /** The relation point reads read a published commit directory through,
+    * by qualified directory, with the schema and session settings it was
+    * built under. A published directory never changes, so its relation
+    * (its file index) is built once, by the first point read of it under
+    * those, not once per lookup; a squash drops the entries of the commits
+    * it replaces.
+    */
+  private final case class RelationKey(spark: SparkSession, schema: StructType,
+                                       settings: Map[String, String])
+
+  private val relations = new ConcurrentHashMap[Path, (RelationKey, HadoopFsRelation)]()
 
   /** Footer facts of published data files, by qualified path
     * ([[GraftPointRead.Footer]]: row-group ranges and record-key
@@ -261,9 +290,19 @@ object Lake {
                         p: KeyPrune.InList): Option[DataFrame] =
     if (fg.features.isEmpty || in.isEmpty) None
     else {
-      val rel = DeltaLite.relation(spark, root, in.map(_.dir), rawSchema(fg), scanOptions(root))
-      GraftPointRead.read(rel, column, p.dataType, p.values, PointReadBytes, st =>
-        footers.computeIfAbsent(st.getPath, _ => GraftPointRead.footer(rel, st, recordKey(fg))))
+      val key = RelationKey(spark, rawSchema(fg), spark.sessionState.conf.getAllConfs)
+      val q = qualified(root)
+      val rels = in.map { c =>
+        val dir = new Path(q, c.dir)
+        Option(relations.get(dir)).filter(_._1 == key).fold {
+          val r = DeltaLite.relation(spark, root, Seq(c.dir), key.schema, scanOptions(root))
+          relations.put(dir, (key, r))
+          r
+        }(_._2)
+      }
+      GraftPointRead.read(rels, column, p.dataType, p.values, PointReadBytes, st =>
+        footers.computeIfAbsent(st.getPath, _ =>
+          GraftPointRead.footer(rels.head, st, recordKey(fg))))
     }
 
   // -- key filters -------------------------------------------------------
@@ -429,6 +468,7 @@ object Lake {
     // pruning (reference partitionBy(partition_key), engine/spark.py:501-505,
     // hudi partition path hudi_engine.py:131-140)
     df.observe(obs, count(lit(1)).as("n")).write
+      .option("parquet.page.row.count.limit", PageRows.toLong)
       .partitionBy(fg.partitionKey.filter(df.columns.contains): _*)
       .parquet(s"$root/${commitDir(tx, t0)}")
     val n = obs.get("n") match {
@@ -461,6 +501,7 @@ object Lake {
       fs.delete(new Path(root, c.dir).getParent, true)
       val dir = new Path(qualified(root), c.dir)
       decoded.remove(dir)
+      relations.remove(dir)
       footers.keySet.removeIf(_.toString.startsWith(s"$dir/"))
     }
     out
@@ -585,13 +626,16 @@ object Lake {
   /** The batch `df` with one row per record key: the greatest precombine,
     * then the greatest hash of the row's content, so rows that tie resolve
     * to the same row whatever their order or partitioning. A driver-local
-    * batch is settled on the driver, without a Spark job.
+    * batch is settled on the driver, without a Spark job, and sorted on
+    * its record key there, so each file written from it holds one key
+    * range, as a range-clustered batch's does.
     */
   private def oneRowPerKey(df: DataFrame, fg: FeatureGroup): DataFrame = {
     val order = byPrecombine(df, fg) :+
       graft.ops.Dedup.contentHash(df, df.columns.toSeq).desc
+    val keys = recordKey(df.columns.toSeq, fg)
     if (GraftKeyedIndex.localRows(df).isEmpty) dedupLatest(rangeClustered(df, fg), fg, order)
-    else GraftKeyedIndex.latest(df, recordKey(df.columns.toSeq, fg), order, "commitBatch")
+    else GraftKeyedIndex.sorted(GraftKeyedIndex.latest(df, keys, order, "commitBatch"), keys)
   }
 
   /** `df` range-partitioned on its record key. The window that settles

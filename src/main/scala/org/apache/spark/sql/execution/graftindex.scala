@@ -69,14 +69,19 @@ object GraftKeyedIndex {
     probe == key || Cast.canUpCast(probe, key)
 
   /** Index over the rows of `df`, keyed on its first `numKeys` columns.
-    * The rows reach the driver through one `executeCollect`, so
+    * The rows of a driver-local `df` are read from its plan and projected
+    * interpreted (a per-request index holds too few rows to pay for
+    * codegen); others reach the driver through one `executeCollect`, so
     * `spark.driver.maxResultSize` bounds them and an over-size frame fails
     * with Spark's error before any index exists.
     */
   def build(df: DataFrame, numKeys: Int): GraftKeyedIndex = {
     val schema = df.schema
-    val rows = collect(df, "buildIndex")
-    val toUnsafe = UnsafeProjection.create(schema)
+    val (rows, toUnsafe) = localRows(df).fold(
+      (collect(df, "buildIndex").toSeq, UnsafeProjection.create(schema))) { case (local, rs) =>
+      (rs, InterpretedUnsafeProjection.createProjection(local.fields.toSeq.zipWithIndex.map {
+        case (f, i) => BoundReference(i, f.dataType, f.nullable) }))
+    }
     val keyTypes = schema.take(numKeys).map(_.dataType)
     val keys = keyExprs(keyTypes.zipWithIndex.map { case (t, i) =>
       BoundReference(i, t, nullable = true) })
@@ -154,6 +159,18 @@ object GraftKeyedIndex {
       if (best == null || ordering.compare(r, best) < 0) winners.put(k, r)
     }
     localFrame(df.sparkSession, df.schema, winners.values.asScala.toSeq)
+  }
+
+  /** The rows of driver-local `df` in ascending order of its `keys`
+    * columns, by Spark's own ordering, as a [[localFrame]] of its schema.
+    */
+  def sorted(df: DataFrame, keys: Seq[String]): DataFrame = {
+    val sort = df.orderBy(keys.map(df(_)): _*).queryExecution.analyzed
+      .collectFirst { case s: Sort => s }.get
+    val ordering = new InterpretedOrdering(sort.order, sort.child.output)
+    val rows = localRows(df).getOrElse(
+      throw new IllegalArgumentException("sorted needs a driver-local frame"))._2
+    localFrame(df.sparkSession, df.schema, rows.sorted(ordering))
   }
 
   /** Key expressions as a broadcast hash join builds them. */

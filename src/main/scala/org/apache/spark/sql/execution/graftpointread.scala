@@ -14,24 +14,28 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, InSet}
 import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
-import org.apache.spark.sql.execution.datasources.{DataSourceUtils, FileFormat, HadoopFsRelation, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, HadoopFsRelation, PartitionedFile, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFilters, ParquetFooterReader}
+import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetPartitionReaderFactory, ParquetScan}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import scala.jdk.CollectionConverters._
 
 /** Bridge to Spark's Parquet reader for point reads on the driver: the
   * rows of a Parquet relation whose one column holds one of a few values,
-  * read without a Spark job from only the row groups that may hold them.
+  * read without a Spark job from only the pages that may hold them.
   *
-  * The row groups are chosen by the check a scan task makes: Spark's
-  * Parquet filter for `column IN (values)` over each row group's footer
+  * The files are chosen by the check a scan task makes: Spark's Parquet
+  * filter for `column IN (values)` over each row group's footer
   * statistics of the column. A file that lacks the column, or whose
   * statistics cannot be compared with the values, keeps every row group,
-  * as in a scan. The rows are read by the reader a scan task runs
-  * (`ParquetFileFormat.buildReaderWithPartitionValues`), under the
-  * session's settings, so a declared column a file lacks reads as null.
+  * as in a scan. Each kept file is read by the reader a scan task runs
+  * (Spark's `ParquetPartitionReaderFactory`), under the session's
+  * settings, with the same `IN` pushed into it: the reader skips the row
+  * groups and, through the file's page index, the pages that cannot hold
+  * the values, and a declared column a file lacks reads as null.
   */
 object GraftPointRead {
 
@@ -44,8 +48,7 @@ object GraftPointRead {
       private[GraftPointRead] val groups: Seq[RowGroup],
       private[GraftPointRead] val rebase: RebaseSpec)
 
-  private[GraftPointRead] final case class RowGroup(start: Long, length: Long,
-                                                    keyStats: BlockMetaData)
+  private[GraftPointRead] final case class RowGroup(length: Long, keyStats: BlockMetaData)
 
   /** A read's footprint, posted on the listener bus after each point read:
     * the relation's files (`listed`), the files it opened, its row groups
@@ -67,7 +70,7 @@ object GraftPointRead {
       stats.setRowCount(b.getRowCount)
       b.getColumns.asScala.filter(c => c.getPath.size == 1 &&
         kept.exists(_.getName == c.getPath.toArray.head)).foreach(stats.addColumn)
-      RowGroup(b.getStartingPos, b.getCompressedSize, stats)
+      RowGroup(b.getCompressedSize, stats)
     }
     val mode = relation.sparkSession.sessionState.conf
       .getConf(SQLConf.PARQUET_REBASE_MODE_IN_READ).toString
@@ -94,16 +97,25 @@ object GraftPointRead {
     }
   }
 
-  /** The rows of `relation` whose `column`, of type `dataType`, holds one of
-    * `values` (Catalyst values of that type), read on the driver from the
-    * row groups that may hold them, when those total at most `maxBytes`
-    * compressed; None when they total more. The rows come back as a
-    * driver-local frame of the relation's schema. `footerOf` supplies each
-    * data file's [[Footer]] (its caller caches them).
+  /** The rows of `relations`, which share one schema, whose `column`, of
+    * type `dataType`, holds one of `values` (Catalyst values of that type),
+    * read on the driver from the files with a row group that may hold
+    * them, when those row groups total at most `maxBytes` compressed; None
+    * when they total more. Each such file is read by a reader with
+    * `column IN (values)` pushed into it, so Parquet's page index (its
+    * column and offset indexes) limits the rows it decodes to the pages
+    * whose statistics may hold the values; a file without a page index
+    * reads its kept row groups whole. The rows come back as a driver-local
+    * frame of the relations' schema. `footerOf` supplies each data file's
+    * [[Footer]] (its caller caches them).
     */
-  def read(relation: HadoopFsRelation, column: String, dataType: DataType,
+  def read(relations: Seq[HadoopFsRelation], column: String, dataType: DataType,
            values: Seq[Any], maxBytes: Long,
            footerOf: FileStatus => Footer): Option[DataFrame] = {
+    val relation = relations.head
+    require(relations.forall(r => r.dataSchema == relation.dataSchema &&
+      r.partitionSchema == relation.partitionSchema && r.options == relation.options),
+      s"point read of relations that do not share one schema: $relations")
     val spark = relation.sparkSession
     val conf = spark.sessionState.conf
     val ordinal = relation.schema.fieldNames.indexOf(column)
@@ -111,55 +123,63 @@ object GraftPointRead {
     val partitionColumn = relation.partitionSchema.fieldNames.indexOf(column)
     val external = values.map(CatalystTypeConverters.convertToScala(_, dataType)).toArray
     val keep = InSet(BoundReference(ordinal, dataType, nullable = true), values.toSet)
-    val dirs = relation.location.listFiles(Nil, Nil)
-    val splits = dirs.flatMap { dir =>
+    val dirs = relations.flatMap(_.location.listFiles(Nil, Nil))
+    val files = dirs.flatMap { dir =>
       if (partitionColumn >= 0 && !values.contains(dir.values.get(partitionColumn, dataType))) Nil
       else dir.files.flatMap { fm =>
         val f = footerOf(fm.fileStatus)
         val kept = if (partitionColumn >= 0) f.groups else mayHold(conf, f, column, external)
-        val path = SparkPath.fromFileStatus(fm.fileStatus)
         val size = fm.fileStatus.getLen
-        // a whole file reads as one split; a part of it, one per row group
-        if (kept.size == f.groups.size && kept.nonEmpty)
-          Seq((PartitionedFile(dir.values, path, 0, size, Array.empty, fm.fileStatus.getModificationTime, size),
-            kept))
-        else kept.map(g => (PartitionedFile(dir.values, path, g.start, g.length, Array.empty,
-          fm.fileStatus.getModificationTime, size), Seq(g)))
+        Option.when(kept.nonEmpty)((PartitionedFile(dir.values,
+          SparkPath.fromFileStatus(fm.fileStatus), 0, size, Array.empty,
+          fm.fileStatus.getModificationTime, size), kept))
       }
     }
-    val bytes = splits.map(_._2.map(_.length).sum).sum
+    val bytes = files.map(_._2.map(_.length).sum).sum
     Option.when(bytes <= maxBytes) {
-      val reader = readerOf(relation)
+      // a partition column's values come from the directory, not the file
+      val reader = readerOf(relation).copy(filters =
+        if (partitionColumn >= 0) Array.empty else Array(sources.In(column, external)))
       val rows = Seq.newBuilder[InternalRow]
-      splits.foreach { case (file, _) =>
-        val it = reader(file)
-        try it.foreach(r => if (keep.eval(r) == true) rows += r.copy())
-        finally it match {
-          case c: java.io.Closeable => c.close()
-          case _ =>
+      var decoded = 0L
+      def kept(r: InternalRow): Unit = {
+        decoded += 1
+        if (keep.eval(r) == true) rows += r.copy()
+      }
+      // a vectorized reader's batches carry the partition values already;
+      // its rows would be projected one by one
+      val batches = reader.supportColumnarReads(null)
+      files.foreach { case (file, _) =>
+        if (batches) {
+          val it = reader.buildColumnarReader(file)
+          try while (it.next()) it.get().rowIterator().forEachRemaining(kept(_))
+          finally it.close()
+        } else {
+          val it = reader.buildReader(file)
+          try while (it.next()) kept(it.get())
+          finally it.close()
         }
       }
       val out = rows.result()
       spark.sparkContext.listenerBus.post(Read(
-        dirs.flatMap(_.files.map(_.getPath.toString)), splits.map(_._1.toPath.toString).distinct,
-        splits.map(_._2.size).sum, bytes, splits.flatMap(_._2).map(_.keyStats.getRowCount).sum,
-        out.size))
+        dirs.flatMap(_.files.map(_.getPath.toString)), files.map(_._1.toPath.toString),
+        files.map(_._2.size).sum, bytes, decoded, out.size))
       GraftKeyedIndex.localFrame(spark, relation.schema, out)
     }
   }
 
-  /** A reader of one relation's files under the session's settings:
-    * building one broadcasts the Hadoop configuration, so it is built once
-    * per schema, options and settings, never once per read.
+  /** A reader of one relation's files under the session's settings, with
+    * no filter: a read copies it with its own. Preparing one broadcasts
+    * the Hadoop configuration, so it is prepared once per schema, options
+    * and settings, never once per read.
     */
   private final case class ReaderKey(sc: SparkContext, data: StructType,
                                      partition: StructType, options: Map[String, String],
                                      settings: Map[String, String], hadoopSettings: Int)
 
-  private val readers =
-    new ConcurrentHashMap[ReaderKey, PartitionedFile => Iterator[InternalRow]]()
+  private val readers = new ConcurrentHashMap[ReaderKey, ParquetPartitionReaderFactory]()
 
-  private def readerOf(relation: HadoopFsRelation): PartitionedFile => Iterator[InternalRow] = {
+  private def readerOf(relation: HadoopFsRelation): ParquetPartitionReaderFactory = {
     val spark = relation.sparkSession
     val key = ReaderKey(spark.sparkContext, relation.dataSchema, relation.partitionSchema,
       relation.options, spark.sessionState.conf.getAllConfs,
@@ -168,9 +188,11 @@ object GraftPointRead {
       // a stopped context's readers can serve no read
       readers.keySet.removeIf(_.sc.isStopped)
       readers.computeIfAbsent(key, k =>
-        relation.fileFormat.buildReaderWithPartitionValues(spark, k.data, k.partition, k.data,
-          Nil, k.options + (FileFormat.OPTION_RETURNING_BATCH -> "false"),
-          relation.getHadoopConf(spark, k.options)))
+        // Spark's own scan prepares the configuration its reader reads
+        ParquetScan(spark, relation.getHadoopConf(spark, k.options),
+          relation.location.asInstanceOf[PartitioningAwareFileIndex], k.data, k.data,
+          k.partition, Array.empty, new CaseInsensitiveStringMap(k.options.asJava))
+          .createReaderFactory().asInstanceOf[ParquetPartitionReaderFactory])
     }
   }
 }

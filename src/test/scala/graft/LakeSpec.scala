@@ -807,11 +807,59 @@ class LakeSpec extends SparkSpec {
       read.opened.contains(p)), squashed)
   }
 
+  test("a one-key read of a range-clustered base decodes about one page of it") {
+    val fs = freshStore()
+    val fg = fs.createFeatureGroup("tpage",
+      spark.range(0, 24000).selectExpr("id", "concat('b', id) AS v",
+        "id * 0.5 AS x").repartition(4),
+      primaryKey = Seq("id"))
+    val root = rootOf(fg)
+    for (key <- Seq(0L, 12345L, 23999L)) {
+      val read = pointMatches(root, fg, None, Seq(key).toDF("id"), s"key $key")
+      assert(read.opened.size === 1 && read.rowsKept === 1, read)
+      assert(read.rowsDecoded <= 2 * Lake.PageRows, read)
+    }
+    // the row-based reader skips pages too
+    spark.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
+    val byRow =
+      try pointMatches(root, fg, None, Seq(12345L).toDF("id"), "row-based reader")
+      finally spark.conf.unset("spark.sql.parquet.enableVectorizedReader")
+    assert(byRow.rowsKept === 1 && byRow.rowsDecoded <= 2 * Lake.PageRows, byRow)
+    // a reader that ignores the page index reads the kept file whole,
+    // with the same rows
+    spark.conf.set("parquet.filter.columnindex.enabled", "false")
+    val whole =
+      try pointMatches(root, fg, None, Seq(12345L).toDF("id"), "no page index")
+      finally spark.conf.unset("parquet.filter.columnindex.enabled")
+    assert(whole.opened.size === 1 && whole.rowsKept === 1, whole)
+    assert(whole.rowsDecoded > 2 * Lake.PageRows, whole)
+  }
+
+  test("a read-your-write lookup opens one file of a driver-local upsert") {
+    val fs = freshStore()
+    val fg = fs.createFeatureGroup("tryw",
+      spark.range(0, 2000).selectExpr("id", "concat('b', id) AS v").repartition(2),
+      primaryKey = Seq("id"))
+    val root = rootOf(fg)
+    // 1k keys in no order, 900 of them already in the base
+    val keys = new scala.util.Random(3).shuffle((1100L until 2100L).toVector)
+    val up = fs.insert(fg, keys.map(k => (k, s"u$k")).toDF("id", "v")).commitTime
+    assert(commitFiles(root)(up) === 4)
+    for (key <- Seq(1100L, 1600L, 2099L)) {
+      val read = pointMatches(root, fg, None, Seq(key).toDF("id"), s"key $key")
+      def ofUpsert(files: Seq[String]) = files.filter(_.contains(s"_commit_time=$up/"))
+      assert(ofUpsert(read.listed).size === 4 && ofUpsert(read.opened).size === 1, read)
+      assert(rows(Lake.snapshot(spark, root, fg, None, Some(Seq(key).toDF("id")))) ===
+        Map(key -> s"u$key"))
+    }
+  }
+
   test("a keyed read whose files may hold its key past the driver bound scans in Spark") {
     import org.apache.spark.sql.functions.col
     val rnd = new scala.util.Random(7)
-    // ~4.6 MB of text snappy cannot compress, in one driver-local commit
-    // of shuffled keys, so every file of it may hold any key
+    // ~4.6 MB of text snappy cannot compress, in one driver-local commit:
+    // its 4 files hold sorted key ranges of 12k keys each, so keys in
+    // every range make every file one that may hold a key
     val load = rnd.shuffle((0L until 48000L).map(k =>
       (k, Seq.fill(6)(f"${rnd.nextLong()}%016x").mkString)))
     val fs = freshStore()
@@ -821,14 +869,15 @@ class LakeSpec extends SparkSpec {
       if (f.isDirectory) f.listFiles().map(bytes).sum
       else if (f.getName.endsWith(".parquet")) f.length else 0L
     assert(bytes(new java.io.File(root, "data")) > (4L << 20))
-    val keys = Seq(17L, 40000L).toDF("id")
+    val wanted = Seq(17L, 20000L, 30000L, 40000L)
+    val keys = wanted.toDF("id")
     val (got, jobs, reads) = pointReads(
       Lake.snapshot(spark, root, fg, None, Some(keys)).collect().toSeq)
     assert(reads.isEmpty && jobs === 1, reads)
     val full = Lake.snapshot(spark, root, fg, None)
     assert(got.toSet === full.join(keys, Seq("id"), "left_semi")
       .select(full.columns.map(col).toIndexedSeq: _*).collect().toSet)
-    assert(got.map(_.getLong(0)).toSet === Set(17L, 40000L))
+    assert(got.map(_.getLong(0)).toSet === wanted.toSet)
   }
 
   test("a collated string key takes the join form and carries no key filter") {
