@@ -10,7 +10,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{GraftKeyedIndex, GraftPointRead}
-import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -259,17 +259,27 @@ object Lake {
     */
   private[graft] val PageRows = 1000
 
-  /** The relation point reads read a published commit directory through,
-    * by qualified directory, with the schema and session settings it was
-    * built under. A published directory never changes, so its relation
-    * (its file index) is built once, by the first point read of it under
-    * those, not once per lookup; a squash drops the entries of the commits
-    * it replaces.
+  /** A published commit directory as point reads read it, under `key`
+    * (the schema and session settings): the relation of that directory
+    * alone (its file index) and the partition directories that hold its
+    * files. A commit that wrote no rows under partition columns lists no
+    * files, and so no partition columns either.
     */
+  private final case class Listing(key: RelationKey, relation: HadoopFsRelation,
+                                   files: Seq[PartitionDirectory])
+
   private final case class RelationKey(spark: SparkSession, schema: StructType,
                                        settings: Map[String, String])
 
-  private val relations = new ConcurrentHashMap[Path, (RelationKey, HadoopFsRelation)]()
+  /** Point reads' listings of a table's live commit directories, by
+    * qualified root, then qualified directory. A published directory
+    * never changes, so it is listed once per schema and settings, by the
+    * first point read of it under those, not once per lookup. Each lookup
+    * keeps only its table's live directories, so a directory a squash
+    * replaced goes by the table's next lookup at the latest, and a lookup
+    * that misses drops the tables of a stopped session.
+    */
+  private val listings = new ConcurrentHashMap[Path, Map[Path, Listing]]()
 
   /** Footer facts of published data files, by qualified path
     * ([[GraftPointRead.Footer]]: row-group ranges and record-key
@@ -281,28 +291,45 @@ object Lake {
   /** The rows of commits `in` whose `column` holds one of the values of
     * `p`, read on the driver ([[GraftPointRead.read]]) when the row groups
     * whose footer statistics may hold them total at most
-    * [[PointReadBytes]]: a driver-local frame of the scan's schema. None
-    * for a group without a declared schema, when no commit may hold the
-    * keys (the scan plans none) and over the bound.
+    * [[PointReadBytes]]: a driver-local frame of the scan's schema. `cs`
+    * are the table's live commits. None for a group without a declared
+    * schema, when no commit may hold the keys (the scan plans none) or none
+    * of those has files, and over the bound.
     */
   private def pointRead(spark: SparkSession, root: String, fg: FeatureGroup,
-                        in: Seq[Commit], column: String,
+                        cs: Seq[Commit], in: Seq[Commit], column: String,
                         p: KeyPrune.InList): Option[DataFrame] =
     if (fg.features.isEmpty || in.isEmpty) None
     else {
       val key = RelationKey(spark, rawSchema(fg), spark.sessionState.conf.getAllConfs)
       val q = qualified(root)
-      val rels = in.map { c =>
-        val dir = new Path(q, c.dir)
-        Option(relations.get(dir)).filter(_._1 == key).fold {
-          val r = DeltaLite.relation(spark, root, Seq(c.dir), key.schema, scanOptions(root))
-          relations.put(dir, (key, r))
-          r
-        }(_._2)
+      val dirs = in.map(c => new Path(q, c.dir) -> c.dir)
+      def listsAll(m: Map[Path, Listing]) =
+        m != null && dirs.forall { case (d, _) => m.get(d).exists(_.key == key) }
+      if (!listsAll(listings.get(q)))
+        listings.values.removeIf(_.valuesIterator.exists(_.key.spark.sparkContext.isStopped))
+      val live = cs.map(c => new Path(q, c.dir)).toSet
+      val listed = listings.compute(q, (_, m) =>
+        if (listsAll(m) && m.keysIterator.forall(live)) m
+        else {
+          val kept = Option(m).fold(Map.empty[Path, Listing])(_.filter { case (d, l) =>
+            l.key == key && live(d) })
+          kept ++ dirs.filterNot(d => kept.contains(d._1)).map { case (d, dir) =>
+            val r = DeltaLite.relation(spark, root, Seq(dir), key.schema, scanOptions(root))
+            d -> Listing(key, r, r.location.listFiles(Nil, Nil).filter(_.files.nonEmpty))
+          }
+        })
+      val withFiles = dirs.map(d => listed(d._1)).filter(_.files.nonEmpty)
+      // the commits with files share the group's partition columns; should
+      // they not, the Spark scan, which infers them over all, reads them
+      withFiles.map(_.relation.partitionSchema).distinct match {
+        case Seq(_) =>
+          val rel = withFiles.head.relation
+          GraftPointRead.read(rel, withFiles.flatMap(_.files), column, p.dataType, p.values,
+            PointReadBytes, st => footers.computeIfAbsent(st.getPath, _ =>
+              GraftPointRead.footer(rel, st, recordKey(fg))))
+        case _ => None
       }
-      GraftPointRead.read(rels, column, p.dataType, p.values, PointReadBytes, st =>
-        footers.computeIfAbsent(st.getPath, _ =>
-          GraftPointRead.footer(rels.head, st, recordKey(fg))))
     }
 
   // -- key filters -------------------------------------------------------
@@ -501,7 +528,7 @@ object Lake {
       fs.delete(new Path(root, c.dir).getParent, true)
       val dir = new Path(qualified(root), c.dir)
       decoded.remove(dir)
-      relations.remove(dir)
+      listings.computeIfPresent(qualified(root), (_, m) => m - dir)
       footers.keySet.removeIf(_.toString.startsWith(s"$dir/"))
     }
     out
@@ -569,7 +596,7 @@ object Lake {
       keyedRaw(spark, root, fg, cs, upTo, k, k.columns.toSeq) match {
         case Left(raw) => resolve(raw, fg, fillDefaults = true)
         case Right((in, p)) =>
-          resolve(pointRead(spark, root, fg, in, k.columns.head, p).getOrElse(
+          resolve(pointRead(spark, root, fg, cs, in, k.columns.head, p).getOrElse(
             window(spark, root, fg, cs)(in.contains).filter(p.predicate)),
             fg, fillDefaults = true, onDriver = true)
       }

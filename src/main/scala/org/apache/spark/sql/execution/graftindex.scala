@@ -2,7 +2,7 @@ package org.apache.spark.sql.execution
 
 import org.apache.spark.sql.{classic, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, CollationKey, EvalMode, Expression, InterpretedOrdering, InterpretedUnsafeProjection, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Cast, CollationKey, EvalMode, Expression, InterpretedOrdering, InterpretedUnsafeProjection, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Sort}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
@@ -165,9 +165,10 @@ object GraftKeyedIndex {
     * columns, by Spark's own ordering, as a [[localFrame]] of its schema.
     */
   def sorted(df: DataFrame, keys: Seq[String]): DataFrame = {
-    val sort = df.orderBy(keys.map(df(_)): _*).queryExecution.analyzed
-      .collectFirst { case s: Sort => s }.get
-    val ordering = new InterpretedOrdering(sort.order, sort.child.output)
+    val ordering = new InterpretedOrdering(keys.map { k =>
+      val i = df.schema.fieldIndex(k)
+      SortOrder(BoundReference(i, df.schema(i).dataType, nullable = true), Ascending)
+    })
     val rows = localRows(df).getOrElse(
       throw new IllegalArgumentException("sorted needs a driver-local frame"))._2
     localFrame(df.sparkSession, df.schema, rows.sorted(ordering))

@@ -14,7 +14,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, InSet}
 import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
-import org.apache.spark.sql.execution.datasources.{DataSourceUtils, HadoopFsRelation, PartitionedFile, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, HadoopFsRelation, PartitionDirectory, PartitionedFile, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFilters, ParquetFooterReader}
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetPartitionReaderFactory, ParquetScan}
 import org.apache.spark.sql.internal.SQLConf
@@ -51,7 +51,7 @@ object GraftPointRead {
   private[GraftPointRead] final case class RowGroup(length: Long, keyStats: BlockMetaData)
 
   /** A read's footprint, posted on the listener bus after each point read:
-    * the relation's files (`listed`), the files it opened, its row groups
+    * the files listed to it (`listed`), the files it opened, its row groups
     * and their compressed bytes, the rows it decoded and the rows the
     * predicate kept.
     */
@@ -97,25 +97,21 @@ object GraftPointRead {
     }
   }
 
-  /** The rows of `relations`, which share one schema, whose `column`, of
-    * type `dataType`, holds one of `values` (Catalyst values of that type),
-    * read on the driver from the files with a row group that may hold
-    * them, when those row groups total at most `maxBytes` compressed; None
-    * when they total more. Each such file is read by a reader with
-    * `column IN (values)` pushed into it, so Parquet's page index (its
-    * column and offset indexes) limits the rows it decodes to the pages
-    * whose statistics may hold the values; a file without a page index
-    * reads its kept row groups whole. The rows come back as a driver-local
-    * frame of the relations' schema. `footerOf` supplies each data file's
-    * [[Footer]] (its caller caches them).
+  /** The rows of files `dirs`, listed under the partition columns of
+    * `relation`, whose `column`, of type `dataType`, holds one of `values`
+    * (Catalyst values of that type), read on the driver from the files
+    * with a row group that may hold them, when those row groups total at
+    * most `maxBytes` compressed; None when they total more. Each such file
+    * is read by a reader with `column IN (values)` pushed into it, so
+    * Parquet's page index (its column and offset indexes) limits the rows
+    * it decodes to the pages whose statistics may hold the values; a file
+    * without a page index reads its kept row groups whole. The rows come
+    * back as a driver-local frame of the relation's schema. `footerOf`
+    * supplies each data file's [[Footer]] (its caller caches them).
     */
-  def read(relations: Seq[HadoopFsRelation], column: String, dataType: DataType,
-           values: Seq[Any], maxBytes: Long,
+  def read(relation: HadoopFsRelation, dirs: Seq[PartitionDirectory], column: String,
+           dataType: DataType, values: Seq[Any], maxBytes: Long,
            footerOf: FileStatus => Footer): Option[DataFrame] = {
-    val relation = relations.head
-    require(relations.forall(r => r.dataSchema == relation.dataSchema &&
-      r.partitionSchema == relation.partitionSchema && r.options == relation.options),
-      s"point read of relations that do not share one schema: $relations")
     val spark = relation.sparkSession
     val conf = spark.sessionState.conf
     val ordinal = relation.schema.fieldNames.indexOf(column)
@@ -123,7 +119,6 @@ object GraftPointRead {
     val partitionColumn = relation.partitionSchema.fieldNames.indexOf(column)
     val external = values.map(CatalystTypeConverters.convertToScala(_, dataType)).toArray
     val keep = InSet(BoundReference(ordinal, dataType, nullable = true), values.toSet)
-    val dirs = relations.flatMap(_.location.listFiles(Nil, Nil))
     val files = dirs.flatMap { dir =>
       if (partitionColumn >= 0 && !values.contains(dir.values.get(partitionColumn, dataType))) Nil
       else dir.files.flatMap { fm =>

@@ -729,6 +729,11 @@ class LakeSpec extends SparkSpec {
     fs.insert(parted, Seq((1L, "s0", "moved"), (500L, "s9", "new")).toDF("id", "seg", "v"))
     pointMatches(rootOf(parted), parted, None, Seq(1L, 2L, 500L).toDF("id"),
       "a partitioned group")
+    // deleting an absent key commits no rows, so under partition columns
+    // no file either
+    fs.delete(parted, Seq(Tuple1(999L)).toDF("id"))
+    pointMatches(rootOf(parted), parted, None, Seq(1L, 2L, 500L, 999L).toDF("id"),
+      "a partitioned group after a commit of no rows")
     val byKey = fs.createFeatureGroup("tpointk",
       spark.range(0, 5).selectExpr("id", "concat('v', id) AS v"),
       primaryKey = Seq("id"), partitionKey = Seq("id"))
